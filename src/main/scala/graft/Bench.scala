@@ -106,11 +106,11 @@ object Bench {
       None
     }
     val prior: Map[String, Double] = priorTxt.map { txt =>
-      val p = graft.bench.BenchGuard.parsePrior(txt, sfDir)
+      val p = graft.bench.BenchGuard.parsePrior(txt, sfDir, Some(cpus))
       if (p.isEmpty)
         System.err.println(s"[bench] prior ($priorPath) is malformed or " +
-          "has different sf/methodology, env_ok:false, or no queries — " +
-          "churn guard inactive this run")
+          "has different sf/methodology/parallelism, env_ok:false, or no " +
+          "queries — churn guard inactive this run")
       p
     }.getOrElse(Map.empty)
     // Declared variance envelopes (DATA, not code — bench_envelopes.json
@@ -365,10 +365,12 @@ object Bench {
     val historyAnchors: Map[String, Double] = try {
       graft.bench.BenchGuard.probeHistoryAnchors(
         new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(probeHistoryPath)), "UTF-8"), sfDir)
+          java.nio.file.Paths.get(probeHistoryPath)), "UTF-8"), sfDir,
+        parallelism = Some(cpus))
     } catch { case _: Exception => Map.empty }
     val artifactPrior = priorTxt
-      .map(t => graft.bench.BenchGuard.parsePriorProbeMedians(t, sfDir))
+      .map(t => graft.bench.BenchGuard.parsePriorProbeMedians(t, sfDir,
+        Some(cpus)))
       .getOrElse(Map.empty)
     val probePrior = artifactPrior ++ historyAnchors
     val probeReps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5")
@@ -430,8 +432,8 @@ object Bench {
     // after the full suite has pushed load well past load_avg_start
     // (the committed r19 artifact ends at ~16), and the 1.25x guard is
     // calibrated on quiet-machine ±15% spread — a reader adjudicating a
-    // probe flag needs the like-for-like context. Annotation-only,
-    // consistent with the load policy (env_ok gates heap, not load).
+    // probe flag needs the like-for-like context. Annotation-only: env_ok
+    // (BenchGuard.envOk) gates load at START and heap, not probe-time load.
     val loadAtProbes = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val probeMedians: Seq[(String, Double)] =
@@ -458,7 +460,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(probeHistoryPath),
         (graft.bench.BenchGuard.probeHistoryLine(sfDir, envOkNow,
-          probeMedians) + "\n").getBytes("UTF-8"),
+          probeMedians, Some(cpus)) + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       catch { case e: Exception =>
@@ -487,7 +489,9 @@ object Bench {
         f" heap_max_mb=$heapMb (band ${graft.bench.BenchGuard.HeapBandMb})" +
         " — artifact annotated env_ok:false; figures not comparable to" +
         " an in-bounds session")
+    // cpus = host cores; parallelism = the local[N] this run used
     val env = s""""env":{"cpus":${Runtime.getRuntime.availableProcessors()},""" +
+      s""""parallelism":$cpus,""" +
       s""""heap_max_mb":$heapMb,""" +
       s""""load_avg_start":$loadAtStart,""" +
       s""""load_avg_end":${osBean.getSystemLoadAverage},""" +

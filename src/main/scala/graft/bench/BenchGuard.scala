@@ -82,8 +82,9 @@ object BenchGuard {
 
   /** Parse a prior BENCH_full.json into per-cell figures, returning
     * empty (guard inactive) when the prior was measured on a different
-    * scale factor, under a different methodology tag, or OUTSIDE the
-    * declared environment bounds (`env_ok: false`) — any of these would
+    * scale factor, under a different methodology tag, OUTSIDE the
+    * declared environment bounds (`env_ok: false`), or — when
+    * `parallelism` is given — at another `local[N]` — any of these would
     * flag every cell (or none) for reasons that have nothing to do with
     * the code under test. The env_ok gate is this contract's own rule
     * applied to itself (ADVICE r19): two artifacts are comparable only
@@ -92,10 +93,11 @@ object BenchGuard {
     * silently activate the churn guard. Non-numeric query values are
     * skipped.
     */
-  def parsePrior(txt: String, sfDir: String): Map[String, Double] = {
+  def parsePrior(txt: String, sfDir: String,
+                 parallelism: Option[Int] = None): Map[String, Double] = {
     val root = parseRoot(txt).orNull
     if (root == null) return Map.empty
-    if (!priorComparable(root, sfDir)) return Map.empty
+    if (!priorComparable(root, sfDir, parallelism)) return Map.empty
     val node = root.get("queries")
     if (node == null) Map.empty
     else {
@@ -111,10 +113,11 @@ object BenchGuard {
     * object), under the same comparability gate as [[parsePrior]].
     * Non-positive values (the -1 probe-failed sentinel) are skipped —
     * a failed prior probe must not anchor the rate guard at -1. */
-  def parsePriorProbeMedians(txt: String, sfDir: String): Map[String, Double] = {
+  def parsePriorProbeMedians(txt: String, sfDir: String,
+                             parallelism: Option[Int] = None): Map[String, Double] = {
     val root = parseRoot(txt).orNull
     if (root == null) return Map.empty
-    if (!priorComparable(root, sfDir)) return Map.empty
+    if (!priorComparable(root, sfDir, parallelism)) return Map.empty
     val node = root.get("probe_medians")
     if (node == null) Map.empty
     else {
@@ -144,9 +147,10 @@ object BenchGuard {
     * skipped. FAIL-SOFT like the prior file: history is an anchor, not
     * a gate. */
   def probeHistoryAnchors(txt: String, sfDir: String, k: Int = 5,
-                          minEntries: Int = 3): Map[String, Double] = {
+                          minEntries: Int = 3,
+                          parallelism: Option[Int] = None): Map[String, Double] = {
     val comparable = txt.linesIterator.flatMap(parseRoot(_))
-      .filter(priorComparable(_, sfDir)).toSeq.takeRight(k)
+      .filter(priorComparable(_, sfDir, parallelism)).toSeq.takeRight(k)
     val values = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
     comparable.foreach { root =>
@@ -169,10 +173,12 @@ object BenchGuard {
     * the fields [[probeHistoryAnchors]]' comparability gate reads.
     * Sentinel (-1) medians are recorded as-is; the parser skips them. */
   def probeHistoryLine(sfDir: String, envOk: Boolean,
-                       medians: Seq[(String, Double)]): String = {
+                       medians: Seq[(String, Double)],
+                       parallelism: Option[Int] = None): String = {
     val ms = medians.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     s"""{"sf":"$sfDir","methodology":"$Methodology","env_ok":$envOk,""" +
+      parallelism.fold("")(n => s""""parallelism":$n,""") +
       s""""probe_medians":$ms}"""
   }
 
@@ -184,8 +190,14 @@ object BenchGuard {
     try Option(new ObjectMapper().readTree(txt)).filter(_.isObject)
     catch { case _: Exception => None }
 
+  /** `parallelism`, when given, must equal the prior's recorded
+    * `local[N]` (`parallelism` on a history line, `env.parallelism` in
+    * an artifact): an 8-slot run must never anchor a 32-slot one. A
+    * prior that predates the field cannot show it matches, so it is
+    * incomparable under the gate. */
   private def priorComparable(root: com.fasterxml.jackson.databind.JsonNode,
-                              sfDir: String): Boolean = {
+                              sfDir: String,
+                              parallelism: Option[Int]): Boolean = {
     val priorSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
     val priorMeth =
       Option(root.get("methodology")).map(_.asText()).getOrElse("")
@@ -193,7 +205,11 @@ object BenchGuard {
     // methodology tag; an explicit false is the loud incomparability mark
     val priorEnvOk =
       Option(root.get("env_ok")).forall(n => !n.isBoolean || n.asBoolean())
-    priorSf == sfDir && priorMeth == Methodology && priorEnvOk
+    val priorPar = Option(root.get("parallelism"))
+      .orElse(Option(root.get("env")).flatMap(e => Option(e.get("parallelism"))))
+      .filter(_.isInt).map(_.asInt())
+    priorSf == sfDir && priorMeth == Methodology && priorEnvOk &&
+      parallelism.forall(n => priorPar.contains(n))
   }
 
   /** The churn-guard decision loop for a THROUGHPUT figure (higher =

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.time.Instant
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -28,10 +30,20 @@ object JsonIngest {
   }
 
   /** P3-P7: split parsed rows into the valid flattened stream and the
-    * dead-letter stream (enriched with error metadata). `clock` injectable
-    * for deterministic tests. */
+    * dead-letter stream (enriched with error metadata). Both sides carry
+    * ONE stamp taken when `split` is called — `ingestion_time` on valid
+    * rows, `error_time` on dead-letter rows — so one micro-batch's rows
+    * all share it. `clock` replaces the stamp (deterministic tests).
+    *
+    * The stamp is a deterministic zero-argument UDF over the captured
+    * instant, not `current_timestamp()`: the optimizer folds the latter
+    * into a fresh literal per action and whole-stage codegen inlines it,
+    * so every micro-batch compiled new classes for its bronze and
+    * dead-letter writes. Generated code only references the UDF object,
+    * so one compiled class serves every batch; being deterministic, it
+    * leaves filter pushdown on the valid frame untouched. */
   def split(parsed: DataFrame, clock: Option[Column] = None): ParseResult = {
-    val now = clock.getOrElse(current_timestamp())
+    val now = clock.getOrElse(stamp(java.sql.Timestamp.from(Instant.now())))
     val isDead = col("data").isNull || col("data._corrupt_record").isNotNull
     val dead = parsed.filter(isDead)
       .select(col("raw_value"),
@@ -45,6 +57,9 @@ object JsonIngest {
       .drop("timestamp", "raw_value")
     ParseResult(valid, dead)
   }
+
+  private def stamp(at: java.sql.Timestamp): Column =
+    udf(() => at).asNonNullable().withName("ingest_stamp").apply()
 
   def parseAndSplit(raw: DataFrame, payloadCol: String, schema: StructType,
                     clock: Option[Column] = None): ParseResult =

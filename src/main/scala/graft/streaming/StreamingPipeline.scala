@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.Row
 
 import graft.ingest.JsonIngest
@@ -124,53 +124,43 @@ object StreamingPipeline {
                 keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
 
-  /** Merge one micro-batch's partial window aggregates into a persistent
-    * gold table: algebraic combination (counts/sums add, min/max fold) on
-    * (window_start, key), so the stored table always equals the batch
-    * recomputation over everything processed so far. A `_batches/<id>`
-    * marker makes replays no-ops — foreachBatch is at-least-once, and
-    * this is the standard idempotence guard.
+  /** Merge one micro-batch's window aggregates into a persistent gold
+    * table: (n, sum, min, max) per (window_start, key) are algebraic, so
+    * the stored table always equals the batch recomputation over
+    * everything processed so far — same values, same column types.
+    * The batch's merged id goes into the store's [[BatchLedger]], which
+    * makes replays no-ops — foreachBatch is at-least-once, and this is
+    * the standard idempotence guard.
+    *
+    * Each batch row enters as its own one-row aggregate
+    * (n=1, sum_v=min_v=max_v=v), so the merge is ONE grouped aggregate
+    * over (stored state ∪ batch rows): a single exchange, with the
+    * partial aggregate before it collapsing the batch and the state
+    * alike. The state is read with the schema this merge writes (see
+    * [[mergeSwapState]]), so no job infers it from parquet footers; a
+    * merge into an existing store runs two Spark jobs.
     *
     * Scale shape: the stored gold table is (windows × keys) — aggregate-
-    * sized, not event-sized. The merge is a full-outer join between two
-    * aggregate tables; at 100 TB the overwrite would target only the date
-    * partitions present in the batch (Warehouse.idempotentPartitionLoad),
-    * not the whole table as this single-file test path does. */
+    * sized, not event-sized. At 100 TB the overwrite would target only
+    * the date partitions present in the batch
+    * (Warehouse.idempotentPartitionLoad), not the whole table as this
+    * single-file path does. */
   def mergeGoldBatch(batch: DataFrame, goldPath: String, batchId: Long,
                      timeCol: String, keys: Seq[String], valueCol: String,
                      windowDuration: String): Unit = {
-    val spark = batch.sparkSession
-    // Markers live INSIDE the data dir (underscore-prefixed → invisible
-    // to parquet readers) and travel with the stage-and-swap below, so a
-    // crash at any point leaves marker and data consistent: either the
-    // old dir (no marker → replay re-merges from the old state) or the
-    // new dir (marker present → replay is a no-op). A marker beside the
-    // data could otherwise record a merge whose rename never happened —
-    // or miss one that did, double-counting the batch on replay.
-    val kcols = keys.map(col)
-    mergeSwapState(spark, goldPath, batchId) { existingOpt =>
-      val partial = batch
-        .groupBy(window(col(timeCol), windowDuration).as("w") +: kcols: _*)
-        .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("sum_v"),
-          min(col(valueCol)).as("min_v"), max(col(valueCol)).as("max_v"))
-        .select(col("w.start").as("window_start") +: kcols :+ col("n") :+
-          col("sum_v") :+ col("min_v") :+ col("max_v"): _*)
-      val joinCols = "window_start" +: keys
-      existingOpt match {
-        case Some(existing) =>
-          existing.select(joinCols.map(col) :+ col("n").as("n0") :+
-              col("sum_v").as("sum_v0") :+ col("min_v").as("min_v0") :+
-              col("max_v").as("max_v0"): _*)
-            .join(partial, joinCols, "full_outer")
-            .select(joinCols.map(col) ++ Seq(
-              (coalesce(col("n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
-              (coalesce(col("sum_v0"), lit(0.0)) + coalesce(col("sum_v"), lit(0.0))).as("sum_v"),
-              least(coalesce(col("min_v0"), col("min_v")),
-                coalesce(col("min_v"), col("min_v0"))).as("min_v"),
-              greatest(coalesce(col("max_v0"), col("max_v")),
-                coalesce(col("max_v"), col("max_v0"))).as("max_v")): _*)
-        case None => partial
-      }
+    val groupCols = ("window_start" +: keys).map(col)
+    val v = col(valueCol)
+    val rows = batch.select(
+      window(col(timeCol), windowDuration).getField("start").as("window_start")
+        +: keys.map(col) :+ lit(1L).as("n") :+ v.as("sum_v") :+
+        v.as("min_v") :+ v.as("max_v"): _*)
+    def fold(df: DataFrame): DataFrame = df.groupBy(groupCols: _*)
+      .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
+        min("min_v").as("min_v"), max("max_v").as("max_v"))
+    val fresh = fold(rows)
+    mergeSwapState(batch.sparkSession, goldPath, batchId, Some(fresh.schema)) {
+      case Some(state) => fold(state.unionByName(rows))
+      case None => fresh
     }
   }
 
@@ -208,52 +198,77 @@ object StreamingPipeline {
         "error)")
   }
 
+  /** The batches already merged into the state store at `storePath`.
+    * Runs the READ-side crash-window restore first: if the data dir was
+    * moved aside but the staged dir never promoted, the backup is the
+    * authoritative state — it goes back before anything reads the store.
+    * Every "is batch `id` merged?" check goes through here. */
+  private def mergedBatches(fs: FileSystem, storePath: String): BatchLedger = {
+    val dataDir = new Path(s"$storePath/data")
+    val backup = new Path(s"$storePath/_prestate")
+    if (!fs.exists(dataDir) && fs.exists(backup) && !fs.rename(backup, dataDir))
+      throw new java.io.IOException(
+        s"state swap: could not restore $backup to $dataDir after crash")
+    BatchLedger.load(fs, dataDir)
+  }
+
   /** Crash-safe merge-and-swap shared by the small per-group STATE tables
-    * ([[mergeGoldBatch]] aggregates, [[sketchDistinct]] registers): read
-    * the current state if any, apply `merge`, stage the result next to
-    * the data dir, carry the accumulated batch markers plus this one, and
-    * swap via rename-aside. A crash at any point leaves marker and data
-    * consistent — either the old dir (no marker → replay re-merges from
-    * old state) or the new one (marker present → replay is a no-op); a
-    * failed mid-swap restore or promotion throws rather than publishing
-    * a state table missing its pre-crash history. */
+    * ([[mergeGoldBatch]] aggregates, [[sketchDistinct]] registers, ...):
+    * read the current state if any, apply `merge`, stage the result next
+    * to the data dir together with the store's [[BatchLedger]] plus this
+    * batch, and swap via rename-aside.
+    *
+    * The ledger lives INSIDE the data dir and travels with the swap, so a
+    * crash at any point leaves ledger and data consistent: either the old
+    * dir (batch absent → replay re-merges from the old state) or the new
+    * one (batch present → replay is a no-op). A ledger beside the data
+    * could record a merge whose rename never happened — or miss one that
+    * did, double-counting the batch on replay. A failed mid-swap restore
+    * or promotion throws rather than publishing a state table missing its
+    * pre-crash history. The ledger is one file however many batches were
+    * merged, so a merge does a fixed number of file operations.
+    *
+    * `stateSchema`: when the state is the merge's own output, the caller
+    * passes that output's schema; the state is then read with it (no
+    * footer-inference job per merge) and every merge is written in its
+    * types. Stores that must detect an older on-disk layout from the
+    * inferred schema pass None. A store without a ledger file was written
+    * by an older build, whose types may differ (its gold merge stored an
+    * integer column's sum as a double), so that one merge infers. */
   private def mergeSwapState(spark: SparkSession, storePath: String,
-                             batchId: Long)
+                             batchId: Long,
+                             stateSchema: Option[StructType] = None)
       (merge: Option[DataFrame] => DataFrame): Unit = {
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
     val backup = new Path(s"$storePath/_prestate")
-    // recover from a crash mid-swap: if the table moved aside but the
-    // staged dir was never promoted, the backup is the authoritative
-    // state — put it back before doing anything else
-    if (!fs.exists(dataDir) && fs.exists(backup) && !fs.rename(backup, dataDir))
-      throw new java.io.IOException(
-        s"state swap: could not restore $backup to $dataDir after crash")
-    val marker = new Path(s"$storePath/data/_merged/$batchId")
-    if (fs.exists(marker)) return // replayed batch: already merged
+    val merged = mergedBatches(fs, storePath)
+    if (merged.contains(batchId)) return // replayed batch: already merged
     val existing =
-      if (fs.exists(dataDir)) Some(spark.read.parquet(dataDir.toString))
-      else None
+      if (!fs.exists(dataDir)) None
+      else Some(stateSchema.filter(_ => BatchLedger.stored(fs, dataDir))
+        .fold(spark.read)(spark.read.schema).parquet(dataDir.toString))
+    // written in the pinned types, so the next pinned read matches the
+    // files (a decimal sum widens by 10 digits per aggregate otherwise)
+    val out = merge(existing)
+    val typed = stateSchema.fold(out) { s =>
+      out.withColumns(out.schema.fields.collect {
+        case f if !DataType.equalsStructurally(f.dataType,
+            s(f.name).dataType, ignoreNullability = true) =>
+          f.name -> out.col(s"`${f.name}`").cast(s(f.name).dataType)
+      }.toMap)
+    }
     // stage-and-swap: the merge plan reads dataDir, so materialize it
-    // next door before replacing
+    // next door before replacing; the ledger goes in BEFORE the swap
     val tmp = new Path(s"$storePath/_stage")
-    merge(existing).write.mode("overwrite").parquet(tmp.toString)
-    // carry the accumulated markers (plus this batch's) into the staged
-    // dir BEFORE the swap — see the marker consistency note above
-    val stagedMarkers = new Path(tmp, "_merged")
-    fs.mkdirs(stagedMarkers)
-    val currentMarkers = new Path(dataDir, "_merged")
-    if (fs.exists(currentMarkers))
-      fs.listStatus(currentMarkers).foreach { m =>
-        fs.createNewFile(new Path(stagedMarkers, m.getPath.getName)); ()
-      }
-    fs.createNewFile(new Path(stagedMarkers, batchId.toString))
+    typed.write.mode("overwrite").parquet(tmp.toString)
+    (merged + batchId).save(fs, tmp)
     // swap via rename-aside (same pattern as Warehouse.compact): a failed
     // rename must never leave the table destroyed, so the old dir moves
     // to a backup first and comes back if the promotion fails. Atomic on
     // HDFS and local FS; see [[stateFs]] for the object-store caveat.
     if (fs.exists(backup)) fs.delete(backup, true)
-    val hadData = fs.exists(dataDir)
+    val hadData = existing.nonEmpty
     if (hadData && !fs.rename(dataDir, backup))
       throw new java.io.IOException(
         s"state swap: could not move $dataDir aside")
@@ -272,7 +287,7 @@ object StreamingPipeline {
     * aggregate-sized, never key-sized. This is the sketch-per-batch
     * pattern that answers any-range distinct queries at 100 TB by merging
     * registers instead of rescanning events; exactly-once via the same
-    * marker+swap as [[mergeGoldBatch]]. Read the estimate with
+    * ledger+swap as [[mergeGoldBatch]]. Read the estimate with
     * `hll_sketch_estimate(sk)` over the stored table. */
   def sketchDistinct(stream: DataFrame, keys: Seq[String], valueCol: String,
                      storePath: String, ckpt: String,
@@ -289,19 +304,17 @@ object StreamingPipeline {
                           valueCol: String, storePath: String,
                           lgK: Int): Unit = {
     val kcols = keys.map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      val partial = batch.groupBy(kcols: _*)
-        .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sk"))
-      existingOpt match {
-        case Some(existing) =>
-          // union-merge registers: groups absent from one side pass
-          // through; allowDifferentLgConfigK=false pins a uniform lgK
-          existing.select(kcols :+ col("sk"): _*)
-            .unionByName(partial)
-            .groupBy(kcols: _*)
-            .agg(expr("hll_union_agg(sk, false)").as("sk"))
-        case None => partial
-      }
+    val partial = batch.groupBy(kcols: _*)
+      .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sk"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        // union-merge registers: groups absent from one side pass
+        // through; allowDifferentLgConfigK=false pins a uniform lgK
+        existing.select(kcols :+ col("sk"): _*)
+          .unionByName(partial)
+          .groupBy(kcols: _*)
+          .agg(expr("hll_union_agg(sk, false)").as("sk"))
+      case None => partial
     }
   }
 
@@ -314,7 +327,7 @@ object StreamingPipeline {
     * top-k(batch)) = top-k(all), after id-dedup), and is identical
     * across engines/partitionings. State is k rows regardless of
     * ingest volume; per batch the work is one TakeOrdered over the
-    * batch plus one over 2k rows. Exactly-once via the same marker+swap
+    * batch plus one over 2k rows. Exactly-once via the same ledger+swap
     * as [[mergeGoldBatch]]. */
   def sampleIngest(stream: DataFrame, idCol: String, k: Int,
                    storePath: String, ckpt: String): StreamingQuery =
@@ -328,18 +341,19 @@ object StreamingPipeline {
   /** The per-batch body of [[sampleIngest]]. */
   def sampleBatch(batch: DataFrame, idCol: String, k: Int,
                   storePath: String, batchId: Long): Unit = {
-    mergeSwapState(batch.sparkSession, storePath, batchId) { existingOpt =>
-      // Dedup BEFORE the candidate cut: limit(k) counts ROWS, so a batch
-      // with duplicate ids among its top-k hash ranks would waste candidate
-      // slots on copies and truncate away distinct ids that belong in the
-      // global top-k-over-distinct-union (r15 property counterexample:
-      // nine id-0 rows + one id-3 row, k=7 → sample {0} where {0,3} is
-      // required). Distinct-first keeps the cut over the id domain the
-      // parity contract is stated on.
-      val cand = batch.select(col(idCol).cast("string").as("id"))
-        .dropDuplicates("id")
-        .withColumn("h", md5(col("id").cast("binary")))
-        .orderBy("h", "id").limit(k)
+    // Dedup BEFORE the candidate cut: limit(k) counts ROWS, so a batch
+    // with duplicate ids among its top-k hash ranks would waste candidate
+    // slots on copies and truncate away distinct ids that belong in the
+    // global top-k-over-distinct-union (r15 property counterexample:
+    // nine id-0 rows + one id-3 row, k=7 → sample {0} where {0,3} is
+    // required). Distinct-first keeps the cut over the id domain the
+    // parity contract is stated on.
+    val cand = batch.select(col(idCol).cast("string").as("id"))
+      .dropDuplicates("id")
+      .withColumn("h", md5(col("id").cast("binary")))
+      .orderBy("h", "id").limit(k)
+    mergeSwapState(batch.sparkSession, storePath, batchId,
+        Some(cand.schema)) { existingOpt =>
       existingOpt.map(_.unionByName(cand)).getOrElse(cand)
         .dropDuplicates("id")
         .orderBy("h", "id").limit(k)
@@ -356,7 +370,7 @@ object StreamingPipeline {
     * identical kept set. State is one (source, kept) row per source;
     * kept rows land hive-partitioned by batch id, so a replayed batch
     * OVERWRITES its own partition (idempotent) and the counts store's
-    * marker makes the spend exactly-once — the same two-piece protocol
+    * batch ledger makes the spend exactly-once — the same two-piece protocol
     * as the span-dedup ingest. */
   def sourceCapIngest(stream: DataFrame, srcCol: String, idCol: String,
                       cap: Long, outPath: String, storePath: String,
@@ -373,7 +387,10 @@ object StreamingPipeline {
                      cap: Long, outPath: String, storePath: String,
                      batchId: Long): Unit = {
     require(cap > 0, s"cap must be > 0, got $cap")
-    mergeSwapState(batch.sparkSession, storePath, batchId) { existingOpt =>
+    val stateSchema = batch.select(col(srcCol).as("src"), lit(0L).as("kept"))
+      .schema
+    mergeSwapState(batch.sparkSession, storePath, batchId,
+        Some(stateSchema)) { existingOpt =>
       val w = Window.partitionBy(srcCol)
         .orderBy(md5(col(idCol).cast("string").cast("binary")), col(idCol))
       val ranked = batch.withColumn("_cap_rn", row_number().over(w))
@@ -391,7 +408,7 @@ object StreamingPipeline {
       val kept = budgeted.filter(col("_cap_rn") <= col("_cap_left"))
         .drop("_cap_rn", "_cap_src", "_cap_kept", "_cap_left")
       // idempotent side output: a replayed batch rewrites ITS OWN
-      // partition; the marker above prevents double-charging the counts
+      // partition; the ledger prevents double-charging the counts
       kept.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
       val keptCounts = kept.groupBy(col(srcCol).as("src"))
         .agg(count(lit(1)).cast("long").as("k_new"))
@@ -417,7 +434,7 @@ object StreamingPipeline {
     * deterministic md5 order within a batch, so replaying the same batch
     * sequence reproduces identical assignments. Manifest rows land
     * hive-partitioned by batch id (a replay overwrites its own
-    * partition); the marker makes the offset advance exactly-once. */
+    * partition); the batch ledger makes the offset advance exactly-once. */
   def shardManifestIngest(stream: DataFrame, textCol: String,
                           idCol: String, outPath: String,
                           storePath: String, ckpt: String,
@@ -438,7 +455,8 @@ object StreamingPipeline {
       s"tokensPerShard must be > 0, got $tokensPerShard")
     val spark = batch.sparkSession
     import spark.implicits._
-    mergeSwapState(spark, storePath, id) { existingOpt =>
+    val stateSchema = StructType(Seq(StructField("total", LongType)))
+    mergeSwapState(spark, storePath, id, Some(stateSchema)) { existingOpt =>
       val base = existingOpt
         .map(_.select("total").as[Long].head()).getOrElse(0L)
       val keyed = batch.select(col(idCol),
@@ -473,7 +491,7 @@ object StreamingPipeline {
     * history reads from the registers, the events themselves are never
     * rescanned. CMS never undercounts and overshoots by at most eps·N —
     * the guarantee that makes it the standard "which values are hot"
-    * state at 100 TB. Exactly-once via the same marker+swap as
+    * state at 100 TB. Exactly-once via the same ledger+swap as
     * [[mergeGoldBatch]]. */
   def cmsFrequency(stream: DataFrame, keys: Seq[String], valueCol: String,
                    storePath: String, ckpt: String, eps: Double = 1e-4,
@@ -604,7 +622,7 @@ object StreamingPipeline {
     * (groups × one O(1/ε·log εn) summary) — aggregate-sized; any
     * percentile of the whole history reads from the summary
     * ([[quantileStateView]]), the events themselves are never rescanned.
-    * Exactly-once via the same marker+swap as [[mergeGoldBatch]]. */
+    * Exactly-once via the same ledger+swap as [[mergeGoldBatch]]. */
   def quantileState(stream: DataFrame, keys: Seq[String], valueCol: String,
                     storePath: String, ckpt: String,
                     relativeError: Double = 0.001): StreamingQuery =
@@ -621,19 +639,17 @@ object StreamingPipeline {
                          valueCol: String, storePath: String,
                          relativeError: Double): Unit = {
     val kcols = keys.map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      val partial = batch.groupBy(kcols: _*)
-        .agg(graft.functions.QuantileFunctions
-          .quantileSketch(col(valueCol), relativeError).as("sk"))
-      existingOpt match {
-        case Some(existing) =>
-          existing.select(kcols :+ col("sk"): _*)
-            .unionByName(partial)
-            .groupBy(kcols: _*)
-            .agg(graft.functions.QuantileFunctions
-              .quantileSketchMerge(col("sk")).as("sk"))
-        case None => partial
-      }
+    val partial = batch.groupBy(kcols: _*)
+      .agg(graft.functions.QuantileFunctions
+        .quantileSketch(col(valueCol), relativeError).as("sk"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        existing.select(kcols :+ col("sk"): _*)
+          .unionByName(partial)
+          .groupBy(kcols: _*)
+          .agg(graft.functions.QuantileFunctions
+            .quantileSketchMerge(col("sk")).as("sk"))
+      case None => partial
     }
   }
 
@@ -649,7 +665,7 @@ object StreamingPipeline {
     * history yet (cold start) keep everything — a gate with no baseline
     * must not guess.
     *
-    * Exactly-once: the quantile store's batch marker doubles as the
+    * Exactly-once: the quantile store's batch ledger doubles as the
     * COMMIT record for the gated output. A replay of a fully-processed
     * batch returns before touching the output (re-gating it against the
     * now-updated store would select a different set); a crash after the
@@ -676,17 +692,12 @@ object StreamingPipeline {
     val spark = batch.sparkSession
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
-    val backup = new Path(s"$storePath/_prestate")
-    // same READ-side crash-window restore as mergeSwapState: a gate read
-    // in the rename-aside window must see the authoritative store
-    if (!fs.exists(dataDir) && fs.exists(backup) &&
-        !fs.rename(backup, dataDir))
-      throw new java.io.IOException(
-        s"adaptive gate: could not restore $backup to $dataDir after crash")
-    // the store marker is the batch's commit record: a completed batch
+    // the store's ledger is the batch's commit record: a completed batch
     // must NOT re-gate against the post-fold store (different cutoffs →
-    // different output than originally published)
-    if (fs.exists(new Path(s"$storePath/data/_merged/$id"))) return
+    // different output than originally published). mergedBatches also
+    // runs the crash-window restore, so a gate read in the rename-aside
+    // window sees the authoritative store.
+    if (mergedBatches(fs, storePath).contains(id)) return
     val scored = batch.withColumn("quality",
       round(graft.ext.TextAnalysis.qualityScore(col(textCol)) + lit(1e-9),
         4))
@@ -713,7 +724,7 @@ object StreamingPipeline {
     * the full-corpus recompute exactly (algebraic, like the gold
     * moments). State is d²+d+1 doubles TOTAL; read the whitener or
     * Mahalanobis fit at any time via [[embeddingMomentsView]] without
-    * rescanning a single embedding. Exactly-once via marker+swap. */
+    * rescanning a single embedding. Exactly-once via ledger+swap. */
   def embeddingMoments(stream: DataFrame, vecCol: String, storePath: String,
                        ckpt: String): StreamingQuery =
     stream.writeStream
@@ -725,8 +736,11 @@ object StreamingPipeline {
 
   /** The per-batch body of [[embeddingMoments]]. */
   def embeddingMomentsBatch(batch: DataFrame, id: Long, vecCol: String,
-                            storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
+                            storePath: String): Unit = {
+    val cellSchema = StructType(Seq(
+      StructField("k", IntegerType), StructField("s", DoubleType)))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(cellSchema)) {
+        existingOpt =>
       val spark = batch.sparkSession
       import spark.implicits._
       // the partial is d²+d+1 cells TOTAL — collect it ONCE and rebuild
@@ -762,6 +776,7 @@ object StreamingPipeline {
         case None => partial
       }
     }
+  }
 
   /** Decode an [[embeddingMoments]] store into (n, mean, covariance) —
     * a d²-cell driver read, never an embedding rescan. */
@@ -778,7 +793,7 @@ object StreamingPipeline {
     * full historical edge set — only components a new edge touches
     * relabel. State is nodes-sized (two longs per doc ever seen in an
     * edge); the edges themselves are never stored. Exactly-once via the
-    * same marker+swap as [[mergeGoldBatch]]. */
+    * same ledger+swap as [[mergeGoldBatch]]. */
   def ccIngest(edgeStream: DataFrame, srcCol: String, dstCol: String,
                storePath: String, ckpt: String): StreamingQuery =
     edgeStream.writeStream
@@ -790,13 +805,16 @@ object StreamingPipeline {
 
   /** The per-batch body of [[ccIngest]]. */
   def ccIngestBatch(batch: DataFrame, id: Long, srcCol: String,
-                    dstCol: String, storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) {
+                    dstCol: String, storePath: String): Unit = {
+    val assignSchema = StructType(Seq(
+      StructField("id", LongType), StructField("cluster_id", LongType)))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(assignSchema)) {
       case Some(existing) => graft.ext.Graph
         .incrementalConnectedComponents(existing, batch, srcCol, dstCol)
       case None => graft.ext.Graph
         .connectedComponents(batch, srcCol, dstCol)
     }
+  }
 
   /** Continuous keep-best-per-cluster dedup — the streaming twin of
     * [[graft.ext.Curate.keepBestPerCluster]], closing the cluster-layer
@@ -814,7 +832,7 @@ object StreamingPipeline {
     * cluster ever seen); at 100 TB the store becomes a partitioned
     * table merged on the clusters the batch touches, exactly like the
     * gold-state note on [[mergeGoldBatch]]. Exactly-once via the same
-    * marker+swap. */
+    * ledger+swap. */
   def keepBestIngest(stream: DataFrame, clusterCol: String,
                      textCol: String, idCol: String, storePath: String,
                      ckpt: String): StreamingQuery =
@@ -828,23 +846,23 @@ object StreamingPipeline {
   /** The per-batch body of [[keepBestIngest]]. */
   def keepBestBatch(batch: DataFrame, id: Long, clusterCol: String,
                     textCol: String, idCol: String,
-                    storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      val w = Window.partitionBy(col(clusterCol))
-        .orderBy(col("quality").desc, col(idCol).asc)
-      def champions(df: DataFrame): DataFrame =
-        df.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-      val batchBest = champions(batch
-        .select(col(clusterCol), col(idCol), col(textCol))
-        .withColumn("quality",
-          round(graft.ext.TextAnalysis.qualityScore(col(textCol))
-            + lit(1e-9), 4)))
-      existingOpt match {
-        case Some(existing) => champions(existing.unionByName(batchBest))
-        case None => batchBest
-      }
+                    storePath: String): Unit = {
+    val w = Window.partitionBy(col(clusterCol))
+      .orderBy(col("quality").desc, col(idCol).asc)
+    def champions(df: DataFrame): DataFrame =
+      df.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")
+    val batchBest = champions(batch
+      .select(col(clusterCol), col(idCol), col(textCol))
+      .withColumn("quality",
+        round(graft.ext.TextAnalysis.qualityScore(col(textCol))
+          + lit(1e-9), 4)))
+    mergeSwapState(batch.sparkSession, storePath, id,
+        Some(batchBest.schema)) {
+      case Some(existing) => champions(existing.unionByName(batchBest))
+      case None => batchBest
     }
+  }
 
   /** Continuous token-budget corpus selection — the streaming twin of
     * [[graft.ext.Sampling.tokenBudgetSelect]]: each micro-batch's
@@ -868,7 +886,7 @@ object StreamingPipeline {
     * [[tokenBudgetIngestBatch]]), so the view over any batch split
     * equals [[graft.ext.Sampling.tokenBudgetSelect]] over the
     * concatenated history EXACTLY (split-invariant; property-tested).
-    * Exactly-once via the same marker+swap. */
+    * Exactly-once via the same ledger+swap. */
   def tokenBudgetIngest(stream: DataFrame, textCol: String, idCol: String,
                         storePath: String, ckpt: String): StreamingQuery =
     stream.writeStream
@@ -879,7 +897,7 @@ object StreamingPipeline {
       .start()
 
   /** The per-batch body of [[tokenBudgetIngest]]. The fold is
-    * per-DOCUMENT idempotent, not just per-batch: the marker suppresses
+    * per-DOCUMENT idempotent, not just per-batch: the ledger suppresses
     * replays of the same batch id, and the anti-join below additionally
     * drops index rows whose doc id is already present — so an
     * at-least-once source re-delivering a document under a NEW batch id
@@ -890,31 +908,30 @@ object StreamingPipeline {
     * the view over any batch split equals the batch operator over the
     * first-arrival-deduped history exactly. */
   def tokenBudgetIngestBatch(batch: DataFrame, id: Long, textCol: String,
-                             idCol: String, storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // an empty batch scores to an empty projection DERIVED from the
-      // input, so the id column keeps its real type (the shardManifest
-      // empty-frame lesson: fabricated literals would land a
-      // wrongly-typed parquet partition)
-      val raw = graft.ext.Sampling.tokenBudgetScore(batch, textCol, idCol)
-      // in-batch dedup FIRST: a duplicate id arriving twice within one
-      // micro-batch (producer-retry duplicates adjacent in the log)
-      // would bypass the store anti-join below — both rows are absent
-      // from `existing` — and double-count forever. The reduction is
-      // the deterministic min-(tok_n, _rqi) representative per id:
-      // identity for true re-deliveries (identical scored rows), a
-      // stable pick for conflicting payloads (same stance as the
-      // semantic-dedup ingest's in-batch pass).
-      val scored = raw.groupBy(col(idCol))
-        .agg(min(struct(col("tok_n"), col("_rqi"))).as("_m"))
-        .select(col(idCol), col("_m.tok_n").as("tok_n"),
-          col("_m._rqi").as("_rqi"))
-      existingOpt match {
-        case Some(existing) => existing.unionByName(
-          scored.join(existing.select(col(idCol)), Seq(idCol), "left_anti"))
-        case None => scored
-      }
+                             idCol: String, storePath: String): Unit = {
+    // an empty batch scores to an empty projection DERIVED from the
+    // input, so the id column keeps its real type (the shardManifest
+    // empty-frame lesson: fabricated literals would land a
+    // wrongly-typed parquet partition)
+    val raw = graft.ext.Sampling.tokenBudgetScore(batch, textCol, idCol)
+    // in-batch dedup FIRST: a duplicate id arriving twice within one
+    // micro-batch (producer-retry duplicates adjacent in the log)
+    // would bypass the store anti-join below — both rows are absent
+    // from `existing` — and double-count forever. The reduction is
+    // the deterministic min-(tok_n, _rqi) representative per id:
+    // identity for true re-deliveries (identical scored rows), a
+    // stable pick for conflicting payloads (same stance as the
+    // semantic-dedup ingest's in-batch pass).
+    val scored = raw.groupBy(col(idCol))
+      .agg(min(struct(col("tok_n"), col("_rqi"))).as("_m"))
+      .select(col(idCol), col("_m.tok_n").as("tok_n"),
+        col("_m._rqi").as("_rqi"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+      case Some(existing) => existing.unionByName(
+        scored.join(existing.select(col(idCol)), Seq(idCol), "left_anti"))
+      case None => scored
     }
+  }
 
   /** The current selection from a [[tokenBudgetIngest]] store:
     * identical columns and rows to running the batch operator over
@@ -949,7 +966,7 @@ object StreamingPipeline {
     * tracks the evolving corpus without ever rescanning it. Counting is
     * algebraic, so the state always equals the full-corpus recompute
     * exactly; state is ≤numBuckets rows TOTAL. Read the weight table at
-    * any time via [[dsirWeightsView]]. Exactly-once via marker+swap. */
+    * any time via [[dsirWeightsView]]. Exactly-once via ledger+swap. */
   def dsirCounts(stream: DataFrame, textCol: String,
                  targetPred: org.apache.spark.sql.Column, numBuckets: Int,
                  storePath: String, ckpt: String): StreamingQuery =
@@ -964,22 +981,21 @@ object StreamingPipeline {
   /** The per-batch body of [[dsirCounts]]. */
   def dsirCountsBatch(batch: DataFrame, id: Long, textCol: String,
                       targetPred: org.apache.spark.sql.Column,
-                      numBuckets: Int, storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      val par = batch.sparkSession.sparkContext.defaultParallelism
-      val partial = graft.ext.Par.fanOut(batch, par)
-        .select(targetPred.cast("long").as("t"),
-          explode(graft.ext.Sampling
-            .dsirFeatures(col(textCol), numBuckets)).as("bucket"))
-        .groupBy("bucket")
-        .agg(sum("t").as("ct"), count(lit(1)).as("cr"))
-      existingOpt match {
-        case Some(existing) =>
-          existing.unionByName(partial).groupBy("bucket")
-            .agg(sum("ct").as("ct"), sum("cr").as("cr"))
-        case None => partial
-      }
+                      numBuckets: Int, storePath: String): Unit = {
+    val par = batch.sparkSession.sparkContext.defaultParallelism
+    val partial = graft.ext.Par.fanOut(batch, par)
+      .select(targetPred.cast("long").as("t"),
+        explode(graft.ext.Sampling
+          .dsirFeatures(col(textCol), numBuckets)).as("bucket"))
+      .groupBy("bucket")
+      .agg(sum("t").as("ct"), count(lit(1)).as("cr"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        existing.unionByName(partial).groupBy("bucket")
+          .agg(sum("ct").as("ct"), sum("cr").as("cr"))
+      case None => partial
     }
+  }
 
   /** Smoothed log importance-ratio table from a [[dsirCounts]] store:
     * (bucket, lw) over ALL `numBuckets` buckets — identical to
@@ -1009,7 +1025,7 @@ object StreamingPipeline {
     * rescanning it. State is vocabulary-bounded (bigram types + unigram
     * types); counting is algebraic, so [[knModelView]] over the store is
     * EXACTLY the batch model over the corpus streamed so far.
-    * Exactly-once via marker+swap. */
+    * Exactly-once via ledger+swap. */
   def knCounts(stream: DataFrame, textCol: String, storePath: String,
                ckpt: String): StreamingQuery =
     stream.writeStream
@@ -1021,27 +1037,26 @@ object StreamingPipeline {
 
   /** The per-batch body of [[knCounts]]. */
   def knCountsBatch(batch: DataFrame, id: Long, textCol: String,
-                    storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      val par = batch.sparkSession.sparkContext.defaultParallelism
-      val toks = graft.ext.Par.fanOut(batch, par)
-        .select(graft.ext.TextAnalysis.tokens(col(textCol)).as("toks"))
-      val bg = toks
-        .select(explode(graft.ext.TextAnalysis
-          .shinglesFromTokens(col("toks"), 2)).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("c"))
-        .withColumn("kind", lit("bg"))
-      val uni = toks.select(explode(col("toks")).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("c"))
-        .withColumn("kind", lit("uni"))
-      val partial = bg.unionByName(uni)
-      existingOpt match {
-        case Some(existing) =>
-          existing.unionByName(partial).groupBy("k", "kind")
-            .agg(sum("c").as("c"))
-        case None => partial
-      }
+                    storePath: String): Unit = {
+    val par = batch.sparkSession.sparkContext.defaultParallelism
+    val toks = graft.ext.Par.fanOut(batch, par)
+      .select(graft.ext.TextAnalysis.tokens(col(textCol)).as("toks"))
+    val bg = toks
+      .select(explode(graft.ext.TextAnalysis
+        .shinglesFromTokens(col("toks"), 2)).as("k"))
+      .groupBy("k").agg(count(lit(1)).as("c"))
+      .withColumn("kind", lit("bg"))
+    val uni = toks.select(explode(col("toks")).as("k"))
+      .groupBy("k").agg(count(lit(1)).as("c"))
+      .withColumn("kind", lit("uni"))
+    val partial = bg.unionByName(uni)
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        existing.unionByName(partial).groupBy("k", "kind")
+          .agg(sum("c").as("c"))
+      case None => partial
     }
+  }
 
   /** Rebuild the [[graft.ext.Lm.KnModel]] tables from a [[knCounts]]
     * store — every table is an aggregate of the stored TYPE counts
@@ -1127,7 +1142,7 @@ object StreamingPipeline {
 
   /** Continuous gold maintenance: stream → per-batch partial window
     * aggregates → algebraic merge into the gold table (exactly-once via
-    * the batch marker in [[mergeGoldBatch]]). */
+    * the batch ledger in [[mergeGoldBatch]]). */
   def incrementalGold(stream: DataFrame, goldPath: String, ckpt: String,
                       timeCol: String, keys: Seq[String], valueCol: String,
                       windowDuration: String): StreamingQuery =
@@ -1141,7 +1156,7 @@ object StreamingPipeline {
 
   /** Continuous EWMA gold: the per-(key, day) average series behind the
     * batch `a_ewma_daily` query, kept incrementally as algebraic
-    * (n, Σv) day-level state under the same marker+swap exactly-once
+    * (n, Σv) day-level state under the same ledger+swap exactly-once
     * protocol as [[mergeGoldBatch]]. The EWMA itself is a READ-time fold
     * over the stored day aggregates ([[ewmaDailyView]]) — the recursion
     * is not mergeable, but its day-average input is, so state stays
@@ -1162,19 +1177,17 @@ object StreamingPipeline {
                     timeCol: String, keys: Seq[String],
                     valueCol: String): Unit = {
     val gb = (keys :+ "day").map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // n counts NON-NULL values (not rows): sum() skips NULLs, so a
-      // count(1) row count would inflate the denominator and diverge
-      // from the batch AVG the read-time view claims parity with.
-      val partial = batch.withColumn("day", to_date(col(timeCol)))
-        .groupBy(gb: _*)
-        .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"))
-      existingOpt match {
-        case Some(existing) =>
-          existing.unionByName(partial).groupBy(gb: _*)
-            .agg(sum("n").as("n"), sum("sum_v").as("sum_v"))
-        case None => partial
-      }
+    // n counts NON-NULL values (not rows): sum() skips NULLs, so a
+    // count(1) row count would inflate the denominator and diverge
+    // from the batch AVG the read-time view claims parity with.
+    val partial = batch.withColumn("day", to_date(col(timeCol)))
+      .groupBy(gb: _*)
+      .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        existing.unionByName(partial).groupBy(gb: _*)
+          .agg(sum("n").as("n"), sum("sum_v").as("sum_v"))
+      case None => partial
     }
   }
 
@@ -1205,7 +1218,7 @@ object StreamingPipeline {
   /** Continuous seasonal baseline: the per-(key, hour-of-day) diurnal
     * mean/stddev profile behind the batch `a_seasonal_anomalies` query,
     * kept incrementally as algebraic moments (n, Σv, Σv²) under the
-    * marker+swap protocol. State is (keys × 24) rows at any corpus size;
+    * ledger+swap protocol. State is (keys × 24) rows at any corpus size;
     * [[seasonalBaselineView]] turns the moments into the m/sd baseline
     * new batches score z-values against. */
   def seasonalBaselineIngest(stream: DataFrame, storePath: String,
@@ -1224,20 +1237,18 @@ object StreamingPipeline {
                             timeCol: String, keys: Seq[String],
                             valueCol: String): Unit = {
     val gb = (keys :+ "hod").map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // n = non-null count, matching AVG/STDDEV_SAMP denominators (the
-      // moment sums already skip NULLs natively).
-      val partial = batch.withColumn("hod", hour(col(timeCol)))
-        .groupBy(gb: _*)
-        .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"),
-          sum(col(valueCol) * col(valueCol)).as("sum_sq"))
-      existingOpt match {
-        case Some(existing) =>
-          existing.unionByName(partial).groupBy(gb: _*)
-            .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
-              sum("sum_sq").as("sum_sq"))
-        case None => partial
-      }
+    // n = non-null count, matching AVG/STDDEV_SAMP denominators (the
+    // moment sums already skip NULLs natively).
+    val partial = batch.withColumn("hod", hour(col(timeCol)))
+      .groupBy(gb: _*)
+      .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"),
+        sum(col(valueCol) * col(valueCol)).as("sum_sq"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+      case Some(existing) =>
+        existing.unionByName(partial).groupBy(gb: _*)
+          .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
+            sum("sum_sq").as("sum_sq"))
+      case None => partial
     }
   }
 
@@ -1289,22 +1300,21 @@ object StreamingPipeline {
   def driftMonitorBatch(batch: DataFrame, id: Long, reference: DataFrame,
                         groupCols: Seq[String], valueCol: String,
                         storePath: String, lo: Double, hi: Double,
-                        buckets: Int): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // a group with NO rows this batch (or an empty batch) scores as
-      // PSI(reference vs uniform) — absence is a volume signal, not a
-      // distribution shift, and appending it would fire psi_drift on two
-      // quiet windows; producer_down already owns the no-data alert
-      val scored = graft.monitoring.Drift
-        .streamingPsi(batch, reference, groupCols, valueCol, lo, hi, buckets)
-        .filter(col("n_cur") > 0)
-        .select(lit(id).as("batch_id") +: (groupCols.map(col) ++
-          Seq(col("n_ref"), col("n_cur"), col("psi"))): _*)
-      existingOpt match {
-        case Some(existing) => existing.unionByName(scored)
-        case None           => scored
-      }
+                        buckets: Int): Unit = {
+    // a group with NO rows this batch (or an empty batch) scores as
+    // PSI(reference vs uniform) — absence is a volume signal, not a
+    // distribution shift, and appending it would fire psi_drift on two
+    // quiet windows; producer_down already owns the no-data alert
+    val scored = graft.monitoring.Drift
+      .streamingPsi(batch, reference, groupCols, valueCol, lo, hi, buckets)
+      .filter(col("n_cur") > 0)
+      .select(lit(id).as("batch_id") +: (groupCols.map(col) ++
+        Seq(col("n_ref"), col("n_cur"), col("psi"))): _*)
+    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+      case Some(existing) => existing.unionByName(scored)
+      case None           => scored
     }
+  }
 
   /** The embedding twin of [[driftMonitorIngest]]: per micro-batch,
     * cosine between the batch's embedding centroid and a STORED
@@ -1330,25 +1340,24 @@ object StreamingPipeline {
   /** The per-batch body of [[embeddingDriftMonitorIngest]]. */
   def embeddingDriftMonitorBatch(batch: DataFrame, id: Long,
                                  refCentroid: DataFrame, vecCol: String,
-                                 storePath: String): Unit =
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // an empty (or all-null-vector) batch has no centroid — its global
-      // aggregate still emits one row (cv = [], n NULL) whose cosine
-      // degenerates to 0.0, and appending that would fire the critical
-      // embedding_drift rule on two quiet batches; skip it (volume
-      // problems are producer_down's alert, not drift's)
-      val scored = graft.monitoring.Drift.referenceCentroid(batch, vecCol)
-        .filter(col("n").isNotNull && col("n") > 0)
-        .select(col("cv").as("bv"), col("n"))
-        .crossJoin(broadcast(refCentroid.select(col("cv").as("rv"))))
-        .select(lit(id).as("batch_id"), col("n"),
-          graft.monitoring.Drift.cosineCol(col("bv"), col("rv"))
-            .as("centroid_cosine"))
-      existingOpt match {
-        case Some(existing) => existing.unionByName(scored)
-        case None           => scored
-      }
+                                 storePath: String): Unit = {
+    // an empty (or all-null-vector) batch has no centroid — its global
+    // aggregate still emits one row (cv = [], n NULL) whose cosine
+    // degenerates to 0.0, and appending that would fire the critical
+    // embedding_drift rule on two quiet batches; skip it (volume
+    // problems are producer_down's alert, not drift's)
+    val scored = graft.monitoring.Drift.referenceCentroid(batch, vecCol)
+      .filter(col("n").isNotNull && col("n") > 0)
+      .select(col("cv").as("bv"), col("n"))
+      .crossJoin(broadcast(refCentroid.select(col("cv").as("rv"))))
+      .select(lit(id).as("batch_id"), col("n"),
+        graft.monitoring.Drift.cosineCol(col("bv"), col("rv"))
+          .as("centroid_cosine"))
+    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+      case Some(existing) => existing.unionByName(scored)
+      case None           => scored
     }
+  }
 
   /** Long-format metric view of a [[driftMonitorIngest]] /
     * [[embeddingDriftMonitorIngest]] store — (window_start, metric,
@@ -1376,8 +1385,8 @@ object StreamingPipeline {
     * `outPath`, and their fingerprints append to the index — so a
     * document seen in ANY earlier batch (not just inside the watermark
     * horizon, which is `dropDuplicatesWithinWatermark`'s limit) never
-    * lands twice. The batch marker makes replays no-ops, exactly like
-    * [[mergeGoldBatch]].
+    * lands twice. The batch marker makes replays no-ops, like the batch
+    * ledger of [[mergeGoldBatch]].
     *
     * Scale shape: the index is fingerprint-sized (32 bytes/doc ever
     * ingested), the per-batch work is one window + one anti join keyed on

@@ -270,6 +270,32 @@ class BenchGuardSpec extends AnyFunSuite {
       === 129000.0)
   }
 
+  test("parallelism gate: a prior recorded at another local[N], or with " +
+    "no recorded parallelism, is incomparable; ungated callers unchanged") {
+    val sf = "/d"
+    def artifact(par: Option[Int]) =
+      s"""{"methodology":"${BenchGuard.Methodology}","sf":"$sf",""" +
+        s""""env_ok":true,"env":{"cpus":32""" +
+        par.fold("")(n => s""","parallelism":$n""") +
+        s"""},"queries":{"q1":1.5},"probe_medians":{"chain_rows_per_sec":9.0}}"""
+    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, Some(8)) ===
+      Map("q1" -> 1.5))
+    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, Some(32)).isEmpty)
+    assert(BenchGuard.parsePrior(artifact(None), sf, Some(8)).isEmpty)
+    assert(BenchGuard.parsePrior(artifact(None), sf) === Map("q1" -> 1.5))
+    assert(BenchGuard.parsePriorProbeMedians(artifact(Some(8)), sf,
+      Some(32)).isEmpty)
+    val line8 = BenchGuard.probeHistoryLine(sf, envOk = true,
+      Seq("chain_rows_per_sec" -> 100.0), Some(8))
+    val line32 = BenchGuard.probeHistoryLine(sf, envOk = true,
+      Seq("chain_rows_per_sec" -> 400.0), Some(32))
+    val hist = (Seq.fill(3)(line8) ++ Seq.fill(2)(line32)).mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(hist, sf, parallelism = Some(8)) ===
+      Map("chain_rows_per_sec" -> 100.0))
+    assert(BenchGuard.probeHistoryAnchors(hist, sf, parallelism = Some(32))
+      .isEmpty, "two comparable lines are below minEntries")
+  }
+
   // ---- env bounds ----------------------------------------------------
 
   test("envOk: declared load + heap bounds") {

@@ -1028,4 +1028,263 @@ class IncrementalGoldSpec extends SparkTestBase {
       .as[(String, Option[String])].collect().toMap
     assert(out === Map("a" -> Some("alpha"), "z" -> None)) // left join keeps unmatched
   }
+
+  // ---------------------------------------------------------------
+  // batch ledger: the O(1) replay record every state store shares
+  // ---------------------------------------------------------------
+  private def oneRow(t: String, k: String, v: Double) =
+    Seq((t, k, v)).toDF("t", "k", "v")
+      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
+
+  private def goldN(goldDir: String): Long =
+    spark.read.parquet(s"$goldDir/data").agg(sum("n")).as[Long].head()
+
+  private def ledgerEntries(store: String): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$store/data/_merged")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).map(_.getPath.getName).toSeq
+  }
+
+  test("BatchLedger: range-compressed encode/decode, out-of-order ids") {
+    import graft.streaming.BatchLedger
+    val l = Seq(3L, 0L, 1L, 2L, 7L, 9L, 8L, 5L).foldLeft(BatchLedger.empty)(_ + _)
+    assert(l.encode === "0..3,5,7..9")
+    assert(BatchLedger.decode(l.encode) === l)
+    assert(Seq(0L, 3L, 5L, 7L, 9L).forall(l.contains))
+    assert(!Seq(-1L, 4L, 6L, 10L).exists(l.contains))
+    assert((l + 4L + 6L).encode === "0..9")
+    assert(BatchLedger.decode("") === BatchLedger.empty)
+  }
+
+  test("batch ledger: after 50 merges _merged/ holds one file, every " +
+    "merged id replays as a no-op, and the store's file count stays flat") {
+    val goldDir = Files.createTempDirectory("graft-ledger").toString + "/g"
+    val row = oneRow("2024-06-15 10:01:00", "a", 1.0)
+    def filesOnDisk(): Long = {
+      val w = Files.walk(java.nio.file.Path.of(s"$goldDir/data"))
+      try w.filter(Files.isRegularFile(_)).count() finally w.close()
+    }
+    val files = (0L until 50L).map { id =>
+      StreamingPipeline.mergeGoldBatch(row, goldDir, id, "t", Seq("k"), "v",
+        "5 minutes")
+      filesOnDisk()
+    }
+    assert(ledgerEntries(goldDir) === Seq("ledger"))
+    assert(goldN(goldDir) === 50L)
+    (0L until 50L).foreach(id => StreamingPipeline.mergeGoldBatch(row,
+      goldDir, id, "t", Seq("k"), "v", "5 minutes"))
+    assert(goldN(goldDir) === 50L, "a replayed id must not merge again")
+    // same one-row state every merge: per-batch markers (each re-created
+    // by every later merge) grew the store by a file per batch
+    assert(files(45) === files(5), s"store files per merge grew: $files")
+  }
+
+  test("batch ledger: a store in the legacy per-batch-marker layout keeps " +
+    "working and folds its markers into the ledger") {
+    val goldDir = Files.createTempDirectory("graft-legacy").toString + "/g"
+    val row = oneRow("2024-06-15 10:01:00", "a", 2.0)
+    (0L to 2L).foreach(id => StreamingPipeline.mergeGoldBatch(row, goldDir,
+      id, "t", Seq("k"), "v", "5 minutes"))
+    // rewrite the bookkeeping as the older layout did: one empty file
+    // per merged batch, no ledger
+    val merged = new java.io.File(s"$goldDir/data/_merged")
+    org.apache.commons.io.FileUtils.deleteDirectory(merged)
+    merged.mkdirs()
+    (0 to 2).foreach(id => new java.io.File(merged, id.toString).createNewFile())
+    StreamingPipeline.mergeGoldBatch(row, goldDir, 1L, "t", Seq("k"), "v",
+      "5 minutes")
+    assert(goldN(goldDir) === 3L, "a replayed legacy id must be a no-op")
+    StreamingPipeline.mergeGoldBatch(row, goldDir, 3L, "t", Seq("k"), "v",
+      "5 minutes")
+    assert(goldN(goldDir) === 4L, "the next id must merge")
+    assert(ledgerEntries(goldDir) === Seq("ledger"))
+    val text = new String(Files.readAllBytes(
+      java.nio.file.Path.of(s"$goldDir/data/_merged/ledger")), "UTF-8")
+    assert(text === "0..3")
+    StreamingPipeline.mergeGoldBatch(row, goldDir, 0L, "t", Seq("k"), "v",
+      "5 minutes")
+    assert(goldN(goldDir) === 4L, "migrated legacy ids stay merged")
+  }
+
+  test("batch ledger: a legacy store whose types differ from the pinned " +
+    "schema (integer values, sum stored as double) merges and is rewritten " +
+    "in the batch-recompute types") {
+    val goldDir = Files.createTempDirectory("graft-legacy-int").toString + "/g"
+    // the older join merge stored an integer column's sum as a double
+    Seq(("2024-06-15 10:00:00", "a", 2L, 5.0, 1, 4)).toDF("w", "k", "n",
+        "sum_v", "min_v", "max_v")
+      .select(to_timestamp(col("w")).as("window_start"), col("k"), col("n"),
+        col("sum_v"), col("min_v"), col("max_v"))
+      .write.parquet(s"$goldDir/data")
+    new java.io.File(s"$goldDir/data/_merged").mkdirs()
+    (0 to 1).foreach(id =>
+      new java.io.File(s"$goldDir/data/_merged/$id").createNewFile())
+    val batch = Seq(("2024-06-15 10:03:00", "a", 7)).toDF("t", "k", "v")
+      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
+    StreamingPipeline.mergeGoldBatch(batch, goldDir, 2L, "t", Seq("k"), "v",
+      "5 minutes")
+    val stored = spark.read.parquet(s"$goldDir/data")
+    assert(stored.schema("sum_v").dataType ===
+      org.apache.spark.sql.types.LongType)
+    assert(stored.select("n", "sum_v", "min_v", "max_v")
+      .as[(Long, Long, Int, Int)].collect().toSeq === Seq((3L, 12L, 1, 7)))
+    StreamingPipeline.mergeGoldBatch(batch, goldDir, 3L, "t", Seq("k"), "v",
+      "5 minutes")
+    assert(goldN(goldDir) === 4L)
+  }
+
+  test("adaptiveGateBatch honours the ledger (and legacy markers) as its " +
+    "commit record") {
+    val root = Files.createTempDirectory("graft-agate-ledger").toString
+    val out = s"$root/out"; val store = s"$root/store"
+    def fold(id: Long): Unit = StreamingPipeline.adaptiveGateBatch(
+      (1 to 6).map(i => (i.toLong, "a", ("the and of w " * i).trim))
+        .toDF("doc_id", "source", "text"), id, "source", "text",
+      out, store, pct = 0.25, relativeError = 0.001)
+    (0L to 2L).foreach(fold)
+    assert(ledgerEntries(store) === Seq("ledger"))
+    // a replay returns before touching the output: drop a committed
+    // partition and replay its batch — it must stay gone
+    val part = new java.io.File(s"$out/batch_id=1")
+    org.apache.commons.io.FileUtils.deleteDirectory(part)
+    fold(1L)
+    assert(!part.exists, "replay of a ledgered batch re-gated its output")
+    // same for a batch recorded only as a legacy marker file
+    new java.io.File(s"$store/data/_merged/3").createNewFile()
+    fold(3L)
+    assert(!new java.io.File(s"$out/batch_id=3").exists,
+      "replay of a legacy-marked batch re-gated its output")
+    fold(4L)
+    assert(new java.io.File(s"$out/batch_id=4").exists)
+  }
+
+  // ---------------------------------------------------------------
+  // gold merge semantics: nulls and integer values
+  // ---------------------------------------------------------------
+  /** Batch recompute of the gold table, in the merge's column layout. */
+  private def goldRecompute(df: org.apache.spark.sql.DataFrame) = df
+    .groupBy(window(col("t"), "5 minutes").getField("start")
+      .as("window_start"), col("k"))
+    .agg(count(lit(1)).as("n"), sum("v").as("sum_v"), min("v").as("min_v"),
+      max("v").as("max_v"))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.select("window_start", "k", "n", "sum_v", "min_v", "max_v")
+      .collect().map(_.toSeq).toSet
+
+  test("gold merge: all-null and partly-null windows and an IntegerType " +
+    "value column store what a batch recompute gives, values and types") {
+    import org.apache.spark.sql.types._
+    def events(rows: Seq[(String, String, Option[Int])], vType: DataType) =
+      rows.toDF("t", "k", "v").select(to_timestamp(col("t")).as("t"),
+        col("k"), col("v").cast(vType).as("v"))
+    val b0 = Seq(
+      ("2024-06-15 10:01:00", "nulls", None),     // all-null window,
+      ("2024-06-15 10:01:00", "part", Some(4)),   // split across batches
+      ("2024-06-15 10:02:00", "part", None),
+      ("2024-06-15 10:06:00", "once", None))      // all-null, one batch
+    val b1 = Seq(
+      ("2024-06-15 10:03:00", "nulls", None),
+      ("2024-06-15 10:04:00", "part", Some(-3)),
+      ("2024-06-15 10:04:00", "part", None),
+      ("2024-06-15 10:11:00", "new", Some(7)))
+    for (vType <- Seq(DoubleType, IntegerType)) {
+      val goldDir = Files.createTempDirectory("graft-gnull").toString + "/g"
+      StreamingPipeline.mergeGoldBatch(events(b0, vType), goldDir, 0L, "t",
+        Seq("k"), "v", "5 minutes")
+      StreamingPipeline.mergeGoldBatch(events(b1, vType), goldDir, 1L, "t",
+        Seq("k"), "v", "5 minutes")
+      val stored = spark.read.parquet(s"$goldDir/data")
+      val want = goldRecompute(events(b0 ++ b1, vType))
+      assert(stored.schema.map(f => f.name -> f.dataType) ===
+        want.schema.map(f => f.name -> f.dataType), s"$vType column types")
+      assert(rowsOf(stored) === rowsOf(want), s"$vType values")
+      val byKey = stored.collect().map(r => r.getAs[String]("k") -> r).toMap
+      assert(byKey("nulls").getAs[Long]("n") === 2L)
+      assert(byKey("nulls").isNullAt(byKey("nulls").fieldIndex("sum_v")),
+        "an all-null window sums to NULL, as the recompute does")
+      assert(byKey("part").getAs[Any]("sum_v").toString.toDouble === 1.0)
+      assert(byKey("part").getAs[Long]("n") === 4L)
+    }
+  }
+
+  test("gold merge: on non-null doubles it equals the earlier full-outer-" +
+    "join combination of two partial aggregates") {
+    def partial(df: org.apache.spark.sql.DataFrame) = goldRecompute(df)
+    def joinMerge(a: org.apache.spark.sql.DataFrame,
+                  b: org.apache.spark.sql.DataFrame) = {
+      val on = Seq("window_start", "k")
+      a.select(on.map(col) :+ col("n").as("n0") :+ col("sum_v").as("s0") :+
+          col("min_v").as("mn0") :+ col("max_v").as("mx0"): _*)
+        .join(b, on, "full_outer")
+        .select(on.map(col) ++ Seq(
+          (coalesce(col("n0"), lit(0L)) + coalesce(col("n"), lit(0L))).as("n"),
+          (coalesce(col("s0"), lit(0.0)) + coalesce(col("sum_v"), lit(0.0)))
+            .as("sum_v"),
+          least(coalesce(col("mn0"), col("min_v")),
+            coalesce(col("min_v"), col("mn0"))).as("min_v"),
+          greatest(coalesce(col("mx0"), col("max_v")),
+            coalesce(col("max_v"), col("mx0"))).as("max_v")): _*)
+    }
+    val b0 = Seq(("2024-06-15 10:01:00", "a", 1.5),
+      ("2024-06-15 10:07:00", "b", 2.0), ("2024-06-15 10:02:00", "a", -4.0))
+    val b1 = Seq(("2024-06-15 10:03:00", "a", 8.0),
+      ("2024-06-15 10:12:00", "c", 0.5))
+    def df(rows: Seq[(String, String, Double)]) = rows.toDF("t", "k", "v")
+      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
+    val goldDir = Files.createTempDirectory("graft-gjoin").toString + "/g"
+    StreamingPipeline.mergeGoldBatch(df(b0), goldDir, 0L, "t", Seq("k"), "v",
+      "5 minutes")
+    StreamingPipeline.mergeGoldBatch(df(b1), goldDir, 1L, "t", Seq("k"), "v",
+      "5 minutes")
+    val stored = spark.read.parquet(s"$goldDir/data")
+    val ref = joinMerge(partial(df(b0)), partial(df(b1)))
+    assert(stored.schema.map(f => f.name -> f.dataType) ===
+      ref.schema.map(f => f.name -> f.dataType))
+    assert(rowsOf(stored) === rowsOf(ref))
+  }
+
+  test("gold merge into an existing store runs at most 2 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val goldDir = Files.createTempDirectory("graft-gjobs").toString + "/g"
+    def batch(k: String) = Seq(("2024-06-15 10:01:00", k, 1.0),
+      ("2024-06-15 10:08:00", k, 2.0)).toDF("t", "k", "v")
+      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
+    StreamingPipeline.mergeGoldBatch(batch("a"), goldDir, 0L, "t", Seq("k"),
+      "v", "5 minutes")
+    val sc = spark.sparkContext
+    val group = s"gold-jobs-${System.nanoTime}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull
+        if (g == group) jobs.add(e.jobId)
+        if (g == sentinel) sentinelJobs.add(e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "gold merge")
+      StreamingPipeline.mergeGoldBatch(batch("b"), goldDir, 1L, "t",
+        Seq("k"), "v", "5 minutes")
+      // the bus delivers in order: once the sentinel job's end arrives,
+      // every job the merge started has been seen
+      sc.setJobGroup(sentinel, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    assert(jobs.size >= 1 && jobs.size <= 2,
+      s"merge into an existing store ran ${jobs.size} jobs")
+    assert(goldN(goldDir) === 4L)
+  }
 }

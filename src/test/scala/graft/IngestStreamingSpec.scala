@@ -1055,4 +1055,36 @@ class IngestStreamingSpec extends SparkTestBase {
     assert(parsed.valid.filter(col("sensor_id") === "sensor-001")
       .select("value").as[Double].head() === 22.5)
   }
+
+  test("ingest stamp: one stamp per split call, no recompile per batch, " +
+    "filters on the valid frame still push down") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val inDir = Files.createTempDirectory("graft-stamp-in").toString
+    Files.writeString(java.nio.file.Path.of(inDir, "b.txt"),
+      s"$goodJson\n$badJson\n")
+    val out = Files.createTempDirectory("graft-stamp-out").toString
+    def batch(i: Int): JsonIngest.ParseResult = {
+      val res = JsonIngest.parseAndSplit(spark.read.text(inDir), "value",
+        Schemas.sensorSchema)
+      res.valid.write.mode("append").parquet(s"$out/valid")
+      res.deadLetter.write.mode("append").json(s"$out/dead")
+      res
+    }
+    (0 until 2).foreach(batch) // warm the codegen cache
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val last = (2 until 5).map { i => Thread.sleep(5); batch(i) }.last
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled,
+      "each batch recompiled its bronze/dead-letter write")
+    // valid and dead-letter rows of one call share its stamp
+    val t = last.valid.select("ingestion_time").as[java.sql.Timestamp].head()
+    assert(last.deadLetter.select("error_time").as[java.sql.Timestamp]
+      .head() === t)
+    assert(!last.valid.schema("ingestion_time").nullable)
+    // a filter on the valid frame is pushed beneath the projection that
+    // adds the stamp (a nondeterministic stamp would pin it on top)
+    val plan = last.valid.filter(col("value") > 0).queryExecution
+      .optimizedPlan
+    assert(!plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter],
+      s"filter stayed above the stamp projection:\n$plan")
+  }
 }
