@@ -106,7 +106,7 @@ object Bench {
       None
     }
     val prior: Map[String, Double] = priorTxt.map { txt =>
-      val p = graft.bench.BenchGuard.parsePrior(txt, sfDir, Some(cpus))
+      val p = graft.bench.BenchGuard.parsePrior(txt, sfDir, cpus)
       if (p.isEmpty)
         System.err.println(s"[bench] prior ($priorPath) is malformed or " +
           "has different sf/methodology/parallelism, env_ok:false, or no " +
@@ -365,12 +365,10 @@ object Bench {
     val historyAnchors: Map[String, Double] = try {
       graft.bench.BenchGuard.probeHistoryAnchors(
         new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(probeHistoryPath)), "UTF-8"), sfDir,
-        parallelism = Some(cpus))
+          java.nio.file.Paths.get(probeHistoryPath)), "UTF-8"), sfDir, cpus)
     } catch { case _: Exception => Map.empty }
     val artifactPrior = priorTxt
-      .map(t => graft.bench.BenchGuard.parsePriorProbeMedians(t, sfDir,
-        Some(cpus)))
+      .map(t => graft.bench.BenchGuard.parsePriorProbeMedians(t, sfDir, cpus))
       .getOrElse(Map.empty)
     val probePrior = artifactPrior ++ historyAnchors
     val probeReps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5")
@@ -460,7 +458,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(probeHistoryPath),
         (graft.bench.BenchGuard.probeHistoryLine(sfDir, envOkNow,
-          probeMedians, Some(cpus)) + "\n").getBytes("UTF-8"),
+          cpus, probeMedians) + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       catch { case e: Exception =>

@@ -83,8 +83,8 @@ object BenchGuard {
   /** Parse a prior BENCH_full.json into per-cell figures, returning
     * empty (guard inactive) when the prior was measured on a different
     * scale factor, under a different methodology tag, OUTSIDE the
-    * declared environment bounds (`env_ok: false`), or — when
-    * `parallelism` is given — at another `local[N]` — any of these would
+    * declared environment bounds (`env_ok: false`), or at another
+    * `local[N]` than `parallelism` — any of these would
     * flag every cell (or none) for reasons that have nothing to do with
     * the code under test. The env_ok gate is this contract's own rule
     * applied to itself (ADVICE r19): two artifacts are comparable only
@@ -94,7 +94,7 @@ object BenchGuard {
     * skipped.
     */
   def parsePrior(txt: String, sfDir: String,
-                 parallelism: Option[Int] = None): Map[String, Double] = {
+                 parallelism: Int): Map[String, Double] = {
     val root = parseRoot(txt).orNull
     if (root == null) return Map.empty
     if (!priorComparable(root, sfDir, parallelism)) return Map.empty
@@ -114,7 +114,7 @@ object BenchGuard {
     * Non-positive values (the -1 probe-failed sentinel) are skipped —
     * a failed prior probe must not anchor the rate guard at -1. */
   def parsePriorProbeMedians(txt: String, sfDir: String,
-                             parallelism: Option[Int] = None): Map[String, Double] = {
+                             parallelism: Int): Map[String, Double] = {
     val root = parseRoot(txt).orNull
     if (root == null) return Map.empty
     if (!priorComparable(root, sfDir, parallelism)) return Map.empty
@@ -132,7 +132,8 @@ object BenchGuard {
 
   /** Per-key MEDIAN of the last `k` comparable entries of
     * bench_probe_history.jsonl (one JSON object per line:
-    * {"sf", "methodology", "env_ok", "probe_medians": {...}}), the
+    * {"sf", "methodology", "env_ok", "parallelism",
+    * "probe_medians": {...}}), the
     * rate-guard anchor of VERDICT r20 #5 / r21 #10: a single noisy-but-
     * env_ok session used to BECOME the whole anchor (its artifact was
     * the prior), so one bad session could silently re-baseline the
@@ -143,12 +144,12 @@ object BenchGuard {
     * that a median is just the outlier problem again — letting the
     * caller fall back to the prior artifact's own medians. Lines that
     * fail to parse, fail the [[parsePrior]] comparability gate (sf /
-    * methodology / env_ok), or carry non-positive sentinel values are
+    * methodology / env_ok / parallelism), or carry non-positive sentinel values are
     * skipped. FAIL-SOFT like the prior file: history is an anchor, not
     * a gate. */
-  def probeHistoryAnchors(txt: String, sfDir: String, k: Int = 5,
-                          minEntries: Int = 3,
-                          parallelism: Option[Int] = None): Map[String, Double] = {
+  def probeHistoryAnchors(txt: String, sfDir: String, parallelism: Int,
+                          k: Int = 5,
+                          minEntries: Int = 3): Map[String, Double] = {
     val comparable = txt.linesIterator.flatMap(parseRoot(_))
       .filter(priorComparable(_, sfDir, parallelism)).toSeq.takeRight(k)
     val values = scala.collection.mutable.Map
@@ -172,14 +173,12 @@ object BenchGuard {
   /** One bench_probe_history.jsonl line for THIS run — carries exactly
     * the fields [[probeHistoryAnchors]]' comparability gate reads.
     * Sentinel (-1) medians are recorded as-is; the parser skips them. */
-  def probeHistoryLine(sfDir: String, envOk: Boolean,
-                       medians: Seq[(String, Double)],
-                       parallelism: Option[Int] = None): String = {
+  def probeHistoryLine(sfDir: String, envOk: Boolean, parallelism: Int,
+                       medians: Seq[(String, Double)]): String = {
     val ms = medians.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     s"""{"sf":"$sfDir","methodology":"$Methodology","env_ok":$envOk,""" +
-      parallelism.fold("")(n => s""""parallelism":$n,""") +
-      s""""probe_medians":$ms}"""
+      s""""parallelism":$parallelism,"probe_medians":$ms}"""
   }
 
   /** The prior file is FAIL-SOFT, unlike the envelope file: a corrupt
@@ -190,14 +189,14 @@ object BenchGuard {
     try Option(new ObjectMapper().readTree(txt)).filter(_.isObject)
     catch { case _: Exception => None }
 
-  /** `parallelism`, when given, must equal the prior's recorded
-    * `local[N]` (`parallelism` on a history line, `env.parallelism` in
-    * an artifact): an 8-slot run must never anchor a 32-slot one. A
-    * prior that predates the field cannot show it matches, so it is
-    * incomparable under the gate. */
+  /** `parallelism` must equal the prior's recorded `local[N]`
+    * (`parallelism` on a history line, `env.parallelism` in an
+    * artifact): an 8-slot run must never anchor a 32-slot one. A prior
+    * that predates the field cannot show it matches, so it is
+    * incomparable. */
   private def priorComparable(root: com.fasterxml.jackson.databind.JsonNode,
                               sfDir: String,
-                              parallelism: Option[Int]): Boolean = {
+                              parallelism: Int): Boolean = {
     val priorSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
     val priorMeth =
       Option(root.get("methodology")).map(_.asText()).getOrElse("")
@@ -209,7 +208,7 @@ object BenchGuard {
       .orElse(Option(root.get("env")).flatMap(e => Option(e.get("parallelism"))))
       .filter(_.isInt).map(_.asInt())
     priorSf == sfDir && priorMeth == Methodology && priorEnvOk &&
-      parallelism.forall(n => priorPar.contains(n))
+      priorPar.contains(parallelism)
   }
 
   /** The churn-guard decision loop for a THROUGHPUT figure (higher =

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed graph primitives for dedup pipelines. The one that matters
   * for training data: collapsing pairwise near-duplicate edges into
@@ -36,6 +37,12 @@ object Graph {
           l.rdd.unpersist(blocking = false)
         case _ => ()
       }
+
+  /** The (id, cluster_id) assignment [[connectedComponents]] and
+    * [[incrementalConnectedComponents]] return: both columns are the
+    * edge endpoints cast to long. */
+  val AssignmentSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("cluster_id", LongType)))
 
   /** Connected components by HashMin label propagation: every node starts
     * labeled with its own id; each round every node takes the minimum label

@@ -35,6 +35,11 @@ object JsonIngest {
     * rows, `error_time` on dead-letter rows — so one micro-batch's rows
     * all share it. `clock` replaces the stamp (deterministic tests).
     *
+    * Call it once per micro-batch, on the batch frame (e.g. inside
+    * foreachBatch). A streaming frame is refused: its query would stamp
+    * every micro-batch with the instant the query was defined, and
+    * `ingestion_time` orders dedup, so those rows would silently tie.
+    *
     * The stamp is a deterministic zero-argument UDF over the captured
     * instant, not `current_timestamp()`: the optimizer folds the latter
     * into a fresh literal per action and whole-stage codegen inlines it,
@@ -43,6 +48,9 @@ object JsonIngest {
     * so one compiled class serves every batch; being deterministic, it
     * leaves filter pushdown on the valid frame untouched. */
   def split(parsed: DataFrame, clock: Option[Column] = None): ParseResult = {
+    require(!parsed.isStreaming, "JsonIngest.split takes one micro-batch's " +
+      "frame (call it inside foreachBatch), not a streaming frame: the " +
+      "stamp is taken once per call")
     val now = clock.getOrElse(stamp(java.sql.Timestamp.from(Instant.now())))
     val isDead = col("data").isNull || col("data._corrupt_record").isNotNull
     val dead = parsed.filter(isDead)

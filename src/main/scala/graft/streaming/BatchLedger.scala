@@ -13,15 +13,20 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * On disk it is ONE file, `_merged/ledger`, inside the store's data dir
   * (underscore-prefixed, so parquet readers skip it). Older stores kept
   * one empty marker file per merged batch (`_merged/<id>`); [[load]]
-  * still reads those, and the next merge folds them into the ledger. */
-private[graft] final case class BatchLedger(ranges: Vector[(Long, Long)]) {
+  * still reads those, and the next merge folds them into the ledger.
+  *
+  * `stored` is true when [[load]] found a ledger file, i.e. the store was
+  * written by a build that keeps one — false for a new store or one still
+  * in the legacy marker layout. */
+private[graft] final case class BatchLedger(ranges: Vector[(Long, Long)],
+                                            stored: Boolean = false) {
 
   def contains(id: Long): Boolean =
     ranges.exists { case (lo, hi) => lo <= id && id <= hi }
 
   def +(id: Long): BatchLedger =
     if (contains(id)) this
-    else BatchLedger(BatchLedger.coalesce(ranges :+ (id -> id)))
+    else copy(ranges = BatchLedger.coalesce(ranges :+ (id -> id)))
 
   /** "a..b" per range, "a" for a single id, comma-separated. */
   def encode: String = ranges.map { case (lo, hi) =>
@@ -55,11 +60,6 @@ private[graft] object BatchLedger {
   private def file(dataDir: Path): Path =
     new Path(new Path(dataDir, Dir), FileName)
 
-  /** Whether `dataDir` holds a ledger file — false for a store still in
-    * the legacy per-batch-marker layout. */
-  def stored(fs: FileSystem, dataDir: Path): Boolean =
-    fs.exists(file(dataDir))
-
   /** The ledger stored in `dataDir`, plus any legacy per-batch marker
     * files beside it. One directory listing and at most one small read,
     * whatever the number of merged batches. */
@@ -73,7 +73,7 @@ private[graft] object BatchLedger {
         val in = fs.open(st.getPath)
         val read = try decode(new String(in.readAllBytes(), UTF_8))
           finally in.close()
-        BatchLedger(coalesce(acc.ranges ++ read.ranges))
+        BatchLedger(coalesce(acc.ranges ++ read.ranges), stored = true)
       } else name.toLongOption.fold(acc)(acc + _)
     }
   }

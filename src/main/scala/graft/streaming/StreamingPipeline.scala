@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.Row
 
 import graft.ingest.JsonIngest
@@ -150,14 +150,14 @@ object StreamingPipeline {
                      windowDuration: String): Unit = {
     val groupCols = ("window_start" +: keys).map(col)
     val v = col(valueCol)
-    val rows = batch.select(
+    lazy val rows = batch.select(
       window(col(timeCol), windowDuration).getField("start").as("window_start")
         +: keys.map(col) :+ lit(1L).as("n") :+ v.as("sum_v") :+
         v.as("min_v") :+ v.as("max_v"): _*)
     def fold(df: DataFrame): DataFrame = df.groupBy(groupCols: _*)
       .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
         min("min_v").as("min_v"), max("max_v").as("max_v"))
-    val fresh = fold(rows)
+    lazy val fresh = fold(rows)
     mergeSwapState(batch.sparkSession, goldPath, batchId, Some(fresh.schema)) {
       case Some(state) => fold(state.unionByName(rows))
       case None => fresh
@@ -231,27 +231,30 @@ object StreamingPipeline {
     * `stateSchema`: when the state is the merge's own output, the caller
     * passes that output's schema; the state is then read with it (no
     * footer-inference job per merge) and every merge is written in its
-    * types. Stores that must detect an older on-disk layout from the
-    * inferred schema pass None. A store without a ledger file was written
-    * by an older build, whose types may differ (its gold merge stored an
-    * integer column's sum as a double), so that one merge infers. */
+    * types. It is evaluated only after the replay check, so a caller may
+    * derive it from a lazily built batch partial. Stores that must detect
+    * an older on-disk layout from the inferred schema pass None. A store
+    * without a ledger file was written by an older build, whose types may
+    * differ (its gold merge stored an integer column's sum as a double),
+    * so that one merge infers. */
   private def mergeSwapState(spark: SparkSession, storePath: String,
                              batchId: Long,
-                             stateSchema: Option[StructType] = None)
+                             stateSchema: => Option[StructType] = None)
       (merge: Option[DataFrame] => DataFrame): Unit = {
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
     val backup = new Path(s"$storePath/_prestate")
     val merged = mergedBatches(fs, storePath)
     if (merged.contains(batchId)) return // replayed batch: already merged
+    val pinned = stateSchema
     val existing =
       if (!fs.exists(dataDir)) None
-      else Some(stateSchema.filter(_ => BatchLedger.stored(fs, dataDir))
+      else Some(pinned.filter(_ => merged.stored)
         .fold(spark.read)(spark.read.schema).parquet(dataDir.toString))
     // written in the pinned types, so the next pinned read matches the
     // files (a decimal sum widens by 10 digits per aggregate otherwise)
     val out = merge(existing)
-    val typed = stateSchema.fold(out) { s =>
+    val typed = pinned.fold(out) { s =>
       out.withColumns(out.schema.fields.collect {
         case f if !DataType.equalsStructurally(f.dataType,
             s(f.name).dataType, ignoreNullability = true) =>
@@ -304,7 +307,7 @@ object StreamingPipeline {
                           valueCol: String, storePath: String,
                           lgK: Int): Unit = {
     val kcols = keys.map(col)
-    val partial = batch.groupBy(kcols: _*)
+    lazy val partial = batch.groupBy(kcols: _*)
       .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sk"))
     mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
       case Some(existing) =>
@@ -348,7 +351,7 @@ object StreamingPipeline {
     // nine id-0 rows + one id-3 row, k=7 → sample {0} where {0,3} is
     // required). Distinct-first keeps the cut over the id domain the
     // parity contract is stated on.
-    val cand = batch.select(col(idCol).cast("string").as("id"))
+    lazy val cand = batch.select(col(idCol).cast("string").as("id"))
       .dropDuplicates("id")
       .withColumn("h", md5(col("id").cast("binary")))
       .orderBy("h", "id").limit(k)
@@ -387,10 +390,9 @@ object StreamingPipeline {
                      cap: Long, outPath: String, storePath: String,
                      batchId: Long): Unit = {
     require(cap > 0, s"cap must be > 0, got $cap")
-    val stateSchema = batch.select(col(srcCol).as("src"), lit(0L).as("kept"))
-      .schema
     mergeSwapState(batch.sparkSession, storePath, batchId,
-        Some(stateSchema)) { existingOpt =>
+        Some(batch.select(col(srcCol).as("src"), lit(0L).as("kept")).schema)) {
+        existingOpt =>
       val w = Window.partitionBy(srcCol)
         .orderBy(md5(col(idCol).cast("string").cast("binary")), col(idCol))
       val ranked = batch.withColumn("_cap_rn", row_number().over(w))
@@ -455,8 +457,10 @@ object StreamingPipeline {
       s"tokensPerShard must be > 0, got $tokensPerShard")
     val spark = batch.sparkSession
     import spark.implicits._
-    val stateSchema = StructType(Seq(StructField("total", LongType)))
-    mergeSwapState(spark, storePath, id, Some(stateSchema)) { existingOpt =>
+    // the state is one running token total, built by this one constructor
+    def totalRow(total: Long): DataFrame = Seq(total).toDF("total")
+    mergeSwapState(spark, storePath, id, Some(totalRow(0L).schema)) {
+        existingOpt =>
       val base = existingOpt
         .map(_.select("total").as[Long].head()).getOrElse(0L)
       val keyed = batch.select(col(idCol),
@@ -476,7 +480,7 @@ object StreamingPipeline {
           .parquet(s"$outPath/batch_id=$id")
         val batchTokens = keyed.agg(
           coalesce(sum("tok_n"), lit(0L))).as[Long].head()
-        Seq(base + batchTokens).toDF("total")
+        totalRow(base + batchTokens)
       } finally { keyed.unpersist(); () }
     }
   }
@@ -639,7 +643,7 @@ object StreamingPipeline {
                          valueCol: String, storePath: String,
                          relativeError: Double): Unit = {
     val kcols = keys.map(col)
-    val partial = batch.groupBy(kcols: _*)
+    lazy val partial = batch.groupBy(kcols: _*)
       .agg(graft.functions.QuantileFunctions
         .quantileSketch(col(valueCol), relativeError).as("sk"))
     mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
@@ -737,12 +741,13 @@ object StreamingPipeline {
   /** The per-batch body of [[embeddingMoments]]. */
   def embeddingMomentsBatch(batch: DataFrame, id: Long, vecCol: String,
                             storePath: String): Unit = {
-    val cellSchema = StructType(Seq(
-      StructField("k", IntegerType), StructField("s", DoubleType)))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(cellSchema)) {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    // the state is (cell index, moment sum) rows, built by this one
+    // constructor
+    def cellFrame(cells: Seq[(Int, Double)]): DataFrame = cells.toDF("k", "s")
+    mergeSwapState(spark, storePath, id, Some(cellFrame(Nil).schema)) {
         existingOpt =>
-      val spark = batch.sparkSession
-      import spark.implicits._
       // the partial is d²+d+1 cells TOTAL — collect it ONCE and rebuild
       // a local frame for the merge/write, so each micro-batch's
       // embeddings are aggregated exactly once (a lazy `partial` would
@@ -751,7 +756,7 @@ object StreamingPipeline {
       val cells = graft.ext.Whiten.momentCells(batch, vecCol)
         .select(col("k").cast("int"), col("s").cast("double"))
         .as[(Int, Double)].collect()
-      val partial = cells.toSeq.toDF("k", "s")
+      val partial = cellFrame(cells.toSeq)
       existingOpt match {
         case Some(existing) =>
           // cell-count equality IS the dimension check: summing a
@@ -806,9 +811,8 @@ object StreamingPipeline {
   /** The per-batch body of [[ccIngest]]. */
   def ccIngestBatch(batch: DataFrame, id: Long, srcCol: String,
                     dstCol: String, storePath: String): Unit = {
-    val assignSchema = StructType(Seq(
-      StructField("id", LongType), StructField("cluster_id", LongType)))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(assignSchema)) {
+    mergeSwapState(batch.sparkSession, storePath, id,
+        Some(graft.ext.Graph.AssignmentSchema)) {
       case Some(existing) => graft.ext.Graph
         .incrementalConnectedComponents(existing, batch, srcCol, dstCol)
       case None => graft.ext.Graph
@@ -852,7 +856,7 @@ object StreamingPipeline {
     def champions(df: DataFrame): DataFrame =
       df.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn")
-    val batchBest = champions(batch
+    lazy val batchBest = champions(batch
       .select(col(clusterCol), col(idCol), col(textCol))
       .withColumn("quality",
         round(graft.ext.TextAnalysis.qualityScore(col(textCol))
@@ -913,7 +917,7 @@ object StreamingPipeline {
     // input, so the id column keeps its real type (the shardManifest
     // empty-frame lesson: fabricated literals would land a
     // wrongly-typed parquet partition)
-    val raw = graft.ext.Sampling.tokenBudgetScore(batch, textCol, idCol)
+    lazy val raw = graft.ext.Sampling.tokenBudgetScore(batch, textCol, idCol)
     // in-batch dedup FIRST: a duplicate id arriving twice within one
     // micro-batch (producer-retry duplicates adjacent in the log)
     // would bypass the store anti-join below — both rows are absent
@@ -922,7 +926,7 @@ object StreamingPipeline {
     // identity for true re-deliveries (identical scored rows), a
     // stable pick for conflicting payloads (same stance as the
     // semantic-dedup ingest's in-batch pass).
-    val scored = raw.groupBy(col(idCol))
+    lazy val scored = raw.groupBy(col(idCol))
       .agg(min(struct(col("tok_n"), col("_rqi"))).as("_m"))
       .select(col(idCol), col("_m.tok_n").as("tok_n"),
         col("_m._rqi").as("_rqi"))
@@ -982,8 +986,7 @@ object StreamingPipeline {
   def dsirCountsBatch(batch: DataFrame, id: Long, textCol: String,
                       targetPred: org.apache.spark.sql.Column,
                       numBuckets: Int, storePath: String): Unit = {
-    val par = batch.sparkSession.sparkContext.defaultParallelism
-    val partial = graft.ext.Par.fanOut(batch, par)
+    lazy val partial = graft.ext.Par.fanOut(batch)
       .select(targetPred.cast("long").as("t"),
         explode(graft.ext.Sampling
           .dsirFeatures(col(textCol), numBuckets)).as("bucket"))
@@ -1038,18 +1041,19 @@ object StreamingPipeline {
   /** The per-batch body of [[knCounts]]. */
   def knCountsBatch(batch: DataFrame, id: Long, textCol: String,
                     storePath: String): Unit = {
-    val par = batch.sparkSession.sparkContext.defaultParallelism
-    val toks = graft.ext.Par.fanOut(batch, par)
-      .select(graft.ext.TextAnalysis.tokens(col(textCol)).as("toks"))
-    val bg = toks
-      .select(explode(graft.ext.TextAnalysis
-        .shinglesFromTokens(col("toks"), 2)).as("k"))
-      .groupBy("k").agg(count(lit(1)).as("c"))
-      .withColumn("kind", lit("bg"))
-    val uni = toks.select(explode(col("toks")).as("k"))
-      .groupBy("k").agg(count(lit(1)).as("c"))
-      .withColumn("kind", lit("uni"))
-    val partial = bg.unionByName(uni)
+    lazy val partial = {
+      val toks = graft.ext.Par.fanOut(batch)
+        .select(graft.ext.TextAnalysis.tokens(col(textCol)).as("toks"))
+      val bg = toks
+        .select(explode(graft.ext.TextAnalysis
+          .shinglesFromTokens(col("toks"), 2)).as("k"))
+        .groupBy("k").agg(count(lit(1)).as("c"))
+        .withColumn("kind", lit("bg"))
+      val uni = toks.select(explode(col("toks")).as("k"))
+        .groupBy("k").agg(count(lit(1)).as("c"))
+        .withColumn("kind", lit("uni"))
+      bg.unionByName(uni)
+    }
     mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
       case Some(existing) =>
         existing.unionByName(partial).groupBy("k", "kind")
@@ -1180,7 +1184,7 @@ object StreamingPipeline {
     // n counts NON-NULL values (not rows): sum() skips NULLs, so a
     // count(1) row count would inflate the denominator and diverge
     // from the batch AVG the read-time view claims parity with.
-    val partial = batch.withColumn("day", to_date(col(timeCol)))
+    lazy val partial = batch.withColumn("day", to_date(col(timeCol)))
       .groupBy(gb: _*)
       .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"))
     mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
@@ -1239,7 +1243,7 @@ object StreamingPipeline {
     val gb = (keys :+ "hod").map(col)
     // n = non-null count, matching AVG/STDDEV_SAMP denominators (the
     // moment sums already skip NULLs natively).
-    val partial = batch.withColumn("hod", hour(col(timeCol)))
+    lazy val partial = batch.withColumn("hod", hour(col(timeCol)))
       .groupBy(gb: _*)
       .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"),
         sum(col(valueCol) * col(valueCol)).as("sum_sq"))
@@ -1305,7 +1309,7 @@ object StreamingPipeline {
     // PSI(reference vs uniform) — absence is a volume signal, not a
     // distribution shift, and appending it would fire psi_drift on two
     // quiet windows; producer_down already owns the no-data alert
-    val scored = graft.monitoring.Drift
+    lazy val scored = graft.monitoring.Drift
       .streamingPsi(batch, reference, groupCols, valueCol, lo, hi, buckets)
       .filter(col("n_cur") > 0)
       .select(lit(id).as("batch_id") +: (groupCols.map(col) ++
@@ -1346,7 +1350,7 @@ object StreamingPipeline {
     // degenerates to 0.0, and appending that would fire the critical
     // embedding_drift rule on two quiet batches; skip it (volume
     // problems are producer_down's alert, not drift's)
-    val scored = graft.monitoring.Drift.referenceCentroid(batch, vecCol)
+    lazy val scored = graft.monitoring.Drift.referenceCentroid(batch, vecCol)
       .filter(col("n").isNotNull && col("n") > 0)
       .select(col("cv").as("bv"), col("n"))
       .crossJoin(broadcast(refCentroid.select(col("cv").as("rv"))))

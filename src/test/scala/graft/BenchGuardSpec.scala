@@ -113,13 +113,16 @@ class BenchGuardSpec extends AnyFunSuite {
 
   // ---- parsePrior (sf + methodology gating) --------------------------
 
+  // the local[N] every fixture below was recorded at
+  private val Par = 8
+
   private def priorJson(sf: String, meth: String) =
     s"""{"metric":"total","methodology":"$meth","sf":"$sf",
-       |"queries":{"q1":1.5,"q2":0.4}}""".stripMargin
+       |"env":{"parallelism":$Par},"queries":{"q1":1.5,"q2":0.4}}""".stripMargin
 
   test("parsePrior: same sf + same methodology activates the guard") {
     val p = BenchGuard.parsePrior(
-      priorJson("/d/sf0.1", BenchGuard.Methodology), "/d/sf0.1")
+      priorJson("/d/sf0.1", BenchGuard.Methodology), "/d/sf0.1", Par)
     assert(p === Map("q1" -> 1.5, "q2" -> 0.4))
   }
 
@@ -127,17 +130,19 @@ class BenchGuardSpec extends AnyFunSuite {
     "the guard (a cross-methodology compare would flag every formerly-" +
     "bimodal cell on the r19 transition)") {
     assert(BenchGuard.parsePrior(
-      priorJson("/d/sf0.01", BenchGuard.Methodology), "/d/sf0.1").isEmpty)
+      priorJson("/d/sf0.01", BenchGuard.Methodology), "/d/sf0.1", Par)
+      .isEmpty)
     assert(BenchGuard.parsePrior(
       priorJson("/d/sf0.1", "min2+reprobe+prior-churn-guard (r13+)"),
-      "/d/sf0.1").isEmpty)
+      "/d/sf0.1", Par).isEmpty)
   }
 
   test("parsePrior: non-numeric query values are skipped, not parsed " +
     "to 0.0") {
     val p = BenchGuard.parsePrior(
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"/d",
-         |"queries":{"good":2.0,"bad":"x"}}""".stripMargin, "/d")
+         |"parallelism":$Par,"queries":{"good":2.0,"bad":"x"}}""".stripMargin,
+      "/d", Par)
     assert(p === Map("good" -> 2.0))
   }
 
@@ -146,13 +151,13 @@ class BenchGuardSpec extends AnyFunSuite {
     "figures — the committed r19 driver re-run is exactly such a prior)") {
     val bad =
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"/d",
-         |"env_ok":false,"queries":{"q1":1.5}}""".stripMargin
-    assert(BenchGuard.parsePrior(bad, "/d").isEmpty)
+         |"env_ok":false,"parallelism":$Par,"queries":{"q1":1.5}}""".stripMargin
+    assert(BenchGuard.parsePrior(bad, "/d", Par).isEmpty)
     // explicit true and absent env_ok both remain comparable
     val ok =
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"/d",
-         |"env_ok":true,"queries":{"q1":1.5}}""".stripMargin
-    assert(BenchGuard.parsePrior(ok, "/d") === Map("q1" -> 1.5))
+         |"env_ok":true,"parallelism":$Par,"queries":{"q1":1.5}}""".stripMargin
+    assert(BenchGuard.parsePrior(ok, "/d", Par) === Map("q1" -> 1.5))
   }
 
   test("parsePrior/parsePriorProbeMedians: a MALFORMED prior is " +
@@ -161,8 +166,8 @@ class BenchGuardSpec extends AnyFunSuite {
     "warm-up with no artifact") {
     for (bad <- Seq("{\"methodology\":\"truncated", "not json at all",
                     "[1,2,3]", "")) {
-      assert(BenchGuard.parsePrior(bad, "/d").isEmpty)
-      assert(BenchGuard.parsePriorProbeMedians(bad, "/d").isEmpty)
+      assert(BenchGuard.parsePrior(bad, "/d", Par).isEmpty)
+      assert(BenchGuard.parsePriorProbeMedians(bad, "/d", Par).isEmpty)
     }
   }
 
@@ -172,13 +177,14 @@ class BenchGuardSpec extends AnyFunSuite {
     "probe-failed sentinel") {
     val txt =
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"/d","env_ok":true,
-         |"probe_medians":{"chain_rows_per_sec":150000.0,
+         |"parallelism":$Par,"probe_medians":{"chain_rows_per_sec":150000.0,
          |"stream_events_per_sec":-1.0}}""".stripMargin
-    assert(BenchGuard.parsePriorProbeMedians(txt, "/d") ===
+    assert(BenchGuard.parsePriorProbeMedians(txt, "/d", Par) ===
       Map("chain_rows_per_sec" -> 150000.0))
-    assert(BenchGuard.parsePriorProbeMedians(txt, "/other").isEmpty)
+    assert(BenchGuard.parsePriorProbeMedians(txt, "/other", Par).isEmpty)
     assert(BenchGuard.parsePriorProbeMedians(
-      txt.replace("\"env_ok\":true", "\"env_ok\":false"), "/d").isEmpty)
+      txt.replace("\"env_ok\":true", "\"env_ok\":false"), "/d", Par)
+      .isEmpty)
   }
 
   test("guardRate: a seeded GENUINE rate regression stays low through " +
@@ -236,14 +242,14 @@ class BenchGuardSpec extends AnyFunSuite {
     def line(envOk: Boolean, chain: Double,
              sfd: String = sf, meth: String = BenchGuard.Methodology) =
       s"""{"sf":"$sfd","methodology":"$meth","env_ok":$envOk,""" +
-        s""""probe_medians":{"chain_rows_per_sec":$chain}}"""
+        s""""parallelism":$Par,"probe_medians":{"chain_rows_per_sec":$chain}}"""
     // five comparable sessions, one a 3x-low outlier: the MEDIAN anchor
     // ignores it — under the old single-prior anchoring the outlier
     // session's artifact WOULD have become the whole anchor
     val hist = Seq(line(true, 131000), line(true, 128000),
       line(true, 40000), line(true, 135000), line(true, 130000))
       .mkString("\n")
-    val a = BenchGuard.probeHistoryAnchors(hist, sf)
+    val a = BenchGuard.probeHistoryAnchors(hist, sf, Par)
     assert(a("chain_rows_per_sec") === 130000.0, s"median anchor: $a")
     // env_ok:false, wrong-sf, wrong-methodology and sentinel lines never
     // join the pool
@@ -251,49 +257,48 @@ class BenchGuardSpec extends AnyFunSuite {
       line(true, 20, meth = "old"), line(true, -1),
       line(true, 128000), line(true, 130000), "not json at all",
       line(true, 132000)).mkString("\n")
-    val d = BenchGuard.probeHistoryAnchors(dirty, sf)
+    val d = BenchGuard.probeHistoryAnchors(dirty, sf, Par)
     assert(d("chain_rows_per_sec") === 130000.0, s"dirty pool: $d")
     // two comparable entries < minEntries: no anchor (a 2-median is the
     // outlier problem again)
     val thin = Seq(line(true, 131000), line(true, 40000)).mkString("\n")
-    assert(BenchGuard.probeHistoryAnchors(thin, sf).isEmpty)
+    assert(BenchGuard.probeHistoryAnchors(thin, sf, Par).isEmpty)
     // only the LAST k entries count: an ancient fast regime ages out
     val aged = (Seq.fill(4)(line(true, 200000)) ++
       Seq.fill(5)(line(true, 130000))).mkString("\n")
-    assert(BenchGuard.probeHistoryAnchors(aged, sf)("chain_rows_per_sec")
+    assert(BenchGuard.probeHistoryAnchors(aged, sf, Par)("chain_rows_per_sec")
       === 130000.0, "window is the last k entries")
     // round-trip: the writer's line parses back under the same gate
-    val rt = BenchGuard.probeHistoryLine(sf, envOk = true,
+    val rt = BenchGuard.probeHistoryLine(sf, envOk = true, Par,
       Seq("chain_rows_per_sec" -> 129000.0))
     assert(BenchGuard.probeHistoryAnchors(
-      Seq(rt, rt, rt).mkString("\n"), sf)("chain_rows_per_sec")
+      Seq(rt, rt, rt).mkString("\n"), sf, Par)("chain_rows_per_sec")
       === 129000.0)
   }
 
   test("parallelism gate: a prior recorded at another local[N], or with " +
-    "no recorded parallelism, is incomparable; ungated callers unchanged") {
+    "no recorded parallelism, is incomparable") {
     val sf = "/d"
     def artifact(par: Option[Int]) =
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"$sf",""" +
         s""""env_ok":true,"env":{"cpus":32""" +
         par.fold("")(n => s""","parallelism":$n""") +
         s"""},"queries":{"q1":1.5},"probe_medians":{"chain_rows_per_sec":9.0}}"""
-    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, Some(8)) ===
+    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, 8) ===
       Map("q1" -> 1.5))
-    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, Some(32)).isEmpty)
-    assert(BenchGuard.parsePrior(artifact(None), sf, Some(8)).isEmpty)
-    assert(BenchGuard.parsePrior(artifact(None), sf) === Map("q1" -> 1.5))
-    assert(BenchGuard.parsePriorProbeMedians(artifact(Some(8)), sf,
-      Some(32)).isEmpty)
-    val line8 = BenchGuard.probeHistoryLine(sf, envOk = true,
-      Seq("chain_rows_per_sec" -> 100.0), Some(8))
-    val line32 = BenchGuard.probeHistoryLine(sf, envOk = true,
-      Seq("chain_rows_per_sec" -> 400.0), Some(32))
+    assert(BenchGuard.parsePrior(artifact(Some(8)), sf, 32).isEmpty)
+    assert(BenchGuard.parsePrior(artifact(None), sf, 8).isEmpty)
+    assert(BenchGuard.parsePriorProbeMedians(artifact(Some(8)), sf, 32)
+      .isEmpty)
+    val line8 = BenchGuard.probeHistoryLine(sf, envOk = true, 8,
+      Seq("chain_rows_per_sec" -> 100.0))
+    val line32 = BenchGuard.probeHistoryLine(sf, envOk = true, 32,
+      Seq("chain_rows_per_sec" -> 400.0))
     val hist = (Seq.fill(3)(line8) ++ Seq.fill(2)(line32)).mkString("\n")
-    assert(BenchGuard.probeHistoryAnchors(hist, sf, parallelism = Some(8)) ===
+    assert(BenchGuard.probeHistoryAnchors(hist, sf, 8) ===
       Map("chain_rows_per_sec" -> 100.0))
-    assert(BenchGuard.probeHistoryAnchors(hist, sf, parallelism = Some(32))
-      .isEmpty, "two comparable lines are below minEntries")
+    assert(BenchGuard.probeHistoryAnchors(hist, sf, 32).isEmpty,
+      "two comparable lines are below minEntries")
   }
 
   // ---- env bounds ----------------------------------------------------

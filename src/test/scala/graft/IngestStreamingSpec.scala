@@ -1087,4 +1087,13 @@ class IngestStreamingSpec extends SparkTestBase {
     assert(!plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter],
       s"filter stayed above the stamp projection:\n$plan")
   }
+
+  test("ingest stamp: a streaming frame is refused (one stamp per call " +
+    "would freeze every micro-batch's ingestion_time)") {
+    val inDir = Files.createTempDirectory("graft-stamp-stream").toString
+    intercept[IllegalArgumentException] {
+      JsonIngest.parseAndSplit(spark.readStream.text(inDir), "value",
+        Schemas.sensorSchema)
+    }
+  }
 }
