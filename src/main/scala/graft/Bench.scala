@@ -430,8 +430,10 @@ object Bench {
     // after the full suite has pushed load well past load_avg_start
     // (the committed r19 artifact ends at ~16), and the 1.25x guard is
     // calibrated on quiet-machine ±15% spread — a reader adjudicating a
-    // probe flag needs the like-for-like context. Annotation-only: env_ok
-    // (BenchGuard.envOk) gates load at START and heap, not probe-time load.
+    // probe flag needs the like-for-like context. env_ok (BenchGuard.envOk)
+    // gates load at START and heap; this reading travels on the probe-
+    // history line, where a loaded probe phase keeps it out of the anchor
+    // pool (BenchGuard.probeHistoryAnchors).
     val loadAtProbes = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val probeMedians: Seq[(String, Double)] =
@@ -442,23 +444,24 @@ object Bench {
         Seq("chain_rows_per_sec" -> -1.0, "stream_events_per_sec" -> -1.0)
       } else Seq(
         "chain_rows_per_sec" ->
-          guardedProbe("chainheadline", "chain_rows_per_sec"),
+          guardedProbe(ScaleProbe.ChainHeadline, "chain_rows_per_sec"),
         "stream_events_per_sec" ->
-          guardedProbe("streamheadline", "stream_events_per_sec"))
+          guardedProbe(ScaleProbe.StreamHeadline, "stream_events_per_sec"))
     val probeJson = probeMedians
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // append this run's medians to the history so FUTURE runs anchor on
     // a median of sessions (append-only; a sentinel-only run is skipped
-    // — the parser would drop its values anyway). env_ok travels on the
-    // line so an out-of-bounds session never joins the anchor pool.
+    // — the parser would drop its values anyway). env_ok and the
+    // probe-time load travel on the line so an out-of-bounds session never
+    // joins the anchor pool.
     if (probeMedians.exists(_._2 > 0)) {
       val envOkNow = graft.bench.BenchGuard.envOk(loadAtStart,
         Runtime.getRuntime.maxMemory() / (1024 * 1024))
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(probeHistoryPath),
         (graft.bench.BenchGuard.probeHistoryLine(sfDir, envOkNow,
-          cpus, probeMedians) + "\n").getBytes("UTF-8"),
+          loadAtProbes, cpus, probeMedians) + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       catch { case e: Exception =>

@@ -24,9 +24,15 @@ object Pipeline {
 
   /** Silver: null-filter → keep-latest dedup → static range flag →
     * rolling z-score flag. Deterministic total order (ts, event_id). */
-  def silver(spark: SparkSession, dir: String): DataFrame = {
-    val b = bronze(spark, dir)
-    val filtered = Silver.nullFilter(b, Seq("sensor_id", "sensor_type", "value", "event_time"))
+  def silver(spark: SparkSession, dir: String): DataFrame =
+    silverOf(bronze(spark, dir))
+
+  /** [[silver]] over any reading-shaped frame (sensor_id, sensor_type,
+    * value, event_time, event_id) — the one definition of the silver
+    * stages, shared with `ScaleProbe`'s generated-input chain sweep. */
+  def silverOf(readings: DataFrame): DataFrame = {
+    val filtered = Silver.nullFilter(readings,
+      Seq("sensor_id", "sensor_type", "value", "event_time"))
     val deduped = Silver.dedupLatest(filtered,
       Seq("sensor_id", "event_time"),
       Seq(col("event_id").desc))
@@ -43,8 +49,12 @@ object Pipeline {
     * count is unbounded. The oracle-checked a1/a2/a3 variants use exact
     * percentiles because DuckDB's quantile_cont is the comparison target. */
   def gold5Min(spark: SparkSession, dir: String): DataFrame =
+    gold5MinOf(silver(spark, dir))
+
+  /** [[gold5Min]] over an already-built silver frame. */
+  def gold5MinOf(silverDf: DataFrame): DataFrame =
     Gold.withHealthPct(
-      Gold.windowAgg(silver(spark, dir), Seq("sensor_id", "sensor_type"),
+      Gold.windowAgg(silverDf, Seq("sensor_id", "sensor_type"),
         "event_time", "value", "5 minutes", approxPercentiles = true))
 
   def goldHourly(spark: SparkSession, dir: String): DataFrame =

@@ -2,43 +2,50 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev-only scale probe (not part of the driver contract, like [[Probe]]):
-  * generate an N-row events table with the deterministic
-  * [[bench.EventGenerator]], land it as parquet, and push it through the
-  * SAME silver→gold stage composition the bench's medallion chain times —
-  * direct evidence of whether chain throughput holds when the input is
-  * 100× the sf0.1 bench table. `ScaleProbe [rows] [dir]`, or
-  * `ScaleProbe dedup [nDocs]` for the MinHash-LSH near-dup sweep over a
-  * deterministic synthetic corpus with 1% planted near-copies, or
-  * `ScaleProbe ann [nVecs]` for the IVF-PQ build + query sweep
-  * (deterministic clustered vectors; times index build and code-only
-  * top-k, reports recall@10 vs exact brute force and the index:raw
-  * storage ratio). */
+/** Dev-only probes, each in a FRESH JVM (not part of the driver
+  * contract). Four modes:
+  *
+  *  - `ScaleProbe [rows] [dir]` — the chain sweep: generate an N-row
+  *    events table with the deterministic [[bench.EventGenerator]], land
+  *    it as parquet, and push it through the SAME silver→gold stage
+  *    functions the bench's medallion chain times ([[Pipeline.silverOf]]
+  *    / [[Pipeline.gold5MinOf]]) — direct evidence of whether chain
+  *    throughput holds at 10-1000× the sf0.1 bench table (SCALE.md);
+  *  - `ScaleProbe cellprobe <name[,name...]> [sfDir] [reps]` — one or
+  *    more registry cells timed under the bench's cold procedure;
+  *  - `ScaleProbe chainheadline [sfDir] [reps]` and
+  *    `ScaleProbe streamheadline [sfDir] [reps]` — the bench's headline
+  *    measurements, which [[graft.Bench]] spawns as child JVMs.
+  *
+  * An unknown first argument exits non-zero with [[Usage]] before any
+  * SparkSession is built. Physical plans come from [[graft.Explain]]. */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("dedup")) { dedupProbe(args); return }
-    if (args.headOption.contains("ann")) { annProbe(args); return }
-    if (args.headOption.contains("spans")) { spansProbe(args); return }
-    if (args.headOption.contains("perdoc")) { perdocProbe(args); return }
-    if (args.headOption.contains("whiten")) { whitenProbe(args); return }
-    if (args.headOption.contains("profiles")) { profilesProbe(args); return }
-    if (args.headOption.contains("cc")) { ccProbe(args); return }
-    if (args.headOption.contains("bpe")) { bpeProbe(args); return }
-    if (args.headOption.contains("rangejoin")) { rangeJoinProbe(args); return }
-    if (args.headOption.contains("jaccard")) { jaccardProbe(args); return }
-    if (args.headOption.contains("kn")) { knProbe(args); return }
-    if (args.headOption.contains("bpelocal")) { bpeLocalProbe(args); return }
-    if (args.headOption.contains("bpebatch")) { bpeBatchProbe(args); return }
-    if (args.headOption.contains("bpebatchtext")) { bpeBatchTextProbe(args); return }
-    if (args.headOption.contains("bpezipf")) { bpeZipfProbe(args); return }
-    if (args.headOption.contains("curation")) { curationProbe(args); return }
-    if (args.headOption.contains("curationvar")) { curationVarProbe(args); return }
-    if (args.headOption.contains("ivfdrift")) { ivfDriftProbe(args); return }
-    if (args.headOption.contains("budgetselect")) { budgetSelectProbe(args); return }
-    if (args.headOption.contains("ingestops")) { ingestOpsProbe(args); return }
-    if (args.headOption.contains("cellprobe")) { cellProbe(args); return }
-    if (args.headOption.contains("streamheadline")) { streamHeadlineProbe(args); return }
-    if (args.headOption.contains("chainheadline")) { chainHeadlineProbe(args); return }
+  val CellProbe = "cellprobe"
+  val ChainHeadline = "chainheadline"
+  val StreamHeadline = "streamheadline"
+
+  val Usage: String = "usage: ScaleProbe [rows] [dir] | " +
+    s"$CellProbe <name[,name...]> [sfDir] [reps] | " +
+    s"$ChainHeadline [sfDir] [reps] | $StreamHeadline [sfDir] [reps]"
+
+  /** The probe `args` selects, or the usage error for an unknown mode.
+    * Resolving a mode builds nothing; the returned thunk does the work. */
+  def select(args: Array[String]): Either[String, () => Unit] =
+    args.headOption match {
+      case Some(CellProbe) => Right(() => cellProbe(args))
+      case Some(ChainHeadline) => Right(() => chainHeadlineProbe(args))
+      case Some(StreamHeadline) => Right(() => streamHeadlineProbe(args))
+      case Some(a) if a.toLongOption.isEmpty =>
+        Left(s"unknown ScaleProbe mode '$a'\n$Usage")
+      case _ => Right(() => chainSweep(args)) // a row count, or no argument
+    }
+
+  def main(args: Array[String]): Unit = select(args) match {
+    case Right(run) => run()
+    case Left(usage) => System.err.println(usage); sys.exit(2)
+  }
+
+  private def chainSweep(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
     val out = if (args.length > 1) args(1) else "/tmp/graft_scale_events"
     val cpus = GraftSession.defaultParallelism
@@ -52,856 +59,16 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(out)
     val df = spark.read.parquet(out)
     val n = df.count()
-
-    // the exact Pipeline.silver/gold5Min composition, minus the
-    // events-table adapter (the generated frame IS reading-shaped)
-    def chain(): Long = {
-      val filtered = silver.Silver.nullFilter(df,
-        Seq("sensor_id", "sensor_type", "value", "event_time"))
-      val deduped = silver.Silver.dedupLatest(filtered,
-        Seq("sensor_id", "event_time"), Seq(col("event_id").desc))
-      val ranged = silver.Silver.rangeAnomaly(deduped, "sensor_type",
-        "value", model.Schemas.eventValueRanges)
-      val silverDf = silver.Silver.zscoreFlags(ranged, Seq("sensor_id"),
-        Seq(col("event_time").asc, col("event_id").asc), "value")
-      gold.Gold.withHealthPct(gold.Gold.windowAgg(silverDf,
-        Seq("sensor_id", "sensor_type"), "event_time", "value",
-        "5 minutes", approxPercentiles = true)).count()
-    }
+    // the generated frame IS reading-shaped, so the chain starts at
+    // silver: no events-table adapter in front of it
     (1 to 3).foreach { i =>
       System.gc()
       val t0 = System.nanoTime()
-      val g = chain()
+      val g = Pipeline.gold5MinOf(Pipeline.silverOf(df)).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[scale] run$i rows=$n gold_groups=$g sec=$sec%.2f " +
         f"rows_per_sec=${n / sec}%.0f")
     }
-    spark.stop()
-  }
-
-  /** MinHash-LSH near-dup detection over a deterministic synthetic
-    * corpus: 80 words per doc drawn hash-deterministically from a 20k
-    * vocabulary, with every doc_id ≡ 1 (mod 100) sharing its
-    * predecessor's first 76 words (jaccard ≈ 0.9) — so the expected pair
-    * count is known (~nDocs/100) and the probe verifies recall while it
-    * times the sweep. */
-  private def dedupProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 50000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = when(pmod(col("doc_id"), lit(100)) === 1,
-      col("doc_id") - 1).otherwise(col("doc_id"))
-    val words = (i: Int, seed: org.apache.spark.sql.Column) =>
-      concat(lit("w"), pmod(hash(seed * 97 + lit(i)), lit(20000)))
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("text", concat_ws(" ",
-        ((0 until 76).map(i => words(i, base)) ++
-          (76 until 80).map(i => words(i, col("doc_id")))): _*))
-      .repartition(cpus * 2)
-    docs.write.mode("overwrite").parquet("/tmp/graft_scale_docs")
-    val df = spark.read.parquet("/tmp/graft_scale_docs")
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val pairs = graft.ext.Dedup.minhashNearDups(df, "text", "doc_id",
-        threshold = 0.5).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] dedup run$i docs=$nDocs pairs=$pairs sec=$sec%.2f " +
-        f"docs_per_sec=${nDocs / sec}%.0f")
-    }
-    spark.stop()
-  }
-
-  /** ExactSubstr span dedup at scale: 70-word hash-deterministic docs,
-    * every 5th doc prefixed with a FIXED 10-token boilerplate block —
-    * so the expected outcome is exact (nDocs/5 spans, each [0, 10),
-    * 10 tokens removed per flagged doc) and correctness is verified
-    * while the sweep is timed. */
-  private def spansProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 50000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val boiler = (0 until 10).map(i => s"lic$i").mkString(" ")
-    val words = (i: Int) =>
-      concat(lit("w"), pmod(hash(col("doc_id") * 131 + lit(i)), lit(20000)))
-    // the first body word is doc-UNIQUE so the block→body boundary
-    // window can never match across docs — the planted spans are then
-    // exactly [0, 10) and the expectation is closed-form
-    spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("body", concat_ws(" ",
-        concat(lit("u"), col("doc_id")) +: (1 until 70).map(words): _*))
-      .withColumn("text", when(pmod(col("doc_id"), lit(5)) === 0,
-        concat_ws(" ", lit(boiler), col("body"))).otherwise(col("body")))
-      .drop("body")
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_spans")
-    val df = spark.read.parquet("/tmp/graft_scale_spans")
-    val expected = (nDocs + 4) / 5 // doc_id % 5 == 0 count, any nDocs
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val spans = graft.ext.Dedup.duplicatedSpans(df, "text", "doc_id", 5)
-      val (n, bad) = {
-        val agg = spans.agg(count(lit(1)),
-          sum(when(col("span_start") =!= 0L || col("span_end") =!= 10L, 1L)
-            .otherwise(0L))).head()
-        (agg.getLong(0), agg.getLong(1))
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] spans run$i docs=$nDocs spans=$n " +
-        f"(expected $expected, off_shape=$bad) sec=$sec%.2f " +
-        f"docs_per_sec=${nDocs / sec}%.0f")
-      GraftSession.sweepCaches(spark)
-    }
-    System.gc()
-    val t0 = System.nanoTime()
-    val removed = graft.ext.Dedup
-      .removeDuplicatedSpans(df, "text", "doc_id", 5)
-      .agg(sum("n_removed")).head().getLong(0)
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[scale] spans removal docs=$nDocs tokens_removed=$removed " +
-      f"(expected ${expected * 10}) sec=$sec%.2f")
-    // Incremental-vs-index probe: docs with id % m == 1 are today's
-    // batch, all others are history (their distinct grams form the
-    // index). Batch docs with doc_id % 5 == 0 carry the planted block,
-    // whose grams all sit in the index — so expected removal is
-    // closed-form again: 10 tokens per such doc, counted exactly below
-    // for whatever m is in force. Bucketing the index on h is the
-    // production layout; the bucketed probe must match the plain one
-    // while reading the index in place.
-    // `ScaleProbe spans N m`: 1/m of docs form today's batch, the rest
-    // are history (m=2 default — the symmetric case; m=10 probes the
-    // steady-state index ≫ batch regime the bloom front targets)
-    val m = if (args.length > 2) args(2).toLong else 2L
-    val hist = df.filter(pmod(col("doc_id"), lit(m)) =!= 1L)
-    val todays = df.filter(pmod(col("doc_id"), lit(m)) === 1L)
-    graft.ext.Dedup.batchGramHashes(hist, "text", "doc_id", 5)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_gramidx")
-    val idx = spark.read.parquet("/tmp/graft_scale_gramidx")
-    // external-table path: the managed location would survive this JVM
-    // while the in-memory catalog does not (see writeBucketed's doc)
-    graft.warehouse.Warehouse.writeBucketed(idx, "scale_gram_idx", "h",
-      spark.sparkContext.defaultParallelism,
-      path = Some("/tmp/graft_scale_gramidx_bucketed"))
-    // expected: 10 boilerplate tokens cut per batch doc carrying the
-    // planted block (counted from the construction, exact for any m)
-    val expIncr = todays.filter(pmod(col("doc_id"), lit(5)) === 0)
-      .count() * 10
-    def timeIncr(label: String)(f: => Long): Unit = {
-      System.gc()
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[scale] spans incr-$label docs=${nDocs / m} " +
-        f"tokens_removed=$r (expected $expIncr) " +
-        f"sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      GraftSession.sweepCaches(spark)
-    }
-    timeIncr("plain") {
-      graft.ext.Dedup.incrementalDuplicatedSpans(todays, "text", "doc_id",
-        spark.table("scale_gram_idx"), 5)
-        .agg(sum("n_removed")).head().getLong(0)
-    }
-    timeIncr("bucketed") {
-      graft.ext.Dedup.incrementalDuplicatedSpansBucketed(todays, "text",
-        "doc_id", "scale_gram_idx", 5)
-        .agg(sum("n_removed")).head().getLong(0)
-    }
-    spark.stop()
-  }
-
-  /** Per-document operators at scale (`trimSelfRepeats` + `gramNovelty`):
-    * 70-token docs whose every token is doc-prefixed (cross-doc gram
-    * matches impossible by construction), with every 3rd doc's last 10
-    * tokens an exact copy of its first 10 — so the expectations are
-    * closed-form at any N: the k=5 window puts 6 second-occurrence grams
-    * at positions [60, 65], which merge to one span [60, 70) → 10 tokens
-    * trimmed per planted doc and 12 of its 66 grams non-novel
-    * (novelty = 54/66); clean docs trim 0 and score exactly 1.0. */
-  private def perdocProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 50000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val planted = pmod(col("doc_id"), lit(3)) === 0
-    def word(src: org.apache.spark.sql.Column) =
-      concat(lit("d"), col("doc_id"), lit("w"),
-        pmod(hash(col("doc_id") * 131 + src), lit(20000)))
-    val toks = (0 until 70).map { p =>
-      if (p < 60) word(lit(p))
-      else word(when(planted, lit(p - 60)).otherwise(lit(p)))
-    }
-    spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("text", concat_ws(" ", toks: _*))
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_perdoc")
-    val df = spark.read.parquet("/tmp/graft_scale_perdoc")
-    val nPlanted = (nDocs + 2) / 3
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val trim = graft.ext.Dedup.trimSelfRepeats(df, "text", "doc_id", 5)
-        .agg(count(lit(1)), sum("n_removed")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] perdoc trim run$i docs=${trim.getLong(0)} " +
-        f"tokens_removed=${trim.getLong(1)} (expected ${nPlanted * 10}) " +
-        f"sec=$sec%.2f docs_per_sec=${nDocs / sec}%.0f")
-      // the operator persists its gram table for the duration of the
-      // action; sweep it so the next timed run starts cold (the same
-      // between-queries discipline Bench/Verify apply)
-      GraftSession.sweepCaches(spark)
-    }
-    val expNovel = nPlanted * 54 + (nDocs - nPlanted) * 66
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val nov = graft.ext.Dedup.gramNovelty(df, "text", "doc_id", 5)
-        .agg(count(lit(1)), sum("n_novel"),
-          min(when(pmod(col("id"), lit(3)) === 0, col("novelty")))).head()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] perdoc novelty run$i docs=${nov.getLong(0)} " +
-        f"n_novel=${nov.getLong(1)} (expected $expNovel) " +
-        f"min_novelty=${nov.getDouble(2)}%.4f (expected ${54.0 / 66}%.4f) " +
-        f"sec=$sec%.2f docs_per_sec=${nDocs / sec}%.0f")
-      GraftSession.sweepCaches(spark)
-    }
-    spark.stop()
-  }
-
-  /** Whitening fit at scale: N deterministic 64-dim vectors with a
-    * planted anisotropic covariance. Times the ONE dim²-bounded moment
-    * aggregation (the whole corpus-side cost of the ZCA fit) and then
-    * verifies the trace identity E[m²] = dim on a projected sample —
-    * exact for any N, so correctness rides along with the timing.
-    * `ScaleProbe whiten [nVecs]`. */
-  private def whitenProbe(args: Array[String]): Unit = {
-    val n = if (args.length > 1) args(1).toLong else 100000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dim = 64
-    // anisotropic: dim j's scale grows with j, plus a shared component
-    // so off-diagonals are nonzero and the fit has real work to do
-    val comps = (0 until dim).map { j =>
-      (pmod(hash(col("id"), lit(j)), lit(2001)).cast("double") / 1000.0 - 1.0) *
-        lit(1.0 + j / 8.0) +
-        (pmod(hash(col("id")), lit(2001)).cast("double") / 1000.0 - 1.0)
-    }
-    spark.range(n).select(col("id"), array(comps: _*).as("v"))
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_whiten")
-    val df = spark.read.parquet("/tmp/graft_scale_whiten")
-    var fit: (Long, Array[Double], breeze.linalg.DenseMatrix[Double]) = null
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      fit = graft.ext.Whiten.moments(df, "v")
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] whiten-fit run$i vecs=$n dim=$dim cells=${dim * dim + dim + 1} " +
-        f"sec=$sec%.2f vecs_per_sec=${n / sec}%.0f")
-    }
-    val w = graft.ext.Whiten.zcaMatrix(fit._3, 1e-9)
-    System.gc()
-    val t0 = System.nanoTime()
-    val m2 = graft.ext.Whiten.project(df, "v", "wh", fit._2, w)
-      .select(graft.functions.VectorFunctions.normSq(col("wh")).as("m2"))
-      .agg(avg("m2"), count(lit(1))).head()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[scale] whiten-project vecs=${m2.getLong(1)} " +
-      f"avg_m2=${m2.getDouble(0)}%.4f (expected $dim.0000) sec=$sec%.2f")
-    spark.stop()
-  }
-
-  /** IVF-PQ at scale: N deterministic 64-dim vectors in 256 hash-seeded
-    * clusters (cluster direction + 15% per-vector noise), k-means-free
-    * centroid table from the cluster labels, PQ codes at m=8. Times the
-    * index build (one pass) and the code-only `ivfPqTopK` for 20 queries
-    * at nProbe=4, then reports recall@10 against exact brute force and
-    * the index:raw parquet footprint ratio — the two numbers that
-    * justify the IVF-PQ path at 100 TB. */
-  private def annProbe(args: Array[String]): Unit = {
-    val n = if (args.length > 1) args(1).toLong else 100000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dim = 64; val kCells = 256; val m = 8
-    import graft.ext.Similarity
-    def comp(seed: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =
-      pmod(hash(seed, j), lit(2001)).cast("double") / 1000.0 - 1.0
-    val rawDir = "/tmp/graft_scale_vecs"
-    val idxDir = "/tmp/graft_scale_pqidx"
-    // cluster direction + a per-vector point on the cluster's 2-D residual
-    // manifold — real embeddings concentrate on low-intrinsic-dimension
-    // manifolds, which is exactly what makes PQ codes informative; full-
-    // rank iid noise would be the (unrealistic) worst case for any PQ
-    spark.range(n).select(col("id").as("vec_id"),
-        pmod(col("id"), lit(kCells)).cast("int").as("label"))
-      .withColumn("a", comp(col("vec_id") * 7919, lit(0)))
-      .withColumn("b", comp(col("vec_id") * 7919, lit(1)))
-      .withColumn("embedding", transform(sequence(lit(0), lit(dim - 1)),
-        j => comp(col("label") * 131, j)
-          + (col("a") * comp(col("label") * 517 + lit(1), j)
-            + col("b") * comp(col("label") * 811 + lit(2), j)) * lit(0.15)))
-      .drop("a", "b")
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet(rawDir)
-    val df = spark.read.parquet(rawDir)
-    val cents = Similarity.centroids(df, "label", dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents.count()
-    // residual IVF-PQ (the FAISS shape): 256-entry sampled residual
-    // codebook; raw-vector PQ against the coarse codebook cannot rank
-    // within a cell (all cell-mates reconstruct to ~the centroid)
-    val cb = Similarity.pqResidualCodebook(df, cents, entries = 256)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cb.count()
-    val tb0 = System.nanoTime()
-    Similarity.pqIndexResidual(df, cents, cb, m, dim)
-      .write.mode("overwrite").parquet(idxDir)
-    val buildSec = (System.nanoTime() - tb0) / 1e9
-    val idx = spark.read.parquet(idxDir)
-    val q = df.filter(col("vec_id") < 20)
-    def dirBytes(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(hp).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-    }
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val rows = Similarity.ivfPqTopKResidual(idx, q, cents, cb, k = 10,
-        m = m, dim = dim, nProbe = 4).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] ann run$i vecs=$n topk_rows=$rows build_sec=$buildSec%.2f " +
-        f"query_sec=$sec%.2f vecs_per_sec=${n / sec}%.0f")
-    }
-    val exact = Similarity.bruteForceTopK(df, q, k = 10)
-      .select(col("query_id"), col("corpus_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val approx = Similarity.ivfPqTopKResidual(idx, q, cents, cb, k = 10,
-      m = m, dim = dim, nProbe = 4).select(col("query_id"), col("corpus_id"))
-    val hits = approx.join(exact, Seq("query_id", "corpus_id")).count()
-    // the production two-stage shape: deep code shortlist, exact rerank
-    // of only those rows — recall@10 becomes ADC recall@shortlist. The
-    // shortlist scales with per-cell density (fixed code resolution
-    // separates a fixed FRACTION of a cell, not a fixed count), and
-    // stays a trivial fetch: even 1000/query is 10^-3 of a 1M corpus.
-    val shortlist = math.max(100, (n / 1000).toInt)
-    val t0 = System.nanoTime()
-    val rr = Similarity.ivfPqRerankTopK(idx, df, q, cents, cb, k = 10,
-      shortlist = shortlist, m = m, dim = dim, nProbe = 4)
-      .select(col("query_id"), col("corpus_id"))
-    val rrHits = rr.join(exact, Seq("query_id", "corpus_id")).count()
-    val rerankSec = (System.nanoTime() - t0) / 1e9
-    println(f"[scale] ann recall@10=${hits.toDouble / (20 * 10)}%.3f " +
-      f"rerank_recall@10=${rrHits.toDouble / (20 * 10)}%.3f " +
-      f"shortlist=$shortlist rerank_sec=$rerankSec%.2f " +
-      f"index_bytes=${dirBytes(idxDir)} raw_bytes=${dirBytes(rawDir)} " +
-      f"ratio=${dirBytes(rawDir).toDouble / dirBytes(idxDir)}%.1f")
-    exact.unpersist()
-    spark.stop()
-  }
-
-  /** Profile-similarity scale sweep: `ScaleProbe profiles [nUsers]` —
-    * deterministic 24-dim activity profiles with every user ≡ 1 (mod 100)
-    * a lightly perturbed copy of its predecessor (planted high-cosine
-    * neighbor, so top-1 hits are verifiable). Times the SRP-LSH path
-    * (srpTopK — the x_profile_similarity_srp shape) at the given user
-    * count, and the exact all-pairs twin only while it is feasible
-    * (≤ 20k users): the probe's point is the crossover — all-pairs grows
-    * users², SRP stays ~linear. */
-  private def profilesProbe(args: Array[String]): Unit = {
-    val nUsers = if (args.length > 1) args(1).toLong else 15000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = when(pmod(col("user_id"), lit(100)) === 1,
-      col("user_id") - 1).otherwise(col("user_id"))
-    // components in [0,1); the planted copy perturbs only dimension 23
-    val comp = (h: Int) => (pmod(hash(base * lit(131) + lit(h)),
-      lit(1000)).cast("double") + lit(1000.0)) / 2000.0
-    val prof = spark.range(nUsers).select(col("id").as("user_id"))
-      .withColumn("p", array(((0 until 23).map(comp) :+
-        (comp(23) + pmod(col("user_id"), lit(100)).cast("double") / 100.0)): _*))
-      .repartition(cpus * 2)
-    prof.write.mode("overwrite").parquet("/tmp/graft_scale_profiles")
-    val df = spark.read.parquet("/tmp/graft_scale_profiles")
-    // the srpTopK sizing rule: rowsPerBand ≈ log2(n) keeps per-bucket
-    // occupancy O(1) so candidates ≈ bands·n (see srpTopK scaladoc);
-    // 4 bands throughout, planted near-identical pairs keep recall ~1
-    val rpb = math.max(4,
-      math.ceil(math.log(nUsers.toDouble) / math.log(2)).toInt)
-    val nPlanes = 4 * rpb
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val rows = graft.ext.Similarity.srpTopK(df, k = 3,
-        numPlanes = nPlanes, rowsPerBand = rpb, idCol = "user_id",
-        vecCol = "p", dim = 24).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] profiles srp run$i users=$nUsers planes=$nPlanes " +
-        f"rpb=$rpb topk_rows=$rows sec=$sec%.2f " +
-        f"users_per_sec=${nUsers / sec}%.0f")
-    }
-    // bucket diagnostics: the sizing rule's claim is candidates ≈ bands·n;
-    // Σ m·(m-1)/2 over buckets is the EXACT banded-join pair count, so a
-    // blowup here (vs ~bands·n) is the super-linear smoking gun
-    locally {
-      val planes = graft.ext.Similarity.srpPlanes(nPlanes, 24)
-      val sigDf = df
-        .withColumn("vmean", graft.ext.Similarity.vecMean(col("p")))
-        .withColumn("sig", graft.ext.Similarity.srpSignature(
-          graft.ext.Similarity.centerVec(col("p"), col("vmean")), planes))
-      val occ = sigDf.select(posexplode(array(
-          (0 until nPlanes / rpb).map(b =>
-            substring(col("sig"), b * rpb + 1, rpb)): _*))
-          .as(Seq("band", "chunk")))
-        .groupBy("band", "chunk").count()
-      val st = occ.agg(
-        sum(col("count") * (col("count") - 1)).as("pairs2"),
-        max("count").as("maxb"), count(lit(1)).as("buckets")).first()
-      println(s"[scale] profiles diag candidate_pairs=${st.getLong(0) / 2} " +
-        s"max_bucket=${st.getLong(1)} nonempty_buckets=${st.getLong(2)} " +
-        s"bands_x_n=${(nPlanes / rpb) * nUsers}")
-    }
-    // planted-neighbor recall: every user ≡ 1 (mod 100) must rank its
-    // near-identical predecessor first — the regime LSH must not miss
-    val planted = graft.ext.Similarity.srpTopK(df, k = 1,
-        numPlanes = nPlanes, rowsPerBand = rpb, idCol = "user_id",
-        vecCol = "p", dim = 24)
-      .filter(pmod(col("id"), lit(100)) === 1 && col("rank") === 1 &&
-        col("other_id") === col("id") - 1)
-      .count()
-    println(f"[scale] profiles planted_recall=" +
-      f"${planted.toDouble / (nUsers / 100)}%.3f " +
-      f"(${planted}/${nUsers / 100} planted neighbors at rank 1)")
-    if (nUsers <= 20000L) {
-      val a = df.select(col("user_id"), col("p").as("pa"),
-        sqrt(graft.ext.Similarity.dot(col("p"), col("p"))).as("na"))
-      val b = df.select(col("user_id").as("other_id"), col("p").as("pb"),
-        sqrt(graft.ext.Similarity.dot(col("p"), col("p"))).as("nb"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-        .orderBy(col("c").desc, col("other_id").asc)
-      System.gc()
-      val t0 = System.nanoTime()
-      val rows = a.join(broadcast(b), col("user_id") =!= col("other_id"))
-        .withColumn("c", graft.ext.Similarity.dot(col("pa"), col("pb"))
-          / (col("na") * col("nb")))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] profiles exact users=$nUsers topk_rows=$rows " +
-        f"sec=$sec%.2f users_per_sec=${nUsers / sec}%.0f")
-    } else
-      println(s"[scale] profiles exact skipped at $nUsers users (users^2 pairs)")
-    spark.stop()
-  }
-
-  /** Incremental-CC scale sweep: `ScaleProbe cc [histNodes] [batchEdges]`
-    * — history of 5-node chain clusters (assignments known closed-form),
-    * plus a batch of `batchEdges` cluster-bridging edges (touched
-    * fraction ≈ 10·batchEdges/histNodes). Times
-    * incrementalConnectedComponents (affected-components-only) against
-    * the full recompute over history ∪ batch: the incremental fold's
-    * cost should track the touched set, not the history. */
-  private def ccProbe(args: Array[String]): Unit = {
-    val histNodes = if (args.length > 1) args(1).toLong else 10000000L
-    val batchEdges = if (args.length > 2) args(2).toLong else 1000L
-    // the planted bridges reference nodes (10k+4, 10k+5): if they exceed
-    // histNodes they touch nodes absent from history and the closed-form
-    // `merged == batchEdges` expectation goes silently wrong — fail loudly
-    require(batchEdges * 10 + 5 <= histNodes,
-      s"cc probe needs batchEdges*10+5 <= histNodes " +
-        s"(got batchEdges=$batchEdges, histNodes=$histNodes)")
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val nClusters = histNodes / 5
-    // history: clusters {5c..5c+4} chained; assignment label = min id = 5c
-    val histEdges = spark.range(histNodes)
-      .filter(pmod(col("id"), lit(5)) =!= 4)
-      .select(col("id").as("src"), (col("id") + 1).as("dst"))
-      .repartition(cpus * 2)
-    val assignments = spark.range(histNodes)
-      .select(col("id"), (col("id") - pmod(col("id"), lit(5))).as("cluster_id"))
-      .repartition(cpus * 2)
-    histEdges.write.mode("overwrite").parquet("/tmp/graft_scale_cc_edges")
-    assignments.write.mode("overwrite").parquet("/tmp/graft_scale_cc_asg")
-    val he = spark.read.parquet("/tmp/graft_scale_cc_edges")
-    val asg = spark.read.parquet("/tmp/graft_scale_cc_asg")
-    // batch: bridge cluster 2k and 2k+1 via edge (10k+4, 10k+5) — merges
-    // pairs of clusters; expected merged count is exactly batchEdges
-    val batch = spark.range(batchEdges)
-      .select((col("id") * 10 + 4).as("src"), (col("id") * 10 + 5).as("dst"))
-    System.gc()
-    val ti = System.nanoTime()
-    val incr = graft.ext.Graph.incrementalConnectedComponents(
-      asg, batch, "src", "dst")
-    val nIncr = incr.count()
-    val incrSec = (System.nanoTime() - ti) / 1e9
-    val merged = histNodes / 5 - incr.select("cluster_id").distinct().count()
-    System.gc()
-    val tf = System.nanoTime()
-    val full = graft.ext.Graph.connectedComponents(
-      he.union(batch), "src", "dst")
-    val nFull = full.count()
-    val fullSec = (System.nanoTime() - tf) / 1e9
-    println(f"[scale] cc nodes=$histNodes clusters=$nClusters " +
-      f"batch_edges=$batchEdges merged=$merged " +
-      f"incr_rows=$nIncr incr_sec=$incrSec%.2f " +
-      f"full_rows=$nFull full_sec=$fullSec%.2f speedup=${fullSec / incrSec}%.1fx")
-    spark.stop()
-  }
-
-  /** Exact-Jaccard-join arms head to head:
-    * `ScaleProbe jaccard [nDocs] [tau]` — 80-word docs over a TINY
-    * 50-word vocabulary (shingles repeat heavily, the co-occurrence
-    * regime where an inverted index's self-join blows up), 1% planted
-    * near-copies sharing their predecessor's first 76 words (shingle
-    * jaccard ≈ 0.88, above the default τ=0.8). Prints, for the
-    * inverted-index arm and the prefix-filtered arm: warm time, result
-    * pairs (MUST be equal — both are exact), and the exact candidate
-    * volume Σ m·(m−1)/2 over the (block, shingle) buckets each arm
-    * joins on — the number the prefix lemma shrinks. */
-  private def jaccardProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 20000L
-    val tau = if (args.length > 2) args(2).toDouble else 0.8
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = when(pmod(col("doc_id"), lit(100)) === 1,
-      col("doc_id") - 1).otherwise(col("doc_id"))
-    // Zipf-ish draw (min of two independent uniforms over 50): low
-    // indices frequent, high indices rare — real corpora are Zipfian,
-    // and the rarest-first prefix order only has bite when rare tokens
-    // exist. A uniform vocab flattens df and the measured candidate cut
-    // collapses to the (1−τ)² volume fraction.
-    val words = (i: Int, seed: org.apache.spark.sql.Column) =>
-      concat(lit("w"), least(pmod(hash(seed * 97 + lit(i)), lit(50)),
-        pmod(hash(seed * 131 + lit(i + 7)), lit(50))))
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("text", concat_ws(" ",
-        ((0 until 76).map(i => words(i, base)) ++
-          (76 until 80).map(i => words(i, col("doc_id")))): _*))
-      .withColumn("blk", lit("all"))
-      .repartition(cpus * 2)
-    docs.write.mode("overwrite").parquet("/tmp/graft_scale_jacc")
-    val df = spark.read.parquet("/tmp/graft_scale_jacc")
-    def arm(name: String,
-            run: () => Long): Unit = (1 to 2).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val pairs = run()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] jaccard $name run$i docs=$nDocs tau=$tau " +
-        f"pairs=$pairs sec=$sec%.2f")
-    }
-    arm("inverted", () => graft.ext.Dedup
-      .ngramJaccardPairs(df, "text", "doc_id", "blk", 3, tau).count())
-    arm("prefix", () => graft.ext.Dedup
-      .jaccardPairsPrefix(df, "text", "doc_id", "blk", 3, tau).count())
-    // candidate-volume diagnostic: exact pair count each arm's
-    // self-join materializes (full index vs rarest-first prefixes)
-    val sh = df.select(col("doc_id"),
-      array_distinct(graft.ext.TextAnalysis.shingles(col("text"), 3)).as("sh"))
-    val ex = sh.select(col("doc_id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("s"))
-    def bucketPairs(idx: org.apache.spark.sql.DataFrame): Long =
-      idx.groupBy("s").count()
-        .agg(sum(col("count") * (col("count") - 1)))
-        .first().getLong(0) / 2
-    val full = bucketPairs(ex)
-    val dfreq = ex.groupBy("s").agg(count(lit(1)).as("df"))
-    val rkW = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)
-    val pref = ex.join(dfreq, Seq("s"))
-      .withColumn("rk", row_number().over(rkW))
-      .filter(col("rk") <= col("n") - ceil(lit(tau) * col("n") - lit(1e-9)) + 1)
-      .select("doc_id", "s")
-    val prefC = bucketPairs(pref)
-    println(f"[scale] jaccard diag full_candidates=$full " +
-      f"prefix_candidates=$prefC reduction=${full.toDouble / prefC}%.1fx")
-    spark.stop()
-  }
-
-  /** Trigram-KN model+scoring scale sweep:
-    * `ScaleProbe kn [nDocsSmall] [nDocsLarge]` — 40-word docs drawn
-    * hash-deterministically (Zipf-ish min-of-uniforms) from a FIXED
-    * 100-word vocabulary at two corpus sizes. Measures the two scale
-    * claims directly: (a) the model TYPE tables saturate at the
-    * vocabulary's n-gram capacity while the corpus grows (printed
-    * tri_types per size), so model joins stop growing; (b) scoring
-    * throughput (docs/sec, warm best-of-2) RISES with corpus size as
-    * fixed per-stage overheads amortize — the corpus-linear term is the
-    * only one left. */
-  private def knProbe(args: Array[String]): Unit = {
-    val sizes = Seq(
-      if (args.length > 1) args(1).toLong else 100000L,
-      if (args.length > 2) args(2).toLong else 1000000L)
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val words = (i: Int) =>
-      concat(lit("w"), least(pmod(hash(col("doc_id") * 97 + lit(i)), lit(100)),
-        pmod(hash(col("doc_id") * 131 + lit(i + 7)), lit(100))))
-    sizes.foreach { nDocs =>
-      spark.range(nDocs).select(col("id").as("doc_id"))
-        .withColumn("text", concat_ws(" ", (0 until 40).map(words): _*))
-        .repartition(cpus * 2)
-        .write.mode("overwrite").parquet("/tmp/graft_scale_kn")
-      val df = spark.read.parquet("/tmp/graft_scale_kn")
-      val t0 = System.nanoTime()
-      val model = graft.ext.Lm.knTrigramTrain(
-        df.filter(col("doc_id") % 2 === 0), "text")
-      val triTypes = model.tri.count()
-      val trainSec = (System.nanoTime() - t0) / 1e9
-      (1 to 2).foreach { i =>
-        System.gc()
-        val t1 = System.nanoTime()
-        val n = graft.ext.Lm.kn3Score(df, "doc_id", "text", model).count()
-        val sec = (System.nanoTime() - t1) / 1e9
-        println(f"[scale] kn run$i docs=$nDocs tri_types=$triTypes " +
-          f"train_sec=$trainSec%.2f score_sec=$sec%.2f scored=$n " +
-          f"docs_per_sec=${nDocs / sec}%.0f")
-      }
-      model.release()
-      GraftSession.sweepCaches(spark)
-    }
-    spark.stop()
-  }
-
-  /** IVF staleness sweep: `ScaleProbe ivfdrift [nVecs]` — how fast does a
-    * stored IVF index's recall decay when the CORPUS DRIFTS under fixed
-    * centroids, and how much does a cheap refresh (2 Lloyd rounds seeded
-    * from the stale centroids — no re-labeling pass) recover? 16
-    * deterministic clusters in 64 dims; drift shifts every cluster's
-    * center by δ along a per-cluster direction. The operational number
-    * an ANN serving layer needs: the δ at which stale recall crosses its
-    * SLO is the re-clustering trigger (pair with the m_embedding_drift
-    * monitor, which WATCHES the same movement). */
-  private def ivfDriftProbe(args: Array[String]): Unit = {
-    val nVecs = if (args.length > 1) args(1).toLong else 200000L
-    val dim = 64
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def u(seed: org.apache.spark.sql.Column, i: Int, m: Int) =
-      (pmod(hash(seed * 31 + lit(i * 7 + m)), lit(1000)).cast("double")
-        / lit(500.0)) - lit(1.0)
-    val cl = pmod(col("id"), lit(16))
-    // drift is a per-vector SMEAR toward the NEXT cluster's center
-    // (weight w(doc) ∈ [0,1]): a coherent whole-cluster translation
-    // keeps the stale partition valid by symmetry, and a random-direction
-    // smear in 64 dims is near-orthogonal to every inter-centroid axis —
-    // the regime that actually breaks a stale index is mass migrating
-    // ACROSS a cell boundary toward another mode, which is what topic
-    // drift in embedding space does
-    val nxt = pmod(cl + lit(1), lit(16))
-    def corpus(delta: Double) = spark.range(nVecs)
-      .select(col("id").as("vec_id"), cl.as("label"),
-        array((0 until dim).map(i =>
-          u(cl, i, 1) + lit(0.1) * u(col("id"), i, 2) +
-            lit(delta) * ((u(col("id"), 0, 5) + lit(1.0)) / lit(2.0))
-              * (u(nxt, i, 1) - u(cl, i, 1))): _*).as("embedding"))
-      .repartition(cpus * 2)
-    import graft.ext.Similarity
-    val base = corpus(0.0)
-    base.write.mode("overwrite").parquet("/tmp/graft_scale_drift0")
-    val c0 = spark.read.parquet("/tmp/graft_scale_drift0")
-    val cents0 = Similarity.lloydRefine(c0,
-      Similarity.centroids(c0, "label", dim), iters = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents0.count()
-    Seq(0.0, 0.3, 0.55, 0.65, 0.9, 1.2).foreach { d =>
-      corpus(d).write.mode("overwrite").parquet("/tmp/graft_scale_drift1")
-      val c1 = spark.read.parquet("/tmp/graft_scale_drift1")
-      val queries = c1.filter(col("vec_id") < 20)
-      val gold = Similarity.bruteForceTopK(c1, queries, 10)
-        .select(col("query_id"), col("corpus_id"), lit(1L).as("h"))
-      def recall(cents: org.apache.spark.sql.DataFrame): Double = {
-        val ivf = Similarity.ivfTopK(c1, queries, cents, k = 10, nProbe = 1)
-          .select(col("query_id"), col("corpus_id"))
-        val r = gold.join(ivf.withColumn("hit", lit(1L)),
-            Seq("query_id", "corpus_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).cast("double").as("hits"),
-            count(lit(1)).cast("double").as("total")).head()
-        r.getDouble(0) / r.getDouble(1)
-      }
-      val stale = recall(cents0)
-      val refreshed = recall(Similarity.lloydRefine(c1, cents0, iters = 2))
-      println(f"[scale] ivfdrift n=$nVecs delta=$d%.2f " +
-        f"recall_stale=$stale%.3f recall_refreshed=$refreshed%.3f")
-      GraftSession.sweepCaches(spark)
-      cents0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cents0.count()
-    }
-    spark.stop()
-  }
-
-  /** Model-based-curation capstone sweep:
-    * `ScaleProbe curation [nSmall] [nLarge]` — the x_model_curation_
-    * pipeline composition (KN bigram gate at the self-calibrating median
-    * → exact dedup keep-first → DSIR top-50) end-to-end over synthetic
-    * 40-word Zipf-vocab corpora at two sizes. The capstone's scale claim:
-    * every stage is corpus-linear (the KN model is type-bounded, dedup
-    * keys are fingerprints, DSIR is two hashed-count aggregations + a
-    * TakeOrdered), so docs/sec should RISE with corpus size as the
-    * fixed per-stage overheads amortize — the same signature the chain
-    * and KN probes show. */
-  private def curationProbe(args: Array[String]): Unit = {
-    val sizes = Seq(
-      if (args.length > 1) args(1).toLong else 100000L,
-      if (args.length > 2) args(2).toLong else 1000000L)
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val words = (i: Int) =>
-      concat(lit("w"), least(pmod(hash(col("doc_id") * 97 + lit(i)), lit(100)),
-        pmod(hash(col("doc_id") * 131 + lit(i + 7)), lit(100))))
-    sizes.foreach { nDocs =>
-      spark.range(nDocs).select(col("id").as("doc_id"))
-        .withColumn("text", concat_ws(" ", (0 until 40).map(words): _*))
-        .withColumn("lang", when(pmod(hash(col("doc_id") * 7), lit(5)) < 3,
-          lit("en")).otherwise(lit("xx")))
-        .repartition(cpus * 2)
-        .write.mode("overwrite").parquet("/tmp/graft_scale_cur")
-      val df = spark.read.parquet("/tmp/graft_scale_cur")
-      (1 to 2).foreach { run =>
-        System.gc()
-        val t0 = System.nanoTime()
-        val model = graft.ext.Lm.knBigramTrain(
-          df.filter(col("doc_id") % 2 === 0), "text")
-        val scored = graft.ext.Lm.knScore(df, "doc_id", "text", model)
-          .select(col("id").as("doc_id"), col("avg_nll").as("nll_r"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val med = scored.agg(expr("percentile(nll_r, 0.5d)").as("m"))
-        val gated = df.join(scored, "doc_id")
-          .crossJoin(broadcast(med)).filter(col("nll_r") <= col("m"))
-        val surv = graft.ext.Dedup.exactDedup(gated, "text", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val w = graft.ext.Sampling.dsirWeights(
-          surv, surv.filter(col("lang") === "en"), "text", 64)
-        val n = graft.ext.Sampling
-          .dsirScore(surv, "doc_id", "text", w, 64, seed = 41)
-          .orderBy(col("key").desc, col("id").asc).limit(50).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] curation run$run docs=$nDocs selected=$n " +
-          f"sec=$sec%.2f docs_per_sec=${nDocs / sec}%.0f")
-        scored.unpersist(); surv.unpersist(); model.release()
-        GraftSession.sweepCaches(spark)
-      }
-    }
-    spark.stop()
-  }
-
-  /** Bench-variance diagnosis for the registry's heaviest multi-stage
-    * cell: `ScaleProbe curationvar [sfDir]` — names the r14-r16
-    * bimodality of `x_model_curation_pipeline` (committed ~2.4 s vs
-    * driver re-reads ~5.9 s, three rounds of adjudication). Two
-    * instruments: (a) a pipeline BISECT timing uncached prefixes
-    * (train+score+gate+dedup, +DSIR top-k, +join-back, full registry
-    * fn — discard rep 1, it absorbs codegen), and (b) a bench TWIN
-    * replaying the bench's exact per-cell procedure (two timed counts,
-    * no sweep between, min) with per-run GC-time deltas, clean and
-    * under deliberate JVM pressure (a persisted hog + dead broadcasts).
-    * r17 finding: run 1 (cold caches, every stage computes) is
-    * 4.5-6.5 s and run 2 (reuses run 1's two persisted stage
-    * boundaries) is 1.8-2.9 s under BOTH conditions — the recorded
-    * min-of-2 is structurally bimodal, not contaminated; the declared
-    * envelope in [[Bench]] consumes this. */
-  private def curationVarProbe(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries("x_model_curation_pipeline")
-    // bench-twin measurement: EXACTLY the bench's per-cell procedure
-    // (two timed counts, no sweep between — run 2 reuses run 1's
-    // persisted stages via the cache manager — then min), with GC-time
-    // deltas per run, so the recorded figure's distribution and its GC
-    // component are both visible
-    import scala.jdk.CollectionConverters._
-    def gcMs(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def benchTwin(label: String, rep: Int): Unit = {
-      val g0 = gcMs(); val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val t1 = (System.nanoTime() - t0) / 1e9; val g1 = gcMs()
-      val t0b = System.nanoTime()
-      fn(spark, sfDir).count()
-      val t2 = (System.nanoTime() - t0b) / 1e9; val g2 = gcMs()
-      println(f"[scale] curationvar-bench $label rep$rep " +
-        f"run1=$t1%.2f (gc=${g1 - g0}ms) run2=$t2%.2f (gc=${g2 - g1}ms) " +
-        f"min=${math.min(t1, t2)}%.2f")
-      GraftSession.sweepCaches(spark)
-    }
-    // bisect the registry fn: which suffix of the pipeline owns the
-    // uncached-run gap (full fn ~5 s vs ~2 s of summed stages)?
-    def bisect(rep: Int): Unit = {
-      import graft.model.Tables
-      def freshParts() = {
-        val docs = Tables.documents(spark, sfDir)
-        val model = graft.ext.Lm.knBigramTrain(
-          docs.filter(col("doc_id") % 2 === 0), "text")
-        val scored = graft.ext.Lm.knScore(docs, "doc_id", "text", model)
-          .select(col("id").as("doc_id"),
-            round(col("avg_nll") + lit(1e-9), 4).as("nll_r"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val med = scored.agg(
-          round(expr("percentile(nll_r, 0.5d)") + lit(1e-9), 4).as("m"))
-        val gated = docs.join(scored, "doc_id")
-          .crossJoin(broadcast(med)).filter(col("nll_r") <= col("m"))
-        val surv = graft.ext.Dedup.exactDedup(gated, "text", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (scored, surv)
-      }
-      def timed(label: String)(f: => Unit): Unit = {
-        GraftSession.sweepCaches(spark); System.gc()
-        val t0 = System.nanoTime(); f
-        println(f"[scale] curationvar-bisect rep$rep $label " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        GraftSession.sweepCaches(spark)
-      }
-      timed("v1_surv_only") { val (s, sv) = freshParts(); sv.count(); () }
-      timed("v2_plus_dsir_topk") {
-        val (s, sv) = freshParts()
-        val w = graft.ext.Sampling.dsirWeights(
-          sv, sv.filter(col("lang") === "en"), "text", 64)
-        graft.ext.Sampling.dsirScore(sv, "doc_id", "text", w, 64, 41)
-          .orderBy(round(col("key") + lit(1e-9), 6).desc, col("id").asc)
-          .limit(50).count(); ()
-      }
-      timed("v3_plus_joinback") {
-        val (s, sv) = freshParts()
-        val w = graft.ext.Sampling.dsirWeights(
-          sv, sv.filter(col("lang") === "en"), "text", 64)
-        graft.ext.Sampling.dsirScore(sv, "doc_id", "text", w, 64, 41)
-          .orderBy(round(col("key") + lit(1e-9), 6).desc, col("id").asc)
-          .limit(50)
-          .join(sv.select(col("doc_id"), col("nll_r")),
-            col("id") === col("doc_id"))
-          .select(col("doc_id"), col("nll_r"),
-            round(col("logw") + lit(1e-9), 4).as("logw_r"))
-          .orderBy("doc_id").count(); ()
-      }
-      timed("v4_registry_fn") { fn(spark, sfDir).count(); () }
-    }
-    (1 to 2).foreach(bisect)
-    (1 to 4).foreach { r => System.gc(); benchTwin("clean", r) }
-    // pressure condition: a persisted hog eats storage memory and a pile
-    // of un-GC'd broadcasts loads the cleaner — the state a cell late in
-    // the 231-cell registry actually runs in
-    val hog = spark.range(200000000L)
-      .select(col("id"), md5(col("id").cast("string").cast("binary")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hog.count()
-    (1 to 60).foreach { i =>
-      spark.range(1000000L).select(sum(col("id") * i)).collect(); ()
-    }
-    (1 to 4).foreach(r => benchTwin("pressure", r))
-    hog.unpersist()
     spark.stop()
   }
 
@@ -1059,535 +226,6 @@ object ScaleProbe {
       f"(post-warmup reps=$reps)" + band.map { b =>
         s" declared_band=$b"
       }.getOrElse(" (no declared band found)"))
-    spark.stop()
-  }
-
-  /** Round-16 streaming-twin throughput:
-    * `ScaleProbe ingestops [nDocs] [nBatches]` — per-batch fold rates of
-    * the three new index/state-backed ingest operators (normalized
-    * dedup, adaptive gate, shard manifest) over hash-deterministic docs
-    * with ~20% injected case/punct variants (so the dedup path bites).
-    * Each family pays its real exactly-once protocol per batch (marker
-    * check, state read, staged write, swap), so the figure is the
-    * honest per-batch overhead + data rate, not a bare transform. */
-  private def ingestOpsProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 200000L
-    val nBatches = if (args.length > 2) args(2).toInt else 5
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.DataFrame
-    val per = nDocs / nBatches
-    // text is a pure function of the id, so a variant row can derive
-    // its text from doc_id−1 (same batch — the guard below excludes the
-    // batch's first id), making the variant a true case/punct mutation
-    // of ANOTHER live doc rather than of itself
-    def textOf(idExpr: String) = expr(
-      s"concat('the and of to in is doc ', repeat(concat('w', " +
-        s"CAST(pmod(hash(($idExpr) * 13), 50) AS STRING), ' '), " +
-        s"CAST(pmod(hash(($idExpr) * 7), 30) AS INT) + 3))")
-    def batchDf(b: Int): DataFrame = {
-      val base = spark.range(b * per, (b + 1) * per)
-        .select(col("id").as("doc_id"))
-        .withColumn("source",
-          concat(lit("src"), pmod(hash(col("doc_id")), lit(8))))
-        .withColumn("text", textOf("doc_id"))
-      // ~20% of rows are case/punct variants of the PREVIOUS doc — the
-      // normalized-dedup kill path
-      base.withColumn("text",
-        when(pmod(col("doc_id"), lit(5)) === 0 && col("doc_id") > b * per,
-          concat(lit("  "), upper(textOf("doc_id - 1")), lit(" !!!")))
-          .otherwise(col("text")))
-        .repartition(cpus * 2)
-    }
-    def timeFold(label: String)(fold: (DataFrame, Long) => Unit): Unit = {
-      System.gc()
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach(b => fold(batchDf(b), b.toLong))
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] ingestops $label docs=$nDocs batches=$nBatches " +
-        f"sec=$sec%.2f docs_per_sec=${nDocs / sec}%.0f")
-    }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ingestops").toString
-    timeFold("normalized_dedup") { (b, id) =>
-      streaming.StreamingPipeline.normalizedDedupIngestBatch(
-        b, id, "text", "doc_id", s"$root/nd-out", s"$root/nd-idx")
-    }
-    timeFold("adaptive_gate") { (b, id) =>
-      streaming.StreamingPipeline.adaptiveGateBatch(
-        b, id, "source", "text", s"$root/ag-out", s"$root/ag-store",
-        pct = 0.25, relativeError = 0.001)
-    }
-    timeFold("shard_manifest") { (b, id) =>
-      streaming.StreamingPipeline.shardManifestBatch(
-        b, id, "text", "doc_id", s"$root/sm-out", s"$root/sm-store",
-        tokensPerShard = 100000L)
-    }
-    timeFold("token_budget") { (b, id) =>
-      streaming.StreamingPipeline.tokenBudgetIngestBatch(
-        b, id, "text", "doc_id", s"$root/tb-store")
-    }
-    // the read side the fold amortizes: one selection over the full
-    // accumulated index (scored once per doc above, never re-tokenized)
-    locally {
-      System.gc()
-      val t0 = System.nanoTime()
-      val n = streaming.StreamingPipeline.tokenBudgetView(
-        spark.read.parquet(s"$root/tb-store/data"), "doc_id", 0.5).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] ingestops token_budget_view docs=$nDocs " +
-        f"kept=$n sec=$sec%.2f")
-    }
-    spark.stop()
-  }
-
-  /** Token-budget selection arm comparison:
-    * `ScaleProbe budgetselect [nDocs]` — the bucketed prefix sum
-    * (Sampling.tokenBudgetSelect: 101 quality-bucket partial sorts +
-    * one broadcast offset table) vs the textbook global-window form
-    * (SUM OVER (ORDER BY q DESC, id) — which Spark must execute as a
-    * SINGLE-partition window: every row through one task). Both arms
-    * must select the IDENTICAL set; the probe measures what the
-    * global sort costs as the corpus grows. */
-  private def budgetSelectProbe(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.ext.TextAnalysis
-    // hash-deterministic doc lengths 1..100 words → graded quality
-    spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("text",
-        concat(lit("the and of to in is "),
-          expr("repeat('w ', CAST(pmod(hash(doc_id * 31), 100) AS INT) + 1)")))
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_budget")
-    val df = spark.read.parquet("/tmp/graft_scale_budget")
-    (1 to 2).foreach { run =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val nBucketed = graft.ext.Sampling
-        .tokenBudgetSelect(df, "text", "doc_id", 0.25).count()
-      val tBucketed = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      val t1 = System.nanoTime()
-      val scored = df.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("tok_n"),
-        round(TextAnalysis.qualityScore(col("text")) + lit(1e-9), 4)
-          .as("rq"))
-      val budget = scored.agg(
-        floor(lit(0.25) * sum("tok_n")).cast("long").as("b"))
-      val nGlobal = scored
-        .withColumn("cum", sum("tok_n").over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("rq").desc, col("doc_id").asc)
-            .rowsBetween(org.apache.spark.sql.expressions.Window
-              .unboundedPreceding, 0)))
-        .crossJoin(broadcast(budget))
-        .filter(col("cum") <= col("b")).count()
-      val tGlobal = (System.nanoTime() - t1) / 1e9
-      require(nBucketed == nGlobal,
-        s"arms disagree: bucketed=$nBucketed global=$nGlobal")
-      println(f"[scale] budgetselect run$run docs=$nDocs " +
-        f"selected=$nBucketed bucketed_sec=$tBucketed%.2f " +
-        f"global_window_sec=$tGlobal%.2f speedup=${tGlobal / tBucketed}%.2fx")
-      GraftSession.sweepCaches(spark)
-    }
-    // ---- adversarial arm: EVERY doc carries the identical quality, so
-    // the whole corpus is ONE 4-dp tie block (the distribution real
-    // Gopher-style scores approach — quality mass concentrates). The
-    // two-level kernel must range-split it into ≤maxBucketRows tasks;
-    // the pre-r17 per-quality-bucket window would funnel all nDocs rows
-    // through a single sort task here. Verified against the global
-    // window on the same corpus; per-task row bound asserted from the
-    // spill-free sub-bucket count.
-    spark.range(nDocs).select(col("id").as("doc_id"))
-      .withColumn("text", lit("the and of to in is word w w w"))
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_budget_same")
-    val same = spark.read.parquet("/tmp/graft_scale_budget_same")
-    val maxRows = math.max(1L, nDocs / 64)
-    (1 to 2).foreach { run =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val sel = graft.ext.Sampling
-        .tokenBudgetSelect(same, "text", "doc_id", 0.25,
-          maxBucketRows = maxRows)
-      val nSel = sel.count()
-      val tSplit = (System.nanoTime() - t0) / 1e9
-      // uniform tokens + identical quality → the selection is exactly
-      // the first nSel ids in id order — an oracle with no Spark in it
-      val idsOk = sel.agg(max("doc_id")).head().getLong(0) == nSel - 1
-      require(idsOk, "all-same-quality selection must be the id prefix")
-      System.gc()
-      val t1 = System.nanoTime()
-      val nSingle = graft.ext.Sampling
-        .tokenBudgetSelect(same, "text", "doc_id", 0.25,
-          maxBucketRows = Long.MaxValue) // forces the one-task regime
-        .count()
-      val tSingle = (System.nanoTime() - t1) / 1e9
-      require(nSingle == nSel, s"arms disagree: split=$nSel single=$nSingle")
-      println(f"[scale] budgetselect-sameq run$run docs=$nDocs " +
-        f"selected=$nSel max_task_rows=$maxRows split_sec=$tSplit%.2f " +
-        f"single_block_sec=$tSingle%.2f speedup=${tSingle / tSplit}%.2fx")
-      GraftSession.sweepCaches(spark)
-    }
-    // ---- STRING-id adversarial arm (r18): identical corpus shape but
-    // the id is an md5-hex STRING — the realistic corpus key (URLs, hash
-    // ids) that the r17 kernel excluded from the split. The one fat tie
-    // block must now range-split on frozen engine-sorted string
-    // boundaries; exactness is checked set-wise (count + crc32 checksum)
-    // against the single-range arm, which is trivially correct.
-    spark.range(nDocs)
-      .select(md5(col("id").cast("string").cast("binary")).as("doc_id"))
-      .withColumn("text", lit("the and of to in is word w w w"))
-      .repartition(cpus * 2)
-      .write.mode("overwrite").parquet("/tmp/graft_scale_budget_same_str")
-    val sameStr = spark.read.parquet("/tmp/graft_scale_budget_same_str")
-    def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(crc32(col("doc_id").cast("binary"))))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    (1 to 2).foreach { run =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val sel = graft.ext.Sampling
-        .tokenBudgetSelect(sameStr, "text", "doc_id", 0.25,
-          maxBucketRows = maxRows)
-      val (nSel, fpSel) = fingerprint(sel)
-      val tSplit = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      val t1 = System.nanoTime()
-      val (nSingle, fpSingle) = fingerprint(graft.ext.Sampling
-        .tokenBudgetSelect(sameStr, "text", "doc_id", 0.25,
-          maxBucketRows = Long.MaxValue))
-      val tSingle = (System.nanoTime() - t1) / 1e9
-      require(nSingle == nSel && fpSingle == fpSel,
-        s"string arms disagree: split=($nSel,$fpSel) single=($nSingle,$fpSingle)")
-      println(f"[scale] budgetselect-sameq-str run$run docs=$nDocs " +
-        f"selected=$nSel max_task_rows=$maxRows split_sec=$tSplit%.2f " +
-        f"single_block_sec=$tSingle%.2f speedup=${tSingle / tSplit}%.2fx")
-      GraftSession.sweepCaches(spark)
-    }
-    spark.stop()
-  }
-
-  /** Pair-indexed learnLocal merge-loop sweep:
-    * `ScaleProbe bpelocal [vocabSmall] [vocabLarge] [numMerges]` —
-    * vocabularies of hash-deterministic 12-hex-char words (16-symbol
-    * alphabet: deep merge structure) at two sizes, a real tokenizer
-    * merge budget. The pair-indexed loop's claim: per-merge cost is
-    * bounded by the words TOUCHED by the winning pair, not the
-    * vocabulary — so total time grows sublinearly in vocab while the
-    * naive rebuild-the-vocab-each-round form is O(merges × vocab). */
-  private def bpeLocalProbe(args: Array[String]): Unit = {
-    val sizes = Seq(
-      if (args.length > 1) args(1).toLong else 50000L,
-      if (args.length > 2) args(2).toLong else 200000L)
-    val numMerges = if (args.length > 3) args(3).toInt else 2000
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sizes.foreach { v =>
-      val docs = spark.range(v)
-        .select(substring(md5(col("id").cast("string")), 1, 12).as("text"))
-      System.gc()
-      val t0 = System.nanoTime()
-      val (merges, _) = graft.ext.Bpe.learnLocal(docs, "text", numMerges,
-        maxVocab = 4000000)
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] bpelocal vocab=$v merges=${merges.length} " +
-        f"sec=$sec%.2f merges_per_sec=${merges.length / sec}%.0f")
-    }
-    spark.stop()
-  }
-
-  /** BPE induction scale sweep: `ScaleProbe bpe [nDocsSmall] [nDocsLarge]`
-    * — deterministic corpora of 40-word docs drawn hash-deterministically
-    * from a FIXED 500-word vocabulary, at two corpus sizes. Times the
-    * corpus pass (wordCounts) and the full 8-merge learn separately:
-    * Bpe's scale claim is that only the first pass is corpus-sized while
-    * every merge round is vocab-sized, so loop_sec (= learn - wordCounts)
-    * must stay ~flat across the 10× corpus growth while wc_sec scales
-    * with it. */
-  private def bpeProbe(args: Array[String]): Unit = {
-    val nSmall = if (args.length > 1) args(1).toLong else 100000L
-    val nLarge = if (args.length > 2) args(2).toLong else 1000000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq(nSmall, nLarge).foreach { n =>
-      val words = (0 until 40).map(i =>
-        concat(lit("w"), pmod(hash(col("id") * 53 + lit(i)), lit(500))))
-      spark.range(n)
-        .select(col("id").as("doc_id"), concat_ws(" ", words: _*).as("text"))
-        .repartition(cpus * 2)
-        .write.mode("overwrite").parquet("/tmp/graft_scale_bpe")
-      val df = spark.read.parquet("/tmp/graft_scale_bpe")
-      // the two stages are timed DIRECTLY through the learn seam (no
-      // subtraction attribution — a shared-JVM GC pause in one arm would
-      // silently misattribute); gc before each arm per the repo's
-      // long-single-JVM discipline
-      System.gc()
-      var t0 = System.nanoTime()
-      val wc = ext.Bpe.wordCounts(df, "text").localCheckpoint(true)
-      val vocab = wc.count()
-      val wcSec = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      t0 = System.nanoTime()
-      val model = ext.Bpe.learnFromWordCounts(wc, 8)
-      val nMerges = model.mergeList.size
-      val loopSec = (System.nanoTime() - t0) / 1e9
-      model.release()
-      ext.Graph.freeCheckpoint(wc)
-      println(f"[scale] bpe docs=$n vocab=$vocab merges=$nMerges " +
-        f"wc_sec=$wcSec%.2f loop_sec=$loopSec%.2f " +
-        f"docs_per_sec=${n / (wcSec + loopSec)}%.0f")
-    }
-    spark.stop()
-  }
-
-  /** Batched vs per-merge distributed BPE:
-    * `ScaleProbe bpebatch [vocabWords] [numMerges] [batch]` — both arms
-    * run `learn*FromWordCounts` over the SAME checkpointed
-    * hash-deterministic word table (12-hex-char words, 16-symbol
-    * alphabet: deep merge structure, dense pair conflicts — the
-    * batched arm's WORST case for batch utilization), and reports the
-    * merge-for-merge agreement prefix (the cut rule makes
-    * skip-divergence impossible; any divergence would come from pair
-    * CREATION outranking a later batch member — measured 200/200 here)
-    * plus each arm's wall time. The per-merge arm pays (aggregation +
-    * driver argmax + checkpoint) × numMerges; batched pays it ×
-    * rounds. */
-  private def bpeBatchProbe(args: Array[String]): Unit = {
-    val nWords = if (args.length > 1) args(1).toLong else 200000L
-    val numMerges = if (args.length > 2) args(2).toInt else 200
-    val batch = if (args.length > 3) args(3).toInt else 8
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val wc = spark.range(nWords)
-      .select(concat(
-          lpad(hex(pmod(hash(col("id") * 31), lit(16777216))), 6, "0"),
-          lpad(hex(pmod(hash(col("id") * 67 + 13), lit(16777216))), 6, "0"))
-        .as("word"))
-      .groupBy("word")
-      .agg((pmod(hash(col("word")), lit(1000)) + lit(1001)).as("freq"))
-      .localCheckpoint(true)
-    val vocab = wc.count()
-    System.gc()
-    var t0 = System.nanoTime()
-    val strict = ext.Bpe.learnFromWordCounts(wc, numMerges)
-    val strictSec = (System.nanoTime() - t0) / 1e9
-    System.gc()
-    t0 = System.nanoTime()
-    val batched = ext.Bpe.learnBatchedFromWordCounts(wc, numMerges, batch)
-    val batchedSec = (System.nanoTime() - t0) / 1e9
-    // agreement check on the shared prefix (both arms may run dry)
-    val common = math.min(strict.mergeList.size, batched.mergeList.size)
-    val agree = (0 until common).count(i =>
-      strict.mergeList(i) == batched.mergeList(i))
-    println(f"[scale] bpebatch vocab=$vocab merges=$numMerges " +
-      f"batch=$batch strict_sec=$strictSec%.2f " +
-      f"batched_sec=$batchedSec%.2f speedup=${strictSec / batchedSec}%.2fx " +
-      f"agree_prefix=$agree/$common " +
-      f"(batched merges=${batched.mergeList.size})")
-    strict.release(); batched.release(); ext.Graph.freeCheckpoint(wc)
-    spark.stop()
-  }
-
-  /** Batched BPE on NATURAL text:
-    * `ScaleProbe bpebatchtext [sfDir] [numMerges] [batch,batch,...]` —
-    * the r17 1.87× batched-vs-strict floor was measured on a
-    * deliberately conflict-dense 16-symbol alphabet (~1.9 realized
-    * merges/round); this arm measures realized batch UTILIZATION
-    * (merges per distributed round vs the cap) and wall-clock on the
-    * real documents corpus at a production-shaped merge count, plus
-    * merge-for-merge agreement with strict [[graft.ext.Bpe.learn]]. */
-  /** Batched-BPE utilization on a REALISTIC vocabulary (VERDICT r18 #6):
-    * the sf0.1 documents corpus has a 31-word vocabulary, so the
-    * bpebatchtext probe saturates at 1.75 merges/round and runs dry at
-    * 89 merges — "utilization rises with symbol diversity" stayed an
-    * extrapolation. `ScaleProbe bpezipf [nWords] [numMerges] [batches]`
-    * builds a deterministic Zipf-shaped (word, freq) table — ≥100k
-    * distinct words, English-letter-frequency characters, short words
-    * frequent / long words rare (length grows with log rank), freq ∝
-    * 1/rank^1.07 — and measures strict vs batched merges/round,
-    * wall-clock, and merge-table prefix agreement at a production-shaped
-    * merge count. The word table is driver-generated (bounded, probe
-    * only); everything measured is the engine's own distributed loop. */
-  private def bpeZipfProbe(args: Array[String]): Unit = {
-    val nWords = if (args.length > 1) args(1).toInt else 200000
-    val numMerges = if (args.length > 2) args(2).toInt else 1000
-    val batches = (if (args.length > 3) args(3) else "4,8,16")
-      .split(",").map(_.toInt).toSeq
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    // English letter frequencies (per mille, rounded) as a cumulative
-    // lookup — public reference distribution (Lewand's cryptanalysis
-    // tables), enough realism for pair statistics
-    val letterFreq = Seq(
-      'e' -> 127, 't' -> 91, 'a' -> 82, 'o' -> 75, 'i' -> 70, 'n' -> 67,
-      's' -> 63, 'h' -> 61, 'r' -> 60, 'd' -> 43, 'l' -> 40, 'c' -> 28,
-      'u' -> 28, 'm' -> 24, 'w' -> 24, 'f' -> 22, 'g' -> 20, 'y' -> 20,
-      'p' -> 19, 'b' -> 15, 'v' -> 10, 'k' -> 8, 'j' -> 2, 'x' -> 2,
-      'q' -> 1, 'z' -> 1)
-    val cum = letterFreq.scanLeft((' ', 0)) { case ((_, acc), (c, f)) =>
-      (c, acc + f) }.tail
-    val total = cum.last._2
-    def mix64(z0: Long): Long = { // splitmix64 finalizer
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    def letter(rank: Long, pos: Int): Char = {
-      val h = math.floorMod(mix64(rank * 31L + pos), total.toLong).toInt
-      cum.find(_._2 > h).get._1
-    }
-    // natural shape: frequent words short, rare words long
-    def wordOf(rank: Long): String = {
-      val len = math.max(2, math.min(12,
-        (1.5 * math.log(rank.toDouble + 1)).round.toInt))
-      (0 until len).map(letter(rank, _)).mkString
-    }
-    val rows = (1 to nWords).map { r =>
-      val freq = math.max(1L, (5e6 / math.pow(r.toDouble, 1.07)).toLong)
-      (wordOf(r.toLong), freq)
-    }
-    // collisions merge naturally (they mimic real homographs); report
-    // the realized distinct vocabulary, which must stay >= 100k
-    val wc = rows.toDF("word", "freq")
-      .groupBy("word").agg(sum("freq").as("freq"))
-      .repartition(cpus * 2)
-      .localCheckpoint(true)
-    val vocab = wc.count()
-    val chars = wc.select(sum(length(col("word")) * col("freq"))).first.getLong(0)
-    println(f"[scale] bpezipf nWords=$nWords distinct_vocab=$vocab " +
-      f"corpus_chars=$chars merges=$numMerges")
-    System.gc()
-    var t0 = System.nanoTime()
-    val strict = ext.Bpe.learnFromWordCounts(wc, numMerges)
-    val strictSec = (System.nanoTime() - t0) / 1e9
-    println(f"[scale] bpezipf strict_sec=$strictSec%.1f " +
-      f"(realized=${strict.mergeList.size}, " +
-      f"sec_per_merge=${strictSec / math.max(1, strict.mergeList.size)}%.3f)")
-    batches.foreach { batch =>
-      System.gc()
-      val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-      t0 = System.nanoTime()
-      val batched = ext.Bpe.learnBatchedFromWordCounts(wc, numMerges,
-        batch, rounds += _)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val common = math.min(strict.mergeList.size, batched.mergeList.size)
-      val agree = (0 until common).count(i =>
-        strict.mergeList(i) == batched.mergeList(i))
-      val util =
-        if (rounds.isEmpty) 0.0 else rounds.sum.toDouble / rounds.size
-      println(f"[scale] bpezipf batch=$batch sec=$sec%.1f " +
-        f"speedup=${strictSec / sec}%.2fx rounds=${rounds.size} " +
-        f"merges_per_round=$util%.2f (cap=$batch) " +
-        f"agree_prefix=$agree/$common " +
-        f"(realized=${batched.mergeList.size})")
-      batched.release()
-    }
-    strict.release(); ext.Graph.freeCheckpoint(wc)
-    spark.stop()
-  }
-
-  private def bpeBatchTextProbe(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val numMerges = if (args.length > 2) args(2).toInt else 200
-    val batches = (if (args.length > 3) args(3) else "4,8,16")
-      .split(",").map(_.toInt).toSeq
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val wc = ext.Bpe.wordCounts(
-        model.Tables.documents(spark, sfDir), "text")
-      .localCheckpoint(true)
-    val vocab = wc.count()
-    System.gc()
-    var t0 = System.nanoTime()
-    val strict = ext.Bpe.learnFromWordCounts(wc, numMerges)
-    val strictSec = (System.nanoTime() - t0) / 1e9
-    println(f"[scale] bpebatchtext sf=$sfDir vocab=$vocab " +
-      f"merges=$numMerges strict_sec=$strictSec%.2f " +
-      f"(realized=${strict.mergeList.size})")
-    batches.foreach { batch =>
-      System.gc()
-      val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-      t0 = System.nanoTime()
-      val batched = ext.Bpe.learnBatchedFromWordCounts(wc, numMerges,
-        batch, rounds += _)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val common = math.min(strict.mergeList.size, batched.mergeList.size)
-      val agree = (0 until common).count(i =>
-        strict.mergeList(i) == batched.mergeList(i))
-      val util =
-        if (rounds.isEmpty) 0.0 else rounds.sum.toDouble / rounds.size
-      println(f"[scale] bpebatchtext batch=$batch sec=$sec%.2f " +
-        f"speedup=${strictSec / sec}%.2fx rounds=${rounds.size} " +
-        f"merges_per_round=$util%.2f (cap=$batch) " +
-        f"agree_prefix=$agree/$common " +
-        f"(realized=${batched.mergeList.size})")
-      batched.release()
-    }
-    strict.release(); ext.Graph.freeCheckpoint(wc)
-    spark.stop()
-  }
-
-  /** Range-join scale sweep: `ScaleProbe rangejoin [nPoints] [nIntervals]`
-    * — hash-spread points over an axis of span nPoints (density 1/unit)
-    * joined to intervals of length 1..20 (expected matches ≈
-    * 10.5·nIntervals, an exact cross-check between arms). Times the
-    * bucketized equi-join (`RangeJoin.pointInInterval`, width 16) and —
-    * only while |P|·|I| ≤ 2.5e9 probes stays feasible — the naive
-    * BroadcastNestedLoopJoin arm the range-only predicate plans to.
-    * The probe's point: the naive arm grows |P|·|I| while the
-    * bucketized arm grows |P| + buckets(|I|). */
-  private def rangeJoinProbe(args: Array[String]): Unit = {
-    val nPoints = if (args.length > 1) args(1).toLong else 1000000L
-    val nIv = if (args.length > 2) args(2).toLong else 100000L
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val span = nPoints
-    val pts = spark.range(nPoints)
-      .select(pmod(col("id") * 2654435761L, lit(span)).as("t"))
-      .repartition(cpus * 2).persist()
-    val iv = spark.range(nIv)
-      .select(col("id").as("iv_id"),
-        pmod(col("id") * 2246822519L, lit(span)).as("s"))
-      .withColumn("e", col("s") + pmod(col("iv_id"), lit(20)) + 1)
-      .repartition(cpus * 2).persist()
-    val expected = 10.5 * nIv
-    (1 to 3).foreach { i =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val n = operators.RangeJoin
-        .pointInInterval(pts, iv, "t", "s", "e", bucketWidth = 16).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] rangejoin bucketized run$i points=$nPoints " +
-        f"intervals=$nIv pairs=$n (expected~${expected}%.0f) sec=$sec%.2f " +
-        f"pairs_per_sec=${n / sec}%.0f")
-    }
-    if (nPoints * nIv <= 2500000000L) {
-      System.gc()
-      val t0 = System.nanoTime()
-      val n = pts.join(iv, col("t") >= col("s") && col("t") < col("e")).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] rangejoin naive-bnlj points=$nPoints intervals=$nIv " +
-        f"pairs=$n sec=$sec%.2f")
-    } else {
-      println(s"[scale] rangejoin naive-bnlj skipped " +
-        s"(${nPoints}x$nIv probes infeasible)")
-    }
-    pts.unpersist(); iv.unpersist()
     spark.stop()
   }
 }

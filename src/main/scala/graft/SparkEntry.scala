@@ -2679,10 +2679,11 @@ object SparkEntry {
     // X-bpe-batched: the BATCHED distributed learner over the same
     // corpus and budget (batch=4, symbol-disjoint selections under the
     // cut rule — the arm for word tables beyond learnLocal's driver
-    // gate; ScaleProbe bpebatch measured 1.87x fewer round-trip costs
-    // at 200 merges on the conflict-dense worst case). On this corpus
-    // the rounds are creation-dominated, so the table is merge-for-
-    // merge EQUAL to strict BPE and shares the strict oracle unroll —
+    // gate; SCALE.md "Round-17: batched distributed BPE" measured 1.87x
+    // fewer round-trip costs at 200 merges on the conflict-dense worst
+    // case). On this corpus the rounds are creation-dominated, so the
+    // table is merge-for-merge EQUAL to strict BPE and shares the strict
+    // oracle unroll —
     // a divergence (skip-jump is impossible by the cut rule; only a
     // created pair outranking a batch member could) fails the hash
     // gate loudly instead of passing silently.

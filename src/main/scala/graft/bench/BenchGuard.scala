@@ -110,75 +110,83 @@ object BenchGuard {
   }
 
   /** Parse a prior artifact's fresh-JVM probe medians (`probe_medians`
-    * object), under the same comparability gate as [[parsePrior]].
-    * Non-positive values (the -1 probe-failed sentinel) are skipped —
-    * a failed prior probe must not anchor the rate guard at -1. */
+    * object), under the same comparability gate as [[parsePrior]] plus
+    * the probe-time load gate ([[probeLoadOk]]). Non-positive values
+    * (the -1 probe-failed sentinel) are skipped — a failed prior probe
+    * must not anchor the rate guard at -1. */
   def parsePriorProbeMedians(txt: String, sfDir: String,
-                             parallelism: Int): Map[String, Double] = {
-    val root = parseRoot(txt).orNull
-    if (root == null) return Map.empty
-    if (!priorComparable(root, sfDir, parallelism)) return Map.empty
-    val node = root.get("probe_medians")
-    if (node == null) Map.empty
-    else {
-      val b = Map.newBuilder[String, Double]
-      node.fields().forEachRemaining { e =>
-        if (e.getValue.isNumber && e.getValue.asDouble() > 0)
-          b += e.getKey -> e.getValue.asDouble()
-      }
-      b.result()
-    }
-  }
+                             parallelism: Int): Map[String, Double] =
+    parseRoot(txt)
+      .filter(r => priorComparable(r, sfDir, parallelism) && probeLoadOk(r))
+      .map(validProbeMedians(_).toMap).getOrElse(Map.empty)
 
-  /** Per-key MEDIAN of the last `k` comparable entries of
-    * bench_probe_history.jsonl (one JSON object per line:
-    * {"sf", "methodology", "env_ok", "parallelism",
-    * "probe_medians": {...}}), the
+  /** Per-key MEDIAN of each key's last `k` valid values among the
+    * comparable entries of bench_probe_history.jsonl (one JSON object
+    * per line: {"sf", "methodology", "env_ok", "load_avg_at_probes",
+    * "parallelism", "probe_medians": {...}}), the
     * rate-guard anchor of VERDICT r20 #5 / r21 #10: a single noisy-but-
     * env_ok session used to BECOME the whole anchor (its artifact was
     * the prior), so one bad session could silently re-baseline the
     * chain/stream guard for a round. Anchoring on the history median
     * means one outlier among the last `k` comparable sessions cannot
     * move the anchor (BenchGuardSpec pins it). Returns empty until at
-    * least `minEntries` comparable sessions exist for a key — below
+    * least `minEntries` valid values exist for a key — below
     * that a median is just the outlier problem again — letting the
     * caller fall back to the prior artifact's own medians. Lines that
     * fail to parse, fail the [[parsePrior]] comparability gate (sf /
-    * methodology / env_ok / parallelism), or carry non-positive sentinel values are
-    * skipped. FAIL-SOFT like the prior file: history is an anchor, not
-    * a gate. */
+    * methodology / env_ok / parallelism) or the probe-time load gate
+    * are skipped; a non-positive sentinel value is skipped for its key
+    * only, so a run whose probe failed for one key takes none of that
+    * key's `k` slots. FAIL-SOFT like the prior file: history is an
+    * anchor, not a gate. */
   def probeHistoryAnchors(txt: String, sfDir: String, parallelism: Int,
                           k: Int = 5,
-                          minEntries: Int = 3): Map[String, Double] = {
-    val comparable = txt.linesIterator.flatMap(parseRoot(_))
-      .filter(priorComparable(_, sfDir, parallelism)).toSeq.takeRight(k)
-    val values = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
-    comparable.foreach { root =>
-      val node = root.get("probe_medians")
-      if (node != null) node.fields().forEachRemaining { e =>
-        if (e.getValue.isNumber && e.getValue.asDouble() > 0)
-          values.getOrElseUpdate(e.getKey,
-            scala.collection.mutable.ArrayBuffer.empty) +=
-            e.getValue.asDouble()
+                          minEntries: Int = 3): Map[String, Double] =
+    txt.linesIterator.flatMap(parseRoot(_))
+      .filter(r => priorComparable(r, sfDir, parallelism) && probeLoadOk(r))
+      .flatMap(validProbeMedians).toSeq
+      .groupMap(_._1)(_._2)
+      .map { case (key, all) => key -> all.takeRight(k) }
+      .collect { case (key, vs) if vs.size >= minEntries =>
+        val s = vs.sorted
+        val mid = s.size / 2
+        key -> (if (s.size % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0)
       }
-    }
-    values.collect { case (key, vs) if vs.size >= minEntries =>
-      val s = vs.sorted
-      val mid = s.size / 2
-      key -> (if (s.size % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0)
-    }.toMap
-  }
 
   /** One bench_probe_history.jsonl line for THIS run — carries exactly
-    * the fields [[probeHistoryAnchors]]' comparability gate reads.
+    * the fields [[probeHistoryAnchors]]' gates read. `loadAtProbes` is
+    * the load average when the probes ran (end of suite), not at start.
     * Sentinel (-1) medians are recorded as-is; the parser skips them. */
-  def probeHistoryLine(sfDir: String, envOk: Boolean, parallelism: Int,
+  def probeHistoryLine(sfDir: String, envOk: Boolean, loadAtProbes: Double,
+                       parallelism: Int,
                        medians: Seq[(String, Double)]): String = {
     val ms = medians.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     s"""{"sf":"$sfDir","methodology":"$Methodology","env_ok":$envOk,""" +
+      s""""load_avg_at_probes":$loadAtProbes,""" +
       s""""parallelism":$parallelism,"probe_medians":$ms}"""
+  }
+
+  /** Probe medians are timed at the END of the suite, where load can sit
+    * far above the start-of-run reading `env_ok` gates: a history line or
+    * artifact whose recorded `load_avg_at_probes` exceeds
+    * [[LoadAvgStartMax]] is not comparable. A record without the field
+    * passes (the same legacy rule as an absent `env_ok`). */
+  private def probeLoadOk(root: com.fasterxml.jackson.databind.JsonNode)
+      : Boolean =
+    Option(root.get("load_avg_at_probes"))
+      .forall(n => !n.isNumber || n.asDouble() <= LoadAvgStartMax)
+
+  /** The positive entries of a record's `probe_medians`, in file order. */
+  private def validProbeMedians(root: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[(String, Double)] = {
+    val b = Seq.newBuilder[(String, Double)]
+    Option(root.get("probe_medians")).foreach(_.fields().forEachRemaining {
+      e =>
+        if (e.getValue.isNumber && e.getValue.asDouble() > 0)
+          b += e.getKey -> e.getValue.asDouble()
+    })
+    b.result()
   }
 
   /** The prior file is FAIL-SOFT, unlike the envelope file: a corrupt

@@ -103,8 +103,9 @@ object Bpe {
 
   /** The merge loop alone, over an already-computed (word, freq) table —
     * everything below here is vocabulary-sized, independent of the
-    * corpus bytes behind `wc` (ScaleProbe bpe measures the two stages
-    * through this seam). */
+    * corpus bytes behind `wc` (SCALE.md "BPE induction: corpus pass vs
+    * vocab-sized merge rounds" measures the two stages through this
+    * seam). */
   def learnFromWordCounts(wc: DataFrame, numMerges: Int): BpeModel = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = wc.sparkSession
@@ -182,14 +183,9 @@ object Bpe {
     learnBatchedFromWordCounts(wordCounts(docs, textCol), numMerges, batch)
 
   /** The batched merge loop over an already-computed (word, freq)
-    * table — the [[learnFromWordCounts]] seam, batched. `onRound` is
-    * called once per distributed round with the number of merges that
-    * round realized (ScaleProbe uses it to measure batch UTILIZATION —
-    * realized merges/round vs the batch cap — without touching the
-    * model type); the default is a no-op. */
+    * table — the [[learnFromWordCounts]] seam, batched. */
   def learnBatchedFromWordCounts(wc: DataFrame, numMerges: Int,
-                                 batch: Int,
-                                 onRound: Int => Unit = _ => ()): BpeModel = {
+                                 batch: Int): BpeModel = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(batch >= 1 && batch <= 64,
       s"batch must be in [1, 64] (nested fold depth per round), got $batch")
@@ -235,7 +231,6 @@ object Bpe {
           } else cutAt = true
         }
         val batchSel = sel.result()
-        onRound(batchSel.size)
         batchSel.foreach { case (l, rr, c) =>
           merges += ((r, l, rr, c)); r += 1
         }
@@ -323,11 +318,12 @@ object Bpe {
   def learnAuto(docs: DataFrame, textCol: String, numMerges: Int,
                 maxVocab: Int = 2000000,
                 // batch=8 is MEASURED, not guessed: on a 200k-word
-                // Zipf vocabulary at 1000 merges (ScaleProbe bpezipf,
-                // SCALE.md r19) realized utilization saturates at
-                // ~3.9 merges/round by batch 8 (4.19x wall-clock vs
-                // strict, merge table byte-identical); batch 16 buys
-                // nothing further (3.94/round, 4.05x)
+                // Zipf vocabulary at 1000 merges (SCALE.md "Round-19:
+                // batched BPE on a REALISTIC vocabulary") realized
+                // utilization saturates at ~3.9 merges/round by batch 8
+                // (4.19x wall-clock vs strict, merge table
+                // byte-identical); batch 16 buys nothing further
+                // (3.94/round, 4.05x)
                 batch: Int = 8): Seq[(Int, String, String, Long)] = {
     val wc = wordCounts(docs, textCol).localCheckpoint(true)
     try {

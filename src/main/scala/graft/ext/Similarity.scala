@@ -377,8 +377,8 @@ object Similarity {
     * — set rowsPerBand ≈ log₂(n) (and numPlanes = bands·rowsPerBand) so
     * per-bucket occupancy stays O(1) and candidates ≈ bands·n. At small
     * n the binding constraint is recall instead: more, shorter bands
-    * (e.g. 8×4 at a few hundred vectors). `ScaleProbe profiles` measures
-    * the crossover vs the exact all-pairs arm under this rule. */
+    * (e.g. 8×4 at a few hundred vectors). SCALE.md "Profile-similarity
+    * crossover" measures it vs the exact all-pairs arm under this rule. */
   def srpTopK(vectors: DataFrame, k: Int,
               numPlanes: Int = 16, rowsPerBand: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding",

@@ -269,7 +269,8 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(BenchGuard.probeHistoryAnchors(aged, sf, Par)("chain_rows_per_sec")
       === 130000.0, "window is the last k entries")
     // round-trip: the writer's line parses back under the same gate
-    val rt = BenchGuard.probeHistoryLine(sf, envOk = true, Par,
+    val rt = BenchGuard.probeHistoryLine(sf, envOk = true,
+      loadAtProbes = 1.0, Par,
       Seq("chain_rows_per_sec" -> 129000.0))
     assert(BenchGuard.probeHistoryAnchors(
       Seq(rt, rt, rt).mkString("\n"), sf, Par)("chain_rows_per_sec")
@@ -290,15 +291,63 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(BenchGuard.parsePrior(artifact(None), sf, 8).isEmpty)
     assert(BenchGuard.parsePriorProbeMedians(artifact(Some(8)), sf, 32)
       .isEmpty)
-    val line8 = BenchGuard.probeHistoryLine(sf, envOk = true, 8,
+    val line8 = BenchGuard.probeHistoryLine(sf, envOk = true,
+      loadAtProbes = 1.0, 8,
       Seq("chain_rows_per_sec" -> 100.0))
-    val line32 = BenchGuard.probeHistoryLine(sf, envOk = true, 32,
+    val line32 = BenchGuard.probeHistoryLine(sf, envOk = true,
+      loadAtProbes = 1.0, 32,
       Seq("chain_rows_per_sec" -> 400.0))
     val hist = (Seq.fill(3)(line8) ++ Seq.fill(2)(line32)).mkString("\n")
     assert(BenchGuard.probeHistoryAnchors(hist, sf, 8) ===
       Map("chain_rows_per_sec" -> 100.0))
     assert(BenchGuard.probeHistoryAnchors(hist, sf, 32).isEmpty,
       "two comparable lines are below minEntries")
+  }
+
+  test("probe-time load gate: a history line recorded at probe-time load " +
+    "10.39 never anchors, even with env_ok:true") {
+    val sf = "/d"
+    def line(load: Double, chain: Double) =
+      BenchGuard.probeHistoryLine(sf, envOk = true, loadAtProbes = load, Par,
+        Seq("chain_rows_per_sec" -> chain))
+    assert(line(10.39, 1.0).contains("\"load_avg_at_probes\":10.39"))
+    val loaded = Seq.fill(5)(line(10.39, 29183.0)).mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(loaded, sf, Par).isEmpty)
+    // loaded lines take no slot: the quiet sessions alone anchor
+    val mixed = (Seq(line(2.0, 120000.0), line(3.0, 118000.0),
+      line(4.0, 122000.0)) ++ Seq.fill(3)(line(10.39, 29183.0)))
+      .mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(mixed, sf, Par) ===
+      Map("chain_rows_per_sec" -> 120000.0))
+    // the artifact fallback applies the same gate to its probe medians
+    def artifact(load: Double) =
+      s"""{"methodology":"${BenchGuard.Methodology}","sf":"$sf",""" +
+        s""""env_ok":true,"env":{"parallelism":$Par},""" +
+        s""""load_avg_at_probes":$load,""" +
+        s""""probe_medians":{"chain_rows_per_sec":9.0}}"""
+    assert(BenchGuard.parsePriorProbeMedians(artifact(10.39), sf, Par)
+      .isEmpty)
+    assert(BenchGuard.parsePriorProbeMedians(artifact(4.38), sf, Par) ===
+      Map("chain_rows_per_sec" -> 9.0))
+  }
+
+  test("anchor window counts valid values per key: recent sentinel lines " +
+    "for one key do not push its older valid values out") {
+    val sf = "/d"
+    def line(chain: Double, stream: Double) =
+      BenchGuard.probeHistoryLine(sf, envOk = true, loadAtProbes = 1.0, Par,
+        Seq("chain_rows_per_sec" -> chain,
+          "stream_events_per_sec" -> stream))
+    // three valid sessions, then three whose stream probe failed (-1)
+    val hist = (Seq(line(100.0, 30000.0), line(110.0, 32000.0),
+      line(120.0, 34000.0)) ++ Seq.fill(3)(line(130.0, -1.0)))
+      .mkString("\n")
+    val a = BenchGuard.probeHistoryAnchors(hist, sf, Par, k = 5)
+    // a whole-line window (the last 5 lines) would hold only two valid
+    // stream values, below minEntries, and drop the stream anchor
+    assert(a("stream_events_per_sec") === 32000.0, s"anchors: $a")
+    // chain: its last 5 valid values are 110, 120, 130, 130, 130
+    assert(a("chain_rows_per_sec") === 130.0, s"anchors: $a")
   }
 
   // ---- env bounds ----------------------------------------------------
