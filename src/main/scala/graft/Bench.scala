@@ -432,8 +432,8 @@ object Bench {
     // calibrated on quiet-machine ±15% spread — a reader adjudicating a
     // probe flag needs the like-for-like context. env_ok (BenchGuard.envOk)
     // gates load at START and heap; this reading travels on the probe-
-    // history line, where a loaded probe phase keeps it out of the anchor
-    // pool (BenchGuard.probeHistoryAnchors).
+    // history line, where only a load beyond the run's own local[N] keeps
+    // it out of the anchor pool (BenchGuard.probeHistoryAnchors).
     val loadAtProbes = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val probeMedians: Seq[(String, Double)] =
@@ -453,8 +453,8 @@ object Bench {
     // append this run's medians to the history so FUTURE runs anchor on
     // a median of sessions (append-only; a sentinel-only run is skipped
     // — the parser would drop its values anyway). env_ok and the
-    // probe-time load travel on the line so an out-of-bounds session never
-    // joins the anchor pool.
+    // probe-time load travel on the line so an out-of-bounds or
+    // oversubscribed session never joins the anchor pool.
     if (probeMedians.exists(_._2 > 0)) {
       val envOkNow = graft.bench.BenchGuard.envOk(loadAtStart,
         Runtime.getRuntime.maxMemory() / (1024 * 1024))

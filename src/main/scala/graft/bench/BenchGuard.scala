@@ -117,7 +117,8 @@ object BenchGuard {
   def parsePriorProbeMedians(txt: String, sfDir: String,
                              parallelism: Int): Map[String, Double] =
     parseRoot(txt)
-      .filter(r => priorComparable(r, sfDir, parallelism) && probeLoadOk(r))
+      .filter(r => priorComparable(r, sfDir, parallelism) &&
+        probeLoadOk(r, parallelism))
       .map(validProbeMedians(_).toMap).getOrElse(Map.empty)
 
   /** Per-key MEDIAN of each key's last `k` valid values among the
@@ -137,14 +138,18 @@ object BenchGuard {
     * methodology / env_ok / parallelism) or the probe-time load gate
     * are skipped; a non-positive sentinel value is skipped for its key
     * only, so a run whose probe failed for one key takes none of that
-    * key's `k` slots. FAIL-SOFT like the prior file: history is an
-    * anchor, not a gate. */
+    * key's `k` slots. Values are drawn only from the last `2 * k`
+    * comparable lines, so a key whose probe keeps failing ages out
+    * instead of anchoring on arbitrarily old sessions. FAIL-SOFT like
+    * the prior file: history is an anchor, not a gate. */
   def probeHistoryAnchors(txt: String, sfDir: String, parallelism: Int,
                           k: Int = 5,
                           minEntries: Int = 3): Map[String, Double] =
     txt.linesIterator.flatMap(parseRoot(_))
-      .filter(r => priorComparable(r, sfDir, parallelism) && probeLoadOk(r))
-      .flatMap(validProbeMedians).toSeq
+      .filter(r => priorComparable(r, sfDir, parallelism) &&
+        probeLoadOk(r, parallelism))
+      .toSeq.takeRight(2 * k)
+      .flatMap(validProbeMedians)
       .groupMap(_._1)(_._2)
       .map { case (key, all) => key -> all.takeRight(k) }
       .collect { case (key, vs) if vs.size >= minEntries =>
@@ -167,15 +172,19 @@ object BenchGuard {
       s""""parallelism":$parallelism,"probe_medians":$ms}"""
   }
 
-  /** Probe medians are timed at the END of the suite, where load can sit
-    * far above the start-of-run reading `env_ok` gates: a history line or
-    * artifact whose recorded `load_avg_at_probes` exceeds
-    * [[LoadAvgStartMax]] is not comparable. A record without the field
-    * passes (the same legacy rule as an absent `env_ok`). */
-  private def probeLoadOk(root: com.fasterxml.jackson.databind.JsonNode)
-      : Boolean =
+  /** Probe medians are timed at the END of the suite, so the 1-minute
+    * `load_avg_at_probes` is mostly the bench's own `local[N]` work and
+    * cannot be held to the start-of-run [[LoadAvgStartMax]]: the
+    * committed 32-core artifacts read 16.8 (r21, the best probe medians
+    * on record) and 11.8 (r22). A record is not comparable only when its
+    * probe-time load exceeds its own `parallelism` — more runnable work
+    * than the run's N slots can field, i.e. another tenant on the host.
+    * Every recorded probe-time reading is below 0.53 N. A record without
+    * the field passes (the same legacy rule as an absent `env_ok`). */
+  private def probeLoadOk(root: com.fasterxml.jackson.databind.JsonNode,
+                          parallelism: Int): Boolean =
     Option(root.get("load_avg_at_probes"))
-      .forall(n => !n.isNumber || n.asDouble() <= LoadAvgStartMax)
+      .forall(n => !n.isNumber || n.asDouble() <= parallelism)
 
   /** The positive entries of a record's `probe_medians`, in file order. */
   private def validProbeMedians(root: com.fasterxml.jackson.databind.JsonNode)

@@ -304,35 +304,43 @@ class BenchGuardSpec extends AnyFunSuite {
       "two comparable lines are below minEntries")
   }
 
-  test("probe-time load gate: a history line recorded at probe-time load " +
-    "10.39 never anchors, even with env_ok:true") {
+  test("probe-time load gate: only a load beyond the run's own local[N] " +
+    "keeps a line out; the recorded 32-core readings still anchor") {
     val sf = "/d"
-    def line(load: Double, chain: Double) =
-      BenchGuard.probeHistoryLine(sf, envOk = true, loadAtProbes = load, Par,
+    def line(load: Double, par: Int, chain: Double) =
+      BenchGuard.probeHistoryLine(sf, envOk = true, loadAtProbes = load, par,
         Seq("chain_rows_per_sec" -> chain))
-    assert(line(10.39, 1.0).contains("\"load_avg_at_probes\":10.39"))
-    val loaded = Seq.fill(5)(line(10.39, 29183.0)).mkString("\n")
-    assert(BenchGuard.probeHistoryAnchors(loaded, sf, Par).isEmpty)
-    // loaded lines take no slot: the quiet sessions alone anchor
-    val mixed = (Seq(line(2.0, 120000.0), line(3.0, 118000.0),
-      line(4.0, 122000.0)) ++ Seq.fill(3)(line(10.39, 29183.0)))
+    assert(line(16.8, 32, 1.0).contains("\"load_avg_at_probes\":16.8"))
+    // shaped like the committed r21 (16.8) / r22 (11.8) / first history
+    // line (10.39) at local[32]: the suite's own load, not contention
+    val r21 = Seq(line(16.8, 32, 131409.0), line(11.8, 32, 115156.0),
+      line(10.39, 32, 120360.0)).mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(r21, sf, 32) ===
+      Map("chain_rows_per_sec" -> 120360.0))
+    // the same 10.39 at local[8] is more runnable work than the run's
+    // eight slots: never anchors
+    val loaded = Seq.fill(5)(line(10.39, 8, 29183.0)).mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(loaded, sf, 8).isEmpty)
+    // loaded lines take no slot: the sessions within N alone anchor
+    val mixed = (Seq(line(2.0, 8, 120000.0), line(3.0, 8, 118000.0),
+      line(8.0, 8, 122000.0)) ++ Seq.fill(3)(line(10.39, 8, 29183.0)))
       .mkString("\n")
-    assert(BenchGuard.probeHistoryAnchors(mixed, sf, Par) ===
+    assert(BenchGuard.probeHistoryAnchors(mixed, sf, 8) ===
       Map("chain_rows_per_sec" -> 120000.0))
     // the artifact fallback applies the same gate to its probe medians
-    def artifact(load: Double) =
+    def artifact(load: Double, par: Int) =
       s"""{"methodology":"${BenchGuard.Methodology}","sf":"$sf",""" +
-        s""""env_ok":true,"env":{"parallelism":$Par},""" +
+        s""""env_ok":true,"env":{"parallelism":$par},""" +
         s""""load_avg_at_probes":$load,""" +
         s""""probe_medians":{"chain_rows_per_sec":9.0}}"""
-    assert(BenchGuard.parsePriorProbeMedians(artifact(10.39), sf, Par)
+    assert(BenchGuard.parsePriorProbeMedians(artifact(10.39, 8), sf, 8)
       .isEmpty)
-    assert(BenchGuard.parsePriorProbeMedians(artifact(4.38), sf, Par) ===
+    assert(BenchGuard.parsePriorProbeMedians(artifact(16.8, 32), sf, 32) ===
       Map("chain_rows_per_sec" -> 9.0))
   }
 
-  test("anchor window counts valid values per key: recent sentinel lines " +
-    "for one key do not push its older valid values out") {
+  test("anchor window counts valid values per key within the last 2k " +
+    "lines: recent sentinels push none out, stale values age out") {
     val sf = "/d"
     def line(chain: Double, stream: Double) =
       BenchGuard.probeHistoryLine(sf, envOk = true, loadAtProbes = 1.0, Par,
@@ -348,6 +356,20 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(a("stream_events_per_sec") === 32000.0, s"anchors: $a")
     // chain: its last 5 valid values are 110, 120, 130, 130, 130
     assert(a("chain_rows_per_sec") === 130.0, s"anchors: $a")
+    // the valid values come only from the last 2k comparable lines: an
+    // old fast stream regime followed by 2k lines of failed stream probes
+    // ages out instead of anchoring forever
+    val stale = (Seq.fill(3)(line(100.0, 90000.0)) ++
+      Seq.fill(10)(line(100.0, -1.0))).mkString("\n")
+    val st = BenchGuard.probeHistoryAnchors(stale, sf, Par, k = 5)
+    assert(!st.contains("stream_events_per_sec"), s"anchors: $st")
+    assert(st("chain_rows_per_sec") === 100.0, s"anchors: $st")
+    // after seven failed lines the three old values still sit inside
+    // the 2k window
+    val recent = (Seq.fill(3)(line(100.0, 90000.0)) ++
+      Seq.fill(7)(line(100.0, -1.0))).mkString("\n")
+    assert(BenchGuard.probeHistoryAnchors(recent, sf, Par, k = 5)(
+      "stream_events_per_sec") === 90000.0)
   }
 
   // ---- env bounds ----------------------------------------------------
