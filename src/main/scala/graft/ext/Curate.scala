@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *   keep-best-per-cluster → token chunking → per-shard sequence packing
   *
   * Every stage is the already-oracle-verified operator; this composition
-  * adds stage counts (via one `observe` per stage boundary pattern — here
-  * simple counts, since the output is materialized once at the end).
+  * adds the stage counts, read off the actions that materialize the
+  * pinned stages (see [[run]]).
   *
   * Shape at 100 TB: stages 1-3 are narrow or single-shuffle; the near-dup
   * stage is the LSH path (linear candidates); chunk/pack shuffles carry
@@ -20,51 +20,93 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
-  final case class Result(chunks: DataFrame, stats: Seq[(String, Long)])
+  /** The packed chunk table and the per-stage counts of [[run]].
+    * `chunks` comes back persisted: write or otherwise consume it, then
+    * call `release()`; after that it must not be read again. */
+  final case class Result(chunks: DataFrame, stats: Seq[(String, Long)]) {
+    /** Drop the cache backing `chunks` — call once it is published. */
+    def release(): Unit = { chunks.unpersist(); () }
+  }
 
+  /** Batch curation of a whole corpus: quality + language gate → exact
+    * dedup → MinHash LSH near-dup clusters → keep the best doc per
+    * cluster → token chunks packed into per-source bins.
+    *
+    * One materialization yields both the stage counts and the frame the
+    * caller writes (the [[incrementTail]] discipline; the reference's
+    * count-per-stage anti-pattern, bronze_to_silver.py:190-219, pays a
+    * full job per number):
+    *  - the input and gate counts are `observe` metrics on the exact-
+    *    dedup count, the one action over the input scan;
+    *  - `exact`, the keep-best survivors and the packed chunks are each
+    *    pinned and counted once, so every later stage (and the caller's
+    *    write) reads the stage below from memory instead of re-running
+    *    the gate, the dedup, tokenizing and packing from the scan;
+    *  - the near-dup stage's own pins (shingles, LSH buckets) and the
+    *    intermediate pins are dropped before this returns.
+    *
+    * The returned `chunks` is a catalog `persist`, not a lineage cut, so
+    * its plan still shows every operator that built it, the pack Window
+    * included. It stays pinned until the caller calls `Result.release()`. */
   def run(spark: SparkSession, docs: DataFrame,
           minQuality: Double = 0.35, lang: String = "en",
           jaccardThreshold: Double = 0.3,
           chunkSize: Int = 64, stride: Int = 64,
           binTokens: Int = 512): Result = {
-    val total = docs.count()
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val obsIn = Observation(); val obsKept = Observation()
 
-    // 1-2: quality + language gate (narrow projection).
-    val kept = docs.filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
+    // 1-2: quality + language gate (narrow projection), observed on
+    // both sides.
+    def gate(df: DataFrame): DataFrame =
+      df.filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
         col("lang") === lang)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nKept = kept.count()
+    val kept = gate(docs.observe(obsIn, nExpr))
 
-    // 3: exact dedup (one shuffle on the content fingerprint).
-    val exact = Dedup.exactDedup(kept, "text", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // 3: exact dedup (one shuffle on the content fingerprint); its count
+    // is the one action over the input and fills both observations.
+    val exact = Dedup.exactDedup(kept.observe(obsKept, nExpr), "text", "doc_id")
+      .persist(level)
     val nExact = exact.count()
+    val total = metric(obsIn, docs.count())
+    val nKept = metric(obsKept, gate(docs).count())
 
     // 4-5: near-dup clusters via MinHash LSH, keep the best doc per
     // cluster (quality desc, id asc); singletons keep themselves.
     val pairs = Dedup.minhashNearDups(exact, "text", "doc_id",
       threshold = jaccardThreshold)
     val comp = Graph.componentsWithSize(pairs, "id_a", "id_b")
+    // both CC arms are eager and cut lineage, so the pairs are never
+    // read again: drop minhashNearDups' shingle and bucket pins now
+    Graph.uncacheUnder(pairs, exact)
     val scored = comp.join(
       exact.select(col("doc_id").as("id"),
         TextAnalysis.qualityScore(col("text")).as("q")), Seq("id"))
     val w = Window.partitionBy("cluster_id").orderBy(col("q").desc, col("id").asc)
     val losers = scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") > 1).select(col("id").as("doc_id"))
-    val unique = exact.join(losers, Seq("doc_id"), "left_anti")
+    val unique = exact.join(losers, Seq("doc_id"), "left_anti").persist(level)
     val nUnique = unique.count()
 
-    // 6-7: chunk + pack per source shard.
-    val chunks = TextAnalysis.tokenChunks(unique, "text", "doc_id", chunkSize, stride)
-      .join(unique.select(col("doc_id").as("id"), col("source")), Seq("id"))
+    // 6-7: chunk + pack per source shard. The source rides the chunk id
+    // as a struct instead of joining back: a broadcast join here would
+    // keep its hash relation alive in the pinned table's lineage.
+    val chunks = TextAnalysis.tokenChunks(
+        unique.withColumn("_key", struct(col("doc_id"), col("source"))),
+        "text", "_key", chunkSize, stride)
+      .select(col("id.doc_id").as("id"), col("chunk_idx"), col("n_tok"),
+        col("chunk_hash"), col("id.source").as("source"))
     val wPack = Window.partitionBy("source")
       .orderBy(col("id").asc, col("chunk_idx").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val packed = chunks.withColumn("bin",
       floor((sum(col("n_tok")).over(wPack) - 1) / binTokens))
+      .persist(level)
     val nChunks = packed.count()
 
-    kept.unpersist(); exact.unpersist()
+    // packed is materialized: the stages below it, and the distributed
+    // CC arm's checkpointed labels, are never read again
+    exact.unpersist(); unique.unpersist(); Graph.freeCheckpoint(comp)
     Result(packed, Seq(
       "input_docs" -> total,
       "quality_lang_kept" -> nKept,

@@ -38,6 +38,28 @@ object Graph {
         case _ => ()
       }
 
+  /** Uncaches every catalog-cached frame `df`'s plan reads (each
+    * `InMemoryRelation` under its `withCachedData`) except those backing
+    * `keep`. It goes through the `CacheManager`, so the cache entry and
+    * the physical plan it holds go too, not just the blocks — an
+    * operator's internal pins (a `persist` the caller never sees) can be
+    * released once the consumer of `df` has fully materialized it. Only
+    * call when `df` will never be read again. */
+  private[graft] def uncacheUnder(df: DataFrame, keep: DataFrame*): Unit = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val cm = ds.sparkSession.sharedState.cacheManager
+    val kept = keep.flatMap(k => cm.lookupCachedData(
+        k.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+      .map(_.cachedRepresentation.cacheBuilder)
+    ds.queryExecution.withCachedData.foreach {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if !kept.exists(_ eq r.cacheBuilder) =>
+        cm.uncacheQuery(ds.sparkSession, r.cacheBuilder.logicalPlan,
+          cascade = false)
+      case _ => ()
+    }
+  }
+
   /** The (id, cluster_id) assignment [[connectedComponents]] and
     * [[incrementalConnectedComponents]] return: both columns are the
     * edge endpoints cast to long. */

@@ -13,7 +13,13 @@ import org.apache.spark.sql.DataFrame
   *    document body for nothing.
   *
   * So: repartition only when the input is genuinely under-partitioned.
-  * Partition count is read from the physical plan (no job is triggered).
+  * The partition count is read off `queryExecution.toRdd`. Over a scan
+  * or an already-materialized persisted frame that starts no job. Over
+  * an adaptive plan with exchanges it does: AQE builds the final RDD
+  * only after running every upstream shuffle stage, so those stages run
+  * once here and again in the consumer's action — as jobs without a SQL
+  * execution id, which no SQL listener sees. Pin and materialize such an
+  * input before fanning it out.
   */
 object Par {
   def fanOut(df: DataFrame, target: Int): DataFrame =

@@ -33,6 +33,143 @@ class CurateSpec extends SparkTestBase {
       .filter(col("prev_bin").isNotNull && col("bin") < col("prev_bin"))
       .count()
     assert(viol === 0)
+    res.release()
+  }
+
+  /** Node names of `df`'s executed plan as the SQL listeners see it:
+    * SparkPlanInfo descends into each cached relation's own plan. */
+  private def planInfoNames(p: org.apache.spark.sql.execution.SparkPlanInfo)
+      : Set[String] =
+    p.children.flatMap(planInfoNames).toSet + p.nodeName
+
+  private def cacheIsEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty &&
+      spark.sparkContext.getPersistentRDDs.isEmpty
+
+  test("Curate.run materializes once: stats match a count per stage, the " +
+    "write reads the pinned chunks, release() empties every cache") {
+    import graft.ext.{Dedup, Graph}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    import org.apache.spark.sql.expressions.Window
+    GraftSession.sweepCaches(spark)
+    val docs = model.Tables.documents(spark, "/root/testdata/sf0.001")
+    val res = Curate.run(spark, docs)
+
+    // the write reads the pinned table: no tokenize explode above the
+    // cache boundary (the InMemoryRelation block prints the plan that
+    // built the cache — cut the string there, as in incrementalFull)
+    val plan = res.chunks.queryExecution.executedPlan.toString
+    val cacheAt = plan.indexOf("InMemoryRelation")
+    assert(cacheAt >= 0, plan)
+    val outer = plan.substring(0, cacheAt)
+    assert(outer.contains("InMemoryTableScan"), plan)
+    assert(!outer.contains("Generate"), outer)
+
+    // ...and its plan info, nested cached plans included, still shows the
+    // pack/keep-best windows and the aggregates beneath them
+    val tag = s"curate-write-${System.nanoTime}"
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.description == tag =>
+          execs.add(s.executionId)
+          planInfoNames(s.sparkPlanInfo).foreach(seen.add)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate
+            if execs.contains(u.executionId) =>
+          planInfoNames(u.sparkPlanInfo).foreach(seen.add)
+        case _ =>
+      }
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-curate")
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobDescription(tag)
+      res.chunks.write.mode("overwrite").parquet(s"$out/chunks")
+      sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 15000
+      while (System.currentTimeMillis() < deadline &&
+          !(seen.contains("Window") && seen.contains("HashAggregate")))
+        Thread.sleep(100)
+    } finally sc.removeSparkListener(l)
+    assert(seen.contains("Window") && seen.contains("HashAggregate"), seen)
+    val written = spark.read.parquet(s"$out/chunks")
+    assert(written.count() === res.stats.toMap.apply("chunks"))
+
+    res.release()
+    assert(cacheIsEmpty, "release() must leave no cache entry or pinned RDD")
+
+    // the old formulation: one count() per stage over unpinned frames
+    val gated = docs.filter(TextAnalysis.qualityScore(col("text")) >= 0.35 &&
+      col("lang") === "en")
+    val exact = Dedup.exactDedup(gated, "text", "doc_id")
+    val comp = Graph.componentsWithSize(
+      Dedup.minhashNearDups(exact, "text", "doc_id", threshold = 0.3),
+      "id_a", "id_b")
+    val losers = comp
+      .join(exact.select(col("doc_id").as("id"),
+        TextAnalysis.qualityScore(col("text")).as("q")), Seq("id"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("cluster_id").orderBy(col("q").desc, col("id").asc)))
+      .filter(col("rn") > 1).select(col("id").as("doc_id"))
+    val unique = exact.join(losers, Seq("doc_id"), "left_anti")
+    val packed = TextAnalysis.tokenChunks(unique, "text", "doc_id", 64, 64)
+      .join(unique.select(col("doc_id").as("id"), col("source")), Seq("id"))
+      .withColumn("bin", floor((sum(col("n_tok")).over(
+        Window.partitionBy("source").orderBy(col("id").asc, col("chunk_idx").asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1) / 512))
+    assert(res.stats === Seq(
+      "input_docs" -> docs.count(),
+      "quality_lang_kept" -> gated.count(),
+      "after_exact_dedup" -> exact.count(),
+      "after_neardup_dedup" -> unique.count(),
+      "chunks" -> packed.count()))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "chunk_idx", "n_tok", "chunk_hash", "source", "bin")
+        .orderBy("id", "chunk_idx").collect().toSeq
+    assert(rows(written) === rows(packed))
+    GraftSession.sweepCaches(spark)
+    deleteTree(out)
+  }
+
+  test("Curate.run: three run/write/release rounds leave storage flat") {
+    GraftSession.sweepCaches(spark)
+    val sc = spark.sparkContext
+    val docs = model.Tables.documents(spark, "/root/testdata/sf0.001")
+    val out = java.nio.file.Files.createTempDirectory("graft-curate")
+    // storage memory in use: cached blocks plus broadcasts, which the
+    // context cleaner drops once a GC finds their plans unreachable
+    def used(): Long =
+      sc.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum
+    // the floor the suite's earlier broadcasts settle to: GC until a
+    // reading repeats
+    val base = Iterator.continually { System.gc(); Thread.sleep(250); used() }
+      .sliding(2).take(40).find(w => w(0) == w(1)).map(_.head)
+      .getOrElse(used())
+    def settled(): Long = {
+      val deadline = System.currentTimeMillis() + 20000
+      var u = used()
+      while (u > base && System.currentTimeMillis() < deadline) {
+        System.gc(); Thread.sleep(250); u = used()
+      }
+      u
+    }
+    def round(i: Int): Unit = {
+      val res = Curate.run(spark, docs)
+      res.chunks.write.mode("overwrite").parquet(s"$out/r$i")
+      assert(sc.getRDDStorageInfo.exists(_.memSize > 0),
+        "the chunk table comes back pinned")
+      res.release()
+      assert(cacheIsEmpty, s"round $i left a cache entry or pinned RDD")
+    }
+    try {
+      val after = (1 to 3).map { i => round(i); settled() }
+      assert(after.forall(_ <= base), s"storage grew past $base B: $after")
+    } finally deleteTree(out)
   }
 
   test("modelGated curation: gate, index dedup, and in-batch dedup each bite") {

@@ -335,4 +335,55 @@ class PlanSpec extends SparkTestBase {
     val narrow = spark.range(0, 1000, 1, 1).toDF("id")
     assert(graft.ext.Par.fanOut(narrow, par).rdd.getNumPartitions === par)
   }
+
+  test("Par.fanOut starts no job over a parquet scan or a materialized " +
+    "persisted frame; over an unmaterialized exchange it does") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val docs = graft.model.Tables.documents(spark, dir)
+    val agg = docs.groupBy("source").agg(count(lit(1)).as("n"))
+    val pinned = docs.groupBy("lang").agg(count(lit(1)).as("n"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pinned.count()
+    // jobs started while `body` runs, tagged by job group; the bus
+    // delivers in order, so once the sentinel job's end arrives every
+    // job `body` started has been seen
+    def jobsOf(body: => Unit): Int = {
+      val group = s"fanout-jobs-${System.nanoTime}"
+      val sentinel = s"$group-sentinel"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+      val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .orNull
+          if (g == group) jobs.incrementAndGet()
+          if (g == sentinel) sentinelJobs.add(e.jobId)
+        }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
+      }
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup(group, "fanOut")
+        body
+        sc.setJobGroup(sentinel, "drain")
+        sc.parallelize(Seq(1), 1).count()
+        assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(l)
+      }
+      jobs.get()
+    }
+    try {
+      assert(jobsOf { graft.ext.Par.fanOut(docs, 1); () } === 0)
+      assert(jobsOf { graft.ext.Par.fanOut(pinned, 1); () } === 0)
+      // the documented cost: AQE runs the aggregate's shuffle stage to
+      // build the final RDD whose partitions fanOut counts
+      assert(jobsOf { graft.ext.Par.fanOut(agg, 1); () } >= 1)
+    } finally { pinned.unpersist(); () }
+  }
 }

@@ -17,4 +17,11 @@ object SparkTestSession {
 
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Deletes a test's temp directory tree. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists)
+  }
 }

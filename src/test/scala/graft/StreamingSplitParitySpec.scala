@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Prop.{forAllNoShrink, AnyOperators}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalatest.BeforeAndAfterEach
 import graft.streaming.StreamingPipeline
 
 /** Random-split batch-parity properties for every streaming twin that
@@ -25,8 +26,21 @@ import graft.streaming.StreamingPipeline
   * (relativeError 1e-3 → compression threshold ≫ n) are all EXACT, so
   * the sketch parities are equality assertions, not tolerance checks.
   */
-class StreamingSplitParitySpec extends SparkTestBase {
+class StreamingSplitParitySpec extends SparkTestBase with BeforeAndAfterEach {
   import spark.implicits._
+
+  /** Every temp root a draw creates; each test deletes its own. */
+  private val roots = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempRoot(prefix: String): String = {
+    val r = Files.createTempDirectory(prefix)
+    roots += r
+    r.toString
+  }
+
+  override def afterEach(): Unit =
+    try { roots.foreach(deleteTree); roots.clear() }
+    finally super.afterEach()
 
   private val scParams =
     SCTest.Parameters.default.withMinSuccessfulTests(30)
@@ -48,8 +62,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
 
   private val cutsGen = Gen.listOfN(2, Gen.choose(0.0, 1.0))
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/s"
+  private def tmp(prefix: String): String = tempRoot(prefix) + "/s"
 
   // ---------------------------------------------------------------
   // mergeGoldBatch: windowed (n, sum, min, max) state
@@ -270,7 +283,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
       Gen.listOfN(n, Gen.oneOf(pool)))
     check(forAllNoShrink(rowsGen, cutsGen) { (texts, cuts) =>
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val root = Files.createTempDirectory("graft-pdd").toString
+      val root = tempRoot("graft-pdd")
       splitBy(rows, cuts).zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.dedupIngestBatch(p.toDF("doc_id", "text"),
           i.toLong, "text", "doc_id", s"$root/out", s"$root/idx")
@@ -386,7 +399,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
       val rows = idxs.zipWithIndex.map { case (ti, i) =>
         (i.toLong, if (ti % 2 == 0) "a" else "b", pool(ti))
       }
-      val root = Files.createTempDirectory("graft-pcur").toString
+      val root = tempRoot("graft-pcur")
       val counts = new StreamingPipeline.CurateCounts
       splitBy(rows, cuts).zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.curateFullIngestBatch(
@@ -505,7 +518,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
       Gen.listOfN(n, Gen.oneOf(variants)))
     val prop = forAllNoShrink(rowsGen, cutsGen) { (texts, cuts) =>
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val root = Files.createTempDirectory("graft-pnd").toString
+      val root = tempRoot("graft-pnd")
       splitBy(rows, cuts).zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.normalizedDedupIngestBatch(
           p.toDF("doc_id", "text"), i.toLong, "text", "doc_id",
@@ -535,7 +548,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
       Gen.choose(1, 9)).map(_.zipWithIndex.map { case (k, i) =>
         (i.toLong, ("tok " * k).trim) }))
     val prop = forAllNoShrink(rowsGen, cutsGen) { (rows, cuts) =>
-      val root = Files.createTempDirectory("graft-psm").toString
+      val root = tempRoot("graft-psm")
       val parts = splitBy(rows, cuts)
       parts.zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.shardManifestBatch(p.toDF("doc_id", "text"),
@@ -591,7 +604,7 @@ class StreamingSplitParitySpec extends SparkTestBase {
       (i.toLong, s, pool(t)) }))
     val pcts = Seq(0.0, 0.25, 0.5, 1.0)
     val prop = forAllNoShrink(rowsGen, cutsGen) { (rows, cuts) =>
-      val root = Files.createTempDirectory("graft-pag").toString
+      val root = tempRoot("graft-pag")
       splitBy(rows, cuts).zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.adaptiveGateBatch(
           p.toDF("doc_id", "source", "text"), i.toLong, "source", "text",
