@@ -322,7 +322,7 @@ object Bench {
       // adjudication probe, so probe and bench cannot diverge when the
       // window width / watermark / ts conversion next changes
       val (agg, rows, releaseStaged) =
-        graft.bench.StreamIngest.buildAggReleasable(spark, sfDir)
+        graft.bench.StreamIngest.buildAgg(spark, sfDir)
       try {
         // Best-of-3, same discipline as the chain: the single-shot reading
         // swung ±15% round-to-round on identical code. Each run replays the

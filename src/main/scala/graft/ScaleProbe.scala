@@ -142,14 +142,14 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     // the SAME buildAgg/runOnce the bench calls — not a copy, so this
     // probe measures exactly what the bench measures by construction
-    val (agg, nRows) = bench.StreamIngest.buildAgg(spark, sfDir)
+    val (agg, nRows, releaseStaged) = bench.StreamIngest.buildAgg(spark, sfDir)
     // the first reps of a FRESH JVM measure classloading/codegen/page
     // cache, not engine capability (r19 measured 5.7k -> 22.5k over 4
     // cold reps vs a 33-39k steady state) — discard a fixed warm-up
     // prefix so a short probe run can't read as a below-band
     // "regression" that is really JVM warm-up
     val warmups = 2
-    val rates = (1 to warmups + reps).map { rep =>
+    val rates = try (1 to warmups + reps).map { rep =>
       System.gc()
       val sec = bench.StreamIngest.runOnce(agg)
       val rate = nRows / sec
@@ -157,7 +157,7 @@ object ScaleProbe {
       println(f"[scale] streamheadline rep$rep rows=$nRows sec=$sec%.2f " +
         f"events_per_sec=$rate%.0f$tag")
       rate
-    }.drop(warmups)
+    }.drop(warmups) finally releaseStaged()
     val median = rates.sorted.apply(rates.size / 2)
     val band = declaredBand("stream_events_per_sec")
     println(f"[scale] streamheadline median=$median%.0f " +

@@ -2535,20 +2535,19 @@ object SparkEntry {
         // SAME generation instead of re-shingling the corpus, which the
         // old warm min-of-2 masked (cross-rep persist reuse hid the
         // second shingle pass's cost entirely).
-        // The release() handle is DELIBERATELY discarded (ADVICE r19):
-        // a registry cell returns a lazy frame, so there is no
+        // The index pin is DELIBERATELY left in place (ADVICE r19): a
+        // registry cell returns a lazy frame, so there is no
         // post-consumption hook to release from — this cell (like every
         // cell built on the persisting pair/CC operators) relies on the
         // harness sweep between queries (GraftSession.sweepCaches in
-        // Bench/Verify). A RESIDENT pipeline must use the Releasable
-        // variants directly and release after consumption, per the
-        // Dedup scaladoc.
-        val (pairs, ex, _) = Dedup.ngramJaccardPairsWithIndex(
+        // Bench/Verify). A RESIDENT pipeline consumes the result and then
+        // calls Graph.uncacheUnder on it (the contract on that method).
+        val (pairs, ex) = Dedup.ngramJaccardPairsWithIndex(
           docs, "text", "doc_id", "source", 3, 0.02)
         // Signatures via the exploded numeric-min aggregation (one md5 per
         // shingle), same shape as minhashNearDups — not the per-row array
         // expression, which re-hashes once per permutation.
-        val (u, v) = Dedup.uvHalvesPublic(col("s"))
+        val (u, v) = Dedup.uvHalves(col("s"))
         val mins = (0 until 16).map(p => min(col("u") + lit(p.toLong) * col("v")).as(s"m$p"))
         val sig = ex.select(col("id"), u.as("u"), v.as("v"))
           .groupBy("id").agg(mins.head, mins.tail: _*)

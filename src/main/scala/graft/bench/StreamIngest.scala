@@ -27,22 +27,13 @@ object StreamIngest {
 
   /** Stage `sfDir`'s events table into a fresh temp dir and build the
     * windowed-aggregation streaming frame over it. Returns (agg frame,
-    * source row count). The staging copy exists so the streaming source
-    * dir contains exactly one immutable file regardless of what else
-    * lives in sfDir. The copy is reclaimed at JVM exit; a long-lived
-    * caller that is DONE with the frame should use
-    * [[buildAggReleasable]] and release eagerly instead. */
-  def buildAgg(spark: SparkSession, sfDir: String): (DataFrame, Long) = {
-    val (agg, rows, _) = buildAggReleasable(spark, sfDir)
-    (agg, rows)
-  }
-
-  /** [[buildAgg]] plus an explicit release handle that deletes the
-    * staged events copy immediately (and removes it from the exit-time
-    * sweep) — for probes/benches that finish with the frame long before
-    * JVM exit. The frame reads the staged dir LAZILY: release only after
-    * the last replay. */
-  def buildAggReleasable(spark: SparkSession, sfDir: String)
+    * source row count, release). The staging copy exists so the streaming
+    * source dir contains exactly one immutable file regardless of what
+    * else lives in sfDir. The frame reads the staged dir LAZILY: call
+    * release() after the last replay to delete the copy (and drop it from
+    * the exit-time sweep, which still reclaims it if the caller fails
+    * before releasing). */
+  def buildAgg(spark: SparkSession, sfDir: String)
       : (DataFrame, Long, () => Unit) = {
     import java.nio.file.{Files, Path}
     val streamDir = Files.createTempDirectory("graft-bench-stream")

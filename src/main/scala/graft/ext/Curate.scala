@@ -153,24 +153,14 @@ object Curate {
     * multiset; for sources too hot for that, swap in approx_percentile
     * with a documented error budget), broadcast back, one filter. The
     * corpus never re-shuffles by source. Returns the kept rows with
-    * `quality` and `cutoff` columns attached. */
+    * `quality` and `cutoff` columns attached.
+    *
+    * Pins its scored frame, which carries the FULL text column (a
+    * corpus-sized MEMORY_AND_DISK materialization at scale); release it
+    * with [[Graph.uncacheUnder]]. */
   def adaptiveQualityGate(docs: DataFrame, keyCol: String,
                           textCol: String = "text",
-                          pct: Double = 0.25): DataFrame =
-    adaptiveQualityGateReleasable(docs, keyCol, textCol, pct)._1
-
-  /** [[adaptiveQualityGate]] plus the explicit release handle for its
-    * pinned scored frame — which carries the FULL text column, i.e. a
-    * corpus-sized MEMORY_AND_DISK materialization at scale. Harness
-    * contexts sweep pinned state between queries; a RESIDENT pipeline
-    * must materialize the gated output and then call release(), or each
-    * gate invocation leaks a corpus-sized cache generation (the
-    * registry-wide contract documented on
-    * [[Dedup.ngramJaccardPairsReleasable]]). */
-  def adaptiveQualityGateReleasable(docs: DataFrame, keyCol: String,
-                                    textCol: String = "text",
-                                    pct: Double = 0.25)
-      : (DataFrame, () => Unit) = {
+                          pct: Double = 0.25): DataFrame = {
     require(pct >= 0.0 && pct < 1.0, s"pct must be in [0, 1), got $pct")
     // Persisted (r21): `scored` feeds BOTH the cutoff aggregation (built
     // as a broadcast) and the gated main pass — unpersisted, the
@@ -181,9 +171,8 @@ object Curate {
     val cuts = scored.groupBy(col(keyCol))
       .agg(round(expr(s"percentile(quality, $pct)") + lit(1e-9), 4)
         .as("cutoff"))
-    val gated = scored.join(broadcast(cuts), Seq(keyCol))
+    scored.join(broadcast(cuts), Seq(keyCol))
       .filter(col("quality") >= col("cutoff"))
-    (gated, () => { scored.unpersist(); () })
   }
 
   /** Keep the BEST member of each duplicate cluster — the modern
@@ -432,14 +421,14 @@ object Curate {
                     splits: Seq[(String, Int)] =
                       Seq("train" -> 80, "valid" -> 90, "test" -> 100))
       : ClusterReport = {
-    val (pairs, _, releaseIdx) = Dedup.ngramJaccardPairsWithIndex(
+    val (pairs, index) = Dedup.ngramJaccardPairsWithIndex(
       docs, textCol, idCol, blockCol, shingleN, threshold)
     val comp = Graph.connectedComponents(pairs, "id_a", "id_b")
       .withColumnRenamed("id", idCol)
     // CC has fully consumed the pair lineage (it is eager on both its
     // arms), so the pinned shingle index can go NOW — no consumer below
     // ever re-shingles
-    releaseIdx()
+    index.unpersist()
     // Explicit size-gated broadcast of the assignment table (ADVICE r20):
     // on the driver-union-find arm comp is a LocalRelation and Spark's
     // size estimate already broadcasts it, but on the distributed-CC arm

@@ -120,11 +120,7 @@ object Dedup {
     * aggregation). 40-bit halves keep u + 15·v < 2^44, safely inside a
     * 64-bit long on every engine. md5 keeps the family portable: the oracle
     * recomputes identical values in SQL. */
-  /** Public accessor so accuracy probes outside the package reuse the
-    * exact same family (sketch vs ground-truth comparisons). */
-  def uvHalvesPublic(shingle: Column): (Column, Column) = uvHalves(shingle)
-
-  private[ext] def uvHalves(shingle: Column): (Column, Column) = {
+  private[graft] def uvHalves(shingle: Column): (Column, Column) = {
     val hx = md5(shingle.cast("binary"))
     (conv(substring(hx, 1, 10), 16, 10).cast("long"),
       conv(substring(hx, 11, 10), 16, 10).cast("long"))
@@ -431,29 +427,17 @@ object Dedup {
     * |union| = |a| + |b| - |intersect|. Pairs sharing no shingle never
     * materialize (jaccard 0 — requires threshold > 0), so the cost is
     * proportional to actual shingle co-occurrence instead of |block|^2
-    * array comparisons. At 100 TB never call without a blocking key. */
+    * array comparisons. At 100 TB never call without a blocking key.
+    *
+    * Pins its exploded shingle index for the self-join's two sides;
+    * release it with [[Graph.uncacheUnder]]. */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         blockCol: String, shingleN: Int,
                         threshold: Double): DataFrame =
-    ngramJaccardPairsReleasable(docs, textCol, idCol, blockCol, shingleN,
+    ngramJaccardPairsWithIndex(docs, textCol, idCol, blockCol, shingleN,
       threshold)._1
 
-  /** [[ngramJaccardPairs]] plus an explicit cache-release handle: the
-    * operator pins its exploded index for the self-join's two sides.
-    * Harness contexts sweep all pinned state between queries
-    * (GraftSession.sweepCaches); a RESIDENT pipeline calling the
-    * operator per block/day must instead consume the pairs and then
-    * call the returned release() or the pinned generations accumulate. */
-  def ngramJaccardPairsReleasable(docs: DataFrame, textCol: String,
-                                  idCol: String, blockCol: String,
-                                  shingleN: Int, threshold: Double)
-      : (DataFrame, () => Unit) = {
-    val (pairs, _, release) = ngramJaccardPairsWithIndex(docs, textCol,
-      idCol, blockCol, shingleN, threshold)
-    (pairs, release)
-  }
-
-  /** [[ngramJaccardPairsReleasable]] plus the pinned exploded shingle
+  /** [[ngramJaccardPairs]] plus the pinned exploded shingle
     * index itself (`id`, `blk`, `n`, `s` — one row per distinct shingle
     * per document). The index is the expensive artifact (normalize +
     * tokenize + shingle + distinct per document) and is ALREADY
@@ -462,11 +446,12 @@ object Dedup {
     * weights, shingle stats — consumes the same generation instead of
     * re-shingling the corpus (the r19 cold-bench audit caught
     * `x_minhash_est_vs_exact` paying the shingle pipeline twice this
-    * way). Release once, after all consumers have run. */
+    * way). The index is the pin: `unpersist()` it once, after all
+    * consumers have run. */
   def ngramJaccardPairsWithIndex(docs: DataFrame, textCol: String,
                                  idCol: String, blockCol: String,
                                  shingleN: Int, threshold: Double)
-      : (DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame) = {
     require(threshold > 0.0,
       "inverted-index jaccard never materializes zero-overlap pairs; threshold must be > 0")
     // Repartition before tokenization: a single-file corpus otherwise runs
@@ -493,7 +478,7 @@ object Dedup {
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, ex, () => { ex.unpersist(); () })
+    (out, ex)
   }
 
   /** Exact Jaccard pairs by PREFIX FILTERING (the AllPairs/PPJoin family):
@@ -513,22 +498,14 @@ object Dedup {
     * and rarest-first prefixes co-occur the least); the added cost is
     * one document-frequency aggregation and one per-doc ranking window.
     * Verification touches candidate pairs only. At 100 TB the same
-    * blocking-key rule applies as for [[ngramJaccardPairs]]. */
+    * blocking-key rule applies as for [[ngramJaccardPairs]].
+    *
+    * Pins TWO frames (the full shingle arrays for verification, the
+    * prefix index for candidates); release them with
+    * [[Graph.uncacheUnder]]. */
   def jaccardPairsPrefix(docs: DataFrame, textCol: String, idCol: String,
                          blockCol: String, shingleN: Int,
-                         threshold: Double): DataFrame =
-    jaccardPairsPrefixReleasable(docs, textCol, idCol, blockCol, shingleN,
-      threshold)._1
-
-  /** [[jaccardPairsPrefix]] plus an explicit cache-release handle —
-    * same contract as [[ngramJaccardPairsReleasable]]: this operator
-    * pins TWO frames (full shingle arrays for verification, prefix
-    * index for candidates); resident pipelines call release() after
-    * consuming the pairs. */
-  def jaccardPairsPrefixReleasable(docs: DataFrame, textCol: String,
-                                   idCol: String, blockCol: String,
-                                   shingleN: Int, threshold: Double)
-      : (DataFrame, () => Unit) = {
+                         threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefix filtering needs 0 < threshold <= 1, got $threshold")
     val par = docs.sparkSession.sparkContext.defaultParallelism
@@ -553,13 +530,12 @@ object Dedup {
         col("a.blk") === col("b.blk") && col("a.s") === col("b.s") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    val out = cand
+    cand
       .join(pre.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(pre.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, () => { pre.unpersist(); prefix.unpersist(); () })
   }
 
   /** SimHash signatures, one 64-char bit-string per document: bit i of the

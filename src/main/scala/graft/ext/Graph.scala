@@ -38,14 +38,28 @@ object Graph {
         case _ => ()
       }
 
-  /** Uncaches every catalog-cached frame `df`'s plan reads (each
-    * `InMemoryRelation` under its `withCachedData`) except those backing
-    * `keep`. It goes through the `CacheManager`, so the cache entry and
-    * the physical plan it holds go too, not just the blocks — an
-    * operator's internal pins (a `persist` the caller never sees) can be
-    * released once the consumer of `df` has fully materialized it. Only
-    * call when `df` will never be read again. */
-  private[graft] def uncacheUnder(df: DataFrame, keep: DataFrame*): Unit = {
+  /** The one release contract for operators that pin internally.
+    *
+    * An operator that persists an intermediate (`Dedup.ngramJaccardPairs`,
+    * `Dedup.jaccardPairsPrefix`, `Dedup.minhashNearDups`,
+    * `TextAnalysis.bm25`, `Curate.adaptiveQualityGate`, ...) returns a
+    * lazy frame and keeps its pins: releasing them inside the operator
+    * would drop the cache before the consumer runs. Harness contexts
+    * (Bench, Verify) rely on `GraftSession.sweepCaches` between queries.
+    * A resident caller consumes the output (collect, write, an eager
+    * count), then calls `uncacheUnder(consumed, ownPins*)` on the frame it
+    * consumed, so the pins do not accumulate one generation per call.
+    *
+    * Mechanism: uncaches every catalog-cached frame `df`'s plan reads
+    * (each `InMemoryRelation` under its `withCachedData`) except those
+    * backing `keep`. It goes through the `CacheManager`, so the cache entry
+    * and the physical plan it holds go too, not just the blocks.
+    *
+    * Every pin under `df` is dropped unless it is listed in `keep` — that
+    * includes a pinned INPUT the caller passed into the operator (a cached
+    * `docs`), which must be listed to survive. Only call when `df` will
+    * never be read again. */
+  def uncacheUnder(df: DataFrame, keep: DataFrame*): Unit = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     val cm = ds.sparkSession.sharedState.cacheManager
     val kept = keep.flatMap(k => cm.lookupCachedData(

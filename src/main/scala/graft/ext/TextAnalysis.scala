@@ -308,23 +308,13 @@ object TextAnalysis {
     * MAP-SIDE (an isin over a literal set — a benchmark query is tiny
     * next to the corpus), so only (doc, query-term, tf) rows aggregate;
     * df and avgdl are aggregate-sized side inputs joined back by
-    * broadcast. Docs matching no term are restored at score 0. */
+    * broadcast. Docs matching no term are restored at score 0.
+    *
+    * Pins its per-doc length table (|docs| rows, read by the score join
+    * AND the left base); release it with [[Graph.uncacheUnder]]. */
   def bm25(docs: org.apache.spark.sql.DataFrame, textCol: String,
            idCol: String, queryTerms: Seq[String], k1: Double = 1.2,
-           b: Double = 0.75): org.apache.spark.sql.DataFrame =
-    bm25Releasable(docs, textCol, idCol, queryTerms, k1, b)._1
-
-  /** [[bm25]] plus the explicit release handle for its pinned per-doc
-    * length table (|docs| rows, consumed by the score join AND the
-    * left base) — the registry-wide releasable-seam contract
-    * ([[Dedup.ngramJaccardPairsReleasable]]): harness contexts sweep
-    * pinned state between queries; a RESIDENT pipeline must consume the
-    * scores and then call release(), or each invocation leaks a
-    * |docs|-row cache generation. */
-  def bm25Releasable(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                     idCol: String, queryTerms: Seq[String],
-                     k1: Double = 1.2, b: Double = 0.75)
-      : (org.apache.spark.sql.DataFrame, () => Unit) = {
+           b: Double = 0.75): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val lens = Par.fanOut(docs, par)
@@ -348,15 +338,12 @@ object TextAnalysis {
       .withColumn("_s", col("idf") * (col("tf") * (k1 + 1)) /
         (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)))
       .groupBy("id").agg(sum("_s").as("bm25"))
-    // lens stays pinned: `out` references it twice (scores join + the
-    // left base) and is returned LAZY, so an unpersist here would drop
-    // the cache before the consumer ever runs and recompute the
-    // tokenization pass twice. Harness contexts sweep pinned state
-    // between queries (GraftSession.sweepCaches); resident pipelines
-    // call the returned release() after consumption.
-    val out = lens.select("id").join(scores, Seq("id"), "left")
+    // lens stays pinned: the result references it twice (scores join +
+    // the left base) and is returned LAZY, so an unpersist here would
+    // drop the cache before the consumer ever runs and recompute the
+    // tokenization pass twice.
+    lens.select("id").join(scores, Seq("id"), "left")
       .select(col("id"), coalesce(col("bm25"), lit(0.0)).as("bm25"))
-    (out, () => { lens.unpersist(); () })
   }
 
   /** Per-document unigram entropy in bits: H = -Σ p·log2(p) over the

@@ -172,6 +172,54 @@ class CurateSpec extends SparkTestBase {
     } finally deleteTree(out)
   }
 
+  test("Graph.uncacheUnder: three resident rounds per pinning operator " +
+    "leave only the caller's pinned input cached") {
+    import graft.ext.{Dedup, Graph}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    GraftSession.sweepCaches(spark)
+    assert(cacheIsEmpty)
+    val sc = spark.sparkContext
+    val classicSpark = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cm = classicSpark.sharedState.cacheManager
+    val docs = model.Tables.documents(spark, "/root/testdata/sf0.001").persist()
+    docs.count()
+    val docsRdds = sc.getPersistentRDDs.keySet.toSet
+    assert(docsRdds.size === 1)
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "ngramJaccardPairs" ->
+        (d => Dedup.ngramJaccardPairs(d, "text", "doc_id", "source", 3, 0.02)),
+      "jaccardPairsPrefix" ->
+        (d => Dedup.jaccardPairsPrefix(d, "text", "doc_id", "source", 3, 0.5)),
+      // rounded: the per-doc sum's addition order follows shuffle arrival
+      "bm25" ->
+        (d => TextAnalysis.bm25(d, "text", "doc_id", Seq("hash", "join", "filter"))
+          .select(col("id"), round(col("bm25"), 9).as("bm25"))),
+      "adaptiveQualityGate" -> (d => Curate.adaptiveQualityGate(d, "source")))
+    try for ((name, op) <- ops) {
+      val rounds = (1 to 3).map { i =>
+        val consumed = op(docs)
+        val rows = consumed.collect().map(_.toString).sorted.toSeq
+        assert(sc.getPersistentRDDs.size > 1, s"$name pins nothing internally")
+        val pins = consumed.queryExecution.withCachedData.collect {
+          case r: InMemoryRelation => r.cacheBuilder.logicalPlan
+        }
+        Graph.uncacheUnder(consumed, docs)
+        assert(sc.getPersistentRDDs.keySet.toSet === docsRdds,
+          s"$name round $i left a pinned RDD")
+        val docsEntry = cm.lookupCachedData(
+          docs.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        assert(docsEntry.isDefined, s"$name round $i dropped the caller's docs pin")
+        assert(pins.flatMap(cm.lookupCachedData(classicSpark, _))
+            .forall(_ eq docsEntry.get), s"$name round $i left a cache entry")
+        rows
+      }
+      assert(rounds.head.nonEmpty, name)
+      rounds.tail.foreach(r => assert(r === rounds.head, name))
+    } finally docs.unpersist(blocking = true)
+    assert(cacheIsEmpty)
+  }
+
   test("modelGated curation: gate, index dedup, and in-batch dedup each bite") {
     import graft.ext.Dedup
     import spark.implicits._

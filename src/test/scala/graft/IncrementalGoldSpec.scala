@@ -12,9 +12,9 @@ class IncrementalGoldSpec extends SparkTestBase {
     Files.writeString(java.nio.file.Path.of(dir, name), rows.mkString("\n"))
 
   test("incremental gold equals batch recomputation after two micro-batches") {
-    val inDir = Files.createTempDirectory("graft-ig-in").toString
-    val goldDir = Files.createTempDirectory("graft-ig-gold").toString + "/g"
-    val ckpt = Files.createTempDirectory("graft-ig-ckpt").toString
+    val inDir = tempRoot("graft-ig-in")
+    val goldDir = tempRoot("graft-ig-gold") + "/g"
+    val ckpt = tempRoot("graft-ig-ckpt")
     writeBatch(inDir, "b1.json", Seq(
       """{"t":"2024-06-15 10:01:00","k":"a","v":1.0}""",
       """{"t":"2024-06-15 10:02:00","k":"a","v":5.0}""",
@@ -41,7 +41,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("a replayed batch id is a no-op (at-least-once made exactly-once)") {
-    val goldDir = Files.createTempDirectory("graft-ig2").toString + "/g"
+    val goldDir = tempRoot("graft-ig2") + "/g"
     val batch = Seq(("2024-06-15 10:01:00", "a", 1.0))
       .toDF("t", "k", "v")
       .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
@@ -60,8 +60,8 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("incremental EWMA/seasonal gold: parity with batch recompute, replay no-op") {
-    val ewmaDir = Files.createTempDirectory("graft-ewma").toString + "/s"
-    val seasDir = Files.createTempDirectory("graft-seas").toString + "/s"
+    val ewmaDir = tempRoot("graft-ewma") + "/s"
+    val seasDir = tempRoot("graft-seas") + "/s"
     // three logical days × two types, delivered as three micro-batches
     // that SPLIT days across batches (the merge has to add, not replace)
     val all = Seq(
@@ -135,8 +135,8 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("EWMA/seasonal state: NULL values do not inflate n (AVG/STDDEV_SAMP parity)") {
-    val ewmaDir = Files.createTempDirectory("graft-ewma-null").toString + "/s"
-    val seasDir = Files.createTempDirectory("graft-seas-null").toString + "/s"
+    val ewmaDir = tempRoot("graft-ewma-null") + "/s"
+    val seasDir = tempRoot("graft-seas-null") + "/s"
     val rows = Seq(
       ("2024-06-10 01:00:00", "click", Some(2.0)),
       ("2024-06-10 02:00:00", "click", None),
@@ -161,7 +161,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("cdcUpsert: latest-wins with tombstones, late changes ignored, replay no-op") {
-    val store = Files.createTempDirectory("graft-cdc").toString + "/t"
+    val store = tempRoot("graft-cdc") + "/t"
     def b(rows: (String, Long, String, String)*) =
       rows.toSeq.toDF("k", "seq", "op", "v")
     def table: Map[String, (Long, String)] = StreamingPipeline
@@ -201,7 +201,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("sketchDistinct maintains mergeable HLL registers across batches, exactly-once") {
-    val store = Files.createTempDirectory("graft-sk").toString + "/s"
+    val store = tempRoot("graft-sk") + "/s"
     def batchDf(rows: Seq[(String, Long)]) = rows.toDF("k", "u")
     // batch 0: 100 users in a, 10 in b; batch 1 overlaps a by 50
     StreamingPipeline.sketchDistinctBatch(
@@ -238,7 +238,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("sampleBatch maintains the deterministic k-sample across batches, exactly-once") {
-    val store = Files.createTempDirectory("graft-smp").toString + "/s"
+    val store = tempRoot("graft-smp") + "/s"
     val b0 = (1L to 40L).map(i => i -> s"d$i")
     val b1 = (41L to 80L).map(i => i -> s"d$i")
     val b2 = (30L to 50L).map(i => i -> s"d$i") // overlaps both: id-dedup
@@ -275,7 +275,7 @@ class IncrementalGoldSpec extends SparkTestBase {
     // limit(k) before dedup would emit seven copies of "0" as candidates and
     // the post-dedup sample would be {0}; the contract (top-k-by-md5 over
     // DISTINCT ids) requires {0, 3}.
-    val store = Files.createTempDirectory("graft-smp-dup").toString + "/s"
+    val store = tempRoot("graft-smp-dup") + "/s"
     val rows = Seq.fill(9)(0L) :+ 3L
     StreamingPipeline.sampleBatch(
       rows.toDF("doc_id").withColumn("x", lit(1)), "doc_id", k = 7, store, 0L)
@@ -293,7 +293,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("sourceCapBatch enforces per-source budgets across batches, exactly-once") {
-    val root = Files.createTempDirectory("graft-cap").toString
+    val root = tempRoot("graft-cap")
     val store = s"$root/state"
     val out = s"$root/kept"
     def fold(rows: Seq[(String, Long)], id: Long): Unit =
@@ -349,7 +349,7 @@ class IncrementalGoldSpec extends SparkTestBase {
         Seq(a, b, c2)
       }
       // --- sample parity under this split
-      val sDir = Files.createTempDirectory("graft-psmp").toString + "/s"
+      val sDir = tempRoot("graft-psmp") + "/s"
       parts.zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.sampleBatch(
           p.toDF("doc_id").withColumn("x", lit(1)), "doc_id", 7, sDir, i.toLong)
@@ -361,7 +361,7 @@ class IncrementalGoldSpec extends SparkTestBase {
         .orderBy("h", "id").limit(7).select("id")
         .as[String].collect().sorted.toSeq
       // --- cap invariant under the same split (source = id parity)
-      val cDir = Files.createTempDirectory("graft-pcap").toString
+      val cDir = tempRoot("graft-pcap")
       parts.zipWithIndex.foreach { case (p, i) =>
         StreamingPipeline.sourceCapBatch(
           p.zipWithIndex.map { case (id, j) =>
@@ -381,7 +381,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("cmsFrequency maintains mergeable count-min registers across batches, exactly-once") {
-    val store = Files.createTempDirectory("graft-cms").toString + "/s"
+    val store = tempRoot("graft-cms") + "/s"
     def batchDf(rows: Seq[(String, String)]) = rows.toDF("k", "item")
     // batch 0: group a sees x ×30 + y ×5, group b sees x ×7;
     // batch 1 adds x ×20 to a — merged frequency must span batches
@@ -425,7 +425,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("cmsEstimates returns composite key COLUMNS (no joined label) for multi-key stores") {
-    val store = Files.createTempDirectory("graft-cms-mk").toString + "/s"
+    val store = tempRoot("graft-cms-mk") + "/s"
     // composite keys whose string forms would collide under any naive
     // separator-joined label ("a b","c" vs "a","b c") stay distinct
     StreamingPipeline.cmsFrequencyBatch(
@@ -443,7 +443,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("cmsFrequency stamps a marker-less store when valueCol is string-typed (native domain == string)") {
-    val store = Files.createTempDirectory("graft-cms-mig").toString + "/s"
+    val store = tempRoot("graft-cms-mig") + "/s"
     def batchDf(rows: Seq[(String, String)]) = rows.toDF("k", "item")
     StreamingPipeline.cmsFrequencyBatch(
       batchDf(Seq.fill(6)("a" -> "x")), 0L, Seq("k"), "item", store,
@@ -454,7 +454,7 @@ class IncrementalGoldSpec extends SparkTestBase {
     // must succeed and stamp the domain (verified from the batch schema)
     val data = s"$store/data"
     val legacy = spark.read.parquet(data).drop("cms_key_domain")
-    val tmp = Files.createTempDirectory("graft-cms-legacy").toString
+    val tmp = tempRoot("graft-cms-legacy")
     legacy.write.mode("overwrite").parquet(tmp)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
     spark.read.parquet(tmp).write.parquet(data)
@@ -471,14 +471,14 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("cmsFrequency rejects a marker-less store over a non-string column unless explicitly opted in") {
-    val store = Files.createTempDirectory("graft-cms-mign").toString + "/s"
+    val store = tempRoot("graft-cms-mign") + "/s"
     def batchDf(rows: Seq[(String, Long)]) = rows.toDF("k", "item")
     StreamingPipeline.cmsFrequencyBatch(
       batchDf(Seq.fill(6)("a" -> 7L)), 0L, Seq("k"), "item", store,
       1e-4, 0.99, 42)
     val data = s"$store/data"
     val legacy = spark.read.parquet(data).drop("cms_key_domain")
-    val tmp = Files.createTempDirectory("graft-cms-legacyn").toString
+    val tmp = tempRoot("graft-cms-legacyn")
     legacy.write.mode("overwrite").parquet(tmp)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
     spark.read.parquet(tmp).write.parquet(data)
@@ -505,7 +505,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("quantileState maintains mergeable GK distribution state across batches, exactly-once") {
-    val store = Files.createTempDirectory("graft-qsk").toString + "/s"
+    val store = tempRoot("graft-qsk") + "/s"
     def batchDf(rows: Seq[(String, Double)]) = rows.toDF("k", "v")
     // batch 0: group a sees 1..60, group b sees 10,20,30;
     // batch 1 adds 61..100 to a — quantiles must span batches
@@ -547,7 +547,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("embeddingMoments: additive cells across batches equal the full-corpus fit") {
-    val store = Files.createTempDirectory("graft-emom").toString + "/s"
+    val store = tempRoot("graft-emom") + "/s"
     val all = (0 until 100).map(i =>
       Array((i % 10).toDouble, (i % 10) + (if ((i / 10) % 2 == 0) 0.2 else -0.2)))
     val (b0, b1) = all.splitAt(60)
@@ -581,7 +581,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("ccIngest maintains the cluster assignment across batches, exactly-once") {
-    val store = Files.createTempDirectory("graft-cc").toString + "/s"
+    val store = tempRoot("graft-cc") + "/s"
     def edges(rows: Seq[(Long, Long)]) = rows.toDF("a", "b")
     // batch 0: {1,2,3} and {10,11}; batch 1 merges them via (3,10) and
     // adds a fresh {20,21}
@@ -618,7 +618,7 @@ class IncrementalGoldSpec extends SparkTestBase {
 
   test("adaptiveGateIngest gates each batch at the HISTORICAL per-source " +
     "quantile; cold sources keep everything; replay is a no-op") {
-    val root = Files.createTempDirectory("graft-agate").toString
+    val root = tempRoot("graft-agate")
     val out = s"$root/out"; val store = s"$root/store"
     // 8 docs with distinct graded qualities (distinct token counts)
     def doc(src: String, i: Int): (Long, String, String) =
@@ -682,7 +682,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   test("shardManifestIngest continues the shard sequence across batches, " +
     "exactly-once") {
     import graft.ext.{Sampling, TextAnalysis}
-    val root = Files.createTempDirectory("graft-shm").toString
+    val root = tempRoot("graft-shm")
     val out = s"$root/out"; val store = s"$root/state"
     def docs(ids: Range): Seq[(Long, String)] =
       ids.map(i => (i.toLong, ("tok " * (1 + i % 9)).trim))
@@ -731,7 +731,7 @@ class IncrementalGoldSpec extends SparkTestBase {
     // emptyDataFrame with lit(0L).as(idCol), landing a batch partition
     // whose id column was bigint beside string partitions — reading the
     // manifest root then failed schema merge or silently picked one
-    val root = Files.createTempDirectory("graft-shm-str").toString
+    val root = tempRoot("graft-shm-str")
     val out = s"$root/out"; val store = s"$root/state"
     def fold(rows: Seq[(String, String)], id: Long): Unit =
       StreamingPipeline.shardManifestBatch(rows.toDF("doc_id", "text"),
@@ -753,7 +753,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   test("keepBestIngest: cross-batch parity with the batch operator, " +
     "champion displacement, replay no-op") {
     import graft.ext.Curate
-    val store = Files.createTempDirectory("graft-kb").toString + "/s"
+    val store = tempRoot("graft-kb") + "/s"
     def df(rows: Seq[(Long, Long, String)]) =
       rows.toDF("doc_id", "cluster_id", "text")
     // batch 1 exercises both merge directions: cluster 10's incumbent
@@ -793,7 +793,7 @@ class IncrementalGoldSpec extends SparkTestBase {
     "RE-ENTERS when the budget grows, replay no-op, empty batch keeps " +
     "the id type") {
     import graft.ext.Sampling
-    val store = Files.createTempDirectory("graft-tb").toString + "/s"
+    val store = tempRoot("graft-tb") + "/s"
     // three texts with strictly ordered quality scores; the ordering is
     // asserted below so a qualityScore change fails loudly here rather
     // than silently voiding the readmission scenario
@@ -857,7 +857,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   test("store views refuse to build under ignoreMissingFiles=true (the " +
     "snapshot contract is enforced, not just documented) and recover " +
     "when the conf is unset") {
-    val store = Files.createTempDirectory("graft-tbg").toString + "/s"
+    val store = tempRoot("graft-tbg") + "/s"
     StreamingPipeline.tokenBudgetIngestBatch(
       Seq(("d-a", "the and of to")).toDF("doc_id", "text"),
       0L, "text", "doc_id", store)
@@ -966,8 +966,7 @@ class IncrementalGoldSpec extends SparkTestBase {
           .map { case (s, q) => s -> (q.head * 100 + q(1)).toLong }
           .toMap))
     for (c <- cases) {
-      val store = Files.createTempDirectory(s"graft-cw-${c.name}")
-        .toString + "/s"
+      val store = tempRoot(s"graft-cw-${c.name}") + "/s"
       c.fold((1L to 5L), 0L, store)
       val afterB0 = c.read(store)
       // window 1 — crash mid-swap during (a hypothetical) batch 1: the
@@ -980,8 +979,7 @@ class IncrementalGoldSpec extends SparkTestBase {
       val afterB1 = c.read(store)
       // no state/spend loss: batch-0 history must be inside the merge
       val expect01 = {
-        val fresh = Files.createTempDirectory(s"graft-cw2-${c.name}")
-          .toString + "/s"
+        val fresh = tempRoot(s"graft-cw2-${c.name}") + "/s"
         c.fold((1L to 5L), 0L, fresh); c.fold(Seq(6L, 7L), 1L, fresh)
         c.read(fresh)
       }
@@ -1015,7 +1013,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   }
 
   test("stream-static dim join enriches every micro-batch via broadcast") {
-    val inDir = Files.createTempDirectory("graft-ss-in").toString
+    val inDir = tempRoot("graft-ss-in")
     writeBatch(inDir, "b1.json", Seq(
       """{"k":"a","v":1.0}""", """{"k":"z","v":2.0}"""))
     val dim = Seq(("a", "alpha"), ("b", "beta")).toDF("k", "label")
@@ -1058,7 +1056,7 @@ class IncrementalGoldSpec extends SparkTestBase {
 
   test("batch ledger: after 50 merges _merged/ holds one file, every " +
     "merged id replays as a no-op, and the store's file count stays flat") {
-    val goldDir = Files.createTempDirectory("graft-ledger").toString + "/g"
+    val goldDir = tempRoot("graft-ledger") + "/g"
     val row = oneRow("2024-06-15 10:01:00", "a", 1.0)
     def filesOnDisk(): Long = {
       val w = Files.walk(java.nio.file.Path.of(s"$goldDir/data"))
@@ -1081,7 +1079,7 @@ class IncrementalGoldSpec extends SparkTestBase {
 
   test("batch ledger: a store in the legacy per-batch-marker layout keeps " +
     "working and folds its markers into the ledger") {
-    val goldDir = Files.createTempDirectory("graft-legacy").toString + "/g"
+    val goldDir = tempRoot("graft-legacy") + "/g"
     val row = oneRow("2024-06-15 10:01:00", "a", 2.0)
     (0L to 2L).foreach(id => StreamingPipeline.mergeGoldBatch(row, goldDir,
       id, "t", Seq("k"), "v", "5 minutes"))
@@ -1109,7 +1107,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   test("batch ledger: a legacy store whose types differ from the pinned " +
     "schema (integer values, sum stored as double) merges and is rewritten " +
     "in the batch-recompute types") {
-    val goldDir = Files.createTempDirectory("graft-legacy-int").toString + "/g"
+    val goldDir = tempRoot("graft-legacy-int") + "/g"
     // the older join merge stored an integer column's sum as a double
     Seq(("2024-06-15 10:00:00", "a", 2L, 5.0, 1, 4)).toDF("w", "k", "n",
         "sum_v", "min_v", "max_v")
@@ -1135,7 +1133,7 @@ class IncrementalGoldSpec extends SparkTestBase {
 
   test("adaptiveGateBatch honours the ledger (and legacy markers) as its " +
     "commit record") {
-    val root = Files.createTempDirectory("graft-agate-ledger").toString
+    val root = tempRoot("graft-agate-ledger")
     val out = s"$root/out"; val store = s"$root/store"
     def fold(id: Long): Unit = StreamingPipeline.adaptiveGateBatch(
       (1 to 6).map(i => (i.toLong, "a", ("the and of w " * i).trim))
@@ -1189,7 +1187,7 @@ class IncrementalGoldSpec extends SparkTestBase {
       ("2024-06-15 10:04:00", "part", None),
       ("2024-06-15 10:11:00", "new", Some(7)))
     for (vType <- Seq(DoubleType, IntegerType)) {
-      val goldDir = Files.createTempDirectory("graft-gnull").toString + "/g"
+      val goldDir = tempRoot("graft-gnull") + "/g"
       StreamingPipeline.mergeGoldBatch(events(b0, vType), goldDir, 0L, "t",
         Seq("k"), "v", "5 minutes")
       StreamingPipeline.mergeGoldBatch(events(b1, vType), goldDir, 1L, "t",
@@ -1232,7 +1230,7 @@ class IncrementalGoldSpec extends SparkTestBase {
       ("2024-06-15 10:12:00", "c", 0.5))
     def df(rows: Seq[(String, String, Double)]) = rows.toDF("t", "k", "v")
       .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
-    val goldDir = Files.createTempDirectory("graft-gjoin").toString + "/g"
+    val goldDir = tempRoot("graft-gjoin") + "/g"
     StreamingPipeline.mergeGoldBatch(df(b0), goldDir, 0L, "t", Seq("k"), "v",
       "5 minutes")
     StreamingPipeline.mergeGoldBatch(df(b1), goldDir, 1L, "t", Seq("k"), "v",
@@ -1247,7 +1245,7 @@ class IncrementalGoldSpec extends SparkTestBase {
   test("gold merge into an existing store runs at most 2 Spark jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
       SparkListenerJobStart}
-    val goldDir = Files.createTempDirectory("graft-gjobs").toString + "/g"
+    val goldDir = tempRoot("graft-gjobs") + "/g"
     def batch(k: String) = Seq(("2024-06-15 10:01:00", k, 1.0),
       ("2024-06-15 10:08:00", k, 2.0)).toDF("t", "k", "v")
       .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))

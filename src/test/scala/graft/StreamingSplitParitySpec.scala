@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Prop.{forAllNoShrink, AnyOperators}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.BeforeAndAfterEach
 import graft.streaming.StreamingPipeline
 
 /** Random-split batch-parity properties for every streaming twin that
@@ -26,21 +24,8 @@ import graft.streaming.StreamingPipeline
   * (relativeError 1e-3 → compression threshold ≫ n) are all EXACT, so
   * the sketch parities are equality assertions, not tolerance checks.
   */
-class StreamingSplitParitySpec extends SparkTestBase with BeforeAndAfterEach {
+class StreamingSplitParitySpec extends SparkTestBase {
   import spark.implicits._
-
-  /** Every temp root a draw creates; each test deletes its own. */
-  private val roots = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempRoot(prefix: String): String = {
-    val r = Files.createTempDirectory(prefix)
-    roots += r
-    r.toString
-  }
-
-  override def afterEach(): Unit =
-    try { roots.foreach(deleteTree); roots.clear() }
-    finally super.afterEach()
 
   private val scParams =
     SCTest.Parameters.default.withMinSuccessfulTests(30)
