@@ -44,8 +44,9 @@ object GraftSession {
       // empty — which GenerateExec skips in O(1) anyway — so it is pure
       // loss at any scale (measured r21: the exploded shingle-index
       // materialization dropped 1.94 s → 0.31 s at sf0.1; plan audit in
-      // plans/r21/). Results are unchanged by construction: the rule
-      // only ever removed rows that generate no output.
+      // `git show 1852456:plans/r21/`). Results are unchanged by
+      // construction: the rule only ever removed rows that generate no
+      // output.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.adaptive.enabled", "true")

@@ -2,31 +2,28 @@ package graft.bench
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** The bench's measurement-policy kernel, factored out of [[graft.Bench]]
-  * so the churn guard and the artifact parsing are unit-testable: the
-  * guard's whole value is that a GENUINE regression survives every
-  * decontaminated re-run attempt and still flags, while a noise spike
-  * snaps back — a property that must hold by test, not by reading the
-  * bench's main loop (BenchGuardSpec seeds both cases).
+/** The bench artifact contract and its churn guard, factored out of
+  * [[graft.Bench]] so both are unit-testable: [[artifactLine]] writes the
+  * one JSON line, [[parsePrior]] reads it back, and [[guardCell]] keeps a
+  * GENUINE regression slow through every decontaminated re-run while a
+  * noise spike snaps back (BenchGuardSpec seeds both cases).
   */
 object BenchGuard {
 
   /** Methodology tag carried in every bench artifact. The churn guard
-    * only compares against a prior recorded under the SAME tag: r19
-    * changed what a cell figure MEANS (min-of-2 over two cache-swept
-    * cold runs, vs the r13-r18 min that could land on a persist-reuse
-    * warm mode), so comparing across the boundary would flag every
-    * formerly-bimodal cell as regressed when only the methodology moved.
+    * only compares against a prior recorded under the SAME tag: a cell
+    * figure is the min of two cache-swept cold runs of a full noop-sink
+    * materialization ([[Measure]]). Figures timed under `count()`, which
+    * prunes unreferenced columns and the nodes that compute them, mean
+    * something else and re-baseline instead of flagging.
     */
-  val Methodology = "min2cold+reprobe+prior-churn-guard (r19+)"
+  val Methodology = "noop-write min2cold+reprobe+prior-churn-guard"
 
-  /** Declared bench-environment bounds (VERDICT r18 #3): two artifacts
-    * are comparable only when both ran inside these. `env_ok` in the
-    * artifact is the loud annotation — the bench still RUNS outside the
-    * bounds (refusing would leave the round with no artifact at all),
-    * but every downstream reader sees the flag next to the figures.
-    * Bounds documented in BASELINE.md; heap is pinned by build.sbt's
-    * run fork (-Xmx from SPARK_DRIVER_MEM, default 16g).
+  /** Declared bench-environment bounds: two artifacts are comparable only
+    * when both ran inside these. `env_ok` in the artifact is an
+    * annotation — the bench still RUNS outside the bounds, but every
+    * downstream reader sees the flag next to the figures. Bounds are
+    * documented in BASELINE.md; build.sbt's run fork pins -Xmx16g.
     */
   val LoadAvgStartMax = 8.0
   val HeapBandMb: (Long, Long) = (12288L, 24576L)
@@ -35,275 +32,127 @@ object BenchGuard {
     loadAvgStart <= LoadAvgStartMax &&
       heapMaxMb >= HeapBandMb._1 && heapMaxMb <= HeapBandMb._2
 
-  final case class Envelopes(cells: Map[String, Double],
-                             headline: Map[String, String])
+  /** The run's environment fingerprint: `cpus` is the host core count,
+    * `parallelism` the `local[N]` the run used. */
+  final case class Env(cpus: Int, parallelism: Int, heapMaxMb: Long,
+                       loadAvgStart: Double, loadAvgEnd: Double,
+                       java: String)
 
-  /** Parse bench_envelopes.json. Fails LOUDLY (throws) on a present but
-    * malformed file or a non-numeric cell value: a silent fallback would
-    * drop every declared envelope to the 1.4x default and burn two
-    * futile re-runs per formerly-enveloped cell each session, and a
-    * non-numeric value parsed as 0.0 would make its cell read as
-    * always-regressed (t <= p*0 never holds). Callers distinguish
-    * file-missing (fine — empty envelopes) from file-invalid (throw).
-    */
-  def parseEnvelopes(txt: String): Envelopes = {
-    val root = new ObjectMapper().readTree(txt)
-    if (root == null || !root.isObject)
-      throw new IllegalArgumentException(
-        "bench_envelopes.json: top level is not a JSON object")
-    var headline = Map.empty[String, String]
-    val hn = root.get("headline")
-    if (hn != null) {
-      val hb = Map.newBuilder[String, String]
-      hn.fields().forEachRemaining(e => hb += e.getKey -> e.getValue.toString)
-      headline = hb.result()
-    }
-    var cells = Map.empty[String, Double]
-    val node = root.get("cells")
-    if (node != null) {
-      val b = Map.newBuilder[String, Double]
-      node.fields().forEachRemaining { e =>
-        if (!e.getValue.isNumber)
-          throw new IllegalArgumentException(
-            s"bench_envelopes.json: cell '${e.getKey}' has non-numeric " +
-              s"envelope ${e.getValue} — fix the file (a 0.0 default would " +
-              "flag the cell as permanently regressed)")
-        val v = e.getValue.asDouble()
-        if (v < 1.0)
-          throw new IllegalArgumentException(
-            s"bench_envelopes.json: cell '${e.getKey}' envelope $v < 1.0 " +
-              "(an envelope is a widening multiple of the prior)")
-        b += e.getKey -> v
-      }
-      cells = b.result()
-    }
-    Envelopes(cells, headline)
+  /** The one JSON line [[graft.Bench]] prints and writes to its artifact.
+    * `queries` holds each cell's seconds (-1 = failed); `value` is the
+    * total over the cells that ran. */
+  def artifactLine(sfDir: String, env: Env, queries: Seq[(String, Double)],
+                   errors: Seq[String], chainRows: Long, chainSec: Double,
+                   streamEventsPerSec: Double,
+                   streamBatchP95Ms: Double): String = {
+    val m = new ObjectMapper()
+    val root = m.createObjectNode()
+    root.put("metric", "total")
+    root.put("value", queries.map(_._2).filter(_ >= 0).sum)
+    root.put("unit", "sec")
+    root.put("methodology", Methodology)
+    val e = root.putObject("env")
+    e.put("cpus", env.cpus)
+    e.put("parallelism", env.parallelism)
+    e.put("heap_max_mb", env.heapMaxMb)
+    e.put("load_avg_start", env.loadAvgStart)
+    e.put("load_avg_end", env.loadAvgEnd)
+    e.put("java", env.java)
+    root.put("env_ok", envOk(env.loadAvgStart, env.heapMaxMb))
+    val b = root.putObject("env_bounds")
+    b.put("load_avg_start_max", LoadAvgStartMax)
+    b.putArray("heap_max_mb_band").add(HeapBandMb._1).add(HeapBandMb._2)
+    val q = root.putObject("queries")
+    queries.foreach { case (k, v) => q.put(k, v) }
+    val errs = root.putArray("errors")
+    errors.foreach(e => errs.add(e))
+    root.put("sf", sfDir)
+    root.put("chain_rows", chainRows)
+    root.put("chain_sec", chainSec)
+    root.put("chain_rows_per_sec", if (chainSec > 0) chainRows / chainSec else 0.0)
+    root.put("stream_events_per_sec", streamEventsPerSec)
+    root.put("stream_batch_duration_p95_ms", streamBatchP95Ms)
+    m.writeValueAsString(root)
   }
 
   /** Parse a prior BENCH_full.json into per-cell figures, returning
     * empty (guard inactive) when the prior was measured on a different
     * scale factor, under a different methodology tag, OUTSIDE the
     * declared environment bounds (`env_ok: false`), or at another
-    * `local[N]` than `parallelism` — any of these would
-    * flag every cell (or none) for reasons that have nothing to do with
-    * the code under test. The env_ok gate is this contract's own rule
-    * applied to itself (ADVICE r19): two artifacts are comparable only
-    * when both ran inside the bounds, so an out-of-bounds prior (e.g.
-    * the r19 driver re-run's 91 GiB-heap/load-13.8 artifact) must not
-    * silently activate the churn guard. Non-numeric query values are
-    * skipped.
+    * `local[N]` than `parallelism` — any of these would flag every cell
+    * (or none) for reasons that have nothing to do with the code under
+    * test. A malformed prior (e.g. a bench killed mid-write) is also
+    * empty rather than an error. Non-numeric query values are skipped.
     */
   def parsePrior(txt: String, sfDir: String,
                  parallelism: Int): Map[String, Double] = {
-    val root = parseRoot(txt).orNull
-    if (root == null) return Map.empty
-    if (!priorComparable(root, sfDir, parallelism)) return Map.empty
-    val node = root.get("queries")
-    if (node == null) Map.empty
-    else {
-      val b = Map.newBuilder[String, Double]
-      node.fields().forEachRemaining { e =>
-        if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
-      }
-      b.result()
-    }
+    val root = try Option(new ObjectMapper().readTree(txt)).filter(_.isObject)
+      catch { case _: Exception => None }
+    root.filter(priorComparable(_, sfDir, parallelism))
+      .flatMap(r => Option(r.get("queries")))
+      .map { node =>
+        val b = Map.newBuilder[String, Double]
+        node.fields().forEachRemaining { e =>
+          if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
+        }
+        b.result()
+      }.getOrElse(Map.empty)
   }
 
-  /** Parse a prior artifact's fresh-JVM probe medians (`probe_medians`
-    * object), under the same comparability gate as [[parsePrior]] plus
-    * the probe-time load gate ([[probeLoadOk]]). Non-positive values
-    * (the -1 probe-failed sentinel) are skipped — a failed prior probe
-    * must not anchor the rate guard at -1. */
-  def parsePriorProbeMedians(txt: String, sfDir: String,
-                             parallelism: Int): Map[String, Double] =
-    parseRoot(txt)
-      .filter(r => priorComparable(r, sfDir, parallelism) &&
-        probeLoadOk(r, parallelism))
-      .map(validProbeMedians(_).toMap).getOrElse(Map.empty)
-
-  /** Per-key MEDIAN of each key's last `k` valid values among the
-    * comparable entries of bench_probe_history.jsonl (one JSON object
-    * per line: {"sf", "methodology", "env_ok", "load_avg_at_probes",
-    * "parallelism", "probe_medians": {...}}), the
-    * rate-guard anchor of VERDICT r20 #5 / r21 #10: a single noisy-but-
-    * env_ok session used to BECOME the whole anchor (its artifact was
-    * the prior), so one bad session could silently re-baseline the
-    * chain/stream guard for a round. Anchoring on the history median
-    * means one outlier among the last `k` comparable sessions cannot
-    * move the anchor (BenchGuardSpec pins it). Returns empty until at
-    * least `minEntries` valid values exist for a key — below
-    * that a median is just the outlier problem again — letting the
-    * caller fall back to the prior artifact's own medians. Lines that
-    * fail to parse, fail the [[parsePrior]] comparability gate (sf /
-    * methodology / env_ok / parallelism) or the probe-time load gate
-    * are skipped; a non-positive sentinel value is skipped for its key
-    * only, so a run whose probe failed for one key takes none of that
-    * key's `k` slots. Values are drawn only from the last `2 * k`
-    * comparable lines, so a key whose probe keeps failing ages out
-    * instead of anchoring on arbitrarily old sessions. FAIL-SOFT like
-    * the prior file: history is an anchor, not a gate. */
-  def probeHistoryAnchors(txt: String, sfDir: String, parallelism: Int,
-                          k: Int = 5,
-                          minEntries: Int = 3): Map[String, Double] =
-    txt.linesIterator.flatMap(parseRoot(_))
-      .filter(r => priorComparable(r, sfDir, parallelism) &&
-        probeLoadOk(r, parallelism))
-      .toSeq.takeRight(2 * k)
-      .flatMap(validProbeMedians)
-      .groupMap(_._1)(_._2)
-      .map { case (key, all) => key -> all.takeRight(k) }
-      .collect { case (key, vs) if vs.size >= minEntries =>
-        val s = vs.sorted
-        val mid = s.size / 2
-        key -> (if (s.size % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0)
-      }
-
-  /** One bench_probe_history.jsonl line for THIS run — carries exactly
-    * the fields [[probeHistoryAnchors]]' gates read. `loadAtProbes` is
-    * the load average when the probes ran (end of suite), not at start.
-    * Sentinel (-1) medians are recorded as-is; the parser skips them. */
-  def probeHistoryLine(sfDir: String, envOk: Boolean, loadAtProbes: Double,
-                       parallelism: Int,
-                       medians: Seq[(String, Double)]): String = {
-    val ms = medians.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    s"""{"sf":"$sfDir","methodology":"$Methodology","env_ok":$envOk,""" +
-      s""""load_avg_at_probes":$loadAtProbes,""" +
-      s""""parallelism":$parallelism,"probe_medians":$ms}"""
-  }
-
-  /** Probe medians are timed at the END of the suite, so the 1-minute
-    * `load_avg_at_probes` is mostly the bench's own `local[N]` work and
-    * cannot be held to the start-of-run [[LoadAvgStartMax]]: the
-    * committed 32-core artifacts read 16.8 (r21, the best probe medians
-    * on record) and 11.8 (r22). A record is not comparable only when its
-    * probe-time load exceeds its own `parallelism` — more runnable work
-    * than the run's N slots can field, i.e. another tenant on the host.
-    * Every recorded probe-time reading is below 0.53 N. A record without
-    * the field passes (the same legacy rule as an absent `env_ok`). */
-  private def probeLoadOk(root: com.fasterxml.jackson.databind.JsonNode,
-                          parallelism: Int): Boolean =
-    Option(root.get("load_avg_at_probes"))
-      .forall(n => !n.isNumber || n.asDouble() <= parallelism)
-
-  /** The positive entries of a record's `probe_medians`, in file order. */
-  private def validProbeMedians(root: com.fasterxml.jackson.databind.JsonNode)
-      : Seq[(String, Double)] = {
-    val b = Seq.newBuilder[(String, Double)]
-    Option(root.get("probe_medians")).foreach(_.fields().forEachRemaining {
-      e =>
-        if (e.getValue.isNumber && e.getValue.asDouble() > 0)
-          b += e.getKey -> e.getValue.asDouble()
-    })
-    b.result()
-  }
-
-  /** The prior file is FAIL-SOFT, unlike the envelope file: a corrupt
-    * prior (e.g. a bench killed mid-write) deactivates the guard rather
-    * than crashing the run after warm-up with no artifact. */
-  private def parseRoot(txt: String)
-      : Option[com.fasterxml.jackson.databind.JsonNode] =
-    try Option(new ObjectMapper().readTree(txt)).filter(_.isObject)
-    catch { case _: Exception => None }
-
-  /** `parallelism` must equal the prior's recorded `local[N]`
-    * (`parallelism` on a history line, `env.parallelism` in an
-    * artifact): an 8-slot run must never anchor a 32-slot one. A prior
-    * that predates the field cannot show it matches, so it is
-    * incomparable. */
+  /** `parallelism` must equal the prior's recorded `env.parallelism`: an
+    * 8-slot run must never anchor a 32-slot one. A prior that predates
+    * the field cannot show it matches, so it is incomparable. */
   private def priorComparable(root: com.fasterxml.jackson.databind.JsonNode,
                               sfDir: String,
                               parallelism: Int): Boolean = {
     val priorSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
     val priorMeth =
       Option(root.get("methodology")).map(_.asText()).getOrElse("")
-    // absent env_ok (pre-r19 artifact) is already rejected by the
-    // methodology tag; an explicit false is the loud incomparability mark
+    // an explicit false is the loud incomparability mark
     val priorEnvOk =
       Option(root.get("env_ok")).forall(n => !n.isBoolean || n.asBoolean())
-    val priorPar = Option(root.get("parallelism"))
-      .orElse(Option(root.get("env")).flatMap(e => Option(e.get("parallelism"))))
+    val priorPar = Option(root.get("env"))
+      .flatMap(e => Option(e.get("parallelism")))
       .filter(_.isInt).map(_.asInt())
     priorSf == sfDir && priorMeth == Methodology && priorEnvOk &&
       priorPar.contains(parallelism)
   }
 
-  /** The churn-guard decision loop for a THROUGHPUT figure (higher =
-    * better), used on the fresh-JVM probe medians: engage when the
-    * measured rate drops below prior/ratio, re-probe up to `maxAttempts`
-    * times keeping the MAX (a genuine regression stays low through every
-    * attempt and still flags; a noisy probe snaps back). The probe
-    * medians carry ~±15% session spread (SCALE.md quiet-machine probes)
-    * vs ±50% for the in-suite headline, so the default ratio is 1.25 —
-    * tight enough to catch the 30-40% chain regression the declared
-    * in-suite bands cannot (VERDICT r19 #1). Sentinels (<=0 measured —
-    * probe failed) and missing priors pass through. */
-  def guardRate(measured: Double, prior: Double, ratio: Double = 1.25,
-                rerun: () => Option[Double],
-                maxAttempts: Int = 1): Double = {
-    if (measured <= 0 || prior <= 0 || measured * ratio >= prior) measured
-    else {
-      var best = measured
-      var attempt = 0
-      while (attempt < maxAttempts && best * ratio < prior) {
-        rerun().filter(_ > 0).foreach(rt => best = math.max(best, rt))
-        attempt += 1
-      }
-      best
-    }
-  }
-
-  /** JVM args for re-launching a bench/probe fork inside the declared
-    * heap band: None when `heapMaxMb` is already in band (no relaunch),
-    * otherwise the caller's args with every -Xmx/-Xms stripped and the
-    * band's pin appended. build.sbt sets -Xmx16g as a DEFAULT, but the
-    * round driver's launch path overrides it (the r19 re-run shipped a
-    * 91 GiB JVM) — so Bench re-execs itself through this instead of
-    * trusting ambient JVM opts, making the heap bound unviolable
-    * (VERDICT r19 #5). Machine load stays annotation-only by design. */
-  def relaunchJvmArgs(inputArgs: Seq[String],
-                      heapMaxMb: Long): Option[Seq[String]] =
-    if (heapMaxMb >= HeapBandMb._1 && heapMaxMb <= HeapBandMb._2) None
-    else Some(inputArgs.filterNot(a =>
-      a.startsWith("-Xmx") || a.startsWith("-Xms")) :+ "-Xmx16g")
+  /** The churn guard engages on a cell only when it exceeds its prior by
+    * [[Ratio]] AND by [[MinDeltaSec]] seconds, and reads at least
+    * [[NoiseFloorSec]]; it then spends up to [[MaxAttempts]] re-runs. */
+  val Ratio = 1.4
+  val NoiseFloorSec = 0.3
+  val MinDeltaSec = 0.5
+  val MaxAttempts = 2
 
   /** The churn-guard decision loop for one cell. `measured` is this
     * run's figure, `prior` the same cell's figure from the prior
-    * committed artifact (<=0 = no prior), `ratio` the cell's declared
-    * envelope (default 1.4). A cell above its guard gets up to
-    * `maxAttempts` decontaminated re-runs (the caller's `rerun` sweeps
-    * caches + GCs before timing; None = the re-run attempt failed and
-    * must not masquerade as a speedup), keeping the min. Sentinel
+    * committed artifact (<=0 = no prior). A cell above the guard gets up
+    * to [[MaxAttempts]] decontaminated re-runs (the caller's `rerun`
+    * sweeps caches + GCs before timing; None = the re-run attempt failed
+    * and must not masquerade as a speedup), keeping the min. Sentinel
     * failures (<0), no-prior, and sub-noise-floor cells pass through.
     * A genuine regression stays slow through every attempt and the
     * returned figure stays above the guard — it still flags downstream.
     *
-    * `minDeltaSec`: the guard engages only when the ABSOLUTE excess
-    * over the prior also clears this floor. Rationale (r19, measured):
-    * a cold min-of-2 is an extreme-value statistic, and on sub-second
-    * cells its session-to-session spread is ±40-60% around the
-    * fresh-JVM median (x_srp_lsh_neardups committed 0.44 s in one
-    * session vs a 0.72-1.18 s fresh-JVM spread the same day), so a
-    * pure ratio test keeps flagging cells whose combined movement is
-    * ~3 s against a 200 s total. A regression that can matter to the
-    * total must ADD seconds, and one that adds >minDelta on a small
-    * cell still trips the ratio test by construction — so the
-    * composite guard keeps full sensitivity where it matters and stops
-    * burning re-runs where it can't.
+    * Why the composite test: a cold min-of-2 is an extreme-value
+    * statistic, and on sub-second cells its session-to-session spread is
+    * ±40-60%, so a pure ratio test keeps flagging cells whose combined
+    * movement is a few seconds of a multi-minute total. A regression that
+    * can matter to the total must ADD seconds, and one that adds more
+    * than [[MinDeltaSec]] on a small cell still trips the ratio test by
+    * construction.
     */
-  def guardCell(measured: Double, prior: Double, ratio: Double,
-                rerun: () => Option[Double],
-                noiseFloorSec: Double = 0.3,
-                minDeltaSec: Double = 0.5,
-                maxAttempts: Int = 2): Double = {
-    if (measured < 0 || prior <= 0 || measured < noiseFloorSec ||
-        measured <= prior * ratio || measured - prior <= minDeltaSec)
-      measured
+  def guardCell(measured: Double, prior: Double,
+                rerun: () => Option[Double]): Double = {
+    def above(t: Double) = t > prior * Ratio && t - prior > MinDeltaSec
+    if (measured < 0 || prior <= 0 || measured < NoiseFloorSec ||
+        !above(measured)) measured
     else {
       var best = measured
       var attempt = 0
-      while (attempt < maxAttempts && best > prior * ratio &&
-             best - prior > minDeltaSec) {
+      while (attempt < MaxAttempts && above(best)) {
         rerun().foreach(rt => best = math.min(best, rt))
         attempt += 1
       }

@@ -3,15 +3,10 @@ package graft.bench
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
-/** The ONE definition of the headline streaming-ingest measurement:
-  * events parquet staged into a private dir → file stream → watermarked
-  * 5-minute windowed aggregation → noop sink, timed over a full replay
-  * from a fresh checkpoint. [[graft.Bench]] (the committed headline) and
-  * `ScaleProbe streamheadline` (the fresh-JVM adjudication probe) both
-  * call THIS, so the probe provably measures exactly what the bench
-  * measures — a copy in either place would silently diverge the two the
-  * next time the window width, watermark, or ts conversion changed, and
-  * with them every re-baselining decision built on the comparison. */
+/** The streaming-ingest measurement of [[graft.Bench]]: events parquet
+  * staged into a private dir → file stream → watermarked 5-minute
+  * windowed aggregation → noop sink, timed over a full replay from a
+  * fresh checkpoint. */
 object StreamIngest {
 
   // One STATIC shutdown hook draining a shared queue of staged dirs

@@ -473,8 +473,8 @@ class AlertsSpec extends SparkTestBase {
     // (HighEndToEndLatency ~ alert_rules.yml:37-46) after TWO consecutive
     // late batches and resets when fresh data resumes.
     import graft.streaming.StreamingPipeline
-    val inDir = java.nio.file.Files.createTempDirectory("graft-late-in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-late-ck").toString
+    val inDir = tempRoot("graft-late-in")
+    val ckpt = tempRoot("graft-late-ck")
     val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
     def writeBatch(name: String, ts: java.time.Instant): Unit =
       java.nio.file.Files.writeString(java.nio.file.Path.of(inDir, name),
@@ -528,7 +528,7 @@ class AlertsSpec extends SparkTestBase {
 
   test("DP ledger: budget gate, idempotent replay, per-dataset isolation") {
     import graft.quality.DpLedger
-    val led = java.nio.file.Files.createTempDirectory("graft-dp-led").toString
+    val led = tempRoot("graft-dp-led")
     val docs = Seq((1L, "en"), (2L, "en"), (3L, "de"), (4L, "fr"), (5L, "en"))
       .toDF("doc_id", "lang")
     def release(id: String, eps: Double, ds: String = "docs") =
@@ -587,8 +587,7 @@ class AlertsSpec extends SparkTestBase {
     "boundary- and null-safe, publicView drops the exact columns") {
     import graft.quality.DpLedger
     val docs = Seq((1L, "en"), (2L, "en"), (3L, "de")).toDF("doc_id", "lang")
-    def fresh() = java.nio.file.Files
-      .createTempDirectory("graft-dp-salt").toString
+    def fresh() = tempRoot("graft-dp-salt")
     // (a) a non-empty secretSalt draws DIFFERENT noise for the same
     // (dataset, releaseId, group) — the unsalted draw is recomputable
     // from public metadata, so a real release must re-key it
@@ -641,7 +640,7 @@ class AlertsSpec extends SparkTestBase {
 
   test("DP ledger survives a mid-swap crash: the backup restores, no spend lost") {
     import graft.quality.DpLedger
-    val led = java.nio.file.Files.createTempDirectory("graft-dp-crash").toString
+    val led = tempRoot("graft-dp-crash")
     val docs = Seq((1L, "en"), (2L, "de")).toDF("doc_id", "lang")
     DpLedger.gatedLaplaceCounts(docs, Seq("lang"), led, "d", "r1", 0.3, 1.0)
       .collect()
@@ -677,7 +676,7 @@ class AlertsSpec extends SparkTestBase {
     "byte-identical (single non-null key); multi-key and null-key " +
     "replays are rejected, new spends record the current scheme") {
     import graft.quality.DpLedger
-    val led = java.nio.file.Files.createTempDirectory("graft-dp-scheme").toString
+    val led = tempRoot("graft-dp-scheme")
     val docs = Seq((1L, "en", "a"), (2L, "de", "b"))
       .toDF("doc_id", "lang", "src")
     // simulate a ledger written BEFORE the seed_scheme column: the same
@@ -738,15 +737,15 @@ class AlertsSpec extends SparkTestBase {
     // batch id, so a checkpoint-lost replay re-publishes byte-identical
     // noised counts and the ε ledger does NOT double-charge
     import graft.quality.DpLedger
-    val inDir = java.nio.file.Files.createTempDirectory("graft-dps-in").toString
-    val led = java.nio.file.Files.createTempDirectory("graft-dps-led").toString
+    val inDir = tempRoot("graft-dps-in")
+    val led = tempRoot("graft-dps-led")
     java.nio.file.Files.writeString(java.nio.file.Path.of(inDir, "b0.json"),
       Seq("""{"k":"a"}""", """{"k":"a"}""", """{"k":"b"}""").mkString("\n"))
     java.nio.file.Files.writeString(java.nio.file.Path.of(inDir, "b1.json"),
       Seq("""{"k":"a"}""", """{"k":"c"}""").mkString("\n"))
     def run(): Map[(Long, String), Double] = {
       val out = scala.collection.mutable.Map.empty[(Long, String), Double]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-dps-ck").toString
+      val ckpt = tempRoot("graft-dps-ck")
       val q = spark.readStream.schema("k STRING")
         .option("maxFilesPerTrigger", 1).json(inDir)
         .writeStream.option("checkpointLocation", ckpt)

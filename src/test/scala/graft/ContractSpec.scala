@@ -105,8 +105,7 @@ class ContractSpec extends SparkTestBase {
           .map { case (m, k, v) => (f"2024-06-15 10:$m%02d:00", s"k$k", v) }
           .toDF("t", "k", "v")
           .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
-        val gold = java.nio.file.Files
-          .createTempDirectory("graft-prop-gold").toString + "/g"
+        val gold = tempRoot("graft-prop-gold") + "/g"
         val (b1, b2) = rows.splitAt(cut)
         if (b1.nonEmpty) StreamingPipeline.mergeGoldBatch(df(b1), gold, 0L,
           "t", Seq("k"), "v", "5 minutes")

@@ -84,7 +84,7 @@ class CurateSpec extends SparkTestBase {
         case _ =>
       }
     }
-    val out = java.nio.file.Files.createTempDirectory("graft-curate")
+    val out = tempRoot("graft-curate")
     val sc = spark.sparkContext
     sc.addSparkListener(l)
     try {
@@ -133,14 +133,13 @@ class CurateSpec extends SparkTestBase {
         .orderBy("id", "chunk_idx").collect().toSeq
     assert(rows(written) === rows(packed))
     GraftSession.sweepCaches(spark)
-    deleteTree(out)
   }
 
   test("Curate.run: three run/write/release rounds leave storage flat") {
     GraftSession.sweepCaches(spark)
     val sc = spark.sparkContext
     val docs = model.Tables.documents(spark, "/root/testdata/sf0.001")
-    val out = java.nio.file.Files.createTempDirectory("graft-curate")
+    val out = tempRoot("graft-curate")
     // storage memory in use: cached blocks plus broadcasts, which the
     // context cleaner drops once a GC finds their plans unreachable
     def used(): Long =
@@ -166,10 +165,8 @@ class CurateSpec extends SparkTestBase {
       res.release()
       assert(cacheIsEmpty, s"round $i left a cache entry or pinned RDD")
     }
-    try {
-      val after = (1 to 3).map { i => round(i); settled() }
-      assert(after.forall(_ <= base), s"storage grew past $base B: $after")
-    } finally deleteTree(out)
+    val after = (1 to 3).map { i => round(i); settled() }
+    assert(after.forall(_ <= base), s"storage grew past $base B: $after")
   }
 
   test("Graph.uncacheUnder: three resident rounds per pinning operator " +

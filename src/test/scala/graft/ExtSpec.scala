@@ -481,7 +481,7 @@ class ExtSpec extends SparkTestBase {
 
   test("ANN index refresh rides the versioned publish: old gen serves until the flip") {
     import graft.warehouse.Versioned
-    val root = java.nio.file.Files.createTempDirectory("graft-veridx").toString
+    val root = tempRoot("graft-veridx")
     val cluster1 = (1 to 5).map(i => (i.toLong, Array(1.0f + i * 0.01f, 0.0f), 0))
     val cluster2 = (6 to 10).map(i => (i.toLong, Array(0.0f, 1.0f + i * 0.01f), 1))
     val df = (cluster1 ++ cluster2).toDF("vec_id", "embedding", "label")
@@ -508,7 +508,7 @@ class ExtSpec extends SparkTestBase {
   }
 
   test("partitioned IVF index: a probe's scan is dynamically pruned to its cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpart").toString
+    val dir = tempRoot("graft-ivfpart")
     val cluster1 = (1 to 5).map(i => (i.toLong, Array(1.0f + i * 0.01f, 0.0f), 0))
     val cluster2 = (6 to 10).map(i => (i.toLong, Array(0.0f, 1.0f + i * 0.01f), 1))
     val df = (cluster1 ++ cluster2).toDF("vec_id", "embedding", "label")
@@ -639,7 +639,7 @@ class ExtSpec extends SparkTestBase {
   }
 
   test("readMediaDir ingests binary files: glob + size pruning, stable ids, decode composes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
+    val dir = java.nio.file.Paths.get(tempRoot("graft-media"))
     java.nio.file.Files.write(dir.resolve("a.img"), "fake image payload A".getBytes)
     java.nio.file.Files.write(dir.resolve("b.img"), "payload B".getBytes)
     java.nio.file.Files.write(dir.resolve("big.img"), ("x" * 4096).getBytes)

@@ -20,7 +20,7 @@ class FormatsSpec extends SparkTestBase {
     val schema = in.schema
     val expected = in.as[(Long, Long, String, Double)].collect().toSet
     Formats.supported.foreach { fmt =>
-      val dir = Files.createTempDirectory(s"graft-fmt-$fmt").toString
+      val dir = tempRoot(s"graft-fmt-$fmt")
       Formats.write(in, dir, fmt)
       val back = Formats.read(spark, dir, fmt, Some(schema))
         .as[(Long, Long, String, Double)].collect().toSet
@@ -29,7 +29,7 @@ class FormatsSpec extends SparkTestBase {
   }
 
   test("row-format reads without a schema are rejected") {
-    val dir = Files.createTempDirectory("graft-fmt-noschema").toString
+    val dir = tempRoot("graft-fmt-noschema")
     Formats.write(sample, dir, "csv")
     intercept[IllegalArgumentException] {
       Formats.read(spark, dir, "csv", None)
@@ -38,7 +38,7 @@ class FormatsSpec extends SparkTestBase {
 
   test("schema evolution: mergeSchema unions old and new file schemas") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-fmt-evolve").toString
+    val dir = tempRoot("graft-fmt-evolve")
     // generation 1: (event_id, value); generation 2 adds quality_flag
     Seq((1L, 10.0), (2L, 20.0)).toDF("event_id", "value")
       .write.parquet(s"$dir/gen=1")
@@ -53,7 +53,7 @@ class FormatsSpec extends SparkTestBase {
 
   test("corrupt files are skipped under ignoreCorruptFiles, fatal without") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-fmt-corrupt").toString + "/data"
+    val dir = tempRoot("graft-fmt-corrupt") + "/data"
     Seq((1L, 10.0), (2L, 20.0)).toDF("event_id", "value")
       .write.parquet(dir)
     // drop a non-parquet file into the table directory
@@ -70,7 +70,7 @@ class FormatsSpec extends SparkTestBase {
   }
 
   test("partitionBy layout prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft-fmt-part").toString
+    val dir = tempRoot("graft-fmt-part")
     Formats.write(sample, dir, "parquet", partitionBy = Seq("event_type"))
     val scan = Formats.read(spark, dir, "parquet")
       .filter(col("event_type") === "click")

@@ -29,10 +29,10 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("T1-T5: streaming file source -> foreachBatch fan-out writes bronze + dead letters once") {
-    val inDir = Files.createTempDirectory("graft-stream-in").toString
-    val bronze = Files.createTempDirectory("graft-bronze").toString + "/data"
-    val dead = Files.createTempDirectory("graft-dead").toString + "/data"
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val inDir = tempRoot("graft-stream-in")
+    val bronze = tempRoot("graft-bronze") + "/data"
+    val dead = tempRoot("graft-dead") + "/data"
+    val ckpt = tempRoot("graft-ckpt")
     Files.writeString(java.nio.file.Path.of(inDir, "batch1.txt"),
       s"$goodJson\n$badJson\n")
 
@@ -55,10 +55,10 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("T1 backfill: AvailableNow trigger drains the backlog and terminates") {
-    val inDir = Files.createTempDirectory("graft-an-in").toString
-    val bronze = Files.createTempDirectory("graft-an-bronze").toString + "/data"
-    val dead = Files.createTempDirectory("graft-an-dead").toString + "/data"
-    val ckpt = Files.createTempDirectory("graft-an-ckpt").toString
+    val inDir = tempRoot("graft-an-in")
+    val bronze = tempRoot("graft-an-bronze") + "/data"
+    val dead = tempRoot("graft-an-dead") + "/data"
+    val ckpt = tempRoot("graft-an-ckpt")
     Files.writeString(java.nio.file.Path.of(inDir, "backlog.txt"),
       Seq.fill(3)(goodJson).mkString("\n"))
     val q = StreamingPipeline.start(
@@ -71,8 +71,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("maxFilesPerTrigger paces backlog drain to bounded micro-batches") {
-    val inDir = Files.createTempDirectory("graft-bp-in").toString
-    val ckpt = Files.createTempDirectory("graft-bp-ckpt").toString
+    val inDir = tempRoot("graft-bp-in")
+    val ckpt = tempRoot("graft-bp-ckpt")
     (1 to 3).foreach { i =>
       Files.writeString(java.nio.file.Path.of(inDir, s"f$i.txt"),
         s"$goodJson\n$goodJson\n")
@@ -92,10 +92,10 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("dedupIngest: cross-batch dups never land twice; restart replays are no-ops") {
-    val inDir = Files.createTempDirectory("graft-dd-in").toString
-    val out = Files.createTempDirectory("graft-dd-out").toString
-    val idx = Files.createTempDirectory("graft-dd-idx").toString
-    val ckpt = Files.createTempDirectory("graft-dd-ckpt").toString
+    val inDir = tempRoot("graft-dd-in")
+    val out = tempRoot("graft-dd-out")
+    val idx = tempRoot("graft-dd-idx")
+    val ckpt = tempRoot("graft-dd-ckpt")
 
     def run(): Unit = {
       val src = spark.readStream
@@ -134,8 +134,8 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("normalizedDedupIngest: case/punct/digit variants of any earlier " +
     "survivor never land") {
-    val out = Files.createTempDirectory("graft-nd-out").toString
-    val idx = Files.createTempDirectory("graft-nd-idx").toString
+    val out = tempRoot("graft-nd-out")
+    val idx = tempRoot("graft-nd-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     // batch 1: doc 11 is a punctuation/case variant of doc 10 → absorbed
     StreamingPipeline.normalizedDedupIngestBatch(
@@ -165,9 +165,9 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("driftMonitorIngest: per-batch PSI series drives driftRules pending→firing; replay no-op") {
     import graft.monitoring.{Alerts, Drift}
-    val inDir = Files.createTempDirectory("graft-drift-in").toString
-    val store = Files.createTempDirectory("graft-drift-store").toString
-    val ckpt = Files.createTempDirectory("graft-drift-ckpt").toString
+    val inDir = tempRoot("graft-drift-in")
+    val store = tempRoot("graft-drift-store")
+    val ckpt = tempRoot("graft-drift-ckpt")
     // reference histogram from the validation slice: uniform over
     // {0, 10, ..., 90}
     val ref = Drift.referenceHistogram(
@@ -228,9 +228,9 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("embeddingDriftMonitorIngest: centroid-cosine series fires embedding_drift; replay no-op") {
     import graft.monitoring.{Alerts, Drift}
-    val inDir = Files.createTempDirectory("graft-edrift-in").toString
-    val store = Files.createTempDirectory("graft-edrift-store").toString
-    val ckpt = Files.createTempDirectory("graft-edrift-ckpt").toString
+    val inDir = tempRoot("graft-edrift-in")
+    val store = tempRoot("graft-edrift-store")
+    val ckpt = tempRoot("graft-edrift-ckpt")
     // reference centroid from the validation corpus: the x direction
     val ref = Drift.referenceCentroid(
       Seq.fill(8)(Array(1.0, 0.0)).toDF("v"), "v")
@@ -281,8 +281,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("spanDedupIngest cuts cross-batch boilerplate at span granularity; replay no-op") {
-    val out = Files.createTempDirectory("graft-span-out").toString
-    val idx = Files.createTempDirectory("graft-span-idx").toString
+    val out = tempRoot("graft-span-out")
+    val idx = tempRoot("graft-span-idx")
     def b(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     // batch 1: nothing duplicated yet — docs publish intact, grams indexed
     StreamingPipeline.spanDedupIngestBatch(
@@ -319,8 +319,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("dedupIngest replay after index-rename/pre-marker crash loses no data") {
-    val out = Files.createTempDirectory("graft-ddc-out").toString
-    val idx = Files.createTempDirectory("graft-ddc-idx").toString
+    val out = tempRoot("graft-ddc-out")
+    val idx = tempRoot("graft-ddc-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
 
     // batch 1 completes normally
@@ -352,8 +352,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("index compaction folds delta files, preserves dedup, and refuses in-flight batches") {
-    val out = Files.createTempDirectory("graft-ci-out").toString
-    val idx = Files.createTempDirectory("graft-ci-idx").toString
+    val out = tempRoot("graft-ci-out")
+    val idx = tempRoot("graft-ci-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
 
     StreamingPipeline.dedupIngestBatch(batch(1L -> "alpha one"), 1L,
@@ -406,8 +406,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("compaction aborts the swap when a delta lands after the quiescence check") {
-    val out = Files.createTempDirectory("graft-race-out").toString
-    val idx = Files.createTempDirectory("graft-race-idx").toString
+    val out = tempRoot("graft-race-out")
+    val idx = tempRoot("graft-race-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     (1L to 3L).foreach { i =>
       StreamingPipeline.dedupIngestBatch(batch(i -> s"doc number $i"), i,
@@ -433,8 +433,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("compaction swap raced by a batch that recreates the data dir: history restored, racer delta folded") {
-    val out = Files.createTempDirectory("graft-fold-out").toString
-    val idx = Files.createTempDirectory("graft-fold-idx").toString
+    val out = tempRoot("graft-fold-out")
+    val idx = tempRoot("graft-fold-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     (1L to 3L).foreach { i =>
       StreamingPipeline.dedupIngestBatch(batch(i -> s"doc number $i"), i,
@@ -443,7 +443,7 @@ class IngestStreamingSpec extends SparkTestBase {
     val before = spark.read.parquet(s"$idx/data").distinct().count()
     // prebuild the racer's delta file (a batch that read an empty index
     // while the real one sat in _preidx, then recreated data/)
-    val racerTmp = Files.createTempDirectory("graft-fold-racer").toString
+    val racerTmp = tempRoot("graft-fold-racer")
     Seq("zz-racer-fingerprint").toDF("fingerprint").coalesce(1)
       .write.mode("overwrite").parquet(racerTmp)
     val racerPart = new java.io.File(racerTmp).listFiles()
@@ -475,8 +475,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("divergent data + _preidx state heals by folding before the next read") {
-    val out = Files.createTempDirectory("graft-heal-out").toString
-    val idx = Files.createTempDirectory("graft-heal-idx").toString
+    val out = tempRoot("graft-heal-out")
+    val idx = tempRoot("graft-heal-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     StreamingPipeline.dedupIngestBatch(batch(1L -> "alpha beta"), 1L,
       "text", "doc_id", out, idx)
@@ -506,8 +506,8 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("heal tolerates committer markers (_SUCCESS) present in both dirs") {
-    val out = Files.createTempDirectory("graft-heal2-out").toString
-    val idx = Files.createTempDirectory("graft-heal2-idx").toString
+    val out = tempRoot("graft-heal2-out")
+    val idx = tempRoot("graft-heal2-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     StreamingPipeline.dedupIngestBatch(batch(1L -> "alpha beta"), 1L,
       "text", "doc_id", out, idx)
@@ -547,8 +547,8 @@ class IngestStreamingSpec extends SparkTestBase {
     // state paths resolve their FileSystem from the path URI (HDFS in
     // production, file:// here) — drive the whole protocol with explicit
     // scheme-qualified paths to pin that no java.io assumption remains
-    val out = "file://" + Files.createTempDirectory("graft-uri-out").toString
-    val idx = "file://" + Files.createTempDirectory("graft-uri-idx").toString
+    val out = "file://" + tempRoot("graft-uri-out")
+    val idx = "file://" + tempRoot("graft-uri-idx")
     def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
     StreamingPipeline.dedupIngestBatch(
       batch(10L -> "alpha beta", 20L -> "gamma delta"),
@@ -567,10 +567,10 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("nearDupIngest: cross-batch near-copies never land; fresh and short docs do") {
-    val inDir = Files.createTempDirectory("graft-nd-in").toString
-    val out = Files.createTempDirectory("graft-nd-out").toString
-    val idx = Files.createTempDirectory("graft-nd-idx").toString
-    val ckpt = Files.createTempDirectory("graft-nd-ckpt").toString
+    val inDir = tempRoot("graft-nd-in")
+    val out = tempRoot("graft-nd-out")
+    val idx = tempRoot("graft-nd-idx")
+    val ckpt = tempRoot("graft-nd-ckpt")
     def words(r: Range, p: String) = r.map(i => s"$p$i").mkString(" ")
 
     def run(): Unit = {
@@ -611,10 +611,10 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("curateIngest: quality gate, cross-batch dedup, and source caps match the batch pipeline") {
-    val inDir = Files.createTempDirectory("graft-cu-in").toString
-    val out = Files.createTempDirectory("graft-cu-out").toString
-    val idx = Files.createTempDirectory("graft-cu-idx").toString
-    val ckpt = Files.createTempDirectory("graft-cu-ckpt").toString
+    val inDir = tempRoot("graft-cu-in")
+    val out = tempRoot("graft-cu-out")
+    val idx = tempRoot("graft-cu-idx")
+    val ckpt = tempRoot("graft-cu-ckpt")
     val counts = new StreamingPipeline.CurateCounts
 
     // long stopword-rich sentences pass the 0.35 quality gate; "x" fails
@@ -687,11 +687,11 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("curateFullIngest: both indices live across batches; counts match the batch capstone") {
-    val inDir = Files.createTempDirectory("graft-cf-in").toString
-    val out = Files.createTempDirectory("graft-cf-out").toString
-    val fpIdx = Files.createTempDirectory("graft-cf-fp").toString
-    val sigIdx = Files.createTempDirectory("graft-cf-sig").toString
-    val ckpt = Files.createTempDirectory("graft-cf-ckpt").toString
+    val inDir = tempRoot("graft-cf-in")
+    val out = tempRoot("graft-cf-out")
+    val fpIdx = tempRoot("graft-cf-fp")
+    val sigIdx = tempRoot("graft-cf-sig")
+    val ckpt = tempRoot("graft-cf-ckpt")
     val counts = new StreamingPipeline.CurateCounts
 
     def words(r: Range, p: String) = r.map(i => s"$p$i").mkString(" ")
@@ -754,8 +754,8 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("ivfIngest: the stored ANN index answers top-k; replays are no-ops") {
     import graft.ext.Similarity
-    val out = Files.createTempDirectory("graft-ivf-out").toString
-    val idx = Files.createTempDirectory("graft-ivf-idx").toString
+    val out = tempRoot("graft-ivf-out")
+    val idx = tempRoot("graft-ivf-idx")
     val cluster1 = (1 to 5).map(i => (i.toLong, Array(1.0f + i * 0.01f, 0.0f), "a"))
     val cluster2 = (6 to 10).map(i => (i.toLong, Array(0.0f, 1.0f + i * 0.01f), "b"))
     val all = (cluster1 ++ cluster2).toDF("vec_id", "embedding", "label")
@@ -784,7 +784,7 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("versionedStatsIngest: atomic snapshots, replay no-op, orphan gen invisible") {
     import graft.warehouse.Versioned
-    val root = Files.createTempDirectory("graft-vstats").toString
+    val root = tempRoot("graft-vstats")
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     StreamingPipeline.versionedStatsBatch(
@@ -817,8 +817,8 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("modelGatedIngest: classifier gates the stream; index kills cross-batch dups") {
     import graft.ext.TextAnalysis
-    val out = Files.createTempDirectory("graft-mg-out").toString
-    val idx = Files.createTempDirectory("graft-mg-idx").toString
+    val out = tempRoot("graft-mg-out")
+    val idx = tempRoot("graft-mg-idx")
     val seed = Seq(
       (1L, "clean prose reads well tonight", 1),
       (2L, "clean prose flows well today", 1),
@@ -856,8 +856,8 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("pqIngest: incrementally stored codes equal the batch build; replay no-op") {
     import graft.ext.Similarity
-    val out = Files.createTempDirectory("graft-pq-out").toString
-    val idx = Files.createTempDirectory("graft-pq-idx").toString
+    val out = tempRoot("graft-pq-out")
+    val idx = tempRoot("graft-pq-idx")
     val cluster1 = (1 to 5).map(i => (i.toLong, Array(1.0f + i * 0.25f, 0.25f), 0))
     val cluster2 = (6 to 10).map(i => (i.toLong, Array(0.25f, 1.0f + i * 0.25f), 1))
     val all = (cluster1 ++ cluster2).toDF("vec_id", "embedding", "label")
@@ -887,8 +887,8 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("semanticDedupIngest: semantic dups never land across batches; replay no-op") {
     import graft.ext.Similarity
-    val out = Files.createTempDirectory("graft-sd-out").toString
-    val idx = Files.createTempDirectory("graft-sd-idx").toString
+    val out = tempRoot("graft-sd-out")
+    val idx = tempRoot("graft-sd-idx")
     val b1 = Seq((1L, Array(1.0f, 0.0f), "a"), (2L, Array(0.0f, 1.0f), "b"))
       .toDF("vec_id", "embedding", "label")
     val cents = Similarity.centroids(b1, "label", 2)
@@ -923,9 +923,9 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("multi-index compaction folds both curation indices to one generation") {
-    val out = Files.createTempDirectory("graft-mc-out").toString
-    val fpIdx = Files.createTempDirectory("graft-mc-fp").toString
-    val sigIdx = Files.createTempDirectory("graft-mc-sig").toString
+    val out = tempRoot("graft-mc-out")
+    val fpIdx = tempRoot("graft-mc-fp")
+    val sigIdx = tempRoot("graft-mc-sig")
     val counts = new StreamingPipeline.CurateCounts
     def words(r: Range, p: String) = r.map(i => s"$p$i").mkString(" ")
     def runBatch(id: Long, rows: (Long, String)*): Unit =
@@ -978,7 +978,7 @@ class IngestStreamingSpec extends SparkTestBase {
     def realDocs = Seq((1L, "the quick brown fox jumps over the dog", "a"),
       (2L, "a completely different second document text", "a"))
       .toDF("doc_id", "text", "source")
-    val root = Files.createTempDirectory("graft-empty").toString
+    val root = tempRoot("graft-empty")
 
     StreamingPipeline.normalizedDedupIngestBatch(emptyDocs, 0L, "text",
       "doc_id", s"$root/nd-out", s"$root/nd-idx")
@@ -1037,7 +1037,7 @@ class IngestStreamingSpec extends SparkTestBase {
   }
 
   test("S7/S8: CSV replay source round-trips through producer-shaped JSON") {
-    val csvDir = Files.createTempDirectory("graft-csv").toString
+    val csvDir = tempRoot("graft-csv")
     Files.writeString(java.nio.file.Path.of(csvDir, "replay.csv"),
       "sensor_id,sensor_type,timestamp,value,unit,location\n" +
         "sensor-001,temperature,2024-06-15T10:00:00+00:00,22.5,celsius,floor-1-zone-A\n" +
@@ -1059,10 +1059,10 @@ class IngestStreamingSpec extends SparkTestBase {
   test("ingest stamp: one stamp per split call, no recompile per batch, " +
     "filters on the valid frame still push down") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val inDir = Files.createTempDirectory("graft-stamp-in").toString
+    val inDir = tempRoot("graft-stamp-in")
     Files.writeString(java.nio.file.Path.of(inDir, "b.txt"),
       s"$goodJson\n$badJson\n")
-    val out = Files.createTempDirectory("graft-stamp-out").toString
+    val out = tempRoot("graft-stamp-out")
     def batch(i: Int): JsonIngest.ParseResult = {
       val res = JsonIngest.parseAndSplit(spark.read.text(inDir), "value",
         Schemas.sensorSchema)
@@ -1090,7 +1090,7 @@ class IngestStreamingSpec extends SparkTestBase {
 
   test("ingest stamp: a streaming frame is refused (one stamp per call " +
     "would freeze every micro-batch's ingestion_time)") {
-    val inDir = Files.createTempDirectory("graft-stamp-stream").toString
+    val inDir = tempRoot("graft-stamp-stream")
     intercept[IllegalArgumentException] {
       JsonIngest.parseAndSplit(spark.readStream.text(inDir), "value",
         Schemas.sensorSchema)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.model.Tables
@@ -110,7 +109,7 @@ class LayoutBloomSpec extends SparkTestBase {
   }
 
   test("zorderWrite yields non-overlapping per-file z-ranges") {
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = tempRoot("graft-zorder")
     val ev = Tables.events(spark, sf)
     Layout.zorderWrite(ev, col("user_id"), floor(col("value")).cast("long"),
       bits = 8, numFiles = 8, path = dir)
@@ -144,9 +143,9 @@ class LayoutBloomSpec extends SparkTestBase {
       (col("id") % 128).as("x"),
       floor(col("id") / 128).cast("long").as("y"),
       col("id").as("payload"))
-    val zdir = Files.createTempDirectory("graft-zskip").toString + "/t"
+    val zdir = tempRoot("graft-zskip") + "/t"
     Layout.zorderWrite(df, col("x"), col("y"), bits = 7, numFiles = 32, zdir)
-    val ndir = Files.createTempDirectory("graft-nskip").toString + "/t"
+    val ndir = tempRoot("graft-nskip") + "/t"
     df.repartitionByRange(32, col("y")).sortWithinPartitions("y")
       .write.mode("overwrite").parquet(ndir)
 

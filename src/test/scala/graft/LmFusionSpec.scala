@@ -189,7 +189,7 @@ class LmFusionSpec extends SparkTestBase {
 
   test("streaming DSIR counts: folded batches ≡ batch recompute; replay no-op") {
     import graft.streaming.StreamingPipeline
-    val dir = java.nio.file.Files.createTempDirectory("dsirstate").toString
+    val dir = tempRoot("dsirstate")
     val b1 = Seq((0L, "alpha beta gamma", "en"), (1L, "zork quux blarg", "de"))
       .toDF("doc_id", "text", "lang")
     val b2 = Seq((2L, "alpha gamma delta", "en"), (3L, "alpha beta zork", "de"))
@@ -214,7 +214,7 @@ class LmFusionSpec extends SparkTestBase {
 
   test("streaming KN counts: model view over folded batches ≡ batch training, score-identical") {
     import graft.streaming.StreamingPipeline
-    val dir = java.nio.file.Files.createTempDirectory("knstate").toString
+    val dir = tempRoot("knstate")
     val b1 = Seq((0L, "the cat sat on the mat"), (1L, "the dog ran"))
       .toDF("doc_id", "text")
     val b2 = Seq((2L, "the cat ate the fish"), (3L, "a dog sat"))
@@ -249,7 +249,7 @@ class LmFusionSpec extends SparkTestBase {
 
   test("streaming robust-outlier baseline: IQR view over folded sketches flags the plant") {
     import graft.streaming.StreamingPipeline
-    val dir = java.nio.file.Files.createTempDirectory("rzstate").toString
+    val dir = tempRoot("rzstate")
     // history: type A tight around 10 (1..19 by 0.5 spread), folded in
     // two batches; uncompressed GK state = exact order statistics
     val b1 = (0 until 50).map(i => ("A", 9.0 + (i % 11) * 0.2)).toDF("k", "v")

@@ -119,7 +119,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("streaming windowed agg with watermark emits finalized windows") {
-    val inDir = Files.createTempDirectory("graft-swin").toString
+    val inDir = tempRoot("graft-swin")
     def writeBatch(name: String, lines: Seq[String]): Unit =
       Files.writeString(java.nio.file.Path.of(inDir, name), lines.mkString("\n"))
     // JSON lines with event time + key + value
@@ -151,7 +151,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("T9: MetricsListener observes progress of a running query") {
-    val inDir = Files.createTempDirectory("graft-listen").toString
+    val inDir = tempRoot("graft-listen")
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"),
       """{"ts":"2024-06-15 10:00:10","k":"a","v":1.0}""")
     val listener = new StreamingPipeline.MetricsListener
@@ -171,7 +171,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("streaming dedup within watermark keeps one row per key") {
-    val inDir = Files.createTempDirectory("graft-sdedup").toString
+    val inDir = tempRoot("graft-sdedup")
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), Seq(
       """{"ts":"2024-06-15 10:00:10","k":"a","v":1.0}""",
       """{"ts":"2024-06-15 10:00:11","k":"a","v":2.0}""",
@@ -185,7 +185,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("streaming session windows merge events within the gap") {
-    val inDir = Files.createTempDirectory("graft-sesswin").toString
+    val inDir = tempRoot("graft-sesswin")
     // two bursts for key a separated by > 5 min, one event for key b
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), Seq(
       """{"ts":"2024-06-15 10:00:00","k":"a","v":1.0}""",
@@ -215,7 +215,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("flatMapGroupsWithState sessionizer closes on in-batch gaps and timeouts") {
-    val inDir = Files.createTempDirectory("graft-fms").toString
+    val inDir = tempRoot("graft-fms")
     // key a: burst of 2, then (same batch) an event past the 5-min gap —
     // the first session must close immediately from the arriving data
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), Seq(
@@ -243,7 +243,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("mapGroupsWithState carries running per-key stats across batches") {
-    val inDir = Files.createTempDirectory("graft-runstate").toString
+    val inDir = tempRoot("graft-runstate")
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), Seq(
       """{"k":"a","v":1.0}""", """{"k":"a","v":5.0}""",
       """{"k":"b","v":2.0}""").mkString("\n"))
@@ -266,7 +266,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("transformWithState matches mapGroupsWithState running stats (RocksDB store)") {
-    val inDir = Files.createTempDirectory("graft-tws").toString
+    val inDir = tempRoot("graft-tws")
     Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), Seq(
       """{"k":"a","v":1.0}""", """{"k":"a","v":5.0}""",
       """{"k":"b","v":2.0}""").mkString("\n"))
@@ -301,8 +301,8 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("stream-stream join matches within the time bound and key") {
-    val lDir = Files.createTempDirectory("graft-ssj-l").toString
-    val rDir = Files.createTempDirectory("graft-ssj-r").toString
+    val lDir = tempRoot("graft-ssj-l")
+    val rDir = tempRoot("graft-ssj-r")
     Files.writeString(java.nio.file.Path.of(lDir, "l1.json"), Seq(
       """{"k":"a","lt":"2024-06-15 10:00:00","lv":1.0}""",
       """{"k":"b","lt":"2024-06-15 10:00:00","lv":2.0}""").mkString("\n"))

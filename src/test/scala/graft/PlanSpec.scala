@@ -386,4 +386,58 @@ class PlanSpec extends SparkTestBase {
       assert(jobsOf { graft.ext.Par.fanOut(agg, 1); () } >= 1)
     } finally { pinned.unpersist(); () }
   }
+
+  test("whole registry: the timed noop write keeps every cell's plan nodes") {
+    // Every cell runs through bench.Measure, the bench's one timed
+    // action. The write's optimized logical plan (before AQE, so input
+    // size cannot change it) must keep the Window, Aggregate, Generate
+    // and Join nodes of the cell's own optimized plan. count() fails
+    // this: Catalyst prunes unreferenced columns and the nodes computing
+    // them; the cells that lose nodes that way are reported, not asserted.
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def shape(p: LogicalPlan): Map[String, Int] =
+      p.collectWithSubqueries {
+        case _: Window => "Window"
+        case _: Aggregate => "Aggregate"
+        case _: Generate => "Generate"
+        case _: Join => "Join"
+      }.groupMapReduce(identity)(_ => 1)(_ + _)
+    val written =
+      new java.util.concurrent.atomic.AtomicReference[LogicalPlan](null)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        qe.optimizedPlan match {
+          case w: V2WriteCommand => written.set(w.query)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    val mismatched = scala.collection.mutable.ListBuffer.empty[String]
+    val lostUnderCount = scala.collection.mutable.ListBuffer.empty[String]
+    spark.listenerManager.register(listener)
+    try SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      written.set(null)
+      val df = SparkEntry.queries(name)(spark, dir)
+      val own = shape(df.queryExecution.optimizedPlan)
+      // count() plans groupBy().count(): its own Aggregate is the +1
+      val counted = shape(df.groupBy().count().queryExecution.optimizedPlan)
+        .updatedWith("Aggregate")(_.map(_ - 1).filter(_ > 0))
+      if (counted != own) lostUnderCount += name
+      bench.Measure.seconds(df)
+      // listener delivery is async
+      val deadline = System.currentTimeMillis() + 30000
+      while (written.get() == null && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val got = Option(written.get()).map(shape)
+      if (!got.contains(own)) mismatched += s"$name: own $own, written $got"
+      GraftSession.sweepCaches(spark)
+    } finally spark.listenerManager.unregister(listener)
+    info(s"${lostUnderCount.size} of ${SparkEntry.queries.size} cells lose " +
+      s"nodes under count(): ${lostUnderCount.mkString(", ")}")
+    assert(mismatched.isEmpty, mismatched.mkString("\n"))
+  }
 }

@@ -103,8 +103,8 @@ class RangeJoinSpec extends SparkTestBase {
     // against the static side), so it must run unchanged inside a
     // streaming plan — the maintenance-window / campaign-period
     // enrichment shape at ingest time
-    val inDir = java.nio.file.Files.createTempDirectory("graft-rj-in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rj-ck").toString
+    val inDir = tempRoot("graft-rj-in")
+    val ckpt = tempRoot("graft-rj-ck")
     java.nio.file.Files.writeString(java.nio.file.Path.of(inDir, "b0.json"),
       Seq(-12L, 0L, 3L, 9L, 10L, 42L, 100L)
         .map(t => s"""{"t":$t}""").mkString("", "\n", "\n"))

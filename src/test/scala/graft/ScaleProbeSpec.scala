@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleProbeSpec extends AnyFunSuite {
 
   test("an unknown or retired mode is rejected with the usage line") {
-    Seq("nosuchmode", "bpebatch", "profiles", "chain").foreach { mode =>
+    Seq("nosuchmode", "bpebatch", "profiles", "chain", "chainheadline",
+      "streamheadline").foreach { mode =>
       ScaleProbe.select(Array(mode, "/d", "1")) match {
         case Left(msg) =>
           assert(msg.contains(s"'$mode'"), msg)
@@ -15,15 +16,11 @@ class ScaleProbeSpec extends AnyFunSuite {
         case Right(_) => fail(s"$mode must not dispatch")
       }
     }
-    Seq(ScaleProbe.CellProbe, ScaleProbe.ChainHeadline,
-      ScaleProbe.StreamHeadline).foreach { m =>
-      assert(ScaleProbe.Usage.contains(m))
-    }
+    assert(ScaleProbe.Usage.contains(ScaleProbe.CellProbe))
   }
 
   test("the kept modes, a row count, and no argument all dispatch") {
     Seq(Array(ScaleProbe.CellProbe, "w1_dedup_latest"),
-      Array(ScaleProbe.ChainHeadline), Array(ScaleProbe.StreamHeadline),
       Array("1000000", "/tmp/out"), Array.empty[String]).foreach { args =>
       assert(ScaleProbe.select(args).isRight, args.mkString(" "))
     }

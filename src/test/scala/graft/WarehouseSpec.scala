@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.warehouse.{Versioned, Warehouse}
@@ -12,7 +11,7 @@ class WarehouseSpec extends SparkTestBase {
 
   test("versioned publish: atomic flip, time travel, rollback, crash-window heal, vacuum") {
     import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft-ver").toString
+    val root = tempRoot("graft-ver")
     val v1 = Versioned.publish(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
     val v2 = Versioned.publish(Seq((1L, "a2"), (3L, "c")).toDF("k", "v"), root)
     assert((v1, v2) === ((1L, 2L)))
@@ -46,7 +45,7 @@ class WarehouseSpec extends SparkTestBase {
 
   test("versioned flip: a reader's heal racing the writer's own rename is success for both") {
     import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft-ver-race").toString
+    val root = tempRoot("graft-ver-race")
     Versioned.publish(Seq((1L, "a")).toDF("k", "v"), root)
     Versioned.publish(Seq((2L, "b")).toDF("k", "v"), root)
     // interleave: the writer flips to gen=1 and, in the window between
@@ -139,7 +138,7 @@ class WarehouseSpec extends SparkTestBase {
   }
 
   test("L1 idempotent load replaces only the partitions present in the batch") {
-    val path = Files.createTempDirectory("graft-warehouse").toString + "/fact"
+    val path = tempRoot("graft-warehouse") + "/fact"
     val batch1 = Seq(("A", 1), ("A", 2), ("B", 10)).toDF("part", "v")
     Warehouse.idempotentPartitionLoad(batch1, path, Seq("part"))
     val batch2 = Seq(("B", 99)).toDF("part", "v") // re-run window for B only
@@ -153,7 +152,7 @@ class WarehouseSpec extends SparkTestBase {
   test("L1 JDBC variant: delete-window + append round trip matches parquet-native load") {
     // in-process Derby stands in for the warehouse endpoint — same
     // delete-window + distributed-append contract as a Redshift/Postgres URL
-    val dbDir = Files.createTempDirectory("graft-derby").toString
+    val dbDir = tempRoot("graft-derby")
     val url = s"jdbc:derby:$dbDir/wh;create=true"
     def ts(s: String) = Timestamp.valueOf(s)
     val w0 = ts("2024-01-01 00:00:00"); val w1 = ts("2024-01-02 00:00:00")
@@ -170,7 +169,7 @@ class WarehouseSpec extends SparkTestBase {
     val back = Warehouse.readJdbc(spark, url, "fact_events")
     assert(back.count() === 2) // idempotent, window-scoped
     // matches the parquet-native loader on the same batch/window
-    val path = Files.createTempDirectory("graft-wh-pq").toString + "/fact"
+    val path = tempRoot("graft-wh-pq") + "/fact"
     Warehouse.idempotentPartitionLoad(
       batch.filter($"ts" >= w0 && $"ts" < w1).withColumn("d", to_date($"ts")),
       path, Seq("d"))
@@ -192,7 +191,7 @@ class WarehouseSpec extends SparkTestBase {
     // delete-window contract must absorb it. Inject the crash with
     // raise_error on one row so one executor connection dies mid-write
     // while others may have already committed.
-    val dbDir = Files.createTempDirectory("graft-derby-fi").toString
+    val dbDir = tempRoot("graft-derby-fi")
     val url = s"jdbc:derby:$dbDir/wh;create=true"
     def ts(s: String) = Timestamp.valueOf(s)
     val w0 = ts("2024-01-01 00:00:00"); val w1 = ts("2024-01-02 00:00:00")
@@ -222,7 +221,7 @@ class WarehouseSpec extends SparkTestBase {
     assert(back.count() === 4, "no loss, and no dup of partially-committed rows")
     assert(back.select("event_id").distinct().count() === 4)
     // value-level equality with the parquet-native loader on the same batch
-    val path = Files.createTempDirectory("graft-wh-fi-pq").toString + "/fact"
+    val path = tempRoot("graft-wh-fi-pq") + "/fact"
     Warehouse.idempotentPartitionLoad(
       batch.withColumn("d", to_date($"ts")), path, Seq("d"))
     val key = (df: org.apache.spark.sql.DataFrame) =>
@@ -231,7 +230,7 @@ class WarehouseSpec extends SparkTestBase {
   }
 
   test("compaction collapses a many-file table preserving every row") {
-    val path = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val path = tempRoot("graft-compact") + "/t"
     // simulate streaming-ingest fragmentation: 12 tiny appends
     (1 to 12).foreach { i =>
       Seq((i, s"p${i % 2}")).toDF("v", "part")
