@@ -2255,7 +2255,7 @@ object SparkEntry {
 
     // X-ivf-indexed: IVF top-k answered from the STORED index table
     // (Similarity.assignCells — the persistent ANN index the streaming
-    // ivfIngest maintains) instead of re-assigning the corpus: queries
+    // ivfIngestBatch maintains) instead of re-assigning the corpus: queries
     // probe their 2 nearest cells, the probe equi-joins the index on
     // cell. Assignment is stateless, so the indexed answer must equal
     // the direct ivfTopK recompute (SimilaritySpec pins that parity;
@@ -6247,13 +6247,16 @@ object SparkEntry {
              |             * 2.0 * LN(1.0 - 2.0 * ABS(uu - 0.5)) + 1e-9, 4) AS n_dp
              |FROM u ORDER BY lang""".stripMargin),
       (s, dir) => {
+        // the spend lands eagerly and the returned frame never reads the
+        // ledger, so the per-run ledger goes as soon as the call returns
         val ledger = java.nio.file.Files
-          .createTempDirectory("graft-dp-ledger").toString
-        graft.quality.DpLedger.gatedLaplaceCounts(
-            Tables.documents(s, dir), Seq("lang"), ledger,
+          .createTempDirectory("graft-dp-ledger").toFile
+        try graft.quality.DpLedger.gatedLaplaceCounts(
+            Tables.documents(s, dir), Seq("lang"), ledger.toString,
             dataset = "docs", releaseId = "r1", epsilon = 0.5,
             totalBudget = 1.0)
           .orderBy("lang")
+        finally org.apache.commons.io.FileUtils.deleteQuietly(ledger)
       }),
 
     // Q-dp-sums: the SUM form of the gated release — per-row
@@ -6274,15 +6277,17 @@ object SparkEntry {
              |             * 1000.0 * LN(1.0 - 2.0 * ABS(uu - 0.5)) + 1e-9, 4) AS sum_dp
              |FROM u ORDER BY lang""".stripMargin),
       (s, dir) => {
+        // eager spend, ledger-free frame: see q_dp_gated_release
         val ledger = java.nio.file.Files
-          .createTempDirectory("graft-dp-ledger-s").toString
-        graft.quality.DpLedger.gatedLaplaceSums(
+          .createTempDirectory("graft-dp-ledger-s").toFile
+        try graft.quality.DpLedger.gatedLaplaceSums(
             Tables.documents(s, dir)
               .withColumn("tl", length(col("text"))),
-            Seq("lang"), "tl", clip = 500.0, ledger,
+            Seq("lang"), "tl", clip = 500.0, ledger.toString,
             dataset = "docs", releaseId = "s1", epsilon = 0.5,
             totalBudget = 1.0)
           .orderBy("lang")
+        finally org.apache.commons.io.FileUtils.deleteQuietly(ledger)
       }),
 
     // X-negsamp: word2vec-style negative-sampling table — 50 vocabulary

@@ -237,7 +237,7 @@ object Sampling {
   /** The scored narrow projection [[tokenBudgetSelect]] ranks on:
     * (idCol, tok_n, _rqi) with _rqi the exact 4-dp quality integer.
     * Exposed so the streaming twin ([[graft.streaming.StreamingPipeline]]
-    * tokenBudgetIngest) can score each document ONCE at arrival and fold
+    * tokenBudgetIngestBatch) can score each document ONCE at arrival and fold
     * the projection into its index — the selection then replays from the
     * index without ever re-reading document text. */
   def tokenBudgetScore(docs: DataFrame, textCol: String,

@@ -591,7 +591,7 @@ object Similarity {
     * table is written partitioned on `cell`
     * ([[writeIvfIndexPartitioned]]) so a probe's scan dynamically prunes
     * to the probed cells' directories; the streaming ingest
-    * ([[graft.streaming.StreamingPipeline.ivfIngest]]) appends one delta
+    * ([[graft.streaming.StreamingPipeline.ivfIngestBatch]]) appends one delta
     * of these rows per micro-batch. Assignment is stateless per vector,
     * so incrementally-built and batch-built indexes are row-identical. */
   def assignCells(vectors: DataFrame, cents: DataFrame,

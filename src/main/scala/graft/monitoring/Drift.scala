@@ -147,7 +147,7 @@ object Drift {
 
   /** One-row (cv: array<double>, n) centroid of a vector column — the
     * stored reference for continuous embedding-drift monitoring
-    * ([[graft.streaming.StreamingPipeline.embeddingDriftMonitorIngest]]):
+    * ([[graft.streaming.StreamingPipeline.embeddingDriftMonitorBatch]]):
     * computed once at validation time, broadcast-sized forever after.
     * Same narrow shape as [[embeddingDrift]]: posexplode to (dim, x)
     * rows, one hash aggregate to per-dim means, reassembly over

@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The set of micro-batch ids already merged into a state store, kept as
   * sorted, disjoint, non-adjacent closed ranges. Spark batch ids grow by
@@ -11,22 +11,15 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * ("0..3599") however many batches it has merged.
   *
   * On disk it is ONE file, `_merged/ledger`, inside the store's data dir
-  * (underscore-prefixed, so parquet readers skip it). Older stores kept
-  * one empty marker file per merged batch (`_merged/<id>`); [[load]]
-  * still reads those, and the next merge folds them into the ledger.
-  *
-  * `stored` is true when [[load]] found a ledger file, i.e. the store was
-  * written by a build that keeps one — false for a new store or one still
-  * in the legacy marker layout. */
-private[graft] final case class BatchLedger(ranges: Vector[(Long, Long)],
-                                            stored: Boolean = false) {
+  * (underscore-prefixed, so parquet readers skip it). */
+private[graft] final case class BatchLedger(ranges: Vector[(Long, Long)]) {
 
   def contains(id: Long): Boolean =
     ranges.exists { case (lo, hi) => lo <= id && id <= hi }
 
   def +(id: Long): BatchLedger =
     if (contains(id)) this
-    else copy(ranges = BatchLedger.coalesce(ranges :+ (id -> id)))
+    else BatchLedger(BatchLedger.coalesce(ranges :+ (id -> id)))
 
   /** "a..b" per range, "a" for a single id, comma-separated. */
   def encode: String = ranges.map { case (lo, hi) =>
@@ -60,23 +53,24 @@ private[graft] object BatchLedger {
   private def file(dataDir: Path): Path =
     new Path(new Path(dataDir, Dir), FileName)
 
-  /** The ledger stored in `dataDir`, plus any legacy per-batch marker
-    * files beside it. One directory listing and at most one small read,
-    * whatever the number of merged batches. */
-  def load(fs: FileSystem, dataDir: Path): BatchLedger = {
-    val entries =
-      try fs.listStatus(new Path(dataDir, Dir))
-      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    entries.foldLeft(empty) { (acc, st) =>
-      val name = st.getPath.getName
-      if (name == FileName) {
-        val in = fs.open(st.getPath)
-        val read = try decode(new String(in.readAllBytes(), UTF_8))
-          finally in.close()
-        BatchLedger(coalesce(acc.ranges ++ read.ranges), stored = true)
-      } else name.toLongOption.fold(acc)(acc + _)
+  /** The ledger stored in `dataDir`: one small read, whatever the number
+    * of merged batches, and [[empty]] for a new store. A data dir that
+    * holds parquet files but no ledger was written by hand or by a build
+    * that kept no ledger; an empty ledger would re-merge every replayed
+    * batch into it, so it fails loudly instead. */
+  def load(fs: FileSystem, dataDir: Path): BatchLedger =
+    try {
+      val in = fs.open(file(dataDir))
+      try decode(new String(in.readAllBytes(), UTF_8)) finally in.close()
+    } catch { case _: FileNotFoundException =>
+      val unledgered = fs.exists(dataDir) && fs.listStatus(dataDir)
+        .exists(_.getPath.getName.endsWith(".parquet"))
+      if (unledgered) throw new IllegalStateException(
+        s"state store ${dataDir.getParent}: $dataDir holds parquet files " +
+          s"but no batch ledger ($Dir/$FileName), so which batches it " +
+          "already merged is unknown; rebuild the store")
+      empty
     }
-  }
 
   private def coalesce(rs: Vector[(Long, Long)]): Vector[(Long, Long)] =
     rs.sortBy(_._1).foldLeft(Vector.empty[(Long, Long)]) {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.Row
 
@@ -32,9 +32,7 @@ import graft.ingest.JsonIngest
   */
 object StreamingPipeline {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** The hash domain [[cmsFrequency]] sketches are built over, versioned
+  /** The hash domain [[cmsFrequencyBatch]] sketches are built over, versioned
     * into every store as the `cms_key_domain` column so a merge can't
     * silently mix registers built under a different key encoding. */
   val CmsKeyDomain = "string"
@@ -158,7 +156,7 @@ object StreamingPipeline {
       .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
         min("min_v").as("min_v"), max("max_v").as("max_v"))
     lazy val fresh = fold(rows)
-    mergeSwapState(batch.sparkSession, goldPath, batchId, Some(fresh.schema)) {
+    mergeSwapState(batch.sparkSession, goldPath, batchId, fresh.schema) {
       case Some(state) => fold(state.unionByName(rows))
       case None => fresh
     }
@@ -213,7 +211,7 @@ object StreamingPipeline {
   }
 
   /** Crash-safe merge-and-swap shared by the small per-group STATE tables
-    * ([[mergeGoldBatch]] aggregates, [[sketchDistinct]] registers, ...):
+    * ([[mergeGoldBatch]] aggregates, [[sketchDistinctBatch]] registers, ...):
     * read the current state if any, apply `merge`, stage the result next
     * to the data dir together with the store's [[BatchLedger]] plus this
     * batch, and swap via rename-aside.
@@ -228,18 +226,13 @@ object StreamingPipeline {
     * pre-crash history. The ledger is one file however many batches were
     * merged, so a merge does a fixed number of file operations.
     *
-    * `stateSchema`: when the state is the merge's own output, the caller
-    * passes that output's schema; the state is then read with it (no
-    * footer-inference job per merge) and every merge is written in its
-    * types. It is evaluated only after the replay check, so a caller may
-    * derive it from a lazily built batch partial. Stores that must detect
-    * an older on-disk layout from the inferred schema pass None. A store
-    * without a ledger file was written by an older build, whose types may
-    * differ (its gold merge stored an integer column's sum as a double),
-    * so that one merge infers. */
+    * `stateSchema` is the schema of the merge's output, which is also the
+    * stored state's: the state is read with it (no footer-inference job
+    * per merge) and every merge is written in its types. It is evaluated
+    * only after the replay check, so a caller may derive it from a lazily
+    * built batch partial. */
   private def mergeSwapState(spark: SparkSession, storePath: String,
-                             batchId: Long,
-                             stateSchema: => Option[StructType] = None)
+                             batchId: Long, stateSchema: => StructType)
       (merge: Option[DataFrame] => DataFrame): Unit = {
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
@@ -249,18 +242,15 @@ object StreamingPipeline {
     val pinned = stateSchema
     val existing =
       if (!fs.exists(dataDir)) None
-      else Some(pinned.filter(_ => merged.stored)
-        .fold(spark.read)(spark.read.schema).parquet(dataDir.toString))
+      else Some(spark.read.schema(pinned).parquet(dataDir.toString))
     // written in the pinned types, so the next pinned read matches the
     // files (a decimal sum widens by 10 digits per aggregate otherwise)
     val out = merge(existing)
-    val typed = pinned.fold(out) { s =>
-      out.withColumns(out.schema.fields.collect {
-        case f if !DataType.equalsStructurally(f.dataType,
-            s(f.name).dataType, ignoreNullability = true) =>
-          f.name -> out.col(s"`${f.name}`").cast(s(f.name).dataType)
-      }.toMap)
-    }
+    val typed = out.withColumns(out.schema.fields.collect {
+      case f if !DataType.equalsStructurally(f.dataType,
+          pinned(f.name).dataType, ignoreNullability = true) =>
+        f.name -> out.col(s"`${f.name}`").cast(pinned(f.name).dataType)
+    }.toMap)
     // stage-and-swap: the merge plan reads dataDir, so materialize it
     // next door before replacing; the ledger goes in BEFORE the swap
     val tmp = new Path(s"$storePath/_stage")
@@ -292,24 +282,13 @@ object StreamingPipeline {
     * registers instead of rescanning events; exactly-once via the same
     * ledger+swap as [[mergeGoldBatch]]. Read the estimate with
     * `hll_sketch_estimate(sk)` over the stored table. */
-  def sketchDistinct(stream: DataFrame, keys: Seq[String], valueCol: String,
-                     storePath: String, ckpt: String,
-                     lgK: Int = 12): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sketchDistinctBatch(batch, id, keys, valueCol, storePath, lgK)
-      }
-      .start()
-
-  /** The per-batch body of [[sketchDistinct]]. */
   def sketchDistinctBatch(batch: DataFrame, id: Long, keys: Seq[String],
                           valueCol: String, storePath: String,
-                          lgK: Int): Unit = {
+                          lgK: Int = 12): Unit = {
     val kcols = keys.map(col)
     lazy val partial = batch.groupBy(kcols: _*)
       .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sk"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         // union-merge registers: groups absent from one side pass
         // through; allowDifferentLgConfigK=false pins a uniform lgK
@@ -332,16 +311,6 @@ object StreamingPipeline {
     * ingest volume; per batch the work is one TakeOrdered over the
     * batch plus one over 2k rows. Exactly-once via the same ledger+swap
     * as [[mergeGoldBatch]]. */
-  def sampleIngest(stream: DataFrame, idCol: String, k: Int,
-                   storePath: String, ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sampleBatch(batch, idCol, k, storePath, id)
-      }
-      .start()
-
-  /** The per-batch body of [[sampleIngest]]. */
   def sampleBatch(batch: DataFrame, idCol: String, k: Int,
                   storePath: String, batchId: Long): Unit = {
     // Dedup BEFORE the candidate cut: limit(k) counts ROWS, so a batch
@@ -355,8 +324,8 @@ object StreamingPipeline {
       .dropDuplicates("id")
       .withColumn("h", md5(col("id").cast("binary")))
       .orderBy("h", "id").limit(k)
-    mergeSwapState(batch.sparkSession, storePath, batchId,
-        Some(cand.schema)) { existingOpt =>
+    mergeSwapState(batch.sparkSession, storePath, batchId, cand.schema) {
+        existingOpt =>
       existingOpt.map(_.unionByName(cand)).getOrElse(cand)
         .dropDuplicates("id")
         .orderBy("h", "id").limit(k)
@@ -375,23 +344,12 @@ object StreamingPipeline {
     * OVERWRITES its own partition (idempotent) and the counts store's
     * batch ledger makes the spend exactly-once — the same two-piece protocol
     * as the span-dedup ingest. */
-  def sourceCapIngest(stream: DataFrame, srcCol: String, idCol: String,
-                      cap: Long, outPath: String, storePath: String,
-                      ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        sourceCapBatch(b, srcCol, idCol, cap, outPath, storePath, id)
-      }
-      .start()
-
-  /** The per-batch body of [[sourceCapIngest]]. */
   def sourceCapBatch(batch: DataFrame, srcCol: String, idCol: String,
                      cap: Long, outPath: String, storePath: String,
                      batchId: Long): Unit = {
     require(cap > 0, s"cap must be > 0, got $cap")
     mergeSwapState(batch.sparkSession, storePath, batchId,
-        Some(batch.select(col(srcCol).as("src"), lit(0L).as("kept")).schema)) {
+        batch.select(col(srcCol).as("src"), lit(0L).as("kept")).schema) {
         existingOpt =>
       val w = Window.partitionBy(srcCol)
         .orderBy(md5(col(idCol).cast("string").cast("binary")), col(idCol))
@@ -432,24 +390,11 @@ object StreamingPipeline {
     * ingested corpus accumulates ready-to-train ≈`tokensPerShard` shards
     * without ever re-manifesting history. Semantics are ARRIVAL-ORDER
     * across batches (no stream can honor a global shuffle order without
-    * buffering the corpus — the [[sourceCapIngest]] stance) with the
+    * buffering the corpus — the [[sourceCapBatch]] stance) with the
     * deterministic md5 order within a batch, so replaying the same batch
     * sequence reproduces identical assignments. Manifest rows land
     * hive-partitioned by batch id (a replay overwrites its own
     * partition); the batch ledger makes the offset advance exactly-once. */
-  def shardManifestIngest(stream: DataFrame, textCol: String,
-                          idCol: String, outPath: String,
-                          storePath: String, ckpt: String,
-                          tokensPerShard: Long): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        shardManifestBatch(b, id, textCol, idCol, outPath, storePath,
-          tokensPerShard)
-      }
-      .start()
-
-  /** The per-batch body of [[shardManifestIngest]]. */
   def shardManifestBatch(batch: DataFrame, id: Long, textCol: String,
                          idCol: String, outPath: String,
                          storePath: String, tokensPerShard: Long): Unit = {
@@ -459,7 +404,7 @@ object StreamingPipeline {
     import spark.implicits._
     // the state is one running token total, built by this one constructor
     def totalRow(total: Long): DataFrame = Seq(total).toDF("total")
-    mergeSwapState(spark, storePath, id, Some(totalRow(0L).schema)) {
+    mergeSwapState(spark, storePath, id, totalRow(0L).schema) {
         existingOpt =>
       val base = existingOpt
         .map(_.select("total").as[Long].head()).getOrElse(0L)
@@ -486,7 +431,7 @@ object StreamingPipeline {
   }
 
   /** Continuous frequency maintenance — the heavy-hitter twin of
-    * [[sketchDistinct]]: per micro-batch, count-min sketch the batch's
+    * [[sketchDistinctBatch]]: per micro-batch, count-min sketch the batch's
     * `valueCol` per `keys` group with the built-in `count_min_sketch`
     * aggregate and union-merge into a stored sketch table via
     * [[graft.functions.CmsFunctions.cmsMerge]] (Spark ships no SQL merge
@@ -497,96 +442,47 @@ object StreamingPipeline {
     * the guarantee that makes it the standard "which values are hot"
     * state at 100 TB. Exactly-once via the same ledger+swap as
     * [[mergeGoldBatch]]. */
-  def cmsFrequency(stream: DataFrame, keys: Seq[String], valueCol: String,
-                   storePath: String, ckpt: String, eps: Double = 1e-4,
-                   confidence: Double = 0.99, seed: Int = 42,
-                   migrateMarkerlessAsString: Boolean = false): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        cmsFrequencyBatch(batch, id, keys, valueCol, storePath, eps,
-          confidence, seed, migrateMarkerlessAsString)
-      }
-      .start()
-
-  /** The per-batch body of [[cmsFrequency]]. */
   def cmsFrequencyBatch(batch: DataFrame, id: Long, keys: Seq[String],
-                        valueCol: String, storePath: String, eps: Double,
-                        confidence: Double, seed: Int,
-                        migrateMarkerlessAsString: Boolean = false): Unit = {
+                        valueCol: String, storePath: String,
+                        eps: Double = 1e-4, confidence: Double = 0.99,
+                        seed: Int = 42): Unit = {
     val kcols = keys.map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
-      // pin the sketch's key domain to STRINGS: the built-in aggregate
-      // hashes longs and strings differently, and the [[cmsEstimates]]
-      // probe always hashes string bytes — a sketch built over a raw
-      // BIGINT column would answer every probe with ~0, silently.
-      // The domain is VERSIONED into the store (`cms_key_domain`):
-      // merging string-keyed partials into a store built under a
-      // different hash domain would leave the old counts in the
-      // registers but unreachable by the string probe — a silent
-      // undercount. A store WITH the marker but a different domain
-      // always fails loudly. A store WITHOUT the marker predates the
-      // column; its registers were sketched over valueCol's NATIVE
-      // type (the CAST-to-STRING pin and the marker arrived in
-      // separate later builds), so its domain is only knowable from
-      // the column type: if valueCol is a string column the native
-      // domain IS string-bytes and the store is stamped in place
-      // (logged); for any other type the domain is ambiguous and the
-      // merge fails loudly unless the caller passes
-      // migrateMarkerlessAsString=true to assert the store is known
-      // to have been built over string-typed items.
-      val partial = batch.groupBy(kcols: _*)
-        .agg(expr(s"count_min_sketch(CAST($valueCol AS STRING), ${eps}d, ${confidence}d, $seed)")
-          .as("sk"))
-        .withColumn("cms_key_domain", lit(CmsKeyDomain))
-      existingOpt match {
-        case Some(existing0) =>
-          // one-time migration of a marker-less (pre-marker) store: its
-          // registers hold valueCol's NATIVE-type hashes, so stamping it
-          // string-domain is sound only when that native type is string —
-          // verified from the batch schema, or asserted by the caller.
-          val existing =
-            if (existing0.columns.contains("cms_key_domain")) existing0
-            else {
-              val valueIsString =
-                batch.schema(valueCol).dataType ==
-                  org.apache.spark.sql.types.StringType
-              if (!valueIsString && !migrateMarkerlessAsString)
-                throw new IllegalStateException(
-                  s"cmsFrequency store at $storePath has no cms_key_domain " +
-                    s"marker and '$valueCol' is not a string column: the " +
-                    "pre-marker registers were sketched over the column's " +
-                    "native type, so merging string-domain partials would " +
-                    "make the old counts unreachable by string probes — a " +
-                    "silent undercount. Rebuild the store, or pass " +
-                    "migrateMarkerlessAsString=true if it is known to have " +
-                    "been built over string-typed items.")
-              log.warn(
-                s"cmsFrequency: stamping marker-less store at $storePath " +
-                  s"with cms_key_domain='$CmsKeyDomain' (" +
-                  (if (valueIsString) s"verified: '$valueCol' is string-typed"
-                   else "asserted via migrateMarkerlessAsString") + ")")
-              existing0.withColumn("cms_key_domain", lit(CmsKeyDomain))
-            }
-          // value check is one limit(1) read of a groups-sized store
-          val dom = existing.select("cms_key_domain").limit(1).collect()
-          if (dom.nonEmpty && dom(0).getString(0) != CmsKeyDomain)
-            throw new IllegalStateException(
-              s"cmsFrequency store at $storePath was built under key " +
-                s"domain '${dom(0).getString(0)}', this build probes " +
-                s"'$CmsKeyDomain' — merged estimates would silently " +
-                "undercount. Rebuild the store.")
-          existing.select(kcols ++ Seq(col("sk"), col("cms_key_domain")): _*)
-            .unionByName(partial)
-            .groupBy(kcols: _*)
-            .agg(graft.functions.CmsFunctions.cmsMerge(col("sk")).as("sk"),
-              first(col("cms_key_domain")).as("cms_key_domain"))
-        case None => partial
-      }
+    // pin the sketch's key domain to STRINGS: the built-in aggregate
+    // hashes longs and strings differently, and the [[cmsEstimates]]
+    // probe always hashes string bytes — a sketch built over a raw
+    // BIGINT column would answer every probe with ~0, silently.
+    // The domain is VERSIONED into the store (`cms_key_domain`):
+    // merging string-keyed partials into a store built under a
+    // different hash domain would leave the old counts in the
+    // registers but unreachable by the string probe — a silent
+    // undercount, so a store under any other domain fails loudly.
+    lazy val partial = batch.groupBy(kcols: _*)
+      .agg(expr(s"count_min_sketch(CAST($valueCol AS STRING), ${eps}d, ${confidence}d, $seed)")
+        .as("sk"))
+      .withColumn("cms_key_domain", lit(CmsKeyDomain))
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
+      case Some(existing) =>
+        // value check is one limit(1) read of a groups-sized store; a
+        // store written before the column existed reads it as NULL
+        val dom = existing.select("cms_key_domain").limit(1).collect()
+          .map(_.getString(0))
+        if (dom.nonEmpty && dom(0) != CmsKeyDomain)
+          throw new IllegalStateException(
+            s"cmsFrequencyBatch store at $storePath was built under " +
+              Option(dom(0)).fold("no recorded key domain")(d =>
+                s"key domain '$d'") +
+              s", this build probes '$CmsKeyDomain' — merged estimates " +
+              "would silently undercount. Rebuild the store.")
+        existing.select(kcols ++ Seq(col("sk"), col("cms_key_domain")): _*)
+          .unionByName(partial)
+          .groupBy(kcols: _*)
+          .agg(graft.functions.CmsFunctions.cmsMerge(col("sk")).as("sk"),
+            first(col("cms_key_domain")).as("cms_key_domain"))
+      case None => partial
     }
   }
 
-  /** Frequency estimates from a [[cmsFrequency]] store: one row per
+  /** Frequency estimates from a [[cmsFrequencyBatch]] store: one row per
     * (key-tuple, item) probe with the register-read estimate, shaped
     * (keys..., item, est_n) — the key columns keep their store names and
     * types, so multi-key stores need no label parsing. The store is
@@ -618,8 +514,8 @@ object StreamingPipeline {
   }
 
   /** Continuous distribution maintenance — the quantile member of the
-    * mergeable-state family ([[sketchDistinct]] = HLL distinct,
-    * [[cmsFrequency]] = CMS frequency, this = GK distribution): per
+    * mergeable-state family ([[sketchDistinctBatch]] = HLL distinct,
+    * [[cmsFrequencyBatch]] = CMS frequency, this = GK distribution): per
     * micro-batch, build a [[graft.functions.QuantileSketchAgg]] partial
     * per `keys` group and union-merge it into the stored blob via
     * [[graft.functions.QuantileFunctions.quantileSketchMerge]]. State is
@@ -627,26 +523,14 @@ object StreamingPipeline {
     * percentile of the whole history reads from the summary
     * ([[quantileStateView]]), the events themselves are never rescanned.
     * Exactly-once via the same ledger+swap as [[mergeGoldBatch]]. */
-  def quantileState(stream: DataFrame, keys: Seq[String], valueCol: String,
-                    storePath: String, ckpt: String,
-                    relativeError: Double = 0.001): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        quantileStateBatch(batch, id, keys, valueCol, storePath,
-          relativeError)
-      }
-      .start()
-
-  /** The per-batch body of [[quantileState]]. */
   def quantileStateBatch(batch: DataFrame, id: Long, keys: Seq[String],
                          valueCol: String, storePath: String,
-                         relativeError: Double): Unit = {
+                         relativeError: Double = 0.001): Unit = {
     val kcols = keys.map(col)
     lazy val partial = batch.groupBy(kcols: _*)
       .agg(graft.functions.QuantileFunctions
         .quantileSketch(col(valueCol), relativeError).as("sk"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.select(kcols :+ col("sk"): _*)
           .unionByName(partial)
@@ -660,7 +544,7 @@ object StreamingPipeline {
   /** Continuous per-source ADAPTIVE quality gating — the streaming twin
     * of [[graft.ext.Curate.adaptiveQualityGate]]: each micro-batch is
     * gated at the HISTORICAL per-source `pct` quantile read from a
-    * [[quantileState]] GK store, then the batch's scores (kept AND
+    * [[quantileStateBatch]] GK store, then the batch's scores (kept AND
     * dropped) fold into the store for the next batch. Folding the full
     * offered distribution — not the survivors — is what keeps the gate
     * stable: a survivors-only fold would ratchet the cutoff upward every
@@ -675,24 +559,10 @@ object StreamingPipeline {
     * now-updated store would select a different set); a crash after the
     * output write but before the fold replays the gate against the same
     * pre-batch store and rewrites the identical partition. */
-  def adaptiveGateIngest(stream: DataFrame, srcCol: String,
-                         textCol: String, outPath: String,
-                         storePath: String, ckpt: String,
-                         pct: Double = 0.25,
-                         relativeError: Double = 0.001): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        adaptiveGateBatch(batch, id, srcCol, textCol, outPath, storePath,
-          pct, relativeError)
-      }
-      .start()
-
-  /** The per-batch body of [[adaptiveGateIngest]]. */
   def adaptiveGateBatch(batch: DataFrame, id: Long, srcCol: String,
                         textCol: String, outPath: String,
-                        storePath: String, pct: Double,
-                        relativeError: Double): Unit = {
+                        storePath: String, pct: Double = 0.25,
+                        relativeError: Double = 0.001): Unit = {
     val spark = batch.sparkSession
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
@@ -729,16 +599,6 @@ object StreamingPipeline {
     * moments). State is d²+d+1 doubles TOTAL; read the whitener or
     * Mahalanobis fit at any time via [[embeddingMomentsView]] without
     * rescanning a single embedding. Exactly-once via ledger+swap. */
-  def embeddingMoments(stream: DataFrame, vecCol: String, storePath: String,
-                       ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        embeddingMomentsBatch(batch, id, vecCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[embeddingMoments]]. */
   def embeddingMomentsBatch(batch: DataFrame, id: Long, vecCol: String,
                             storePath: String): Unit = {
     val spark = batch.sparkSession
@@ -746,7 +606,7 @@ object StreamingPipeline {
     // the state is (cell index, moment sum) rows, built by this one
     // constructor
     def cellFrame(cells: Seq[(Int, Double)]): DataFrame = cells.toDF("k", "s")
-    mergeSwapState(spark, storePath, id, Some(cellFrame(Nil).schema)) {
+    mergeSwapState(spark, storePath, id, cellFrame(Nil).schema) {
         existingOpt =>
       // the partial is d²+d+1 cells TOTAL — collect it ONCE and rebuild
       // a local frame for the merge/write, so each micro-batch's
@@ -783,7 +643,7 @@ object StreamingPipeline {
     }
   }
 
-  /** Decode an [[embeddingMoments]] store into (n, mean, covariance) —
+  /** Decode an [[embeddingMomentsBatch]] store into (n, mean, covariance) —
     * a d²-cell driver read, never an embedding rescan. */
   def embeddingMomentsView(stored: DataFrame): (Long, Array[Double], breeze.linalg.DenseMatrix[Double]) =
     graft.ext.Whiten.decodeCells(
@@ -799,20 +659,10 @@ object StreamingPipeline {
     * relabel. State is nodes-sized (two longs per doc ever seen in an
     * edge); the edges themselves are never stored. Exactly-once via the
     * same ledger+swap as [[mergeGoldBatch]]. */
-  def ccIngest(edgeStream: DataFrame, srcCol: String, dstCol: String,
-               storePath: String, ckpt: String): StreamingQuery =
-    edgeStream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ccIngestBatch(batch, id, srcCol, dstCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[ccIngest]]. */
   def ccIngestBatch(batch: DataFrame, id: Long, srcCol: String,
                     dstCol: String, storePath: String): Unit = {
     mergeSwapState(batch.sparkSession, storePath, id,
-        Some(graft.ext.Graph.AssignmentSchema)) {
+        graft.ext.Graph.AssignmentSchema) {
       case Some(existing) => graft.ext.Graph
         .incrementalConnectedComponents(existing, batch, srcCol, dstCol)
       case None => graft.ext.Graph
@@ -822,7 +672,7 @@ object StreamingPipeline {
 
   /** Continuous keep-best-per-cluster dedup — the streaming twin of
     * [[graft.ext.Curate.keepBestPerCluster]], closing the cluster-layer
-    * ingest family ([[ccIngest]] maintains WHICH docs are the same;
+    * ingest family ([[ccIngestBatch]] maintains WHICH docs are the same;
     * this maintains which copy the corpus KEEPS): per micro-batch, each
     * cluster's champion row (4-dp-rounded quality DESC, id ASC — ids
     * unique per doc, the standard corpus contract) folds into a stored
@@ -837,17 +687,6 @@ object StreamingPipeline {
     * table merged on the clusters the batch touches, exactly like the
     * gold-state note on [[mergeGoldBatch]]. Exactly-once via the same
     * ledger+swap. */
-  def keepBestIngest(stream: DataFrame, clusterCol: String,
-                     textCol: String, idCol: String, storePath: String,
-                     ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        keepBestBatch(batch, id, clusterCol, textCol, idCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[keepBestIngest]]. */
   def keepBestBatch(batch: DataFrame, id: Long, clusterCol: String,
                     textCol: String, idCol: String,
                     storePath: String): Unit = {
@@ -861,8 +700,7 @@ object StreamingPipeline {
       .withColumn("quality",
         round(graft.ext.TextAnalysis.qualityScore(col(textCol))
           + lit(1e-9), 4)))
-    mergeSwapState(batch.sparkSession, storePath, id,
-        Some(batchBest.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, batchBest.schema) {
       case Some(existing) => champions(existing.unionByName(batchBest))
       case None => batchBest
     }
@@ -887,30 +725,20 @@ object StreamingPipeline {
     * (tokenize + quality-score the text) is still paid exactly once per
     * document. The fold is a union of first-arrival rows (an id already
     * in the index folds as a no-op — per-document idempotence, see
-    * [[tokenBudgetIngestBatch]]), so the view over any batch split
+    * below), so the view over any batch split
     * equals [[graft.ext.Sampling.tokenBudgetSelect]] over the
     * concatenated history EXACTLY (split-invariant; property-tested).
-    * Exactly-once via the same ledger+swap. */
-  def tokenBudgetIngest(stream: DataFrame, textCol: String, idCol: String,
-                        storePath: String, ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        tokenBudgetIngestBatch(b, id, textCol, idCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[tokenBudgetIngest]]. The fold is
-    * per-DOCUMENT idempotent, not just per-batch: the ledger suppresses
-    * replays of the same batch id, and the anti-join below additionally
-    * drops index rows whose doc id is already present — so an
-    * at-least-once source re-delivering a document under a NEW batch id
-    * (e.g. after checkpoint loss) folds as a no-op instead of
-    * double-counting its tokens in the budget and in cum_tokens forever
-    * (first-arrival score wins, matching the sibling dedup/keep-best
-    * ingest stores). Distinct-id rows still fold as a pure union, so
-    * the view over any batch split equals the batch operator over the
-    * first-arrival-deduped history exactly. */
+    * Exactly-once via the same ledger+swap.
+    *
+    * The fold is per-DOCUMENT idempotent, not just per-batch: the ledger
+    * suppresses replays of the same batch id, and the anti-join below
+    * additionally drops index rows whose doc id is already present — so an
+    * at-least-once source re-delivering a document under a NEW batch id (e.g.
+    * after checkpoint loss) folds as a no-op instead of double-counting its
+    * tokens in the budget and in cum_tokens forever (first-arrival score wins,
+    * matching the sibling dedup/keep-best ingest stores). Distinct-id rows
+    * still fold as a pure union, so the view over any batch split equals the
+    * batch operator over the first-arrival-deduped history exactly. */
   def tokenBudgetIngestBatch(batch: DataFrame, id: Long, textCol: String,
                              idCol: String, storePath: String): Unit = {
     // an empty batch scores to an empty projection DERIVED from the
@@ -930,14 +758,14 @@ object StreamingPipeline {
       .agg(min(struct(col("tok_n"), col("_rqi"))).as("_m"))
       .select(col(idCol), col("_m.tok_n").as("tok_n"),
         col("_m._rqi").as("_rqi"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, scored.schema) {
       case Some(existing) => existing.unionByName(
         scored.join(existing.select(col(idCol)), Seq(idCol), "left_anti"))
       case None => scored
     }
   }
 
-  /** The current selection from a [[tokenBudgetIngest]] store:
+  /** The current selection from a [[tokenBudgetIngestBatch]] store:
     * identical columns and rows to running the batch operator over
     * every document streamed so far. The store read stays UNCACHED
     * (`cacheInput = false`): every fold swap-replaces the store
@@ -971,18 +799,6 @@ object StreamingPipeline {
     * algebraic, so the state always equals the full-corpus recompute
     * exactly; state is ≤numBuckets rows TOTAL. Read the weight table at
     * any time via [[dsirWeightsView]]. Exactly-once via ledger+swap. */
-  def dsirCounts(stream: DataFrame, textCol: String,
-                 targetPred: org.apache.spark.sql.Column, numBuckets: Int,
-                 storePath: String, ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dsirCountsBatch(batch, id, textCol, targetPred, numBuckets,
-          storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[dsirCounts]]. */
   def dsirCountsBatch(batch: DataFrame, id: Long, textCol: String,
                       targetPred: org.apache.spark.sql.Column,
                       numBuckets: Int, storePath: String): Unit = {
@@ -992,7 +808,7 @@ object StreamingPipeline {
           .dsirFeatures(col(textCol), numBuckets)).as("bucket"))
       .groupBy("bucket")
       .agg(sum("t").as("ct"), count(lit(1)).as("cr"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.unionByName(partial).groupBy("bucket")
           .agg(sum("ct").as("ct"), sum("cr").as("cr"))
@@ -1000,7 +816,7 @@ object StreamingPipeline {
     }
   }
 
-  /** Smoothed log importance-ratio table from a [[dsirCounts]] store:
+  /** Smoothed log importance-ratio table from a [[dsirCountsBatch]] store:
     * (bucket, lw) over ALL `numBuckets` buckets — identical to
     * [[graft.ext.Sampling.dsirWeights]] over the corpus streamed so far
     * (target = rows matching the predicate, raw = all rows). Feed it to
@@ -1029,16 +845,6 @@ object StreamingPipeline {
     * types); counting is algebraic, so [[knModelView]] over the store is
     * EXACTLY the batch model over the corpus streamed so far.
     * Exactly-once via ledger+swap. */
-  def knCounts(stream: DataFrame, textCol: String, storePath: String,
-               ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        knCountsBatch(batch, id, textCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[knCounts]]. */
   def knCountsBatch(batch: DataFrame, id: Long, textCol: String,
                     storePath: String): Unit = {
     lazy val partial = {
@@ -1054,7 +860,7 @@ object StreamingPipeline {
         .withColumn("kind", lit("uni"))
       bg.unionByName(uni)
     }
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.unionByName(partial).groupBy("k", "kind")
           .agg(sum("c").as("c"))
@@ -1062,7 +868,7 @@ object StreamingPipeline {
     }
   }
 
-  /** Rebuild the [[graft.ext.Lm.KnModel]] tables from a [[knCounts]]
+  /** Rebuild the [[graft.ext.Lm.KnModel]] tables from a [[knCountsBatch]]
     * store — every table is an aggregate of the stored TYPE counts
     * (vocabulary-bounded), identical to `knBigramTrain` over the full
     * streamed corpus; feed it to `Lm.knScore` unchanged. */
@@ -1089,7 +895,7 @@ object StreamingPipeline {
     graft.ext.Lm.KnModel(bigrams, hist, cont, totals)
   }
 
-  /** Robust-outlier baseline from a [[quantileState]] store: per key,
+  /** Robust-outlier baseline from a [[quantileStateBatch]] store: per key,
     * the median and the IQR-derived robust sigma (IQR/1.349 — the
     * normal-consistent spread estimate with a 25% breakdown point, where
     * a mean/stddev baseline is dragged by the outliers it monitors).
@@ -1132,7 +938,7 @@ object StreamingPipeline {
         when(!col("has_baseline") || col(valueCol).isNull, lit(true))
           .otherwise(abs(col("robust_z")) > threshold))
 
-  /** Percentile read over a [[quantileState]] store: one row per group
+  /** Percentile read over a [[quantileStateBatch]] store: one row per group
     * with the requested quantiles as array<double> — a distributed
     * scalar read of the groups-sized state, no driver collect and no
     * event rescan. */
@@ -1144,20 +950,6 @@ object StreamingPipeline {
         .quantileSketchQuery(col("sk"), percentages).as("quantiles"): _*)
   }
 
-  /** Continuous gold maintenance: stream → per-batch partial window
-    * aggregates → algebraic merge into the gold table (exactly-once via
-    * the batch ledger in [[mergeGoldBatch]]). */
-  def incrementalGold(stream: DataFrame, goldPath: String, ckpt: String,
-                      timeCol: String, keys: Seq[String], valueCol: String,
-                      windowDuration: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeGoldBatch(batch, goldPath, id, timeCol, keys, valueCol,
-          windowDuration)
-      }
-      .start()
-
   /** Continuous EWMA gold: the per-(key, day) average series behind the
     * batch `a_ewma_daily` query, kept incrementally as algebraic
     * (n, Σv) day-level state under the same ledger+swap exactly-once
@@ -1166,17 +958,6 @@ object StreamingPipeline {
     * is not mergeable, but its day-average input is, so state stays
     * aggregate-sized (keys × days) and the view over it always equals
     * the batch recomputation over everything processed so far. */
-  def ewmaGoldIngest(stream: DataFrame, storePath: String, ckpt: String,
-                     timeCol: String, keys: Seq[String],
-                     valueCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ewmaGoldBatch(batch, id, storePath, timeCol, keys, valueCol)
-      }
-      .start()
-
-  /** The per-batch body of [[ewmaGoldIngest]]. */
   def ewmaGoldBatch(batch: DataFrame, id: Long, storePath: String,
                     timeCol: String, keys: Seq[String],
                     valueCol: String): Unit = {
@@ -1187,7 +968,7 @@ object StreamingPipeline {
     lazy val partial = batch.withColumn("day", to_date(col(timeCol)))
       .groupBy(gb: _*)
       .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.unionByName(partial).groupBy(gb: _*)
           .agg(sum("n").as("n"), sum("sum_v").as("sum_v"))
@@ -1195,7 +976,7 @@ object StreamingPipeline {
     }
   }
 
-  /** Read-time EWMA over [[ewmaGoldIngest]] state: identical fold to the
+  /** Read-time EWMA over [[ewmaGoldBatch]] state: identical fold to the
     * batch `a_ewma_daily` shape — per-day averages rounded to 4 decimals
     * BEFORE the recursion, a `windowDays`-bounded frame seeded by its
     * oldest value — so incremental matches the batch recompute after the
@@ -1225,18 +1006,6 @@ object StreamingPipeline {
     * ledger+swap protocol. State is (keys × 24) rows at any corpus size;
     * [[seasonalBaselineView]] turns the moments into the m/sd baseline
     * new batches score z-values against. */
-  def seasonalBaselineIngest(stream: DataFrame, storePath: String,
-                             ckpt: String, timeCol: String,
-                             keys: Seq[String],
-                             valueCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        seasonalBaselineBatch(batch, id, storePath, timeCol, keys, valueCol)
-      }
-      .start()
-
-  /** The per-batch body of [[seasonalBaselineIngest]]. */
   def seasonalBaselineBatch(batch: DataFrame, id: Long, storePath: String,
                             timeCol: String, keys: Seq[String],
                             valueCol: String): Unit = {
@@ -1247,7 +1016,7 @@ object StreamingPipeline {
       .groupBy(gb: _*)
       .agg(count(col(valueCol)).as("n"), sum(col(valueCol)).as("sum_v"),
         sum(col(valueCol) * col(valueCol)).as("sum_sq"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(partial.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.unionByName(partial).groupBy(gb: _*)
           .agg(sum("n").as("n"), sum("sum_v").as("sum_v"),
@@ -1256,7 +1025,7 @@ object StreamingPipeline {
     }
   }
 
-  /** Mean + sample stddev from [[seasonalBaselineIngest]] moments:
+  /** Mean + sample stddev from [[seasonalBaselineBatch]] moments:
     * sd² = (Σv² − (Σv)²/n)/(n−1), clamped at 0 against FP cancellation;
     * sd is NULL for single-observation groups (like stddev_samp). */
   def seasonalBaselineView(stored: DataFrame): DataFrame = {
@@ -1287,20 +1056,6 @@ object StreamingPipeline {
     * [[mergeGoldBatch]]: foreachBatch is at-least-once, and a replayed
     * batch must not append its score twice (a duplicated row would
     * stretch a breach streak and mis-fire the `for:` clause). */
-  def driftMonitorIngest(stream: DataFrame, reference: DataFrame,
-                         groupCols: Seq[String], valueCol: String,
-                         storePath: String, ckpt: String,
-                         lo: Double, hi: Double,
-                         buckets: Int): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        driftMonitorBatch(batch, id, reference, groupCols, valueCol,
-          storePath, lo, hi, buckets)
-      }
-      .start()
-
-  /** The per-batch body of [[driftMonitorIngest]]. */
   def driftMonitorBatch(batch: DataFrame, id: Long, reference: DataFrame,
                         groupCols: Seq[String], valueCol: String,
                         storePath: String, lo: Double, hi: Double,
@@ -1314,13 +1069,13 @@ object StreamingPipeline {
       .filter(col("n_cur") > 0)
       .select(lit(id).as("batch_id") +: (groupCols.map(col) ++
         Seq(col("n_ref"), col("n_cur"), col("psi"))): _*)
-    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, scored.schema) {
       case Some(existing) => existing.unionByName(scored)
       case None           => scored
     }
   }
 
-  /** The embedding twin of [[driftMonitorIngest]]: per micro-batch,
+  /** The embedding twin of [[driftMonitorBatch]]: per micro-batch,
     * cosine between the batch's embedding centroid and a STORED
     * reference centroid ([[graft.monitoring.Drift.referenceCentroid]],
     * one row, broadcast-sized) appended as
@@ -1331,17 +1086,6 @@ object StreamingPipeline {
     * vectors reduce to per-dim means ((dim, x) narrow rows, nothing
     * quadratic) and one 1×1 cosine; replay-idempotent like every other
     * monitor. */
-  def embeddingDriftMonitorIngest(stream: DataFrame, refCentroid: DataFrame,
-                                  vecCol: String, storePath: String,
-                                  ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        embeddingDriftMonitorBatch(batch, id, refCentroid, vecCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[embeddingDriftMonitorIngest]]. */
   def embeddingDriftMonitorBatch(batch: DataFrame, id: Long,
                                  refCentroid: DataFrame, vecCol: String,
                                  storePath: String): Unit = {
@@ -1357,14 +1101,14 @@ object StreamingPipeline {
       .select(lit(id).as("batch_id"), col("n"),
         graft.monitoring.Drift.cosineCol(col("bv"), col("rv"))
           .as("centroid_cosine"))
-    mergeSwapState(batch.sparkSession, storePath, id, Some(scored.schema)) {
+    mergeSwapState(batch.sparkSession, storePath, id, scored.schema) {
       case Some(existing) => existing.unionByName(scored)
       case None           => scored
     }
   }
 
-  /** Long-format metric view of a [[driftMonitorIngest]] /
-    * [[embeddingDriftMonitorIngest]] store — (window_start, metric,
+  /** Long-format metric view of a [[driftMonitorBatch]] /
+    * [[embeddingDriftMonitorBatch]] store — (window_start, metric,
     * value) with batch_id as the window axis; evaluate with
     * `windowSeconds = 1` exactly like
     * [[graft.monitoring.Alerts.evaluateProgress]]. Pass `group` to
@@ -1396,20 +1140,10 @@ object StreamingPipeline {
     * ingested), the per-batch work is one window + one anti join keyed on
     * the fingerprint, and the corpus bodies never shuffle. At 100 TB the
     * index read would be a bucketed/bloom-pruned lookup rather than this
-    * test path's full parquet read. */
-  def dedupIngest(stream: DataFrame, textCol: String, idCol: String,
-                  outPath: String, indexPath: String,
-                  ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dedupIngestBatch(batch, id, textCol, idCol, outPath, indexPath)
-      }
-      .start()
-
-  /** The per-batch body of [[dedupIngest]], visible so replay crash
-    * windows can be driven directly in tests. foreachBatch is
-    * at-least-once; every step here must tolerate running twice. */
+    * test path's full parquet read.
+    *
+    * foreachBatch is at-least-once; every step here must tolerate
+    * running twice. */
   def dedupIngestBatch(batch: DataFrame, id: Long, textCol: String,
                        idCol: String, outPath: String,
                        indexPath: String): Unit =
@@ -1423,23 +1157,11 @@ object StreamingPipeline {
         () => ())
     }
 
-  /** Normalized-dedup-at-ingest — [[dedupIngest]] keyed on the ROBUST
+  /** Normalized-dedup-at-ingest — [[dedupIngestBatch]] keyed on the ROBUST
     * fingerprint ([[graft.ext.TextAnalysis.robustFingerprint]]): a
     * case/punctuation/digit/whitespace variant of ANY earlier batch's
     * survivor never lands (the CCNet normalization-dedup stage as a
-    * stream). Same crash-safe index protocol as [[dedupIngest]]. */
-  def normalizedDedupIngest(stream: DataFrame, textCol: String,
-                            idCol: String, outPath: String,
-                            indexPath: String, ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        normalizedDedupIngestBatch(batch, id, textCol, idCol, outPath,
-          indexPath)
-      }
-      .start()
-
-  /** The per-batch body of [[normalizedDedupIngest]]. */
+    * stream). Same crash-safe index protocol as [[dedupIngestBatch]]. */
   def normalizedDedupIngestBatch(batch: DataFrame, id: Long,
                                  textCol: String, idCol: String,
                                  outPath: String,
@@ -1457,27 +1179,16 @@ object StreamingPipeline {
     * duplicated within the batch or against ANY earlier batch (a
     * persistent gram-hash index), cleaned docs land per-batch in
     * `outPath`, and the batch's distinct gram hashes extend the index.
-    * Exactly-once via the same batch-marker protocol as [[dedupIngest]].
+    * Exactly-once via the same batch-marker protocol as [[dedupIngestBatch]].
     * Earlier batches' published docs stay as published — boilerplate
     * keeps its first-seen copy; later copies are cut at span
-    * granularity. */
-  def spanDedupIngest(stream: DataFrame, textCol: String, idCol: String,
-                      outPath: String, indexPath: String, ckpt: String,
-                      k: Int = 5): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        spanDedupIngestBatch(batch, id, textCol, idCol, outPath,
-          indexPath, k)
-      }
-      .start()
-
-  /** The per-batch body of [[spanDedupIngest]]. The gram table is
-    * computed ONCE per batch and persisted for its duration — it feeds
-    * three consumers (duplicate-hash aggregation, mark join, index
-    * delta), and the survivors and delta writes are separate actions,
-    * so without the persist the tokenize+md5 subtree would re-evaluate
-    * per consumer per action. Unpersisted via the afterWrite hook. */
+    * granularity.
+    *
+    * The gram table is computed ONCE per batch and persisted for its duration —
+    * it feeds three consumers (duplicate-hash aggregation, mark join, index
+    * delta), and the survivors and delta writes are separate actions, so
+    * without the persist the tokenize+md5 subtree would re-evaluate per
+    * consumer per action. Unpersisted via the afterWrite hook. */
   def spanDedupIngestBatch(batch: DataFrame, id: Long, textCol: String,
                            idCol: String, outPath: String,
                            indexPath: String, k: Int = 5): Unit = {
@@ -1628,43 +1339,26 @@ object StreamingPipeline {
     * [[mergeSwapState]]; state is the keyed table itself plus its
     * tombstones — no extra streaming state. (Tombstone retention is what
     * makes out-of-order safety possible; prune tombstones only past the
-    * source's max disorder horizon.) */
-  def cdcUpsert(stream: DataFrame, keys: Seq[String], seqCol: String,
-                opCol: String, storePath: String,
-                ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        cdcUpsertBatch(batch, id, keys, seqCol, opCol, storePath)
-      }
-      .start()
-
-  /** The per-batch body of [[cdcUpsert]]. The stored table keeps the
-    * `opCol`: winning deletes persist as tombstones so their sequence
-    * keeps guarding against late lower-sequence upserts. */
+    * source's max disorder horizon.)
+    *
+    * The stored table keeps the `opCol`: winning deletes persist as tombstones
+    * so their sequence keeps guarding against late lower-sequence upserts. */
   def cdcUpsertBatch(batch: DataFrame, id: Long, keys: Seq[String],
                      seqCol: String, opCol: String,
                      storePath: String): Unit = {
     val kcols = keys.map(col)
-    mergeSwapState(batch.sparkSession, storePath, id) { existingOpt =>
+    // the store holds the batch's own columns, tombstones included
+    mergeSwapState(batch.sparkSession, storePath, id, batch.schema) {
+        existingOpt =>
       val wKey = Window.partitionBy(kcols: _*)
         .orderBy(col(seqCol).desc, col(opCol).asc) // delete < upsert lexically; delete wins seq ties within a batch
       val latest = batch.withColumn("_rn", row_number().over(wKey))
         .filter(col("_rn") === 1).drop("_rn")
         .withColumn("_src", lit(1))
-      val all = existingOpt match {
-        case Some(ex) =>
-          // stored rows carry their real op (tombstones included); batch
-          // wins sequence ties — new info over old. A store materialized
-          // by the pre-tombstone format has no op column (it was dropped
-          // after filtering to upserts) — treat those rows as upserts so
-          // the first post-upgrade merge migrates the store in place
-          // instead of crashing on an unresolvable column.
-          val exOp = if (ex.columns.contains(opCol)) ex
-            else ex.withColumn(opCol, lit("upsert"))
-          exOp.withColumn("_src", lit(0)).unionByName(latest)
-        case None => latest
-      }
+      // stored rows carry their real op (tombstones included); batch
+      // wins sequence ties — new info over old
+      val all = existingOpt.fold(latest)(
+        _.withColumn("_src", lit(0)).unionByName(latest))
       val wMerge = Window.partitionBy(kcols: _*)
         .orderBy(col(seqCol).desc, col("_src").desc)
       all.withColumn("_rn", row_number().over(wMerge))
@@ -1673,7 +1367,7 @@ object StreamingPipeline {
     }
   }
 
-  /** The live view of a [[cdcUpsert]] store: tombstoned keys filtered
+  /** The live view of a [[cdcUpsertBatch]] store: tombstoned keys filtered
     * out, the op column dropped — what a consumer of the materialized
     * table reads. */
   def cdcLive(stored: DataFrame, opCol: String = "op"): DataFrame =
@@ -1852,7 +1546,7 @@ object StreamingPipeline {
         s"index swap: could not restore $backup to $idxDir")
   }
 
-  /** Compact EVERY index of a multi-index ingest — [[curateFullIngest]]
+  /** Compact EVERY index of a multi-index ingest — [[curateFullIngestBatch]]
     * maintains a fingerprint AND a signature index, each accumulating one
     * b$id- delta per micro-batch, and both age toward the same
     * too-many-tiny-files problem. One [[compactIngestIndex]] per index
@@ -1868,7 +1562,7 @@ object StreamingPipeline {
     indexPaths.foreach(p =>
       compactIngestIndex(spark, outPath, p, targetFiles))
 
-  /** Per-batch stage counts recorded by [[curateIngest]] — the streaming
+  /** Per-batch stage counts recorded by [[curateIngestBatch]] — the streaming
     * twin of `Curate.IncResult.stats`. Replayed batches may append a
     * second entry (at-least-once monitoring, same contract as Spark's own
     * progress events); the data paths themselves stay exactly-once. */
@@ -1887,24 +1581,12 @@ object StreamingPipeline {
     * into `counts`. Identical stage semantics to the batch pipeline (it
     * IS `Curate.incremental` under [[withBatchIndex]]'s exactly-once
     * write protocol), so a day processed as N micro-batches or one batch
-    * job drops the same cross-batch dups. */
-  def curateIngest(stream: DataFrame, outPath: String, indexPath: String,
-                   ckpt: String, minQuality: Double = 0.35,
-                   perSourceCap: Int = 15,
-                   counts: CurateCounts = new CurateCounts): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        curateIngestBatch(batch, id, outPath, indexPath, minQuality,
-          perSourceCap, counts)
-      }
-      .start()
-
-  /** The per-batch body of [[curateIngest]] (see [[withBatchIndex]] for
-    * the replay-safety contract). */
+    * job drops the same cross-batch dups. See [[withBatchIndex]] for the
+    * replay-safety contract. */
   def curateIngestBatch(batch: DataFrame, id: Long, outPath: String,
-                        indexPath: String, minQuality: Double,
-                        perSourceCap: Int, counts: CurateCounts): Unit =
+                        indexPath: String, minQuality: Double = 0.35,
+                        perSourceCap: Int = 15,
+                        counts: CurateCounts = new CurateCounts): Unit =
     withBatchIndex(batch.sparkSession, id, outPath, indexPath) { index =>
       val r = graft.ext.Curate.incremental(batch, index, minQuality,
         perSourceCap)
@@ -1915,30 +1597,16 @@ object StreamingPipeline {
   /** Streaming CLASSIFIER-gated curation — the streaming twin of
     * `Curate.modelGated`: per micro-batch, the trained NB model scores
     * every document (weights are a STORED table, broadcast per batch,
-    * like the centroid table in [[ivfIngest]]), confident positives
+    * like the centroid table in [[ivfIngestBatch]]), confident positives
     * proceed to within-batch + against-index dedup and the per-source
     * cap, under the same exactly-once index protocol. Retraining the
     * model is an offline rebuild of the weights table, never an
     * in-stream mutation. */
-  def modelGatedIngest(stream: DataFrame, outPath: String,
-                       indexPath: String, weights: DataFrame,
-                       numBuckets: Int, ckpt: String,
-                       minScore: Double = 0.0, perSourceCap: Int = 15,
-                       counts: CurateCounts = new CurateCounts): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        modelGatedIngestBatch(batch, id, outPath, indexPath, weights,
-          numBuckets, minScore, perSourceCap, counts)
-      }
-      .start()
-
-  /** The per-batch body of [[modelGatedIngest]]. */
   def modelGatedIngestBatch(batch: DataFrame, id: Long, outPath: String,
                             indexPath: String, weights: DataFrame,
-                            numBuckets: Int, minScore: Double,
-                            perSourceCap: Int,
-                            counts: CurateCounts): Unit =
+                            numBuckets: Int, minScore: Double = 0.0,
+                            perSourceCap: Int = 15,
+                            counts: CurateCounts = new CurateCounts): Unit =
     withBatchIndex(batch.sparkSession, id, outPath, indexPath) { index =>
       val r = graft.ext.Curate.modelGated(batch, index, weights,
         numBuckets, minScore, perSourceCap)
@@ -1951,27 +1619,14 @@ object StreamingPipeline {
     * dedup against the persistent FINGERPRINT index → near-dup dedup
     * against the persistent SIGNATURE index → per-source cap, with both
     * indices maintained in the same exactly-once protocol and per-stage
-    * counts in `counts`. The whole production day, as a stream. */
-  def curateFullIngest(stream: DataFrame, outPath: String,
-                       fpIndexPath: String, sigIndexPath: String,
-                       ckpt: String, minQuality: Double = 0.35,
-                       estThreshold: Double = 0.5, perSourceCap: Int = 15,
-                       counts: CurateCounts = new CurateCounts): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        curateFullIngestBatch(batch, id, outPath, fpIndexPath,
-          sigIndexPath, minQuality, estThreshold, perSourceCap, counts)
-      }
-      .start()
-
-  /** The per-batch body of [[curateFullIngest]] (see
-    * [[withBatchIndexes]] for the replay-safety contract). */
+    * counts in `counts`. The whole production day, as a stream. See
+    * [[withBatchIndexes]] for the replay-safety contract. */
   def curateFullIngestBatch(batch: DataFrame, id: Long, outPath: String,
                             fpIndexPath: String, sigIndexPath: String,
-                            minQuality: Double, estThreshold: Double,
-                            perSourceCap: Int,
-                            counts: CurateCounts): Unit = {
+                            minQuality: Double = 0.35,
+                            estThreshold: Double = 0.5,
+                            perSourceCap: Int = 15,
+                            counts: CurateCounts = new CurateCounts): Unit = {
     val emptyFp = (s: SparkSession) =>
       s.emptyDataFrame.select(lit("").as("fingerprint")).limit(0)
     val emptySigs = (s: SparkSession) => s.createDataFrame(
@@ -2000,22 +1655,10 @@ object StreamingPipeline {
     * index under [[withBatchIndex]]'s exactly-once protocol. The
     * streaming form of the production near-dup pipeline: a doc
     * near-duplicating ANY earlier batch never lands. */
-  def nearDupIngest(stream: DataFrame, textCol: String, idCol: String,
-                    outPath: String, sigIndexPath: String, ckpt: String,
-                    estThreshold: Double = 0.5): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        nearDupIngestBatch(batch, id, textCol, idCol, outPath,
-          sigIndexPath, estThreshold)
-      }
-      .start()
-
-  /** The per-batch body of [[nearDupIngest]]. */
   def nearDupIngestBatch(batch: DataFrame, id: Long, textCol: String,
                          idCol: String, outPath: String,
                          sigIndexPath: String,
-                         estThreshold: Double): Unit = {
+                         estThreshold: Double = 0.5): Unit = {
     val emptySigs = (s: SparkSession) => s.createDataFrame(
       s.sparkContext.emptyRDD[Row],
       StructType(Seq(
@@ -2061,17 +1704,6 @@ object StreamingPipeline {
     * leaves an orphan generation no pointer references — invisible to
     * readers, reclaimed by `Versioned.vacuum`, and the replay simply
     * re-merges from the old current. */
-  def versionedStatsIngest(stream: DataFrame, root: String,
-                           keyCols: Seq[String], valueCol: String,
-                           ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        versionedStatsBatch(batch, id, root, keyCols, valueCol)
-      }
-      .start()
-
-  /** The per-batch body of [[versionedStatsIngest]]. */
   def versionedStatsBatch(batch: DataFrame, id: Long, root: String,
                           keyCols: Seq[String], valueCol: String): Unit = {
     import graft.warehouse.Versioned
@@ -2117,17 +1749,6 @@ object StreamingPipeline {
     * is an offline rebuild followed by index compaction, never an
     * in-stream mutation. At 100 TB the compacted index generations are
     * written bucketed on `cell` so probes prune to their cells. */
-  def ivfIngest(stream: DataFrame, idCol: String, vecCol: String,
-                outPath: String, indexPath: String, cents: DataFrame,
-                ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ivfIngestBatch(batch, id, idCol, vecCol, outPath, indexPath, cents)
-      }
-      .start()
-
-  /** The per-batch body of [[ivfIngest]]. */
   def ivfIngestBatch(batch: DataFrame, id: Long, idCol: String,
                      vecCol: String, outPath: String, indexPath: String,
                      cents: DataFrame): Unit =
@@ -2147,7 +1768,7 @@ object StreamingPipeline {
         (0 until m).map(j => StructField(s"code$j", IntegerType))))
   }
 
-  /** Streaming IVF-PQ index maintenance — [[ivfIngest]] storing CODES
+  /** Streaming IVF-PQ index maintenance — [[ivfIngestBatch]] storing CODES
     * instead of raw vectors: per micro-batch, encode the batch against
     * the stored centroid table (coarse cell + product-quantization
     * codes, `Similarity.pqIndex`) and append the (id, cell, code0..m-1)
@@ -2157,18 +1778,6 @@ object StreamingPipeline {
     * the shape that keeps a billion-vector ANN index in memory.
     * Re-clustering the codebook is an offline rebuild + compaction,
     * never an in-stream mutation. */
-  def pqIngest(stream: DataFrame, idCol: String, vecCol: String,
-               outPath: String, indexPath: String, cents: DataFrame,
-               m: Int, dim: Int, ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        pqIngestBatch(batch, id, idCol, vecCol, outPath, indexPath,
-          cents, m, dim)
-      }
-      .start()
-
-  /** The per-batch body of [[pqIngest]]. */
   def pqIngestBatch(batch: DataFrame, id: Long, idCol: String,
                     vecCol: String, outPath: String, indexPath: String,
                     cents: DataFrame, m: Int, dim: Int): Unit =
@@ -2179,7 +1788,7 @@ object StreamingPipeline {
         () => ())
     }
 
-  /** Streaming SemDeDup at ingest — [[ivfIngest]] plus the dedup gate:
+  /** Streaming SemDeDup at ingest — [[ivfIngestBatch]] plus the dedup gate:
     * per micro-batch, drop vectors that semantically duplicate (cosine ≥
     * `threshold` within the same centroid cell) EITHER a lower-id vector
     * of the same batch (`Similarity.semanticDedup`) or any earlier
@@ -2188,19 +1797,6 @@ object StreamingPipeline {
     * rows extend the index — so a semantically-duplicate embedding
     * arriving in ANY later batch never lands. History is the
     * (id, cell, v, nrm) index, bounded by survivors, not arrivals. */
-  def semanticDedupIngest(stream: DataFrame, idCol: String, vecCol: String,
-                          outPath: String, indexPath: String,
-                          cents: DataFrame, threshold: Double,
-                          ckpt: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        semanticDedupIngestBatch(batch, id, idCol, vecCol, outPath,
-          indexPath, cents, threshold)
-      }
-      .start()
-
-  /** The per-batch body of [[semanticDedupIngest]]. */
   def semanticDedupIngestBatch(batch: DataFrame, id: Long, idCol: String,
                                vecCol: String, outPath: String,
                                indexPath: String, cents: DataFrame,

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingPipeline
 
@@ -21,8 +22,11 @@ class IncrementalGoldSpec extends SparkTestBase {
       """{"t":"2024-06-15 10:06:00","k":"b","v":2.0}"""))
     val src = spark.readStream.schema("t timestamp, k string, v double")
       .json(inDir)
-    val q = StreamingPipeline.incrementalGold(src, goldDir, ckpt,
-      "t", Seq("k"), "v", "5 minutes")
+    val q = src.writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingPipeline.mergeGoldBatch(b, goldDir, id, "t", Seq("k"), "v",
+          "5 minutes")
+      }.start()
     try {
       q.processAllAvailable()
       writeBatch(inDir, "b2.json", Seq(
@@ -440,68 +444,6 @@ class IncrementalGoldSpec extends SparkTestBase {
       .map(t => (t._1, t._2) -> t._4).toMap
     assert(m(("a b", "c")) === 4L)
     assert(m(("a", "b c")) === 9L)
-  }
-
-  test("cmsFrequency stamps a marker-less store when valueCol is string-typed (native domain == string)") {
-    val store = tempRoot("graft-cms-mig") + "/s"
-    def batchDf(rows: Seq[(String, String)]) = rows.toDF("k", "item")
-    StreamingPipeline.cmsFrequencyBatch(
-      batchDf(Seq.fill(6)("a" -> "x")), 0L, Seq("k"), "item", store,
-      1e-4, 0.99, 42)
-    // simulate a store written before the cms_key_domain column existed:
-    // pre-marker registers hold the NATIVE-type hashes, and here the
-    // item column is a string — native == string-bytes, so the merge
-    // must succeed and stamp the domain (verified from the batch schema)
-    val data = s"$store/data"
-    val legacy = spark.read.parquet(data).drop("cms_key_domain")
-    val tmp = tempRoot("graft-cms-legacy")
-    legacy.write.mode("overwrite").parquet(tmp)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
-    spark.read.parquet(tmp).write.parquet(data)
-    StreamingPipeline.cmsFrequencyBatch(
-      batchDf(Seq.fill(4)("a" -> "x")), 1L, Seq("k"), "item", store,
-      1e-4, 0.99, 42)
-    val est = StreamingPipeline.cmsEstimates(
-        spark.read.parquet(data), Seq("k"), Seq("x"))
-      .as[(String, String, Long)].collect()
-      .map(t => t._1 -> t._3).toMap
-    assert(est("a") === 10L, "legacy registers must merge, not be rebuilt")
-    assert(spark.read.parquet(data).columns.contains("cms_key_domain"),
-      "merge must stamp the domain marker onto the migrated store")
-  }
-
-  test("cmsFrequency rejects a marker-less store over a non-string column unless explicitly opted in") {
-    val store = tempRoot("graft-cms-mign") + "/s"
-    def batchDf(rows: Seq[(String, Long)]) = rows.toDF("k", "item")
-    StreamingPipeline.cmsFrequencyBatch(
-      batchDf(Seq.fill(6)("a" -> 7L)), 0L, Seq("k"), "item", store,
-      1e-4, 0.99, 42)
-    val data = s"$store/data"
-    val legacy = spark.read.parquet(data).drop("cms_key_domain")
-    val tmp = tempRoot("graft-cms-legacyn")
-    legacy.write.mode("overwrite").parquet(tmp)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
-    spark.read.parquet(tmp).write.parquet(data)
-    // a pre-marker store over a BIGINT item column may hold long-domain
-    // hashes — auto-stamping it string would silently orphan its counts,
-    // so without the opt-in the merge must fail loudly
-    val ex = intercept[IllegalStateException] {
-      StreamingPipeline.cmsFrequencyBatch(
-        batchDf(Seq.fill(4)("a" -> 7L)), 1L, Seq("k"), "item", store,
-        1e-4, 0.99, 42)
-    }
-    assert(ex.getMessage.contains("migrateMarkerlessAsString"))
-    // with the opt-in the caller asserts the legacy store's items were
-    // string-typed at build time; the stamp-and-merge then proceeds
-    StreamingPipeline.cmsFrequencyBatch(
-      batchDf(Seq.fill(4)("a" -> 7L)), 1L, Seq("k"), "item", store,
-      1e-4, 0.99, 42, migrateMarkerlessAsString = true)
-    val est = StreamingPipeline.cmsEstimates(
-        spark.read.parquet(data), Seq("k"), Seq("7"))
-      .as[(String, String, Long)].collect()
-      .map(t => t._1 -> t._3).toMap
-    assert(est("a") === 10L)
-    assert(spark.read.parquet(data).columns.contains("cms_key_domain"))
   }
 
   test("quantileState maintains mergeable GK distribution state across batches, exactly-once") {
@@ -1077,62 +1019,25 @@ class IncrementalGoldSpec extends SparkTestBase {
     assert(files(45) === files(5), s"store files per merge grew: $files")
   }
 
-  test("batch ledger: a store in the legacy per-batch-marker layout keeps " +
-    "working and folds its markers into the ledger") {
-    val goldDir = tempRoot("graft-legacy") + "/g"
-    val row = oneRow("2024-06-15 10:01:00", "a", 2.0)
-    (0L to 2L).foreach(id => StreamingPipeline.mergeGoldBatch(row, goldDir,
-      id, "t", Seq("k"), "v", "5 minutes"))
-    // rewrite the bookkeeping as the older layout did: one empty file
-    // per merged batch, no ledger
-    val merged = new java.io.File(s"$goldDir/data/_merged")
-    org.apache.commons.io.FileUtils.deleteDirectory(merged)
-    merged.mkdirs()
-    (0 to 2).foreach(id => new java.io.File(merged, id.toString).createNewFile())
-    StreamingPipeline.mergeGoldBatch(row, goldDir, 1L, "t", Seq("k"), "v",
-      "5 minutes")
-    assert(goldN(goldDir) === 3L, "a replayed legacy id must be a no-op")
-    StreamingPipeline.mergeGoldBatch(row, goldDir, 3L, "t", Seq("k"), "v",
-      "5 minutes")
-    assert(goldN(goldDir) === 4L, "the next id must merge")
-    assert(ledgerEntries(goldDir) === Seq("ledger"))
-    val text = new String(Files.readAllBytes(
-      java.nio.file.Path.of(s"$goldDir/data/_merged/ledger")), "UTF-8")
-    assert(text === "0..3")
+  test("batch ledger: a store holding parquet files but no ledger fails " +
+    "loudly, naming the store, and is left as it was") {
+    val goldDir = tempRoot("graft-noledger") + "/g"
+    val row = oneRow("2024-06-15 10:01:00", "a", 1.0)
     StreamingPipeline.mergeGoldBatch(row, goldDir, 0L, "t", Seq("k"), "v",
       "5 minutes")
-    assert(goldN(goldDir) === 4L, "migrated legacy ids stay merged")
+    // the store's parquet files without their ledger, as a store seeded
+    // by hand would be: an empty ledger would re-merge the replay
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$goldDir/data/_merged"))
+    val ex = intercept[IllegalStateException] {
+      StreamingPipeline.mergeGoldBatch(row, goldDir, 0L, "t", Seq("k"), "v",
+        "5 minutes")
+    }
+    assert(ex.getMessage.contains(goldDir), ex.getMessage)
+    assert(goldN(goldDir) === 1L)
   }
 
-  test("batch ledger: a legacy store whose types differ from the pinned " +
-    "schema (integer values, sum stored as double) merges and is rewritten " +
-    "in the batch-recompute types") {
-    val goldDir = tempRoot("graft-legacy-int") + "/g"
-    // the older join merge stored an integer column's sum as a double
-    Seq(("2024-06-15 10:00:00", "a", 2L, 5.0, 1, 4)).toDF("w", "k", "n",
-        "sum_v", "min_v", "max_v")
-      .select(to_timestamp(col("w")).as("window_start"), col("k"), col("n"),
-        col("sum_v"), col("min_v"), col("max_v"))
-      .write.parquet(s"$goldDir/data")
-    new java.io.File(s"$goldDir/data/_merged").mkdirs()
-    (0 to 1).foreach(id =>
-      new java.io.File(s"$goldDir/data/_merged/$id").createNewFile())
-    val batch = Seq(("2024-06-15 10:03:00", "a", 7)).toDF("t", "k", "v")
-      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
-    StreamingPipeline.mergeGoldBatch(batch, goldDir, 2L, "t", Seq("k"), "v",
-      "5 minutes")
-    val stored = spark.read.parquet(s"$goldDir/data")
-    assert(stored.schema("sum_v").dataType ===
-      org.apache.spark.sql.types.LongType)
-    assert(stored.select("n", "sum_v", "min_v", "max_v")
-      .as[(Long, Long, Int, Int)].collect().toSeq === Seq((3L, 12L, 1, 7)))
-    StreamingPipeline.mergeGoldBatch(batch, goldDir, 3L, "t", Seq("k"), "v",
-      "5 minutes")
-    assert(goldN(goldDir) === 4L)
-  }
-
-  test("adaptiveGateBatch honours the ledger (and legacy markers) as its " +
-    "commit record") {
+  test("adaptiveGateBatch honours the ledger as its commit record") {
     val root = tempRoot("graft-agate-ledger")
     val out = s"$root/out"; val store = s"$root/store"
     def fold(id: Long): Unit = StreamingPipeline.adaptiveGateBatch(
@@ -1147,13 +1052,8 @@ class IncrementalGoldSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(part)
     fold(1L)
     assert(!part.exists, "replay of a ledgered batch re-gated its output")
-    // same for a batch recorded only as a legacy marker file
-    new java.io.File(s"$store/data/_merged/3").createNewFile()
     fold(3L)
-    assert(!new java.io.File(s"$out/batch_id=3").exists,
-      "replay of a legacy-marked batch re-gated its output")
-    fold(4L)
-    assert(new java.io.File(s"$out/batch_id=4").exists)
+    assert(new java.io.File(s"$out/batch_id=3").exists)
   }
 
   // ---------------------------------------------------------------
@@ -1242,26 +1142,25 @@ class IncrementalGoldSpec extends SparkTestBase {
     assert(rowsOf(stored) === rowsOf(ref))
   }
 
-  test("gold merge into an existing store runs at most 2 Spark jobs") {
+  /** The jobs `body` starts, each as the first line of its stages' call
+    * sites: the Spark API method that started it (for a schema-inference
+    * job, `DataFrameReader.parquet`). */
+  private def jobsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
       SparkListenerJobStart}
-    val goldDir = tempRoot("graft-gjobs") + "/g"
-    def batch(k: String) = Seq(("2024-06-15 10:01:00", k, 1.0),
-      ("2024-06-15 10:08:00", k, 2.0)).toDF("t", "k", "v")
-      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
-    StreamingPipeline.mergeGoldBatch(batch("a"), goldDir, 0L, "t", Seq("k"),
-      "v", "5 minutes")
     val sc = spark.sparkContext
-    val group = s"gold-jobs-${System.nanoTime}"
+    val group = s"merge-jobs-${System.nanoTime}"
     val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinelDone = new java.util.concurrent.CountDownLatch(1)
     val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
           .orNull
-        if (g == group) jobs.add(e.jobId)
+        if (g == group)
+          jobs.add(e.stageInfos.map(_.details.linesIterator.nextOption()
+            .getOrElse("")).mkString(" | "))
         if (g == sentinel) sentinelJobs.add(e.jobId)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -1269,11 +1168,10 @@ class IncrementalGoldSpec extends SparkTestBase {
     }
     sc.addSparkListener(l)
     try {
-      sc.setJobGroup(group, "gold merge")
-      StreamingPipeline.mergeGoldBatch(batch("b"), goldDir, 1L, "t",
-        Seq("k"), "v", "5 minutes")
+      sc.setJobGroup(group, "store merge")
+      body
       // the bus delivers in order: once the sentinel job's end arrives,
-      // every job the merge started has been seen
+      // every job the body started has been seen
       sc.setJobGroup(sentinel, "drain")
       sc.parallelize(Seq(1), 1).count()
       assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -1281,8 +1179,57 @@ class IncrementalGoldSpec extends SparkTestBase {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
     }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  test("gold merge into an existing store runs at most 2 Spark jobs") {
+    val goldDir = tempRoot("graft-gjobs") + "/g"
+    def batch(k: String) = Seq(("2024-06-15 10:01:00", k, 1.0),
+      ("2024-06-15 10:08:00", k, 2.0)).toDF("t", "k", "v")
+      .select(to_timestamp(col("t")).as("t"), col("k"), col("v"))
+    StreamingPipeline.mergeGoldBatch(batch("a"), goldDir, 0L, "t", Seq("k"),
+      "v", "5 minutes")
+    val jobs = jobsOf(StreamingPipeline.mergeGoldBatch(batch("b"), goldDir,
+      1L, "t", Seq("k"), "v", "5 minutes"))
     assert(jobs.size >= 1 && jobs.size <= 2,
       s"merge into an existing store ran ${jobs.size} jobs")
     assert(goldN(goldDir) === 4L)
+  }
+
+  test("cms and cdc merges into existing stores run no parquet " +
+    "schema-inference job") {
+    val cms = tempRoot("graft-cms-jobs") + "/s"
+    def items(rows: Seq[(String, String)]) = rows.toDF("k", "item")
+    StreamingPipeline.cmsFrequencyBatch(items(Seq("a" -> "x", "b" -> "y")),
+      0L, Seq("k"), "item", cms)
+    val cdc = tempRoot("graft-cdc-jobs") + "/t"
+    def changes(rows: (String, Long, String, String)*) =
+      rows.toSeq.toDF("k", "seq", "op", "v")
+    StreamingPipeline.cdcUpsertBatch(changes(("k1", 1L, "upsert", "v1")),
+      0L, Seq("k"), "seq", "op", cdc)
+    // control: an inferred read of the same store does start a job, and
+    // its call site names the reader
+    val inferred = jobsOf(spark.read.parquet(s"$cms/data"))
+    assert(inferred.nonEmpty &&
+      inferred.forall(_.contains("DataFrameReader")), inferred.toString)
+    def readerJobs(jobs: Seq[String]) =
+      jobs.filter(_.contains("DataFrameReader"))
+    val cmsJobs = jobsOf(StreamingPipeline.cmsFrequencyBatch(
+      items(Seq("a" -> "x")), 1L, Seq("k"), "item", cms))
+    assert(cmsJobs.nonEmpty && readerJobs(cmsJobs).isEmpty,
+      s"cms merge jobs: $cmsJobs")
+    val cdcJobs = jobsOf(StreamingPipeline.cdcUpsertBatch(
+      changes(("k1", 2L, "delete", "v1"), ("k2", 1L, "upsert", "v2")),
+      1L, Seq("k"), "seq", "op", cdc))
+    assert(cdcJobs.nonEmpty && readerJobs(cdcJobs).isEmpty,
+      s"cdc merge jobs: $cdcJobs")
+    // both merges still read the state they folded
+    val est = StreamingPipeline.cmsEstimates(spark.read.parquet(s"$cms/data"),
+      Seq("k"), Seq("x")).as[(String, String, Long)].collect()
+      .map(t => t._1 -> t._3).toMap
+    assert(est("a") === 2L)
+    assert(StreamingPipeline.cdcLive(spark.read.parquet(s"$cdc/data"))
+      .select("k").as[String].collect().toSeq === Seq("k2"))
   }
 }

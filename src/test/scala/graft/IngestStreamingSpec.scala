@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.JsonIngest
 import graft.model.Schemas
@@ -101,8 +102,11 @@ class IngestStreamingSpec extends SparkTestBase {
       val src = spark.readStream
         .schema("doc_id LONG, text STRING")
         .json(inDir)
-      val q = StreamingPipeline.dedupIngest(src, "text", "doc_id",
-        out, idx, ckpt)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.dedupIngestBatch(b, id, "text", "doc_id", out,
+            idx)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
 
@@ -176,8 +180,11 @@ class IngestStreamingSpec extends SparkTestBase {
 
     def run(): Unit = {
       val src = spark.readStream.schema("id LONG, v DOUBLE").json(inDir)
-      val q = StreamingPipeline.driftMonitorIngest(src, ref, Seq.empty,
-        "v", store, ckpt, 0.0, 100.0, 10)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.driftMonitorBatch(b, id, ref, Seq.empty, "v",
+            store, 0.0, 100.0, 10)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
     def batchFile(name: String, vs: Seq[Double]): Unit =
@@ -238,8 +245,10 @@ class IngestStreamingSpec extends SparkTestBase {
 
     def run(): Unit = {
       val src = spark.readStream.schema("id LONG, v ARRAY<DOUBLE>").json(inDir)
-      val q = StreamingPipeline.embeddingDriftMonitorIngest(src, ref, "v",
-        store, ckpt)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.embeddingDriftMonitorBatch(b, id, ref, "v", store)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
     def batchFile(name: String, vs: Seq[Seq[Double]]): Unit =
@@ -577,8 +586,11 @@ class IngestStreamingSpec extends SparkTestBase {
       val src = spark.readStream
         .schema("doc_id LONG, text STRING")
         .json(inDir)
-      val q = StreamingPipeline.nearDupIngest(src, "text", "doc_id",
-        out, idx, ckpt, estThreshold = 0.5)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.nearDupIngestBatch(b, id, "text", "doc_id", out,
+            idx, estThreshold = 0.5)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
 
@@ -627,8 +639,11 @@ class IngestStreamingSpec extends SparkTestBase {
       val src = spark.readStream
         .schema("doc_id LONG, source STRING, text STRING")
         .json(inDir)
-      val q = StreamingPipeline.curateIngest(src, out, idx, ckpt,
-        minQuality = 0.35, perSourceCap = 2, counts = counts)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.curateIngestBatch(b, id, out, idx,
+            minQuality = 0.35, perSourceCap = 2, counts = counts)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
 
@@ -701,9 +716,12 @@ class IngestStreamingSpec extends SparkTestBase {
       val src = spark.readStream
         .schema("doc_id LONG, source STRING, text STRING")
         .json(inDir)
-      val q = StreamingPipeline.curateFullIngest(src, out, fpIdx, sigIdx,
-        ckpt, minQuality = 0.1, estThreshold = 0.5, perSourceCap = 15,
-        counts = counts)
+      val q = src.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingPipeline.curateFullIngestBatch(b, id, out, fpIdx, sigIdx,
+            minQuality = 0.1, estThreshold = 0.5, perSourceCap = 15,
+            counts = counts)
+        }.start()
       try q.processAllAvailable() finally q.stop()
     }
 

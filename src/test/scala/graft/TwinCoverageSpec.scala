@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming-twin completeness meta-test (VERDICT r18 stretch): the
   * engine's exactly-once guarantee is only as good as its COVERAGE, and
-  * coverage rots silently — a new `*Ingest`/`*View` twin can ship
+  * coverage rots silently — a new `*Batch` body or `*View` can ship
   * without a parity property and nothing fails. This spec enumerates
-  * the twin surface of [[graft.streaming.StreamingPipeline]] by
-  * reflection and fails unless every method either (a) has a named
+  * that surface of [[graft.streaming.StreamingPipeline]] by reflection
+  * and fails unless every method either (a) has a named
   * random-split parity property in StreamingSplitParitySpec, or (b)
   * carries an explicit exemption naming the suite+test that DOES
   * exercise it and the reason a split-parity property is not the right
@@ -27,29 +27,45 @@ class TwinCoverageSpec extends AnyFunSuite {
                             reason: String)
 
   private val parity: Map[String, Parity] = Map(
-    "shardManifestIngest" -> Parity(
+    "mergeGoldBatch" -> Parity(
+      "property: mergeGoldBatch window aggregates equal the batch recompute"),
+    "sketchDistinctBatch" -> Parity(
+      "property: sketchDistinct estimates equal exact distinct counts"),
+    "cmsFrequencyBatch" -> Parity(
+      "property: cmsFrequency estimates equal exact item counts"),
+    "quantileStateBatch" -> Parity(
+      "property: quantileState reads equal the one-shot batch fold"),
+    "embeddingMomentsBatch" -> Parity(
+      "property: embeddingMoments fit equals the full-corpus moments"),
+    "cdcUpsertBatch" -> Parity(
+      "property: cdcUpsert final table equals the one-shot batch fold"),
+    "dsirCountsBatch" -> Parity(
+      "property: dsirCounts bucket counts equal the batch recompute"),
+    "knCountsBatch" -> Parity(
+      "property: knCounts n-gram counts equal the batch recompute"),
+    "shardManifestBatch" -> Parity(
       "property: shardManifestIngest assignments equal the arrival-order"),
-    "adaptiveGateIngest" -> Parity(
+    "adaptiveGateBatch" -> Parity(
       "property: adaptiveGateIngest quantile state equals the full"),
     "embeddingMomentsView" -> Parity(
       "property: embeddingMoments fit equals the full-corpus moments"),
-    "ccIngest" -> Parity(
+    "ccIngestBatch" -> Parity(
       "property: ccIngest assignment equals batch connected components"),
-    "keepBestIngest" -> Parity(
+    "keepBestBatch" -> Parity(
       "property: keepBestIngest champions equal the batch keep-best"),
-    "tokenBudgetIngest" -> Parity(
+    "tokenBudgetIngestBatch" -> Parity(
       "property: tokenBudgetIngest view equals the batch token-budget"),
     "tokenBudgetView" -> Parity(
       "property: tokenBudgetIngest view equals the batch token-budget"),
     "quantileStateView" -> Parity(
       "property: quantileState reads equal the one-shot batch fold"),
-    "ewmaGoldIngest" -> Parity(
+    "ewmaGoldBatch" -> Parity(
       "property: ewmaGoldBatch day aggregates equal the batch recompute"),
-    "dedupIngest" -> Parity(
+    "dedupIngestBatch" -> Parity(
       "property: dedupIngest publishes exactly one survivor per distinct"),
-    "normalizedDedupIngest" -> Parity(
+    "normalizedDedupIngestBatch" -> Parity(
       "property: normalizedDedupIngest publishes exactly one survivor"),
-    "curateFullIngest" -> Parity(
+    "curateFullIngestBatch" -> Parity(
       "property: curateFullIngest publishes exactly the distinct"),
     "dsirWeightsView" -> Parity(
       "property: dsirCounts bucket counts equal the batch recompute"),
@@ -58,13 +74,13 @@ class TwinCoverageSpec extends AnyFunSuite {
   )
 
   private val exempt: Map[String, Exempt] = Map(
-    "sampleIngest" -> Exempt("IncrementalGoldSpec",
+    "sampleBatch" -> Exempt("IncrementalGoldSpec",
       "sampleBatch maintains the deterministic k-sample",
       "parity IS tested, as the per-batch body vs the batch recompute — " +
         "the fold is a pure function of the row-identity SET (global " +
         "top-k by md5), so batch splits cannot change the result beyond " +
         "the dedup-union case the example test seeds"),
-    "sourceCapIngest" -> Exempt("IncrementalGoldSpec",
+    "sourceCapBatch" -> Exempt("IncrementalGoldSpec",
       "sourceCapBatch enforces per-source budgets",
       "arrival-order semantics BY DESIGN (scaladoc: a stream cannot " +
         "honor the batch sampler's global md5 order without buffering " +
@@ -73,27 +89,27 @@ class TwinCoverageSpec extends AnyFunSuite {
         "no-op is the contract and is what the test pins"),
     "ewmaDailyView" -> Exempt("IncrementalGoldSpec",
       "incremental EWMA/seasonal gold: parity with batch recompute",
-      "read path of ewmaGoldIngest state; parity with the batch " +
+      "read path of ewmaGoldBatch state; parity with the batch " +
         "recompute is tested example-based alongside the ingest, and " +
         "the underlying day-fold parity is property-tested via " +
         "ewmaGoldBatch"),
-    "seasonalBaselineIngest" -> Exempt("IncrementalGoldSpec",
+    "seasonalBaselineBatch" -> Exempt("IncrementalGoldSpec",
       "incremental EWMA/seasonal gold: parity with batch recompute",
       "moment sums are associative/commutative — the additive-fold " +
         "parity shape is already property-tested for embeddingMoments; " +
         "this twin's example test pins the same fold plus replay no-op"),
     "seasonalBaselineView" -> Exempt("IncrementalGoldSpec",
       "incremental EWMA/seasonal gold: parity with batch recompute",
-      "read path of seasonalBaselineIngest (mean/stddev from stored " +
+      "read path of seasonalBaselineBatch (mean/stddev from stored " +
         "moments); tested with its ingest"),
-    "driftMonitorIngest" -> Exempt("IngestStreamingSpec",
+    "driftMonitorBatch" -> Exempt("IngestStreamingSpec",
       "driftMonitorIngest: per-batch PSI series",
       "produces a per-batch time SERIES by design — there is no batch " +
         "recompute it could be parity-equal to (the batch PSI is one " +
         "point of the series); the end-to-end alert lifecycle is tested"),
-    "embeddingDriftMonitorIngest" -> Exempt("IngestStreamingSpec",
+    "embeddingDriftMonitorBatch" -> Exempt("IngestStreamingSpec",
       "embeddingDriftMonitorIngest: centroid-cosine series",
-      "same series-valued shape as driftMonitorIngest"),
+      "same series-valued shape as driftMonitorBatch"),
     "driftSeriesView" -> Exempt("IngestStreamingSpec",
       "driftMonitorIngest: per-batch PSI series",
       "read path of the drift monitors' series store; tested with them " +
@@ -103,44 +119,44 @@ class TwinCoverageSpec extends AnyFunSuite {
       "IQR flag arithmetic over quantileState sketches whose fold " +
         "parity is property-tested; the view's own read is tested " +
         "example-based"),
-    "spanDedupIngest" -> Exempt("IngestStreamingSpec",
+    "spanDedupIngestBatch" -> Exempt("IngestStreamingSpec",
       "spanDedupIngest cuts cross-batch boilerplate",
       "span survivorship is arrival-order (earlier batch wins) by " +
         "design; cross-batch cut + replay no-op is the contract tested"),
-    "curateIngest" -> Exempt("IngestStreamingSpec",
+    "curateIngestBatch" -> Exempt("IngestStreamingSpec",
       "curateIngest: quality gate, cross-batch dedup, and source caps",
       "composition of stages whose folds are individually " +
         "parity-tested (dedup property, adaptive gate property, source " +
         "caps); the composition is pinned example-based against the " +
         "batch curation counts"),
-    "modelGatedIngest" -> Exempt("IngestStreamingSpec",
+    "modelGatedIngestBatch" -> Exempt("IngestStreamingSpec",
       "modelGatedIngest: classifier gates the stream",
       "same composition argument as curateIngest with the NB gate in " +
         "front (the gate is a pure per-row function)"),
-    "nearDupIngest" -> Exempt("IngestStreamingSpec",
+    "nearDupIngestBatch" -> Exempt("IngestStreamingSpec",
       "nearDupIngest: cross-batch near-copies never land",
       "near-dup survivorship is arrival-order BY DESIGN (first-seen " +
         "wins among near-copies; the batch operator elects a canonical " +
         "champion instead), so split parity is semantically impossible"),
-    "versionedStatsIngest" -> Exempt("IngestStreamingSpec",
+    "versionedStatsBatch" -> Exempt("IngestStreamingSpec",
       "versionedStatsIngest: atomic snapshots",
       "a snapshot-versioning protocol, not a fold — there is no batch " +
         "operator to be parity-equal to; atomicity/replay/orphan " +
         "invariants are the contract tested"),
-    "ivfIngest" -> Exempt("IngestStreamingSpec",
+    "ivfIngestBatch" -> Exempt("IngestStreamingSpec",
       "ivfIngest: the stored ANN index answers top-k",
       "assignment against FROZEN centroids is a pure per-row function " +
         "(split-invariant by construction); the index read + replay " +
         "no-op is what needs testing and is tested"),
-    "pqIngest" -> Exempt("IngestStreamingSpec",
+    "pqIngestBatch" -> Exempt("IngestStreamingSpec",
       "pqIngest: incrementally stored codes equal the batch build",
       "parity with the batch build IS tested, example-based — codes " +
         "against a frozen codebook are per-row pure, so random splits " +
         "cannot vary the result"),
-    "semanticDedupIngest" -> Exempt("IngestStreamingSpec",
+    "semanticDedupIngestBatch" -> Exempt("IngestStreamingSpec",
       "semanticDedupIngest: semantic dups never land across batches",
       "arrival-order survivorship among mutual near-neighbors, same " +
-        "stance as nearDupIngest"),
+        "stance as nearDupIngestBatch"),
   )
 
   private def twinSurface: Set[String] =
@@ -148,7 +164,7 @@ class TwinCoverageSpec extends AnyFunSuite {
       .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers))
       .map(_.getName)
       .filter(n => !n.contains("$") &&
-        (n.endsWith("Ingest") || n.endsWith("View")))
+        (n.endsWith("Batch") || n.endsWith("View")))
       .toSet
 
   test("every StreamingPipeline *Ingest/*View twin has a parity property " +
@@ -169,6 +185,14 @@ class TwinCoverageSpec extends AnyFunSuite {
         s"${stale.toSeq.sorted.mkString(", ")}")
     val doubly = parity.keySet intersect exempt.keySet
     assert(doubly.isEmpty, s"twins both parity-covered and exempt: $doubly")
+    // callers run a body with Spark's own writeStream...foreachBatch; the
+    // one query-starting method is the bronze ingest
+    val queries = graft.streaming.StreamingPipeline.getClass
+      .getDeclaredMethods
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[org.apache.spark.sql.streaming.StreamingQuery])
+      .map(_.getName).toSet
+    assert(queries === Set("start"))
   }
 
   test("every claimed parity property exists in StreamingSplitParitySpec " +
