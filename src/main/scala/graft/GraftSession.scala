@@ -55,12 +55,10 @@ object GraftSession {
       // answer filterless MIN/MAX/COUNT over parquet from footer
       // statistics (PushedAggregation in the scan) — at 100 TB that
       // converts a full-corpus scan into a metadata read; off by
-      // default upstream only for ecosystem-compat caution. Env toggle
-      // for A/B perf adjudication (the conf is V2-source-only and should
-      // be inert on the V1 default path — the toggle lets a probe PROVE
-      // that instead of assuming it).
-      .config("spark.sql.parquet.aggregatePushdown",
-        sys.env.getOrElse("SPARK_GRAFT_AGGPUSH", "true"))
+      // default upstream only for ecosystem-compat caution. The conf is
+      // V2-source-only, so it is inert on the V1 default path (an A/B
+      // read no difference; SCALE.md §3).
+      .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // The testdata events table carries TIMESTAMP(NANOS) parquet, which

@@ -8,13 +8,13 @@ package graft.operators
   *
   *  - [[withRetries]]: bounded re-attempts with a fixed delay — pair
   *    with this engine's idempotent writers (partition overwrite, batch
-  *    markers, versioned publish), which make a re-attempt safe by
+  *    ledgers, versioned publish), which make a re-attempt safe by
   *    construction.
   *  - [[runReport]]: attempts + elapsed + SLA verdict, the row a
   *    monitoring table ingests (feed [[graft.monitoring.Alerts]]).
   *  - [[catchup]]: run every not-yet-done logical date in order —
   *    Airflow's catchup=True, where "done" is the engine's own durable
-  *    evidence (a partition dir, a batch marker, a generation meta),
+  *    evidence (a partition dir, a batch ledger, a generation meta),
   *    never scheduler state.
   *
   * All driver-side; nothing here touches Spark, which is what makes the

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.DirSwap
+
 /** Differential-privacy budget ledger: ε accounting that makes repeated
   * releases honest.
   *
@@ -16,7 +18,8 @@ import org.apache.spark.sql.functions._
   * composition total Σε over its budget — the gate that turns "we add
   * noise" into an enforceable guarantee.
   *
-  * Exactly-once discipline (same stance as the warehouse batch markers):
+  * Exactly-once discipline (same stance as a streaming store's batch
+  * ledger):
   * a release is identified by `releaseId`. Replaying a recorded release
   * does NOT spend again and returns byte-identical output, because the
   * noise is a deterministic function of (dataset, releaseId, secretSalt,
@@ -25,7 +28,7 @@ import org.apache.spark.sql.functions._
   * replaying the same data: the ledger records no data fingerprint, so a
   * "replay" against changed data publishes new group counts under the
   * old spend — same-data is the caller's invariant here, exactly as it
-  * is for the warehouse batch markers. The ledger row is written BEFORE
+  * is for a replayed streaming batch. The ledger row is written BEFORE
   * the noised frame is handed back: a crash between the two leaves ε
   * spent but unreleased — the safe direction for privacy (never the
   * reverse).
@@ -49,8 +52,8 @@ import org.apache.spark.sql.functions._
   * Scale: the ledger is releases-sized (rows = audit events, not data),
   * so the read-check-rewrite cycle is a metadata operation at any corpus
   * size; the noised aggregate itself is groups-sized. Writes go through
-  * the same stage-and-swap rename used by the streaming state tables so a
-  * crash never leaves a half-written ledger.
+  * the same stage-and-swap rename used by the streaming state tables
+  * ([[graft.DirSwap]]) so a crash never leaves a half-written ledger.
   */
 object DpLedger {
 
@@ -76,20 +79,13 @@ object DpLedger {
     * ledger doesn't exist yet): dataset, release_id, query_key, epsilon,
     * seed_scheme (ledgers written before the column read as "pre-v2").
     *
-    * Crash-window discipline: if a previous release crashed BETWEEN the
-    * rename-aside and the promotion, the authoritative ledger sits in
-    * `_prestate` — every READ restores it first. Restoring only on the
-    * write path is not enough: a read in that window would see an empty
-    * ledger, report spent = 0, and let the budget gate (or the replay
-    * check) wave through a release the real ledger forbids. */
+    * Every READ restores a swap that crashed mid-way first: a read in
+    * that window would otherwise see an empty ledger, report spent = 0,
+    * and wave through a release the real ledger forbids. */
   def ledger(spark: SparkSession, ledgerPath: String): DataFrame = {
     val dataDir = new Path(s"$ledgerPath/data")
-    val backup = new Path(s"$ledgerPath/_prestate")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dataDir) && fs.exists(backup) && !fs.rename(backup, dataDir))
-      throw new java.io.IOException(
-        s"dp ledger: could not restore $backup after crash")
-    if (fs.exists(dataDir)) {
+    if (DirSwap.restore(fs, dataDir, new Path(s"$ledgerPath/_prestate"))) {
       val raw = spark.read.parquet(dataDir.toString)
       if (raw.columns.contains("seed_scheme")) raw
       else raw.withColumn("seed_scheme", lit("pre-v2"))
@@ -283,29 +279,13 @@ object DpLedger {
     * like every state table in this engine. */
   private def appendSwap(spark: SparkSession, ledgerPath: String,
                          rows: DataFrame): Unit = {
-    val fs = new Path(ledgerPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataDir = new Path(s"$ledgerPath/data")
-    val backup = new Path(s"$ledgerPath/_prestate")
-    if (!fs.exists(dataDir) && fs.exists(backup) && !fs.rename(backup, dataDir))
-      throw new java.io.IOException(
-        s"dp ledger: could not restore $backup after crash")
+    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // merge through ledger() so a pre-seed_scheme table widens to the
     // current schema ("pre-v2" rows) instead of failing unionByName
-    val merged =
-      if (fs.exists(dataDir)) ledger(spark, ledgerPath).unionByName(rows)
-      else rows
+    val merged = ledger(spark, ledgerPath).unionByName(rows)
     val tmp = new Path(s"$ledgerPath/_stage")
     merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val hadData = fs.exists(dataDir)
-    if (hadData && !fs.rename(dataDir, backup))
-      throw new java.io.IOException(s"dp ledger: could not move $dataDir aside")
-    if (!fs.rename(tmp, dataDir)) {
-      if (hadData) fs.rename(backup, dataDir)
-      throw new java.io.IOException(s"dp ledger: could not promote staged ledger")
-    }
-    if (hadData) fs.delete(backup, true)
-    ()
+    DirSwap.swapIn(fs, tmp, dataDir, new Path(s"$ledgerPath/_prestate"))
   }
 }

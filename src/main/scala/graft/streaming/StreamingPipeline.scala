@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.Row
 
+import graft.DirSwap
 import graft.ingest.JsonIngest
 
 /** Structured-Streaming ingest: source → schema-enforced parse →
@@ -39,13 +40,10 @@ object StreamingPipeline {
 
   /** Every state/index path operation below goes through the Hadoop
     * FileSystem API resolved from the path's own URI — so the exactly-once
-    * protocols (marker-last, clear-own-delta-before-read, staged
-    * rename-aside swap) run unchanged against HDFS, where directory rename
-    * is atomic, and against local `file://` in tests. On object stores
-    * without atomic rename (plain S3A) the rename-aside swap is NOT safe:
-    * front the state paths with HDFS or a consistent, rename-capable
-    * layer — the protocol's correctness rests on rename atomicity, not on
-    * any POSIX behavior. */
+    * protocols (ledger-last, clear-own-delta-before-read, staged
+    * rename-aside swap) run unchanged against HDFS and against local
+    * `file://` in tests. Their correctness rests on rename atomicity, not
+    * on any POSIX behavior (see [[graft.DirSwap]] for object stores). */
   private def stateFs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -196,35 +194,43 @@ object StreamingPipeline {
         "error)")
   }
 
-  /** The batches already merged into the state store at `storePath`.
-    * Runs the READ-side crash-window restore first: if the data dir was
-    * moved aside but the staged dir never promoted, the backup is the
-    * authoritative state — it goes back before anything reads the store.
-    * Every "is batch `id` merged?" check goes through here. */
-  private def mergedBatches(fs: FileSystem, storePath: String): BatchLedger = {
+  /** The state store at `storePath`: its ledger, and whether it holds
+    * state yet, after the read-side crash-window restore
+    * ([[graft.DirSwap.restore]]). Every "is batch `id` merged?" check goes
+    * through here. */
+  private def openStore(fs: FileSystem,
+                        storePath: String): (BatchLedger, Boolean) = {
     val dataDir = new Path(s"$storePath/data")
-    val backup = new Path(s"$storePath/_prestate")
-    if (!fs.exists(dataDir) && fs.exists(backup) && !fs.rename(backup, dataDir))
-      throw new java.io.IOException(
-        s"state swap: could not restore $backup to $dataDir after crash")
-    BatchLedger.load(fs, dataDir)
+    val hasState =
+      DirSwap.restore(fs, dataDir, new Path(s"$storePath/_prestate"))
+    (if (hasState) BatchLedger.load(fs, dataDir) else BatchLedger.empty,
+      hasState)
   }
+
+  /** `df` with every column of `schema` cast to the declared type where
+    * it differs, so the next read pinned to `schema` matches the files
+    * (a decimal sum widens by 10 digits per aggregate otherwise). */
+  private def inTypes(df: DataFrame, schema: StructType): DataFrame =
+    df.withColumns(df.schema.fields.collect {
+      case f if !DataType.equalsStructurally(f.dataType,
+          schema(f.name).dataType, ignoreNullability = true) =>
+        f.name -> df.col(s"`${f.name}`").cast(schema(f.name).dataType)
+    }.toMap)
 
   /** Crash-safe merge-and-swap shared by the small per-group STATE tables
     * ([[mergeGoldBatch]] aggregates, [[sketchDistinctBatch]] registers, ...):
     * read the current state if any, apply `merge`, stage the result next
     * to the data dir together with the store's [[BatchLedger]] plus this
-    * batch, and swap via rename-aside.
+    * batch, and swap it in ([[graft.DirSwap.swapIn]]).
     *
     * The ledger lives INSIDE the data dir and travels with the swap, so a
     * crash at any point leaves ledger and data consistent: either the old
     * dir (batch absent → replay re-merges from the old state) or the new
     * one (batch present → replay is a no-op). A ledger beside the data
     * could record a merge whose rename never happened — or miss one that
-    * did, double-counting the batch on replay. A failed mid-swap restore
-    * or promotion throws rather than publishing a state table missing its
-    * pre-crash history. The ledger is one file however many batches were
-    * merged, so a merge does a fixed number of file operations.
+    * did, double-counting the batch on replay. The ledger is one file
+    * however many batches were merged, so a merge does a fixed number of
+    * file operations.
     *
     * `stateSchema` is the schema of the merge's output, which is also the
     * stored state's: the state is read with it (no footer-inference job
@@ -236,42 +242,19 @@ object StreamingPipeline {
       (merge: Option[DataFrame] => DataFrame): Unit = {
     val fs = stateFs(spark, storePath)
     val dataDir = new Path(s"$storePath/data")
-    val backup = new Path(s"$storePath/_prestate")
-    val merged = mergedBatches(fs, storePath)
+    val (merged, hasState) = openStore(fs, storePath)
     if (merged.contains(batchId)) return // replayed batch: already merged
     val pinned = stateSchema
     val existing =
-      if (!fs.exists(dataDir)) None
-      else Some(spark.read.schema(pinned).parquet(dataDir.toString))
-    // written in the pinned types, so the next pinned read matches the
-    // files (a decimal sum widens by 10 digits per aggregate otherwise)
-    val out = merge(existing)
-    val typed = out.withColumns(out.schema.fields.collect {
-      case f if !DataType.equalsStructurally(f.dataType,
-          pinned(f.name).dataType, ignoreNullability = true) =>
-        f.name -> out.col(s"`${f.name}`").cast(pinned(f.name).dataType)
-    }.toMap)
+      if (hasState) Some(spark.read.schema(pinned).parquet(dataDir.toString))
+      else None
     // stage-and-swap: the merge plan reads dataDir, so materialize it
     // next door before replacing; the ledger goes in BEFORE the swap
     val tmp = new Path(s"$storePath/_stage")
-    typed.write.mode("overwrite").parquet(tmp.toString)
+    inTypes(merge(existing), pinned).write.mode("overwrite")
+      .parquet(tmp.toString)
     (merged + batchId).save(fs, tmp)
-    // swap via rename-aside (same pattern as Warehouse.compact): a failed
-    // rename must never leave the table destroyed, so the old dir moves
-    // to a backup first and comes back if the promotion fails. Atomic on
-    // HDFS and local FS; see [[stateFs]] for the object-store caveat.
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val hadData = existing.nonEmpty
-    if (hadData && !fs.rename(dataDir, backup))
-      throw new java.io.IOException(
-        s"state swap: could not move $dataDir aside")
-    if (!fs.rename(tmp, dataDir)) {
-      if (hadData) fs.rename(backup, dataDir)
-      throw new java.io.IOException(
-        s"state swap: could not promote staged merge to $dataDir")
-    }
-    if (hadData) fs.delete(backup, true)
-    ()
+    DirSwap.swapIn(fs, tmp, dataDir, new Path(s"$storePath/_prestate"))
   }
 
   /** Continuous distinct-count maintenance: per micro-batch, HLL-sketch
@@ -527,9 +510,7 @@ object StreamingPipeline {
                          valueCol: String, storePath: String,
                          relativeError: Double = 0.001): Unit = {
     val kcols = keys.map(col)
-    lazy val partial = batch.groupBy(kcols: _*)
-      .agg(graft.functions.QuantileFunctions
-        .quantileSketch(col(valueCol), relativeError).as("sk"))
+    lazy val partial = quantilePartial(batch, keys, valueCol, relativeError)
     mergeSwapState(batch.sparkSession, storePath, id, partial.schema) {
       case Some(existing) =>
         existing.select(kcols :+ col("sk"): _*)
@@ -540,6 +521,15 @@ object StreamingPipeline {
       case None => partial
     }
   }
+
+  /** The GK-sketch partial [[quantileStateBatch]] folds in; its schema
+    * is the store's. */
+  private def quantilePartial(batch: DataFrame, keys: Seq[String],
+                              valueCol: String,
+                              relativeError: Double): DataFrame =
+    batch.groupBy(keys.map(col): _*)
+      .agg(graft.functions.QuantileFunctions
+        .quantileSketch(col(valueCol), relativeError).as("sk"))
 
   /** Continuous per-source ADAPTIVE quality gating — the streaming twin
     * of [[graft.ext.Curate.adaptiveQualityGate]]: each micro-batch is
@@ -564,21 +554,21 @@ object StreamingPipeline {
                         storePath: String, pct: Double = 0.25,
                         relativeError: Double = 0.001): Unit = {
     val spark = batch.sparkSession
-    val fs = stateFs(spark, storePath)
-    val dataDir = new Path(s"$storePath/data")
     // the store's ledger is the batch's commit record: a completed batch
     // must NOT re-gate against the post-fold store (different cutoffs →
-    // different output than originally published). mergedBatches also
-    // runs the crash-window restore, so a gate read in the rename-aside
-    // window sees the authoritative store.
-    if (mergedBatches(fs, storePath).contains(id)) return
+    // different output than originally published). openStore also runs
+    // the crash-window restore, so a gate read in the rename-aside window
+    // sees the authoritative store.
+    val (merged, hasStore) = openStore(stateFs(spark, storePath), storePath)
+    if (merged.contains(id)) return
     val scored = batch.withColumn("quality",
       round(graft.ext.TextAnalysis.qualityScore(col(textCol)) + lit(1e-9),
         4))
     val kept =
-      if (fs.exists(dataDir)) {
-        val cuts = quantileStateView(
-            spark.read.parquet(dataDir.toString), Seq(srcCol), Seq(pct))
+      if (hasStore) {
+        val stored = spark.read.schema(quantilePartial(scored, Seq(srcCol),
+          "quality", relativeError).schema).parquet(s"$storePath/data")
+        val cuts = quantileStateView(stored, Seq(srcCol), Seq(pct))
           .select(col(srcCol),
             round(element_at(col("quantiles"), 1) + lit(1e-9), 4)
               .as("_cut"))
@@ -1052,7 +1042,7 @@ object StreamingPipeline {
     * Scale shape: the reference is bucket COUNTS (broadcast-sized), so
     * each batch pays one aggregation over its own rows — the validation
     * slice is never rescanned — and the stored series is
-    * (batches × groups) rows. Marker+swap replay idempotence like
+    * (batches × groups) rows. Ledger+swap replay idempotence like
     * [[mergeGoldBatch]]: foreachBatch is at-least-once, and a replayed
     * batch must not append its score twice (a duplicated row would
     * stretch a breach streak and mis-fire the `for:` clause). */
@@ -1133,8 +1123,8 @@ object StreamingPipeline {
     * `outPath`, and their fingerprints append to the index — so a
     * document seen in ANY earlier batch (not just inside the watermark
     * horizon, which is `dropDuplicatesWithinWatermark`'s limit) never
-    * lands twice. The batch marker makes replays no-ops, like the batch
-    * ledger of [[mergeGoldBatch]].
+    * lands twice. The store's batch ledger makes replays no-ops, as it
+    * does for [[mergeGoldBatch]].
     *
     * Scale shape: the index is fingerprint-sized (32 bytes/doc ever
     * ingested), the per-batch work is one window + one anti join keyed on
@@ -1179,7 +1169,7 @@ object StreamingPipeline {
     * duplicated within the batch or against ANY earlier batch (a
     * persistent gram-hash index), cleaned docs land per-batch in
     * `outPath`, and the batch's distinct gram hashes extend the index.
-    * Exactly-once via the same batch-marker protocol as [[dedupIngestBatch]].
+    * Exactly-once via the same ledger protocol as [[dedupIngestBatch]].
     * Earlier batches' published docs stay as published — boilerplate
     * keeps its first-seen copy; later copies are cut at span
     * granularity.
@@ -1200,8 +1190,7 @@ object StreamingPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       withBatchIndex(batch.sparkSession, id, outPath, indexPath,
-        emptyIndex = s => s.emptyDataFrame
-          .select(lit("").as("h")).limit(0)) { index =>
+        GramIndex) { index =>
         val cleaned = graft.ext.Dedup
           .incrementalDuplicatedSpansGrams(batch, textCol, idCol, grams,
             index, k)
@@ -1215,16 +1204,38 @@ object StreamingPipeline {
     } finally { grams.unpersist(); () }
   }
 
+  /** The schemas the ingest indexes are read and written in: a batch
+    * reads its index pinned (no schema-inference job) and writes its
+    * delta in the same types. Ids keep the type of the batch's `idCol`,
+    * cells the centroid table's. */
+  private val FingerprintIndex = new StructType().add("fingerprint", "string")
+  private val GramIndex = new StructType().add("h", "string")
+  private def sigIndex(batch: DataFrame, idCol: String) = new StructType()
+    .add("id", batch.schema(idCol).dataType).add("sig", "array<bigint>")
+  private def cellIndex(batch: DataFrame, idCol: String, cents: DataFrame) =
+    new StructType().add("id", batch.schema(idCol).dataType)
+      .add("cell", cents.schema("cell").dataType)
+  /** [[graft.ext.Similarity.assignCells]] rows. */
+  private def ivfIndex(batch: DataFrame, idCol: String, cents: DataFrame) =
+    cellIndex(batch, idCol, cents).add("v", "array<double>").add("nrm", "double")
+  /** [[graft.ext.Similarity.pqIndex]] rows: id, cell, `m` codes. */
+  private def pqIndexSchema(batch: DataFrame, idCol: String,
+                            cents: DataFrame, m: Int) =
+    (0 until m).foldLeft(cellIndex(batch, idCol, cents))(
+      (s, j) => s.add(s"code$j", "int"))
+
   /** The crash-safe protocol shared by every index-backed ingest path
-    * ([[dedupIngestBatch]], [[curateIngestBatch]]): batch-marker no-op,
+    * ([[dedupIngestBatch]], [[curateIngestBatch]], ...): ledger no-op,
     * per-batch overwrite of survivors, staged-then-renamed index delta,
-    * marker last. `compute` maps the batch's view of the fingerprint
-    * index to (survivors, indexDelta, afterWrite-callback).
+    * ledger commit last. The store's [[BatchLedger]] is
+    * `$outPath/data/_merged/ledger`. `compute` maps the batch's view of
+    * the index (read in `schema`) to (survivors, indexDelta,
+    * afterWrite-callback).
     *
     * Ordering invariants, each load-bearing under at-least-once replay:
     *  - This batch's own prior b$id- index-delta files are cleared BEFORE
     *    the index is read: if a crash landed the delta rename but not the
-    *    marker, a replay reading the index first would see its own
+    *    ledger commit, a replay reading the index first would see its own
     *    fingerprints, anti-join itself down to zero survivors, and
     *    overwrite batch_id=$id with an empty dataset — permanent loss.
     *    (spark.read.parquet lists files eagerly, so the deletion
@@ -1236,15 +1247,15 @@ object StreamingPipeline {
     *    it stages next door, then renames the part files in (task UUIDs
     *    make collisions impossible), prefixed b$id- so a replay can
     *    identify exactly its own files.
-    *  - The marker is written last; once it exists the batch is a no-op
-    *    forever. */
+    *  - The ledger commit is last; once the batch is in the ledger it is
+    *    a no-op forever. A new store commits its empty ledger before its
+    *    first partition lands, so no crash leaves partitions without a
+    *    ledger (which [[BatchLedger.load]] refuses to read). */
   private def withBatchIndex(spark: SparkSession, id: Long, outPath: String,
                              indexPath: String,
-                             emptyIndex: SparkSession => DataFrame =
-                               s => s.emptyDataFrame
-                                 .select(lit("").as("fingerprint")).limit(0))
+                             schema: StructType = FingerprintIndex)
       (compute: DataFrame => (DataFrame, DataFrame, () => Unit)): Unit =
-    withBatchIndexes(spark, id, outPath, Seq(indexPath -> emptyIndex)) {
+    withBatchIndexes(spark, id, outPath, Seq(indexPath -> schema)) {
       case Seq(index) =>
         val (survivors, delta, after) = compute(index)
         (survivors, Seq(delta), after)
@@ -1253,60 +1264,43 @@ object StreamingPipeline {
   /** The multi-index form of the crash-safe protocol — used directly by
     * [[curateFullIngestBatch]], which maintains BOTH the fingerprint and
     * the signature index in one exactly-once batch. Every index gets the
-    * same treatment: interrupted-compaction restore, then this batch's
-    * own b$id- delta files cleared BEFORE any index is read (the
-    * loss-window ordering), survivors written once, every delta staged
-    * and renamed in, marker last. */
+    * treatment [[withBatchIndex]] describes, after [[healIndex]]. */
   private def withBatchIndexes(spark: SparkSession, id: Long,
                                outPath: String,
-                               indexes: Seq[(String, SparkSession => DataFrame)])
+                               indexes: Seq[(String, StructType)])
       (compute: Seq[DataFrame] => (DataFrame, Seq[DataFrame], () => Unit)): Unit = {
     val outFs = stateFs(spark, outPath)
-    val marker = new Path(s"$outPath/_batches/$id")
-    if (outFs.exists(marker)) return
+    val outData = new Path(s"$outPath/data")
+    val merged = BatchLedger.load(outFs, outData)
+    if (merged.contains(id)) return
+    if (merged == BatchLedger.empty) merged.commit(outFs, outData)
     val idxDirs = indexes.map { case (indexPath, _) =>
       val fs = stateFs(spark, indexPath)
       val idxDir = new Path(s"$indexPath/data")
-      // finish a compaction interrupted mid-swap: the backup generation
-      // is authoritative (see compactIngestIndex)
-      val b = new Path(s"$indexPath/_preidx")
-      if (!fs.exists(idxDir) && fs.exists(b) && !fs.rename(b, idxDir))
-        throw new java.io.IOException(
-          s"index swap: could not restore $b to $idxDir after crash")
-      // divergent state (BOTH dirs present) — left by a crash inside a
-      // racer repair, or by a crash after a successful promote but
-      // before the backup delete. Fold the backup's files in before
-      // reading: content-preserving in both cases (a stale copy only
-      // re-adds rows the index already carries, and the reads/compaction
-      // dedupe), where ignoring it would silently serve a partial index
-      // until something deletes the only full copy.
-      foldBackupInto(fs, idxDir, b)
-      if (fs.exists(idxDir))
+      val exists = healIndex(fs, idxDir, new Path(s"$indexPath/_preidx"))
+      if (exists)
         fs.listStatus(idxDir).filter(_.getPath.getName.startsWith(s"b$id-"))
           .foreach(f => { fs.delete(f.getPath, false); () })
-      (fs, idxDir)
+      (fs, idxDir, exists)
     }
     val indexDfs = indexes.zip(idxDirs).map {
-      case ((_, emptyIndex), (fs, idxDir)) =>
-        if (fs.exists(idxDir) &&
-            fs.listStatus(idxDir).exists(_.getPath.getName.endsWith(".parquet")))
-          spark.read.parquet(idxDir.toString)
-        else emptyIndex(spark)
+      case ((_, schema), (_, idxDir, exists)) =>
+        if (exists) spark.read.schema(schema).parquet(idxDir.toString)
+        else spark.createDataFrame(java.util.List.of[Row](), schema)
     }
     val (survivors, deltas, afterWrite) = compute(indexDfs)
     require(deltas.length == indexes.length,
       s"expected ${indexes.length} index deltas, got ${deltas.length}")
-    survivors.write.mode("overwrite")
-      .parquet(s"$outPath/data/batch_id=$id")
+    survivors.write.mode("overwrite").parquet(s"$outData/batch_id=$id")
     indexes.zip(idxDirs).zip(deltas).foreach {
-      case (((indexPath, _), (fs, idxDir)), delta) =>
+      case (((indexPath, schema), (fs, idxDir, _)), delta) =>
         val stage = new Path(s"$indexPath/_stage_$id")
-        delta.write.mode("overwrite").parquet(stage.toString)
+        inTypes(delta, schema).write.mode("overwrite").parquet(stage.toString)
         fs.mkdirs(idxDir)
         fs.listStatus(stage).filter(_.getPath.getName.startsWith("part-"))
           .foreach { f =>
-            // rename failure MUST abort the batch before the marker is
-            // written: FileSystem.rename reports failure by returning
+            // rename failure MUST abort the batch before the ledger
+            // commit: FileSystem.rename reports failure by returning
             // false (no exception), and silently proceeding would commit
             // the batch with its index delta lost — every later batch
             // would then miss these fingerprints forever. Task-UUID file
@@ -1320,8 +1314,7 @@ object StreamingPipeline {
         fs.delete(stage, true); ()
     }
     afterWrite()
-    outFs.createNewFile(marker)
-    ()
+    (merged + id).commit(outFs, outData)
   }
 
   /** CDC materialization — the Debezium/changelog shape: a stream of
@@ -1379,55 +1372,46 @@ object StreamingPipeline {
     * the per-batch index read pays a per-file open cost; compaction
     * restores O(targetFiles) reads.
     *
-    * Safety gate: REQUIRES every delta's batch to be markered (the
-    * stream quiesced). A crash-window batch — delta renamed, marker
-    * missing — relies on clearing its OWN b$id- files on replay
-    * ([[withBatchIndex]]); folding those into a compacted file would
-    * make the stale fingerprints unremovable and reopen the
-    * zero-survivors loss window, so an unmarkered delta aborts the
-    * compaction. The swap is rename-aside (backup `_preidx`), and
-    * [[withBatchIndex]] restores an interrupted swap before its next
+    * Safety gate: REQUIRES every delta's batch to be in the store's
+    * batch ledger (the stream quiesced). A crash-window batch — delta
+    * renamed, ledger commit missing — relies on clearing its OWN b$id-
+    * files on replay ([[withBatchIndex]]); folding those into a
+    * compacted file would make the stale fingerprints unremovable and
+    * reopen the zero-survivors loss window, so an uncommitted delta
+    * aborts the compaction. The swap is rename-aside (backup `_preidx`),
+    * and [[withBatchIndex]] restores an interrupted swap before its next
     * read. */
   def compactIngestIndex(spark: SparkSession, outPath: String,
                          indexPath: String, targetFiles: Int = 1,
                          onBeforeSwap: () => Unit = () => (),
                          onAfterAside: () => Unit = () => ()): Unit = {
     val fs = stateFs(spark, indexPath)
-    val outFs = stateFs(spark, outPath)
     val idxDir = new Path(s"$indexPath/data")
     val backup = new Path(s"$indexPath/_preidx")
-    // finish an earlier compaction interrupted mid-swap first — without
-    // this, a missing data dir would read as "nothing to compact" while
-    // _preidx silently holds the whole index
-    if (!fs.exists(idxDir) && fs.exists(backup) && !fs.rename(backup, idxDir))
-      throw new java.io.IOException(
-        s"index swap: could not restore $backup to $idxDir after crash")
-    // divergent state (both dirs present — crashed racer repair, or a
-    // crash between promote and backup delete): fold the backup in
-    // BEFORE the snapshot, so its content rides through this compaction
-    // (the distinct() below removes any stale-copy duplicates) instead
-    // of being deleted as if it were guaranteed redundant
-    foldBackupInto(fs, idxDir, backup)
-    if (!fs.exists(idxDir)) return
+    // healed BEFORE the snapshot, so a folded backup's content rides
+    // through this compaction (the distinct() below removes stale-copy
+    // duplicates)
+    if (!healIndex(fs, idxDir, backup)) return
     def parquetNames(dir: Path): Set[String] =
       fs.listStatus(dir).map(_.getPath.getName)
         .filter(_.endsWith(".parquet")).toSet
     val snapshot = parquetNames(idxDir)
     if (snapshot.size <= targetFiles) return
-    val batchIds = snapshot.toSeq.flatMap(n =>
-      "^b(\\d+)-".r.findFirstMatchIn(n).map(_.group(1))).distinct
-    batchIds.foreach { id =>
-      if (!outFs.exists(new Path(s"$outPath/_batches/$id")))
+    val merged = BatchLedger.load(stateFs(spark, outPath),
+      new Path(s"$outPath/data"))
+    snapshot.toSeq.flatMap(n => "^b(\\d+)-".r.findFirstMatchIn(n))
+      .map(_.group(1).toLong).sorted.find(!merged.contains(_))
+      .foreach { id =>
         throw new IllegalStateException(
-          s"refusing to compact: batch $id has index deltas but no marker " +
-            "(in-flight or crash-window batch; its replay must be able to " +
-            "clear its own delta files)")
-    }
+          s"refusing to compact: batch $id has index deltas but is not in " +
+            "the batch ledger (in-flight or crash-window batch; its replay " +
+            "must be able to clear its own delta files)")
+      }
     val stage = new Path(s"$indexPath/_compact")
     spark.read.parquet(idxDir.toString).distinct()
       .repartition(targetFiles)
       .write.mode("overwrite").parquet(stage.toString)
-    // the upfront marker check is one-shot: a micro-batch could rename a
+    // the upfront ledger check is one-shot: a micro-batch could rename a
     // fresh delta into the dir between the snapshot read and the swap.
     // Re-listing AFTER the rename-aside closes the delta-into-old-dir
     // race: any delta that slipped in rides inside `backup`, and on
@@ -1491,9 +1475,14 @@ object StreamingPipeline {
     ()
   }
 
-  /** Heal the divergent both-dirs-present state: move every file of
-    * `backup` into `idxDir`, then drop the emptied backup. No-op unless
-    * both exist. Content-preserving whichever history the state came
+  /** Heal the index at `idxDir` before it is read, and return whether it
+    * exists. A compaction interrupted mid-swap left the whole index in
+    * `backup`, which is authoritative and goes back
+    * ([[graft.DirSwap.restore]]); otherwise a missing data dir would read
+    * as an empty index. The divergent both-dirs-present state (a crash
+    * inside a racer repair, or after a promote but before the backup
+    * delete) folds every file of `backup` into `idxDir`, then drops the
+    * emptied backup. Content-preserving whichever history the state came
     * from — a stale pre-compaction copy only re-adds rows the index
     * already carries (removed by the next compaction's distinct), while
     * a stranded post-racer-crash history is restored outright. Only
@@ -1504,9 +1493,10 @@ object StreamingPipeline {
     * wedge every subsequent batch behind a spurious "manual merge"; they
     * are simply dropped with the emptied backup. A COLLIDING `.parquet`
     * name still aborts loudly with both copies intact. */
-  private def foldBackupInto(fs: FileSystem, idxDir: Path,
-                             backup: Path): Unit = {
-    if (!fs.exists(idxDir) || !fs.exists(backup)) return
+  private def healIndex(fs: FileSystem, idxDir: Path,
+                        backup: Path): Boolean = {
+    if (!DirSwap.restore(fs, idxDir, backup)) return false
+    if (!fs.exists(backup)) return true
     fs.listStatus(backup)
       .filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
       val dest = new Path(idxDir, f.getPath.getName)
@@ -1519,7 +1509,7 @@ object StreamingPipeline {
           s"index heal: could not fold ${f.getPath} into $idxDir")
     }
     fs.delete(backup, true)
-    ()
+    true
   }
 
   /** Put `backup` (the authoritative pre-swap index) back at `idxDir`.
@@ -1550,9 +1540,9 @@ object StreamingPipeline {
     * maintains a fingerprint AND a signature index, each accumulating one
     * b$id- delta per micro-batch, and both age toward the same
     * too-many-tiny-files problem. One [[compactIngestIndex]] per index
-    * against the shared `outPath` marker set: the marker gate is already
+    * against the shared `outPath` batch ledger: the ledger gate is already
     * per-batch (a batch in its crash window blocks the compaction of ANY
-    * index it wrote to, because its marker is missing), each swap is
+    * index it wrote to, because the ledger lacks it), each swap is
     * per-index atomic, and compaction is content-preserving, so no
     * cross-index invariant can break mid-sequence — an abort on the
     * second index leaves the first compacted and both fully correct. */
@@ -1627,18 +1617,9 @@ object StreamingPipeline {
                             estThreshold: Double = 0.5,
                             perSourceCap: Int = 15,
                             counts: CurateCounts = new CurateCounts): Unit = {
-    val emptyFp = (s: SparkSession) =>
-      s.emptyDataFrame.select(lit("").as("fingerprint")).limit(0)
-    val emptySigs = (s: SparkSession) => s.createDataFrame(
-      s.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))))
     withBatchIndexes(batch.sparkSession, id, outPath,
-      Seq(fpIndexPath -> emptyFp, sigIndexPath -> emptySigs)) {
+      Seq(fpIndexPath -> FingerprintIndex,
+        sigIndexPath -> sigIndex(batch, "doc_id"))) {
       case Seq(fpIndex, sigIndex) =>
         val r = graft.ext.Curate.incrementalFull(batch, fpIndex, sigIndex,
           minQuality, estThreshold, perSourceCap)
@@ -1659,14 +1640,6 @@ object StreamingPipeline {
                          idCol: String, outPath: String,
                          sigIndexPath: String,
                          estThreshold: Double = 0.5): Unit = {
-    val emptySigs = (s: SparkSession) => s.createDataFrame(
-      s.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))))
     val inBatch = graft.ext.Dedup.exactDedup(batch, textCol, idCol)
     // one shingle pass per batch: the cached signature table feeds the
     // banded join AND, semi-joined on the surviving ids, the index delta.
@@ -1677,7 +1650,7 @@ object StreamingPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       withBatchIndex(batch.sparkSession, id, outPath, sigIndexPath,
-        emptySigs) { histSigs =>
+        sigIndex(batch, idCol)) { histSigs =>
         val survivors = graft.ext.Dedup.incrementalMinhashDedupSigs(
           inBatch, bSigs, idCol, histSigs, estThreshold)
         val sigDelta = bSigs.join(
@@ -1727,16 +1700,6 @@ object StreamingPipeline {
     Versioned.setCurrent(spark, root, next) // the atomic commit
   }
 
-  /** Empty (id, cell, v, nrm) frame — the schema of a stored
-    * [[graft.ext.Similarity.assignCells]] IVF index. */
-  private def emptyIvfIndex(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("id", LongType), StructField("cell", StringType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType))))
-  }
-
   /** Streaming ANN-index maintenance — the embedding twin of the
     * signature-index family: per micro-batch, assign the batch's
     * embeddings to the STORED centroid table (tiny, broadcast) and append
@@ -1753,20 +1716,11 @@ object StreamingPipeline {
                      vecCol: String, outPath: String, indexPath: String,
                      cents: DataFrame): Unit =
     withBatchIndex(batch.sparkSession, id, outPath, indexPath,
-      emptyIvfIndex) { _ =>
+      ivfIndex(batch, idCol, cents)) { _ =>
       (batch,
         graft.ext.Similarity.assignCells(batch, cents, idCol, vecCol),
         () => ())
     }
-
-  /** Empty (id, cell, code0..code{m-1}) frame — the schema of a stored
-    * [[graft.ext.Similarity.pqIndex]] IVF-PQ index. */
-  private def emptyPqIndex(m: Int)(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(
-      Seq(StructField("id", LongType), StructField("cell", StringType)) ++
-        (0 until m).map(j => StructField(s"code$j", IntegerType))))
-  }
 
   /** Streaming IVF-PQ index maintenance — [[ivfIngestBatch]] storing CODES
     * instead of raw vectors: per micro-batch, encode the batch against
@@ -1782,7 +1736,7 @@ object StreamingPipeline {
                     vecCol: String, outPath: String, indexPath: String,
                     cents: DataFrame, m: Int, dim: Int): Unit =
     withBatchIndex(batch.sparkSession, id, outPath, indexPath,
-      emptyPqIndex(m)) { _ =>
+      pqIndexSchema(batch, idCol, cents, m)) { _ =>
       (batch,
         graft.ext.Similarity.pqIndex(batch, cents, m, dim, idCol, vecCol),
         () => ())
@@ -1802,7 +1756,7 @@ object StreamingPipeline {
                                indexPath: String, cents: DataFrame,
                                threshold: Double): Unit =
     withBatchIndex(batch.sparkSession, id, outPath, indexPath,
-      emptyIvfIndex) { histIndex =>
+      ivfIndex(batch, idCol, cents)) { histIndex =>
       val inBatchDropped = graft.ext.Similarity
         .semanticDedup(batch, cents, threshold, idCol, vecCol)
         .select(col("vec_id").as(idCol))

@@ -101,6 +101,10 @@ object Warehouse {
     // DRIVER's local disk on a real cluster
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    // a compaction that crashed between its move-aside and its promote
+    // left the table only in the backup: put it back first
+    val backup = new org.apache.hadoop.fs.Path(path + "_precompact")
+    graft.DirSwap.restore(fs, live, backup)
     def countFiles(): Long = {
       val it = fs.listFiles(live, true)
       var n = 0L
@@ -120,10 +124,7 @@ object Warehouse {
     // manifest/metastore repoint instead)
     val w = if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer
     w.parquet(tmp.toString)
-    val backup = new org.apache.hadoop.fs.Path(path + "_precompact")
-    require(fs.rename(live, backup), s"could not stage $path aside")
-    require(fs.rename(tmp, live), s"could not promote $tmp")
-    fs.delete(backup, true)
+    graft.DirSwap.swapIn(fs, tmp, live, backup)
     (before, countFiles())
   }
 

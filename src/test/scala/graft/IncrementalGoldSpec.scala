@@ -1224,6 +1224,25 @@ class IncrementalGoldSpec extends SparkTestBase {
       1L, Seq("k"), "seq", "op", cdc))
     assert(cdcJobs.nonEmpty && readerJobs(cdcJobs).isEmpty,
       s"cdc merge jobs: $cdcJobs")
+    // the index-backed ingests and the adaptive gate read their index or
+    // quantile store pinned too
+    val root = tempRoot("graft-idx-jobs")
+    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+      .withColumn("source", lit("a"))
+    val doc1 = docs(1L -> "the quick brown fox jumps over the lazy dog")
+    val doc2 = docs(2L -> "a completely different second document text here")
+    def dedup(b: DataFrame, id: Long) = StreamingPipeline.dedupIngestBatch(
+      b, id, "text", "doc_id", s"$root/dd-out", s"$root/dd-idx")
+    def curateFull(b: DataFrame, id: Long) =
+      StreamingPipeline.curateFullIngestBatch(b, id, s"$root/cf-out",
+        s"$root/cf-fp", s"$root/cf-sig", minQuality = 0.0)
+    def gate(b: DataFrame, id: Long) = StreamingPipeline.adaptiveGateBatch(
+      b, id, "source", "text", s"$root/ag-out", s"$root/ag-store")
+    Seq[(DataFrame, Long) => Unit](dedup, curateFull, gate).foreach { run =>
+      run(doc1, 0L)
+      val jobs = jobsOf(run(doc2, 1L))
+      assert(jobs.nonEmpty && readerJobs(jobs).isEmpty, s"ingest jobs: $jobs")
+    }
     // both merges still read the state they folded
     val est = StreamingPipeline.cmsEstimates(spark.read.parquet(s"$cms/data"),
       Seq("k"), Seq("x")).as[(String, String, Long)].collect()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.JsonIngest
 import graft.model.Schemas
-import graft.streaming.StreamingPipeline
+import graft.streaming.{BatchLedger, StreamingPipeline}
 
 /** Schema-enforced JSON parse + dead-letter split, batch and streaming. */
 class IngestStreamingSpec extends SparkTestBase {
@@ -14,6 +14,22 @@ class IngestStreamingSpec extends SparkTestBase {
   private val goodJson =
     """{"sensor_id":"sensor-001","sensor_type":"temperature","timestamp":"2024-06-15T10:00:00+00:00","value":22.5,"unit":"celsius","location":"floor-1-zone-A"}"""
   private val badJson = """{"sensor_id": BROKEN"""
+
+  /** The batch ledger of the index-backed ingest store at `out`. */
+  private def ledgerDir(out: String) = new org.apache.hadoop.fs.Path(s"$out/data")
+  private def ledgerFs(out: String) =
+    ledgerDir(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def ledger(out: String): BatchLedger =
+    BatchLedger.load(ledgerFs(out), ledgerDir(out))
+  private def setLedger(out: String, l: BatchLedger): Unit =
+    l.commit(ledgerFs(out), ledgerDir(out))
+  /** Rewrite the ledger without batch `id`: the state a crash leaves
+    * between the batch's index-delta renames and its ledger commit. */
+  private def dropFromLedger(out: String, id: Long): Unit =
+    setLedger(out, BatchLedger(ledger(out).ranges.flatMap { case (lo, hi) =>
+      Seq(lo -> math.min(hi, id - 1), math.max(lo, id + 1) -> hi)
+        .filter { case (a, b) => a <= b }
+    }))
 
   test("P2/P3: valid rows flatten with event_time; malformed rows dead-letter with error metadata") {
     val raw = Seq(goodJson, badJson).toDF("value")
@@ -341,9 +357,11 @@ class IngestStreamingSpec extends SparkTestBase {
       batch(30L -> "alpha beta", 31L -> "epsilon zeta"),
       2L, "text", "doc_id", out, idx)
     // ...but the crash happens in the window AFTER the b2- index-delta
-    // rename and BEFORE the marker write: simulate by deleting only the
-    // marker. The index now already contains batch 2's own fingerprints.
-    assert(new java.io.File(s"$out/_batches/2").delete())
+    // rename and BEFORE the ledger commit: simulate by dropping only its
+    // ledger entry. The index now already contains batch 2's own
+    // fingerprints.
+    dropFromLedger(out, 2L)
+    assert(!ledger(out).contains(2L))
 
     // at-least-once replay of the same batch: the replay must clear its
     // own partial index delta before anti-joining, or it would see its
@@ -357,7 +375,93 @@ class IngestStreamingSpec extends SparkTestBase {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(landed === Seq(10L, 20L, 31L))
     assert(spark.read.parquet(s"$idx/data").distinct().count() === 3)
-    assert(new java.io.File(s"$out/_batches/2").exists())
+    assert(ledger(out).contains(2L))
+  }
+
+  test("dedupIngest: a ledger commit that crashed after moving the old " +
+    "ledger aside replays its batch exactly once") {
+    val out = tempRoot("graft-lca-out")
+    val idx = tempRoot("graft-lca-idx")
+    def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    StreamingPipeline.dedupIngestBatch(
+      batch(10L -> "alpha beta", 20L -> "gamma delta"),
+      1L, "text", "doc_id", out, idx)
+    StreamingPipeline.dedupIngestBatch(
+      batch(30L -> "alpha beta", 31L -> "epsilon zeta"),
+      2L, "text", "doc_id", out, idx)
+    // batch 2's commit crashed between its move-aside and its promote:
+    // the old ledger (without 2) sits aside, the staged one (with 2) was
+    // never promoted, and no live _merged exists
+    dropFromLedger(out, 2L)
+    val live = new java.io.File(s"$out/data/_merged")
+    val aside = new java.io.File(s"$out/data/_premerged")
+    assert(live.renameTo(aside))
+    Files.createDirectories(java.nio.file.Path.of(out, "data", "_merged_stage"))
+    Files.writeString(
+      java.nio.file.Path.of(out, "data", "_merged_stage", "ledger"), "1..2")
+    StreamingPipeline.dedupIngestBatch(
+      batch(30L -> "alpha beta", 31L -> "epsilon zeta"),
+      2L, "text", "doc_id", out, idx)
+    assert(spark.read.parquet(s"$out/data")
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(10L, 20L, 31L))
+    assert(spark.read.parquet(s"$idx/data").count() === 3)
+    assert(ledger(out) === BatchLedger.decode("1..2"))
+    assert(live.exists() && !aside.exists())
+  }
+
+  test("dedupIngest: a staged ledger that was never swapped in replays " +
+    "its batch exactly once") {
+    val out = tempRoot("graft-lcs-out")
+    val idx = tempRoot("graft-lcs-idx")
+    def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    StreamingPipeline.dedupIngestBatch(
+      batch(10L -> "alpha beta", 20L -> "gamma delta"),
+      1L, "text", "doc_id", out, idx)
+    StreamingPipeline.dedupIngestBatch(
+      batch(30L -> "alpha beta", 31L -> "epsilon zeta"),
+      2L, "text", "doc_id", out, idx)
+    // batch 2's commit staged its ledger, then crashed before the swap
+    dropFromLedger(out, 2L)
+    Files.createDirectories(java.nio.file.Path.of(out, "data", "_merged_stage"))
+    Files.writeString(
+      java.nio.file.Path.of(out, "data", "_merged_stage", "ledger"), "1..2")
+    StreamingPipeline.dedupIngestBatch(
+      batch(30L -> "alpha beta", 31L -> "epsilon zeta"),
+      2L, "text", "doc_id", out, idx)
+    assert(spark.read.parquet(s"$out/data")
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(10L, 20L, 31L))
+    assert(spark.read.parquet(s"$idx/data").count() === 3)
+    assert(ledger(out) === BatchLedger.decode("1..2"))
+    assert(!new java.io.File(s"$out/data/_merged_stage").exists())
+  }
+
+  test("an index-backed store with batch_id= data but no ledger fails " +
+    "loudly, naming the store, and is left as it was") {
+    val out = tempRoot("graft-nol-out")
+    val idx = tempRoot("graft-nol-idx")
+    def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    StreamingPipeline.dedupIngestBatch(
+      batch(10L -> "alpha beta", 20L -> "gamma delta"),
+      1L, "text", "doc_id", out, idx)
+    // a store from the per-batch marker era: partitions, no ledger. Read
+    // as empty, a replay of batch 1 would anti-join against its own
+    // fingerprints and overwrite batch_id=1 with nothing.
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$out/data/_merged"))
+    Files.createDirectories(java.nio.file.Path.of(out, "_batches"))
+    Files.createFile(java.nio.file.Path.of(out, "_batches", "1"))
+    val replay = intercept[IllegalStateException] {
+      StreamingPipeline.dedupIngestBatch(
+        batch(10L -> "alpha beta", 20L -> "gamma delta"),
+        1L, "text", "doc_id", out, idx)
+    }
+    assert(replay.getMessage.contains(out), replay.getMessage)
+    // targetFiles = 0: the one delta file must not count as compacted
+    intercept[IllegalStateException] {
+      StreamingPipeline.compactIngestIndex(spark, out, idx, targetFiles = 0)
+    }
+    assert(spark.read.parquet(s"$out/data")
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(10L, 20L))
   }
 
   test("index compaction folds delta files, preserves dedup, and refuses in-flight batches") {
@@ -381,7 +485,7 @@ class IngestStreamingSpec extends SparkTestBase {
     // replay has to be able to clear its own b$id- files
     StreamingPipeline.dedupIngestBatch(batch(9L -> "inflight nine"), 9L,
       "text", "doc_id", out, idx)
-    assert(new java.io.File(s"$out/_batches/9").delete())
+    dropFromLedger(out, 9L)
     val e = intercept[IllegalStateException] {
       StreamingPipeline.compactIngestIndex(spark, out, idx)
     }
@@ -473,10 +577,10 @@ class IngestStreamingSpec extends SparkTestBase {
     assert(after.count() === before + 1)
     assert(after.filter($"fingerprint" === "zz-racer-fingerprint").count() === 1)
     assert(!new java.io.File(s"$idx/_preidx").exists())
-    // once the racer's batch is markered (quiesced again), compaction
-    // folds everything — history and racer delta — into one generation
-    Files.createDirectories(java.nio.file.Path.of(out, "_batches"))
-    Files.createFile(java.nio.file.Path.of(out, "_batches", "9"))
+    // once the racer's batch is in the ledger (quiesced again),
+    // compaction folds everything — history and racer delta — into one
+    // generation
+    setLedger(out, ledger(out) + 9L)
     StreamingPipeline.compactIngestIndex(spark, out, idx)
     assert(new java.io.File(s"$idx/data").listFiles()
       .count(_.getName.endsWith(".parquet")) === 1)
@@ -961,7 +1065,7 @@ class IngestStreamingSpec extends SparkTestBase {
     // an unmarkered (crash-window) batch blocks compaction of BOTH
     // indices — its replay must be able to clear its own deltas
     runBatch(9L, 13L -> words(900 to 940, "d"))
-    assert(new java.io.File(s"$out/_batches/9").delete())
+    dropFromLedger(out, 9L)
     val e = intercept[IllegalStateException] {
       StreamingPipeline.compactIngestIndexes(spark, out, Seq(fpIdx, sigIdx))
     }

@@ -4,12 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole suite (one JVM under Test/fork). */
+/** One shared local session for the whole suite (one JVM under Test/fork).
+  * Its warehouse dir is deleted when the JVM exits. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse-test")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils
+      .deleteQuietly(warehouse.toFile))
     val s = GraftSession.builder("local[4]", 4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse-test").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -246,6 +246,23 @@ class WarehouseSpec extends SparkTestBase {
     assert(afterDf.select("part").distinct().count() === 2) // layout preserved
   }
 
+  test("compaction heals a table stranded aside by a crash before its promote") {
+    val path = tempRoot("graft-compact-heal") + "/t"
+    (1 to 4).foreach { i =>
+      Seq((i, s"p${i % 2}")).toDF("v", "part")
+        .write.mode("append").partitionBy("part").parquet(path)
+    }
+    // a compaction that crashed after moving the table aside left it
+    // only at <path>_precompact
+    val stranded = new java.io.File(path + "_precompact")
+    assert(new java.io.File(path).renameTo(stranded))
+    Warehouse.compact(spark, path, targetRowsPerFile = 100,
+      partitionBy = Seq("part"))
+    assert(spark.read.parquet(path).select("v").as[Int].collect().toSet ===
+      (1 to 4).toSet)
+    assert(!stranded.exists())
+  }
+
   test("tableDiff: added/removed/changed with null-safe compares, identical rows dropped") {
     val cur = Seq(
       (1L, Option("a"), Option(10)),  // identical → dropped
